@@ -613,7 +613,7 @@ def build_parse_price_query_sql(d: Dialect, part_table: str) -> str:
 
 # --- registry entries ------------------------------------------------------
 from ..registry import register  # noqa: E402
-from ..sources.tables import load_table  # noqa: E402
+from ..sources.tables import table_view  # noqa: E402
 
 
 @register(
@@ -624,8 +624,7 @@ from ..sources.tables import load_table  # noqa: E402
     tags=("scalar", "prices"),
 )
 def parse_price_core(spark, sf_dir):
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("sales_telegram_bot_data_pipeline_part")
-    return spark.sql(build_parse_price_query_sql(SPARK, "sales_telegram_bot_data_pipeline_part"))
+    return spark.sql(build_parse_price_query_sql(SPARK, table_view(spark, sf_dir, "part")))
 
 
 @register(
@@ -637,8 +636,7 @@ def parse_price_core(spark, sf_dir):
     tags=("scalar", "prices", "dispatcher"),
 )
 def price_dispatcher_suite(spark, sf_dir):
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("sales_telegram_bot_data_pipeline_part")
-    return spark.sql(build_dispatcher_query_sql(SPARK, "sales_telegram_bot_data_pipeline_part"))
+    return spark.sql(build_dispatcher_query_sql(SPARK, table_view(spark, sf_dir, "part")))
 
 
 # --------------------------------------------------------------------------

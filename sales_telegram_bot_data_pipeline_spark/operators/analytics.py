@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_view
 
 # --------------------------------------------------------------------------
 # association rules over per-order brand baskets
@@ -80,8 +80,8 @@ ORDER BY brand_a, brand_b
     tags=("analytics", "association", "self-join"),
 )
 def association_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ar_l")
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ar_p")
+    lineitem = table_view(spark, sf_dir, "lineitem")
+    part = table_view(spark, sf_dir, "part")
     # Materialize the basket relation ONCE per call (guide §3.3): Spark
     # inlines the CTE into every consumer (tot, items, both self-join
     # sides), and the executed plan showed the lineitem-join-part subtree
@@ -90,11 +90,7 @@ def association_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orders x the 25-value brand domain, so one checkpoint is tiny; the
     # oracle keeps the single-statement CTE form (DuckDB materializes
     # CTEs) and its unchanged PASS is the equivalence proof.
-    baskets = spark.sql(
-        _ASSOC_BASKETS_SQL.format(
-            lineitem="sales_telegram_bot_data_pipeline_ar_l", part="sales_telegram_bot_data_pipeline_ar_p"
-        )
-    ).localCheckpoint()
+    baskets = spark.sql(_ASSOC_BASKETS_SQL.format(lineitem=lineitem, part=part)).localCheckpoint()
     baskets.createOrReplaceTempView("sales_telegram_bot_data_pipeline_ar_baskets")
     return spark.sql(
         _ASSOC_SQL.format(baskets="SELECT * FROM sales_telegram_bot_data_pipeline_ar_baskets")
@@ -278,13 +274,8 @@ ORDER BY o.event_type, o.dow
     tags=("analytics", "stats", "agg"),
 )
 def chi_squared_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_chi_ev")
-    return spark.sql(
-        _chi2_sql(
-            "datediff(to_date(ts), to_date('1970-01-01')) % 7",
-            "sales_telegram_bot_data_pipeline_chi_ev",
-        )
-    )
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_chi2_sql("datediff(to_date(ts), to_date('1970-01-01')) % 7", events))
 
 
 # --------------------------------------------------------------------------
@@ -440,8 +431,8 @@ ORDER BY k_band
     tags=("analytics", "privacy", "audit"),
 )
 def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_kan_c")
-    return spark.sql(_KANON_SQL.format(customer="sales_telegram_bot_data_pipeline_kan_c"))
+    customer = table_view(spark, sf_dir, "customer")
+    return spark.sql(_KANON_SQL.format(customer=customer))
 
 
 # --------------------------------------------------------------------------
@@ -507,8 +498,8 @@ FROM pairs GROUP BY pri ORDER BY pri
     tags=("analytics", "join", "band"),
 )
 def band_join_price_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_bj_o")
-    return spark.sql(_BAND_JOIN_SPARK.format(orders="sales_telegram_bot_data_pipeline_bj_o"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_BAND_JOIN_SPARK.format(orders=orders))
 
 
 # --------------------------------------------------------------------------
@@ -563,11 +554,11 @@ FROM c
     tags=("analytics", "stats", "regression"),
 )
 def revenue_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ols_o")
+    orders = table_view(spark, sf_dir, "orders")
     return spark.sql(
         _OLS_SQL.format(
             datediff="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-            orders="sales_telegram_bot_data_pipeline_ols_o",
+            orders=orders,
         )
     )
 
@@ -615,8 +606,8 @@ ORDER BY digit
     tags=("analytics", "audit", "stats"),
 )
 def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ben_o")
-    return spark.sql(_BENFORD_SQL.format(strtype="STRING", orders="sales_telegram_bot_data_pipeline_ben_o"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_BENFORD_SQL.format(strtype="STRING", orders=orders))
 
 
 # --------------------------------------------------------------------------
@@ -657,8 +648,8 @@ FROM g GROUP BY l ORDER BY l_value
     tags=("analytics", "privacy", "audit"),
 )
 def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ldiv_c")
-    return spark.sql(_LDIV_SQL.format(customer="sales_telegram_bot_data_pipeline_ldiv_c"))
+    customer = table_view(spark, sf_dir, "customer")
+    return spark.sql(_LDIV_SQL.format(customer=customer))
 
 
 # --------------------------------------------------------------------------
@@ -879,11 +870,11 @@ FROM w
     tags=("analytics", "experiment", "stats"),
 )
 def ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ab_ev")
+    events = table_view(spark, sf_dir, "events")
     return spark.sql(
         _AB_SQL.format(
             hash=SPARK.md5_prefix_int("('ab|' || CAST(user_id AS STRING))"),
-            events="sales_telegram_bot_data_pipeline_ab_ev",
+            events=events,
         )
     )
 
@@ -933,11 +924,9 @@ ORDER BY p_brand
     tags=("analytics", "stats", "agg"),
 )
 def discount_quantity_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_el_l")
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("sales_telegram_bot_data_pipeline_el_p")
-    return spark.sql(
-        _ELASTICITY_SQL.format(lineitem="sales_telegram_bot_data_pipeline_el_l", part="sales_telegram_bot_data_pipeline_el_p")
-    )
+    lineitem = table_view(spark, sf_dir, "lineitem")
+    part = table_view(spark, sf_dir, "part")
+    return spark.sql(_ELASTICITY_SQL.format(lineitem=lineitem, part=part))
 
 
 # --------------------------------------------------------------------------
@@ -981,13 +970,13 @@ ORDER BY o_orderpriority, sla_bucket
     tags=("analytics", "sla", "agg"),
 )
 def shipping_sla_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_sla_o")
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_sla_l")
+    orders = table_view(spark, sf_dir, "orders")
+    lineitem = table_view(spark, sf_dir, "lineitem")
     return spark.sql(
         _SLA_SQL.format(
             dd_args="to_date(l_shipdate), to_date(o_orderdate)",
-            orders="sales_telegram_bot_data_pipeline_sla_o",
-            lineitem="sales_telegram_bot_data_pipeline_sla_l",
+            orders=orders,
+            lineitem=lineitem,
         )
     )
 
@@ -1039,12 +1028,10 @@ ORDER BY relation
     tags=("analytics", "audit", "integrity"),
 )
 def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ri_l")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ri_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ri_c")
-    return spark.sql(
-        _RI_SQL.format(lineitem="sales_telegram_bot_data_pipeline_ri_l", orders="sales_telegram_bot_data_pipeline_ri_o", customer="sales_telegram_bot_data_pipeline_ri_c")
-    )
+    lineitem = table_view(spark, sf_dir, "lineitem")
+    orders = table_view(spark, sf_dir, "orders")
+    customer = table_view(spark, sf_dir, "customer")
+    return spark.sql(_RI_SQL.format(lineitem=lineitem, orders=orders, customer=customer))
 
 
 # --------------------------------------------------------------------------
@@ -1104,11 +1091,11 @@ FROM med m CROSS JOIN anchor a
     tags=("analytics", "stats", "regression"),
 )
 def theilsen_trend_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ts_o")
+    orders = table_view(spark, sf_dir, "orders")
     return spark.sql(
         _THEILSEN_SQL.format(
             datediff="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-            orders="sales_telegram_bot_data_pipeline_ts_o",
+            orders=orders,
             median_fn="percentile(slope, 0.5)",
         )
     )
@@ -1180,8 +1167,8 @@ ORDER BY t_bucket
     tags=("analytics", "privacy", "audit"),
 )
 def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_tc_c")
-    return spark.sql(_TCLOSE_SQL.format(customer="sales_telegram_bot_data_pipeline_tc_c"))
+    customer = table_view(spark, sf_dir, "customer")
+    return spark.sql(_TCLOSE_SQL.format(customer=customer))
 
 
 # --------------------------------------------------------------------------
@@ -1241,12 +1228,9 @@ ORDER BY event_type, day_no
     tags=("analytics", "timeseries", "anomaly", "window"),
 )
 def control_chart_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_cc_ev")
+    events = table_view(spark, sf_dir, "events")
     return spark.sql(
-        _CCHART_SQL.format(
-            datediff="datediff(to_date(ts), to_date('1970-01-01'))",
-            events="sales_telegram_bot_data_pipeline_cc_ev",
-        )
+        _CCHART_SQL.format(datediff="datediff(to_date(ts), to_date('1970-01-01'))", events=events)
     )
 
 
@@ -1306,10 +1290,10 @@ ORDER BY custkey
     tags=("analytics", "training", "agg"),
 )
 def churn_label_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ch_o")
+    orders = table_view(spark, sf_dir, "orders")
     return spark.sql(
         _CHURN_SQL.format(
-            orders="sales_telegram_bot_data_pipeline_ch_o",
+            orders=orders,
             cutoff=f"date_sub(h.dmax, {CHURN_HORIZON_DAYS})",
             gap=f"datediff(date_sub(h.dmax, {CHURN_HORIZON_DAYS}), agg.last_obs_day)",
         )
@@ -1512,19 +1496,12 @@ ORDER BY event_type
 def markov_stationary_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_mk_ev")
+    events = table_view(spark, sf_dir, "events")
     # Materialize the bounded transition matrix once (guide §3.3):
     # live/trans2/rt/p/tot_in/grand expanded the windowed corpus pass into
     # 20 static scans per statement.  One checkpoint -> one corpus pass.
-    trans = materialize_once(
-        spark,
-        _markov_trans_sql("sales_telegram_bot_data_pipeline_mk_ev"),
-        "mk_trans",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _markov_stationary_fold_sql("sales_telegram_bot_data_pipeline_mk_ev", trans_rel=trans)
-    )
+    trans = materialize_once(spark, _markov_trans_sql(events), "mk_trans", key=sf_dir)
+    return spark.sql(_markov_stationary_fold_sql(events, trans_rel=trans))
 
 
 # --------------------------------------------------------------------------
@@ -1591,14 +1568,14 @@ ORDER BY n.lag
 def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_acf_o")
+    orders = table_view(spark, sf_dir, "orders")
     # Materialize the bounded day-grid series once (guide §3.3): the
     # dev/den/num chain expanded it into 12 static corpus scans.
     daily = materialize_once(
         spark,
         _ACF_DAILY_SQL.format(
             dayno="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-            orders="sales_telegram_bot_data_pipeline_acf_o",
+            orders=orders,
         ),
         "acf_daily",
         key=sf_dir,
@@ -1666,11 +1643,11 @@ FROM s CROSS JOIN ties CROSS JOIN n
     tags=("analytics", "timeseries", "stats"),
 )
 def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_mkt_o")
+    orders = table_view(spark, sf_dir, "orders")
     return spark.sql(
         _MK_TREND_SQL.format(
             datediff="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-            orders="sales_telegram_bot_data_pipeline_mkt_o",
+            orders=orders,
         )
     )
 
@@ -1760,20 +1737,20 @@ def _cusum_prefix_oracle() -> str:
     tags=("analytics", "timeseries", "spc"),
 )
 def cusum_change_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_cu_o")
+    orders = table_view(spark, sf_dir, "orders")
     # Spark side: the prefix sum rides the distributed range-prefix-sum
     # primitive over the week order instead of a global window
     from .scalars_extra import range_prefix_summed
 
     inner = _CUSUM_SQL.format(
         datediff="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-        orders="sales_telegram_bot_data_pipeline_cu_o",
+        orders=orders,
         prefix_rel="SELECT x, pc FROM sales_telegram_bot_data_pipeline_cu_prefix",
     )
     d_sql = (
         _CUSUM_D_SQL.format(
             datediff="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-            orders="sales_telegram_bot_data_pipeline_cu_o",
+            orders=orders,
         )
         + "\nSELECT x, dv FROM d"
     )
@@ -1831,8 +1808,8 @@ FROM cell ORDER BY event_type
     tags=("analytics", "privacy", "agg"),
 )
 def aggregate_sensitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_sens_ev")
-    return spark.sql(_SENS_SQL.format(events="sales_telegram_bot_data_pipeline_sens_ev"))
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_SENS_SQL.format(events=events))
 
 
 # --------------------------------------------------------------------------
@@ -1886,12 +1863,9 @@ FROM agg ORDER BY event_type
     tags=("analytics", "timeseries", "stats"),
 )
 def circular_time_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_circ_ev")
+    events = table_view(spark, sf_dir, "events")
     return spark.sql(
-        _CIRC_SQL.format(
-            events="sales_telegram_bot_data_pipeline_circ_ev",
-            sod="hour(ts) * 3600 + minute(ts) * 60 + second(ts)",
-        )
+        _CIRC_SQL.format(events=events, sod="hour(ts) * 3600 + minute(ts) * 60 + second(ts)")
     )
 
 
@@ -1946,10 +1920,10 @@ ORDER BY c.cohort_q, c.age_q
     tags=("analytics", "cohort", "agg"),
 )
 def cohort_ltv_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ltv_o")
+    orders = table_view(spark, sf_dir, "orders")
     return spark.sql(
         _LTV_SQL.format(
-            orders="sales_telegram_bot_data_pipeline_ltv_o",
+            orders=orders,
             qnum_d1="datediff(d1, to_date('1970-01-01')) div 91",
             qnum_o="datediff(to_date(o.o_orderdate), to_date('1970-01-01')) div 91",
         )

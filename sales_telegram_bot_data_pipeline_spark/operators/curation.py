@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_view
 from .dedup import _shingles_sql
 
 TRAIN_PCT = 80  # hash-bucket boundaries of the 3-way split
@@ -46,11 +46,6 @@ VAL_PCT = 90
 EN_RATE_PERMILLE = 100  # stratified sample: keep 10% of en ...
 OTHER_RATE_PERMILLE = 300  # ... and 30% of every other language
 BENCH_MOD = 97  # doc_id % 97 == 0 marks the frozen benchmark set
-
-
-def _doc_view(spark: SparkSession, sf_dir: str, name: str = "sales_telegram_bot_data_pipeline_docs") -> str:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(name)
-    return name
 
 
 # --------------------------------------------------------------------------
@@ -88,7 +83,7 @@ FROM routed GROUP BY split_name ORDER BY split_name
     tags=("curation", "sampling"),
 )
 def dataset_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_hash_split_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_hash_split_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -119,7 +114,7 @@ ORDER BY doc_id
     tags=("curation", "sampling"),
 )
 def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_stratified_sample_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_stratified_sample_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -163,7 +158,7 @@ ORDER BY h.doc_id
     tags=("curation", "text", "join"),
 )
 def contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_contamination_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_contamination_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -270,7 +265,7 @@ ORDER BY doc_id, chunk_idx
     tags=("curation", "text", "explode"),
 )
 def document_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_chunking_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_chunking_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -320,7 +315,7 @@ ORDER BY doc_id
     tags=("curation", "text", "scalar"),
 )
 def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_pii_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_pii_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 @register(
@@ -332,7 +327,7 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("curation", "text", "quality"),
 )
 def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_repetition_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_repetition_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -406,7 +401,7 @@ ORDER BY shard, pack_id, pos_in_pack
     tags=("curation", "packing", "window"),
 )
 def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_sequence_packing_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_sequence_packing_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -444,10 +439,8 @@ FROM {table}
     tags=("curation", "audit", "agg"),
 )
 def table_audit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_audit_orders"
-    )
-    return spark.sql(_table_audit_sql(SPARK, "sales_telegram_bot_data_pipeline_audit_orders"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_table_audit_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -520,7 +513,7 @@ def curation_pipeline_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _cc_labels_view
     from ..functions.dialect import SPARK as _S
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     labels = spark.table(_cc_labels_view(spark, sf_dir))
     labels.where(F.col("doc_id") == F.col("cluster_rep")).select(
         "doc_id"
@@ -583,7 +576,7 @@ ORDER BY source, source_rank
     tags=("curation", "sampling", "window"),
 )
 def source_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_source_cap_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_source_cap_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -637,7 +630,7 @@ ORDER BY source
     tags=("curation", "sampling", "agg"),
 )
 def mixture_weights_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_mixture_weights_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_mixture_weights_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -723,10 +716,8 @@ ORDER BY column_name
     tags=("curation", "audit", "agg"),
 )
 def column_profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_prof_li"
-    )
-    return spark.sql(_profile_sql(SPARK, "sales_telegram_bot_data_pipeline_prof_li"))
+    lineitem = table_view(spark, sf_dir, "lineitem")
+    return spark.sql(_profile_sql(SPARK, lineitem))
 
 
 # --------------------------------------------------------------------------
@@ -778,7 +769,7 @@ ORDER BY split_name, lang
     tags=("curation", "audit", "sampling"),
 )
 def split_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_split_balance_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_split_balance_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -833,11 +824,7 @@ FROM {{{name}}}""")
     tags=("curation", "audit", "agg"),
 )
 def table_checksum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    views = {}
-    for t in ("lineitem", "orders", "customer"):
-        v = f"sales_telegram_bot_data_pipeline_cksum_{t}"
-        load_table(spark, sf_dir, t).createOrReplaceTempView(v)
-        views[t] = v
+    views = {t: table_view(spark, sf_dir, t) for t in ("lineitem", "orders", "customer")}
     return spark.sql(_checksum_sql(SPARK).format(**views))
 
 
@@ -912,7 +899,7 @@ ORDER BY doc_id, chunk_id
     tags=("curation", "dedup", "window"),
 )
 def content_defined_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_cdc_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_cdc_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -961,7 +948,7 @@ ORDER BY doc_id
     tags=("curation", "text", "dedup", "quality"),
 )
 def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_novelty_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_novelty_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -1062,7 +1049,7 @@ LIMIT {WSAMP_K}
     tags=("curation", "sampling"),
 )
 def weighted_sample_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_weighted_sample_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_weighted_sample_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -1152,7 +1139,7 @@ ORDER BY true_count DESC, word
     tags=("curation", "sketch", "agg", "text"),
 )
 def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     w = SPARK.splitws("lower(text)")
     words_rel = (
         f"SELECT word FROM (SELECT {w} AS ws FROM {view}) s "
@@ -1218,7 +1205,7 @@ FROM xy
     tags=("curation", "audit", "agg", "text"),
 )
 def zipf_fit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_zipf_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_zipf_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -1284,7 +1271,7 @@ ORDER BY change_type
     tags=("curation", "audit", "join"),
 )
 def snapshot_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_snapshot_diff_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_snapshot_diff_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -1339,7 +1326,7 @@ ORDER BY lang
     tags=("curation", "audit", "agg"),
 )
 def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_ivm_merge_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_ivm_merge_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -1399,7 +1386,7 @@ ORDER BY split_a, split_b
 def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _lsh_pairs_view
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     spark.table(_lsh_pairs_view(spark, sf_dir)).createOrReplaceTempView(
         "sales_telegram_bot_data_pipeline_leak_pairs"
     )
@@ -1481,7 +1468,7 @@ def curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dialect import SPARK as _S
     from .dedup import _lsh_pairs_view, connected_components
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     w = _S.splitws("lower(text)")
     richness = _S.alen(_S.adistinct(w))
     gated = spark.sql(
@@ -1625,7 +1612,7 @@ WHERE w.rn = 1
     tags=("curation", "audit", "stats"),
 )
 def split_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_split_drift_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_split_drift_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -1692,9 +1679,8 @@ ORDER BY r.split_name
     tags=("curation", "dedup", "audit"),
 )
 def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _doc_view as _ddoc_view
 
-    view = _ddoc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # both the pair relation and the CC labels are stored production
     # artifacts — read the session views (pair generation is measured by
     # dedup_minhash_lsh, the fixpoint by dedup_connected_components)
@@ -1775,7 +1761,7 @@ LIMIT {BLEND_TOP_K}
 def quality_rank_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scalars_extra import range_ranked
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     w = SPARK.splitws("lower(text)")
     sig = spark.sql(
         f"SELECT doc_id, {SPARK.alen(SPARK.adistinct(w))} AS n_words, "
@@ -1877,7 +1863,7 @@ ORDER BY p.source
 def source_quality_ranksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scalars_extra import range_ranked
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     docs = spark.table(view).select("doc_id", "source", "n_chars")
     ranked, n = range_ranked(spark, docs, ["n_chars", "doc_id"])
     if n == 0:
@@ -1959,7 +1945,7 @@ def _mg_summarize(batches):
     tags=("curation", "sketch", "text", "python-stage"),
 )
 def misra_gries_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     w = SPARK.splitws("lower(text)")
     words = spark.sql(
         f"SELECT word FROM (SELECT {w} AS ws FROM {view}) s "
@@ -2022,7 +2008,7 @@ ORDER BY epoch, shard
     tags=("curation", "sampling", "sharding"),
 )
 def epoch_shuffle_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_epoch_shuffle_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_epoch_shuffle_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -2054,7 +2040,7 @@ LIMIT {SAMPLE_EXACT_N}
     tags=("curation", "sampling", "topk"),
 )
 def deterministic_sample_exact_n(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_exact_n_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_exact_n_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -2104,7 +2090,7 @@ ORDER BY w.source
     tags=("curation", "sampling", "stats"),
 )
 def neyman_allocation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_neyman_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_neyman_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -2183,10 +2169,10 @@ def negative_sampling_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one tagged grouped pass + checkpoint measured SLOWER (1.95 -> 2.62 s
     # same host) — the saved join is the CHEAP filtered one, while the
     # checkpoint materializes the large unfiltered pair set.
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_neg_l")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_neg_o")
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("sales_telegram_bot_data_pipeline_neg_p")
-    return spark.sql(_neg_sample_sql(SPARK, "sales_telegram_bot_data_pipeline_neg_l", "sales_telegram_bot_data_pipeline_neg_o", "sales_telegram_bot_data_pipeline_neg_p"))
+    lineitem = table_view(spark, sf_dir, "lineitem")
+    orders = table_view(spark, sf_dir, "orders")
+    part = table_view(spark, sf_dir, "part")
+    return spark.sql(_neg_sample_sql(SPARK, lineitem, orders, part))
 
 
 # --------------------------------------------------------------------------
@@ -2250,7 +2236,7 @@ ORDER BY doc_id, span_idx
     tags=("curation", "training", "text"),
 )
 def span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_span_docs")
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_span_plan_sql(SPARK, view))
 
 
@@ -2308,7 +2294,7 @@ ORDER BY bucket_len
     tags=("curation", "training", "agg"),
 )
 def padding_waste_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_pad_docs")
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_padding_waste_sql(SPARK, view))
 
 
@@ -2361,7 +2347,7 @@ ORDER BY g.lang, g.fold
     tags=("curation", "split", "projection"),
 )
 def stratified_kfold_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_kf_docs")
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_kfold_sql(SPARK, view))
 
 
@@ -2455,7 +2441,7 @@ ORDER BY c.bucket
 def psi_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_psi_docs")
+    view = table_view(spark, sf_dir, "documents")
     counts = materialize_once(
         spark, _psi_counts_sql(SPARK, view), "psi_counts", key=sf_dir
     )
@@ -2536,7 +2522,7 @@ def neyman_allocated_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .scalars_extra import range_ranked
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_ney_docs")
+    view = table_view(spark, sf_dir, "documents")
     h = SPARK.md5_prefix_int(SPARK.strcast("doc_id"))
     base = spark.sql(f"SELECT source, doc_id, n_chars, ({h}) AS h FROM {view}")
     ranked, _n = range_ranked(spark, base, ["source", "h", "doc_id"])

@@ -29,17 +29,12 @@ from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
 from ..registry import register
-from ..session import fixed_plan
-from ..sources.tables import load_table
+from ..session import fixed_plan, session_view
+from ..sources.tables import table_view
 
 N_HASHES = 8
 BAND_SIZE = 2  # → 4 bands
 JACCARD_THRESHOLD = 0.4
-
-
-def _doc_view(spark: SparkSession, sf_dir: str, name: str = "sales_telegram_bot_data_pipeline_docs") -> str:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(name)
-    return name
 
 
 # --------------------------------------------------------------------------
@@ -62,7 +57,7 @@ def _exact_sql(d: Dialect, table: str) -> str:
     tags=("dedup",),
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_exact_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_exact_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -168,7 +163,7 @@ def _materialized_shingles(spark: SparkSession, view: str, name: str) -> str:
     tags=("dedup", "join"),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     rel = _materialized_shingles(spark, view, "sales_telegram_bot_data_pipeline_sh_j")
     return spark.sql(_jaccard_sql(SPARK, view, shingles_rel=rel))
 
@@ -242,7 +237,7 @@ ORDER BY doc_a, doc_b
     tags=("dedup", "join", "skew"),
 )
 def dedup_jaccard_stopshingle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # stored session relations shared with the prefix-filter twin (the r9
     # bench head showed both recomputing the identical shingle + df tables)
     rel = _shingles_session_rel(spark, sf_dir)
@@ -330,7 +325,7 @@ ORDER BY doc_a, doc_b
     tags=("dedup", "lsh"),
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_lsh_pairs_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_lsh_pairs_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -364,7 +359,7 @@ FROM hashed GROUP BY doc_id ORDER BY doc_id
     tags=("dedup", "hash"),
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_simhash_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_simhash_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -458,7 +453,7 @@ ORDER BY doc_a, doc_b
     tags=("dedup", "hash", "join"),
 )
 def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_simhash_neardup_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_simhash_neardup_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -671,68 +666,10 @@ FROM reach GROUP BY a ORDER BY doc_id
     tags=("dedup", "clustering", "iterative"),
 )
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     docs = spark.table(view).select("doc_id")
     pairs = spark.sql(_lsh_pairs_sql(SPARK, view))
     return connected_components(spark, docs, pairs).orderBy("doc_id")
-
-
-# Stored-view POLICY, pinned (VERDICT r12 task 5): every stored session
-# view must designate the registry query that keeps its BUILD cost
-# live-measured on the bench — converting a bench row to stored reads is a
-# deliberate, reviewable edit to this map, exactly like a BNLJ allowlist
-# entry.  ``session_view`` refuses unknown tags at runtime and
-# tests/test_plan_hygiene.py pins the key set, the twin names, and the
-# call-site tags; ``_tune_sig_view`` (pre-session_view mechanism, same
-# discipline) is declared here too.  Dynamic det2feed tags carry the
-# padding as a ``_p<int>`` suffix, stripped before lookup.
-SESSION_VIEW_LIVE_TWINS = {
-    "shingles": "dedup_ngram_jaccard",          # shingle explode, live
-    "shdf": "dedup_jaccard_stopshingle",        # df table rebuilt inline
-    "lshp": "dedup_minhash_lsh",                # strict pair generation
-    "cc_labels": "dedup_connected_components",  # CC fixpoint, live
-    "detfeed": "nested_detections_table",       # detection synthesis
-    "det2feed": "nested_detections_table",      # model2 twin of the same
-    "loosep": "dedup_minhash_lsh",              # loose banding = same primitive
-    "ssjac": "dedup_jaccard_stopshingle",       # stop-shingle pair join
-    "ndpairs": "embedding_cosine_neardup",      # banded vector pair join
-    "tune_sig": "dedup_minhash_lsh",            # signature build (_tune_sig_view)
-}
-
-
-def session_view(spark: SparkSession, sf_dir: str, tag: str, build) -> str:
-    """Materialize a relation ONCE per (session, sf) as a localCheckpointed
-    temp view and return its name — the stored-production-artifact
-    discipline shared by ``_tune_sig_view`` (minhash signatures, r8
-    verdict task 4) and ``pipeline_native._wide_view``: relations a real
-    pipeline writes once (cluster assignments, candidate-pair tables)
-    and every downstream consumer reads.  ``build()`` must return a
-    DataFrame; full-path md5 cache key (round-8 review fix: basenames
-    collide across datasets).  Unknown tags are refused: declare the
-    live-measured twin in ``SESSION_VIEW_LIVE_TWINS`` first."""
-    import hashlib
-    import re
-
-    base = re.sub(r"_p\d+$", "", tag)
-    if base not in SESSION_VIEW_LIVE_TWINS:
-        raise ValueError(
-            f"undeclared stored-view tag {tag!r}: add it (and its "
-            "live-measured twin query) to SESSION_VIEW_LIVE_TWINS"
-        )
-
-    suffix = (
-        sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_").replace("-", "_")
-        + "_"
-        + hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:8]
-    )
-    name = f"sales_telegram_bot_data_pipeline_{tag}_{suffix}"
-    # catalog probe, not a try/except spark.table(): a failed table()
-    # resolution is a failed QueryExecution that every registered
-    # ExecutionListener (e.g. Observation's) re-walks and error-logs
-    if spark.catalog.tableExists(name):
-        return name
-    build().localCheckpoint().createOrReplaceTempView(name)
-    return name
 
 
 def _shingles_ranked_view(spark: SparkSession, sf_dir: str) -> str:
@@ -747,7 +684,7 @@ def _shingles_ranked_view(spark: SparkSession, sf_dir: str) -> str:
     re-running the df join + per-doc ordering window per query (r10
     verdict task 2: the per-doc ORDER BY dominated the bench head —
     sort once at build, not per consumer)."""
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
 
     def build():
         sh = _shingles_sql(SPARK, view)
@@ -800,7 +737,7 @@ def _lsh_pairs_view(spark: SparkSession, sf_dir: str) -> str:
     stored table exactly as production reads the written candidate-pair
     table.  ``dedup_minhash_lsh`` (the pair-generation op itself) stays
     live-measured."""
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     return session_view(
         spark, sf_dir, "lshp",
         lambda: spark.sql(strip_order_by(_lsh_pairs_sql(SPARK, view))),
@@ -815,7 +752,7 @@ def _cc_labels_view(spark: SparkSession, sf_dir: str) -> str:
     ``dedup_connected_components``; the selection/audit consumers read
     the stored labels (built from the stored pair view)."""
     def build():
-        view = _doc_view(spark, sf_dir)
+        view = table_view(spark, sf_dir, "documents")
         docs = spark.table(view).select("doc_id")
         pairs = spark.table(_lsh_pairs_view(spark, sf_dir))
         return connected_components(spark, docs, pairs)
@@ -853,7 +790,7 @@ ORDER BY t.doc_id
     tags=("dedup", "clustering"),
 )
 def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     docs = spark.table(view)
     labels = spark.table(_cc_labels_view(spark, sf_dir))
     sizes = labels.groupBy("cluster_rep").agg(F.count("*").alias("cluster_size"))
@@ -955,7 +892,7 @@ ORDER BY doc_id
 def dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # Materialize the O(tokens) gram explode once (guide §3.3): the df
     # aggregation and the mark join-back each re-ran the full explode —
     # the same move _materialized_shingles makes for the Jaccard index.
@@ -1048,9 +985,9 @@ ORDER BY vec_id
     tags=("dedup", "graph", "iterative"),
 )
 def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _emb_view, _neardup_pairs_view
+    from .similarity import _neardup_pairs_view
 
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     # the stored pair view feeds every unrolled iteration via the edges
     # CTE (Spark would otherwise inline and recompute it PR_ITERS times)
     spark.table(_neardup_pairs_view(spark, sf_dir)).createOrReplaceTempView(
@@ -1116,7 +1053,7 @@ ORDER BY bd.doc_id
     tags=("dedup", "lsh", "incremental"),
 )
 def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # bands is referenced twice (idx + batch); materialize once — the same
     # move every multi-consumer relation in this module makes.  On a real
     # deployment idx is ALREADY a stored table; only the batch's bands are
@@ -1184,9 +1121,9 @@ ORDER BY vec_id
     tags=("dedup", "graph", "join"),
 )
 def triangle_count_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _emb_view, _neardup_pairs_view
+    from .similarity import _neardup_pairs_view
 
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     # stored pair view: the relation feeds three aliases of the edges CTE,
     # which Spark would inline and recompute
     spark.table(_neardup_pairs_view(spark, sf_dir)).createOrReplaceTempView(
@@ -1300,7 +1237,7 @@ ORDER BY doc_id
     tags=("dedup", "text", "fingerprint", "window"),
 )
 def winnowing_fingerprint_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_wnw_density_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_wnw_density_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 def _wnw_matches_sql(d: Dialect, table: str, fp_rel: str | None = None) -> str:
@@ -1348,7 +1285,7 @@ ORDER BY doc_a, doc_b
     tags=("dedup", "text", "fingerprint"),
 )
 def winnowing_doc_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     spark.sql(
         f"SELECT DISTINCT doc_id, h FROM ({_wnw_selected_rel(SPARK, view)}) s WHERE sel = 1"
     ).localCheckpoint().createOrReplaceTempView("sales_telegram_bot_data_pipeline_wnw_fp")
@@ -1486,9 +1423,9 @@ ORDER BY vec_id
     tags=("dedup", "graph", "iterative"),
 )
 def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _emb_view, _neardup_pairs_view
+    from .similarity import _neardup_pairs_view
 
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     spark.table(_neardup_pairs_view(spark, sf_dir)).createOrReplaceTempView(
         "sales_telegram_bot_data_pipeline_lpa_pairs"
     )
@@ -1555,7 +1492,7 @@ FROM cls
     tags=("dedup", "lsh", "audit"),
 )
 def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # audits read the STORED shingle table (production writes it once per
     # corpus snapshot); the explode itself stays live-measured by
     # dedup_ngram_jaccard's own per-call materialization
@@ -1692,7 +1629,7 @@ ORDER BY contained_doc, container_doc
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    view = _containment_corpus(SPARK, _doc_view(spark, sf_dir))
+    view = _containment_corpus(SPARK, table_view(spark, sf_dir, "documents"))
     # Shingling is doc-local, so the md5-subset corpus's shingles are
     # EXACTLY the stored shingle table filtered by the same doc_id
     # predicate — production filters the written shingle table rather
@@ -1762,7 +1699,7 @@ ORDER BY doc_id
 def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     docs = spark.table(view)
     labels = spark.table(_cc_labels_view(spark, sf_dir))
     quality = docs.select(
@@ -1842,7 +1779,7 @@ ORDER BY doc_id
     tags=("dedup", "clustering", "window"),
 )
 def dedup_cluster_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     labels = spark.table(_cc_labels_view(spark, sf_dir))
     labels.createOrReplaceTempView("sales_telegram_bot_data_pipeline_ccap_labels")
     return spark.sql(
@@ -1929,7 +1866,7 @@ FROM err
     tags=("dedup", "lsh", "audit"),
 )
 def minhash_estimate_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # reads the stored shingle table (see lsh_recall_audit note)
     rel = _shingles_session_rel(spark, sf_dir)
     spark.table(_lsh_pairs_view(spark, sf_dir)).createOrReplaceTempView(
@@ -2054,7 +1991,7 @@ ORDER BY doc_a, doc_b
     tags=("dedup", "join", "prefix-filter"),
 )
 def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # the stored shingle table carries its corpus stats (sh_df, n_sh) and
     # the rarest-first rank pos — the prefix is a pure FILTER over the
     # stored artifact (pos <= |s| - ceil(t|s|) + 1), no per-call df join
@@ -2193,27 +2130,13 @@ ORDER BY cf.n_bands DESC
 
 
 def _tune_sig_view(spark: SparkSession, sf_dir: str, view: str) -> str:
-    """Materialize the band-tune MinHash signature relation ONCE per
-    (session, sf) and return its temp-view name — the stored-index shape
+    """The band-tune MinHash signature relation as a stored session view
     (VERDICT r8 task 4: hoist the shared signature relation).  A MinHash
     signature table IS a persisted index in production LSH (computed at
     ingest, reused by every banding decision); re-hashing the corpus with
     portable md5 on every audit run measured as the single biggest stage
-    (~40% of the query).  Same full-path cache key discipline as
-    ``pipeline_native._wide_view`` (round-8 review fix)."""
-    import hashlib
-
-    suffix = (
-        sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_").replace("-", "_")
-        + "_"
-        + hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:8]
-    )
-    name = f"sales_telegram_bot_data_pipeline_tune_sig_{suffix}"
-    if spark.catalog.tableExists(name):  # see session_view: never a failed query
-        return name
-    spark.sql(_minhash_sig_sql(SPARK, view)).localCheckpoint().createOrReplaceTempView(name)
-    return name
-
+    (~40% of the query)."""
+    return session_view(spark, sf_dir, "tune_sig", lambda: spark.sql(_minhash_sig_sql(SPARK, view)))
 
 
 @register(
@@ -2232,7 +2155,7 @@ def _tune_sig_view(spark: SparkSession, sf_dir: str, view: str) -> str:
     tags=("dedup", "lsh", "audit"),
 )
 def lsh_band_tuning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _band_tune_corpus(SPARK, _doc_view(spark, sf_dir))
+    view = _band_tune_corpus(SPARK, table_view(spark, sf_dir, "documents"))
     sig_view = _tune_sig_view(spark, sf_dir, view)
     cands = spark.sql(
         _band_cands_sql(SPARK, view, sig_rel=f"SELECT * FROM {sig_view}")
@@ -2350,9 +2273,9 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs exactly once).  Survivor sets shrink monotonically, so stopping
     early at an unchanged count is EXACTLY the fixed point the remaining
     rounds would no-op through — results identical to the full unroll."""
-    from .similarity import _emb_view, _neardup_pairs_view
+    from .similarity import _neardup_pairs_view
 
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     pairs = spark.table(_neardup_pairs_view(spark, sf_dir))
     # Loop mechanics share the CC fixpoint's round discipline (VERDICT r12
     # task 2 — the peel measured 51 Spark jobs of ~0.15 s scheduler
@@ -2521,7 +2444,7 @@ def softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two) and the STORED pair view (the lshp artifact every graph
     # consumer reads; pair generation stays live-measured by its
     # declared twin dedup_minhash_lsh).  12 -> 2 static scans.
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(
         _softdedup_sql(
             SPARK,
@@ -2575,7 +2498,7 @@ FROM walk GROUP BY doc_id ORDER BY doc_id
     tags=("dedup", "graph", "iterative"),
 )
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     mat = spark.table(_lsh_pairs_view(spark, sf_dir))
     sym = (
         mat.selectExpr("doc_a AS src", "doc_b AS dst")
@@ -2695,9 +2618,9 @@ ORDER BY vec_id
 )
 def clustering_coefficient_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
-    from .similarity import _emb_view, _neardup_pairs_view
+    from .similarity import _neardup_pairs_view
 
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     spark.table(_neardup_pairs_view(spark, sf_dir)).createOrReplaceTempView(
         "sales_telegram_bot_data_pipeline_cc_pairs"
     )
@@ -2910,9 +2833,8 @@ ORDER BY doc_a, doc_b
     tags=("dedup", "similarity", "prefix-filter"),
 )
 def apss_cosine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .curation import _doc_view
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_apss_docs")
+    view = table_view(spark, sf_dir, "documents")
     # materialize-once: the weighted posting relation feeds tails, norms,
     # candidates and BOTH sides of the verify join — Spark inlines CTEs, so
     # without a break the tokenize/tf/df chain recomputes per consumer

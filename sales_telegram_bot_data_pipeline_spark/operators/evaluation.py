@@ -40,8 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
 from ..registry import register
-from ..sources.tables import load_table
-from .curation import _doc_view
+from ..sources.tables import load_table, table_view
 
 # --------------------------------------------------------------------------
 # exact tie-corrected ROC-AUC of the quality classifier vs the 'en' label
@@ -111,7 +110,7 @@ def roc_auc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .lm_quality import _logreg_sql
     from .scalars_extra import range_prefix_summed
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_auc_docs")
+    view = table_view(spark, sf_dir, "documents")
     scored = spark.sql(_logreg_sql(SPARK, view)).select(
         F.col("quality_prob").alias("v"), (F.col("lang") == "en").alias("pos")
     )
@@ -203,7 +202,7 @@ ORDER BY source_a, source_b
     tags=("evaluation", "stats", "self-join"),
 )
 def welch_ttest_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_welch_docs")
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_WELCH_SQL.format(table=view))
 
 
@@ -250,7 +249,7 @@ ORDER BY n_chars DESC, doc_id
     tags=("evaluation", "skyline", "dominance"),
 )
 def skyline_pareto_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_sky_docs")
+    view = table_view(spark, sf_dir, "documents")
     pts = spark.sql(_skyline_pts_sql(SPARK, view)).localCheckpoint(eager=False)
     g = pts.groupBy("x").agg(F.max("y").alias("my"))
     ga, gb = g.alias("a"), g.alias("b")
@@ -375,10 +374,10 @@ cum AS (
 def kaplan_meier_repurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scalars_extra import range_prefix_summed_pair
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_km_o")
+    orders = table_view(spark, sf_dir, "orders")
     g = spark.sql(
         _KM_DUR_SQL.format(
-            orders="sales_telegram_bot_data_pipeline_km_o",
+            orders=orders,
             dd_event="datediff(s.d2, s.d1)",
             dd_censor="datediff(h.hmax, s.d1)",
         )
@@ -477,7 +476,7 @@ ORDER BY cm.declared_lang
     tags=("evaluation", "text", "agg"),
 )
 def langid_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_lc_docs")
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_langid_confusion_sql(SPARK, view))
 
 
@@ -681,5 +680,5 @@ FROM sums s2 CROSS JOIN tot t
     tags=("evaluation", "stats", "agg"),
 )
 def anova_sources_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_anova_docs")
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_ANOVA_SQL.format(table=view))

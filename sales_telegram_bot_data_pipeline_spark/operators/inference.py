@@ -379,7 +379,7 @@ def _det2_feed_view(spark: SparkSession, sf_dir: str, padding: float = 0.10) -> 
     ``nested_detections_table`` (the model1 twin of the same
     pages → stub_detect → pad_clamp chain).  Tag carries the padding so
     a non-default pad never reuses the default feed."""
-    from .dedup import session_view
+    from ..session import session_view
 
     def build():
         pages = synthesize_pages(spark, sf_dir)

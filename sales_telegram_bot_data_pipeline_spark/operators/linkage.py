@@ -40,14 +40,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import table_view
 
 MIN_TOKEN_LEN = 4  # tokens shorter than this are ambiguous at distance 1
-
-
-def _doc_view(spark: SparkSession, sf_dir: str, name: str = "sales_telegram_bot_data_pipeline_docs") -> str:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(name)
-    return name
 
 
 def _delete_keys(d: Dialect, s: str) -> str:
@@ -143,12 +138,8 @@ ORDER BY token
     tags=("linkage", "text", "join"),
 )
 def symspell_name_correction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "part").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_sym_part"
-    )
-    return spark.sql(
-        _symspell_sql(SPARK, _doc_view(spark, sf_dir), "sales_telegram_bot_data_pipeline_sym_part")
-    )
+    part = table_view(spark, sf_dir, "part")
+    return spark.sql(_symspell_sql(SPARK, table_view(spark, sf_dir, "documents"), part))
 
 
 # --------------------------------------------------------------------------
@@ -217,15 +208,9 @@ ORDER BY f.o_orderkey
     tags=("linkage", "temporal", "join", "scd2"),
 )
 def pit_join_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_pit_ord")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_pit_cust")
-    return spark.sql(
-        _PIT_SQL.format(
-            orders="sales_telegram_bot_data_pipeline_pit_ord",
-            customer="sales_telegram_bot_data_pipeline_pit_cust",
-            mod=CUSTKEY_MOD,
-        )
-    )
+    orders = table_view(spark, sf_dir, "orders")
+    customer = table_view(spark, sf_dir, "customer")
+    return spark.sql(_PIT_SQL.format(orders=orders, customer=customer, mod=CUSTKEY_MOD))
 
 
 # --------------------------------------------------------------------------
@@ -294,9 +279,5 @@ ORDER BY dirty_key
     tags=("linkage", "fuzzy-join", "blocking"),
 )
 def record_linkage_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_link_customer"
-    )
-    return spark.sql(
-        _record_linkage_sql(SPARK, "sales_telegram_bot_data_pipeline_link_customer")
-    )
+    customer = table_view(spark, sf_dir, "customer")
+    return spark.sql(_record_linkage_sql(SPARK, customer))

@@ -46,7 +46,8 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
 from ..functions.text import quality_fields_sql, stopword_ratio_sql
 from ..registry import register
-from .curation import BENCH_MOD, _doc_view
+from ..sources.tables import table_view
+from .curation import BENCH_MOD
 
 LM_K2 = 1  # add-k smoothing with k = 1/2: P = (2c2 + 1) / (2c1 + V)
 DSIR_BUCKETS = 4096
@@ -136,7 +137,7 @@ ORDER BY doc_id
     tags=("quality", "lm", "text"),
 )
 def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_bigram_lm_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_bigram_lm_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -200,7 +201,7 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize it once — (doc_id, bucket) integer pairs, far smaller than
     # the text they came from.  localCheckpoint locally; on a cluster this
     # is persist(MEMORY_AND_DISK) / a reliable checkpoint, same shape.
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     h = SPARK.md5_prefix_int("(w1 || ' ' || w2)")
     feats = (
         f"SELECT doc_id, ({h}) % {DSIR_BUCKETS} AS f "
@@ -272,7 +273,7 @@ ORDER BY doc_id
     tags=("quality", "scalar", "text"),
 )
 def quality_logreg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_logreg_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_logreg_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -321,7 +322,7 @@ ORDER BY source, doc_id
     tags=("curation", "sampling", "window"),
 )
 def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_token_budget_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_token_budget_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -402,7 +403,7 @@ ORDER BY c.decile
 def score_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scalars_extra import range_ranked
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     scored = strip_order_by(_logreg_sql(SPARK, view))
     base = spark.sql(
         f"SELECT doc_id, (lang = 'en') AS is_pos, -quality_prob AS neg "
@@ -519,7 +520,7 @@ ORDER BY doc_id
 def kneser_ney_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # Materialize the trained bigram model once (guide §3.3): ctx, cont,
     # the two tot scalar subqueries and the scoring join each re-ran the
     # target-subset bigram explode (12 static scans per statement); the
@@ -587,7 +588,7 @@ FROM r
     tags=("quality", "audit", "agg"),
 )
 def quality_gate_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_kappa_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_kappa_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -629,4 +630,4 @@ FROM joined GROUP BY bin ORDER BY bin
     tags=("quality", "audit", "calibration"),
 )
 def quality_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_calibration_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_calibration_sql(SPARK, table_view(spark, sf_dir, "documents")))

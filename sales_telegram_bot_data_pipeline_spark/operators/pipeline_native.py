@@ -22,7 +22,8 @@ from ..functions.prices import (
     price_context_gates,
 )
 from ..registry import register
-from ..sources.tables import load_table
+from ..session import session_view
+from ..sources.tables import table_view
 
 CLASSES = ("item_name", "item_price", "item_member_price", "item_initial_price")
 NAME_WORDS = ("mleko", "jogurt", "cerstve", "smetanovy", "florian", "maslo")
@@ -199,44 +200,27 @@ def _detections_view(spark: SparkSession, sf_dir: str) -> str:
     ``inference._det2_feed_view``.  Synthesis stays live-measured by
     ``nested_detections_table`` (mapInPandas path) and by this view's
     one warm-up build."""
-    from .dedup import session_view
-
-    def build():
-        part_view = "sales_telegram_bot_data_pipeline_part_detfeed"
-        load_table(spark, sf_dir, "part").createOrReplaceTempView(part_view)
-        return spark.sql(_detections_sql(SPARK, part_view))
-
-    return session_view(spark, sf_dir, "detfeed", build)
+    return session_view(
+        spark, sf_dir, "detfeed",
+        lambda: spark.sql(_detections_sql(SPARK, table_view(spark, sf_dir, "part"))),
+    )
 
 
 def _wide_view(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the wide detected_data relation ONCE per (session, sf)
-    and return its temp-view name.  This mirrors the reference dataflow:
-    DAG #1 STORES detected_data (DynamoDB put, op 5) and the regroup ops
-    48/49 READ the stored table (regroup_by_shop.py reads, never
-    recomputes) — so downstream queries here consume the materialized
-    relation instead of re-deriving the whole explode+parse pipeline per
-    query (3.8 s -> ~0.4 s for shop_valid_files at sf0.1).  Inputs are
-    read-only testdata keyed by sf_dir; the cache is session-scoped."""
-    import hashlib
+    """The wide detected_data relation as a stored session view.  This
+    mirrors the reference dataflow: DAG #1 STORES detected_data
+    (DynamoDB put, op 5) and the regroup ops 48/49 READ the stored table
+    (regroup_by_shop.py reads, never recomputes) — so downstream queries
+    here consume the materialized relation instead of re-deriving the
+    whole explode+parse pipeline per query (3.8 s -> ~0.4 s for
+    shop_valid_files at sf0.1).  ``detected_data_native`` keeps the
+    build live-measured."""
 
-    # key on the FULL path, not the basename (review fix: two datasets
-    # whose dirs share a basename must not reuse each other's cache)
-    suffix = (
-        sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_").replace("-", "_")
-        + "_"
-        + hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:8]
-    )
-    name = f"sales_telegram_bot_data_pipeline_wide_{suffix}"
-    # catalog probe, not try/except spark.table(): a failed resolution is
-    # a failed QueryExecution every ExecutionListener re-walks + logs
-    if spark.catalog.tableExists(name):
-        return name
-    det = _detections_view(spark, sf_dir)  # reuse the stored detection feed
-    spark.sql(
-        _wide_sql(SPARK, "unused", detections_rel=f"SELECT * FROM {det}")
-    ).localCheckpoint().createOrReplaceTempView(name)
-    return name
+    def build():
+        det = _detections_view(spark, sf_dir)  # reuse the stored detection feed
+        return spark.sql(_wide_sql(SPARK, "unused", detections_rel=f"SELECT * FROM {det}"))
+
+    return session_view(spark, sf_dir, "wide", build)
 
 
 def _shop_valid_files_sql(

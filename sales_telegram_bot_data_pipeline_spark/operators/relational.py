@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_view
 
 
 def _dec(col: str, prec: int = 18, scale: int = 2) -> F.Column:
@@ -491,15 +491,15 @@ ORDER BY returnflag, orderpriority
     tags=("agg", "grouping-sets"),
 )
 def grouping_sets_flag_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_li")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ord")
-    return spark.sql("""
+    lineitem = table_view(spark, sf_dir, "lineitem")
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(f"""
 SELECT
   COALESCE(l_returnflag, 'ALL') AS returnflag,
   COALESCE(o_orderpriority, 'ALL') AS orderpriority,
   COUNT(*) AS n_rows,
   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-FROM sales_telegram_bot_data_pipeline_li JOIN sales_telegram_bot_data_pipeline_ord ON l_orderkey = o_orderkey
+FROM {lineitem} JOIN {orders} ON l_orderkey = o_orderkey
 GROUP BY GROUPING SETS ((l_returnflag), (o_orderpriority))
 ORDER BY returnflag, orderpriority
 """)
@@ -524,13 +524,13 @@ ORDER BY c_custkey
     tags=("subquery", "join"),
 )
 def correlated_max_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_cust")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ord2")
-    return spark.sql("""
+    customer = table_view(spark, sf_dir, "customer")
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(f"""
 SELECT c_custkey, c_name,
        (SELECT CAST(MAX(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        FROM sales_telegram_bot_data_pipeline_ord2 WHERE o_custkey = c_custkey) AS max_order_price
-FROM sales_telegram_bot_data_pipeline_cust
+        FROM {orders} WHERE o_custkey = c_custkey) AS max_order_price
+FROM {customer}
 WHERE c_custkey < 100
 ORDER BY c_custkey
 """)
@@ -713,11 +713,11 @@ ORDER BY c_custkey
     tags=("subquery", "filter"),
 )
 def above_avg_balance_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_cust2")
-    return spark.sql("""
+    customer = table_view(spark, sf_dir, "customer")
+    return spark.sql(f"""
 SELECT c_custkey, c_acctbal
-FROM sales_telegram_bot_data_pipeline_cust2
-WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM sales_telegram_bot_data_pipeline_cust2 WHERE c_acctbal > 0)
+FROM {customer}
+WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM {customer} WHERE c_acctbal > 0)
 ORDER BY c_custkey
 """)
 
@@ -1223,14 +1223,8 @@ ORDER BY ch.root
     tags=("relational", "recursive", "hierarchy"),
 )
 def recursive_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_cust_hier"
-    )
-    return spark.sql(
-        _hierarchy_sql("(c.c_custkey div 10)").format(
-            table="sales_telegram_bot_data_pipeline_cust_hier"
-        )
-    )
+    customer = table_view(spark, sf_dir, "customer")
+    return spark.sql(_hierarchy_sql("(c.c_custkey div 10)").format(table=customer))
 
 
 # --------------------------------------------------------------------------
@@ -1269,12 +1263,8 @@ ORDER BY t.from_type, t.to_type
     tags=("relational", "events", "window", "agg"),
 )
 def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_trans_events"
-    )
-    return spark.sql(
-        _TRANSITION_SQL.format(events="sales_telegram_bot_data_pipeline_trans_events")
-    )
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_TRANSITION_SQL.format(events=events))
 
 
 # --------------------------------------------------------------------------
@@ -1332,12 +1322,8 @@ def _register_paths():
         tags=("relational", "events", "agg", "topk"),
     )
     def top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-        load_table(spark, sf_dir, "events").createOrReplaceTempView(
-            "sales_telegram_bot_data_pipeline_path_events"
-        )
-        return spark.sql(
-            _event_paths_sql(SPARK, "sales_telegram_bot_data_pipeline_path_events")
-        )
+        events = table_view(spark, sf_dir, "events")
+        return spark.sql(_event_paths_sql(SPARK, events))
 
 
 _register_paths()
@@ -1528,7 +1514,7 @@ ORDER BY doc_id, metric
     tags=("relational", "unpivot", "projection"),
 )
 def unpivot_doc_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("sales_telegram_bot_data_pipeline_up_docs")
+    docs = table_view(spark, sf_dir, "documents")
     return spark.sql(
         f"""
 WITH wide AS (
@@ -1536,7 +1522,7 @@ WITH wide AS (
          CAST(n_chars AS BIGINT) AS n_chars,
          CAST(size(filter(split(text, '\\\\s+'), t -> t <> '')) AS BIGINT) AS n_words,
          CAST(regexp_count(text, '[0-9]') AS BIGINT) AS n_digits
-  FROM sales_telegram_bot_data_pipeline_up_docs WHERE doc_id % {UNPIVOT_DOC_MOD} = 0
+  FROM {docs} WHERE doc_id % {UNPIVOT_DOC_MOD} = 0
 )
 SELECT doc_id, metric, value
 FROM wide
@@ -1595,20 +1581,9 @@ ORDER BY nat.region, nat.nation
 def share_of_parent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    for t in ("orders", "customer", "nation", "region"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"sales_telegram_bot_data_pipeline_sr_{t}")
+    views = {t: table_view(spark, sf_dir, t) for t in ("orders", "customer", "nation", "region")}
     # Materialize the 25-row nation-grain aggregate once (guide §3.3):
     # reg/tot plus the final projection expanded it into 24 static corpus
     # scans per statement.  The oracle keeps the single-statement form.
-    nat = materialize_once(
-        spark,
-        _SHARE_ROLLUP_NAT_SQL.format(
-            orders="sales_telegram_bot_data_pipeline_sr_orders",
-            customer="sales_telegram_bot_data_pipeline_sr_customer",
-            nation="sales_telegram_bot_data_pipeline_sr_nation",
-            region="sales_telegram_bot_data_pipeline_sr_region",
-        ),
-        "sr_nat",
-        key=sf_dir,
-    )
+    nat = materialize_once(spark, _SHARE_ROLLUP_NAT_SQL.format(**views), "sr_nat", key=sf_dir)
     return spark.sql(_SHARE_ROLLUP_SQL.format(nat=f"SELECT * FROM {nat}"))

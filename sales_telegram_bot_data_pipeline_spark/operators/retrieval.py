@@ -29,17 +29,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_view
 
 QUERY_TERMS = ("spark", "join", "window", "vector")
 K1 = "1.2e0"
 B = "0.75e0"
 TOP_K = 25
-
-
-def _doc_view(spark: SparkSession, sf_dir: str, name: str = "sales_telegram_bot_data_pipeline_docs") -> str:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(name)
-    return name
 
 
 def _bm25_sql(d: Dialect, table: str, terms: tuple[str, ...] = QUERY_TERMS, k: int = TOP_K) -> str:
@@ -96,7 +91,7 @@ LIMIT {k}
     tags=("retrieval", "text"),
 )
 def bm25_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_bm25_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_bm25_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -175,10 +170,9 @@ LIMIT {RRF_OUT_K}
     tags=("retrieval", "similarity", "text"),
 )
 def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _emb_view
 
-    docs = _doc_view(spark, sf_dir)
-    emb = _emb_view(spark, sf_dir)
+    docs = table_view(spark, sf_dir, "documents")
+    emb = table_view(spark, sf_dir, "embeddings")
     return spark.sql(_rrf_sql(SPARK, docs, emb))
 
 
@@ -243,7 +237,7 @@ ORDER BY doc_id, rk
     tags=("retrieval", "text", "window"),
 )
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_tfidf_top_terms_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_tfidf_top_terms_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------

@@ -57,8 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
 from ..registry import register
-from ..sources.tables import load_table
-from .curation import _doc_view
+from ..sources.tables import table_view
 
 _DAYNO = {
     "spark": "datediff(to_date(o_orderdate), to_date('1970-01-01'))",
@@ -176,7 +175,7 @@ ORDER BY te.source
 def levene_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_lev_docs")
+    view = table_view(spark, sf_dir, "documents")
     cells = materialize_once(spark, _levene_cells_sql(SPARK, view), "lev_cells", key=sf_dir)
     return spark.sql(_levene_sql(SPARK, view, cells_rel=f"SELECT * FROM {cells}"))
 
@@ -226,8 +225,8 @@ FROM agg a CROSS JOIN thresh t
     tags=("analytics", "stats", "evt", "topk"),
 )
 def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_hill_o")
-    return spark.sql(_hill_sql(SPARK, "sales_telegram_bot_data_pipeline_hill_o"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_hill_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -362,37 +361,22 @@ ORDER BY g.seg
 def theil_inequality_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_th_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_th_c")
+    orders = table_view(spark, sf_dir, "orders")
+    customer = table_view(spark, sf_dir, "customer")
     # Materialize the two 5-row per-segment heads once each (guide §3.3):
     # CTE inlining expanded g/gsum through tot x rowterms x btw x scal x
     # the final projection into ~20 executed corpus scans per call.  Two
     # bounded checkpoints -> exactly two corpus passes (g build, gsum
     # build); the main statement below reads only the views.  The oracle
     # keeps the single-statement form.
-    g = materialize_once(
-        spark,
-        _theil_g_sql(SPARK, "sales_telegram_bot_data_pipeline_th_o", "sales_telegram_bot_data_pipeline_th_c"),
-        "th_g",
-        key=sf_dir,
-    )
+    g = materialize_once(spark, _theil_g_sql(SPARK, orders, customer), "th_g", key=sf_dir)
     gsum = materialize_once(
         spark,
-        _theil_gsum_sql(
-            SPARK, "sales_telegram_bot_data_pipeline_th_o", "sales_telegram_bot_data_pipeline_th_c", g
-        ),
+        _theil_gsum_sql(SPARK, orders, customer, g),
         "th_gsum",
         key=sf_dir,
     )
-    return spark.sql(
-        _theil_sql(
-            SPARK,
-            "sales_telegram_bot_data_pipeline_th_o",
-            "sales_telegram_bot_data_pipeline_th_c",
-            g_rel=g,
-            gsum_rel=gsum,
-        )
-    )
+    return spark.sql(_theil_sql(SPARK, orders, customer, g_rel=g, gsum_rel=gsum))
 
 
 # --------------------------------------------------------------------------
@@ -479,8 +463,8 @@ FROM fit
     tags=("analytics", "timeseries", "stats"),
 )
 def granger_lag_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_gr_o")
-    return spark.sql(_granger_sql(SPARK, "sales_telegram_bot_data_pipeline_gr_o"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_granger_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -566,16 +550,9 @@ FROM tot t CROSS JOIN agg a
 def ljung_box_whiteness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_lb_o")
-    daily = materialize_once(
-        spark,
-        _ljung_box_daily_sql(SPARK, "sales_telegram_bot_data_pipeline_lb_o"),
-        "lb_daily",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _ljung_box_sql(SPARK, "sales_telegram_bot_data_pipeline_lb_o", daily_rel=daily)
-    )
+    orders = table_view(spark, sf_dir, "orders")
+    daily = materialize_once(spark, _ljung_box_daily_sql(SPARK, orders), "lb_daily", key=sf_dir)
+    return spark.sql(_ljung_box_sql(SPARK, orders, daily_rel=daily))
 
 
 # --------------------------------------------------------------------------
@@ -640,7 +617,7 @@ FROM m CROSS JOIN nn
 def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _lsh_pairs_view
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(
         _assortativity_sql(SPARK, view, pairs_rel=_lsh_pairs_view(spark, sf_dir))
     )
@@ -744,9 +721,9 @@ LIMIT {_AA_TOPK}
     tags=("analytics", "graph", "dedup", "topk"),
 )
 def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import session_view
+    from ..session import session_view
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # the loose candidate graph is a stored session relation, like the
     # strict pair graph every other graph consumer reads
     pairs = session_view(
@@ -888,28 +865,19 @@ FROM agg a
 def logrank_test_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_lr_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_lr_c")
+    orders = table_view(spark, sf_dir, "orders")
+    customer = table_view(spark, sf_dir, "customer")
     # Materialize the bounded (group x day) cell grid once (guide §3.3):
     # gtot/taxis/dense plus the two gtot scalar subqueries expanded the
     # cohort chain into 40 static corpus scans per statement.  One
     # checkpoint -> one cohort build; the statement reads only the view.
     cells = materialize_once(
         spark,
-        _logrank_cells_sql(
-            SPARK, "sales_telegram_bot_data_pipeline_lr_o", "sales_telegram_bot_data_pipeline_lr_c"
-        ),
+        _logrank_cells_sql(SPARK, orders, customer),
         "lr_cells",
         key=sf_dir,
     )
-    return spark.sql(
-        _logrank_sql(
-            SPARK,
-            "sales_telegram_bot_data_pipeline_lr_o",
-            "sales_telegram_bot_data_pipeline_lr_c",
-            cells_rel=cells,
-        )
-    )
+    return spark.sql(_logrank_sql(SPARK, orders, customer, cells_rel=cells))
 
 
 # --------------------------------------------------------------------------
@@ -992,7 +960,7 @@ LIMIT {_QL_TOPK}
     tags=("retrieval", "text", "topk"),
 )
 def query_likelihood_dirichlet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_ql_docs")
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_ql_sql(SPARK, view))
 
 
@@ -1036,7 +1004,7 @@ FROM agg a
     tags=("evaluation", "retrieval", "stats"),
 )
 def mrr_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_mrr_docs")
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_mrr_sql(SPARK, view))
 
 
@@ -1079,7 +1047,7 @@ ORDER BY doc_id
     tags=("curation", "sampling", "plan"),
 )
 def curriculum_schedule_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_curr_docs")
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_curriculum_sql(SPARK, view))
 
 
@@ -1165,5 +1133,5 @@ ORDER BY s.stratum
     tags=("analytics", "causal", "experiment"),
 )
 def ipw_ate_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ipw_ev")
-    return spark.sql(_ipw_sql(SPARK, "sales_telegram_bot_data_pipeline_ipw_ev"))
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_ipw_sql(SPARK, events))

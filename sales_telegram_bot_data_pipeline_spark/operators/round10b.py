@@ -52,8 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
 from ..registry import register
-from ..sources.tables import load_table
-from .curation import _doc_view
+from ..sources.tables import table_view
 
 _CENTS = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
 _DAYNO = {
@@ -124,8 +123,8 @@ FROM fit
     tags=("analytics", "evt", "timeseries"),
 )
 def gumbel_block_maxima_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_gb_o")
-    return spark.sql(_gumbel_sql(SPARK, "sales_telegram_bot_data_pipeline_gb_o"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_gumbel_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -215,16 +214,9 @@ ORDER BY c.event_type
 def friedman_rank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_fr_ev")
-    cells = materialize_once(
-        spark,
-        _friedman_cells_sql(SPARK, "sales_telegram_bot_data_pipeline_fr_ev"),
-        "fr_cells",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _friedman_sql(SPARK, "sales_telegram_bot_data_pipeline_fr_ev", cells_rel=cells)
-    )
+    events = table_view(spark, sf_dir, "events")
+    cells = materialize_once(spark, _friedman_cells_sql(SPARK, events), "fr_cells", key=sf_dir)
+    return spark.sql(_friedman_sql(SPARK, events, cells_rel=cells))
 
 
 # --------------------------------------------------------------------------
@@ -305,16 +297,9 @@ FROM fin
 def cramers_v_bias_corrected(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_cv_o")
-    cells = materialize_once(
-        spark,
-        _cramers_cells_sql(SPARK, "sales_telegram_bot_data_pipeline_cv_o"),
-        "cv_cells",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _cramers_sql(SPARK, "sales_telegram_bot_data_pipeline_cv_o", cells_rel=cells)
-    )
+    orders = table_view(spark, sf_dir, "orders")
+    cells = materialize_once(spark, _cramers_cells_sql(SPARK, orders), "cv_cells", key=sf_dir)
+    return spark.sql(_cramers_sql(SPARK, orders, cells_rel=cells))
 
 
 # --------------------------------------------------------------------------
@@ -397,7 +382,7 @@ def katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
     from .dedup import _lsh_pairs_view
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # Materialize the symmetric edge list and node set once (guide §3.3):
     # every unrolled iteration re-derived both from the pair view (38
     # static Exchanges per statement); two bounded checkpoints leave one
@@ -493,16 +478,9 @@ ORDER BY n_occurrences DESC, motif
 def sax_daily_revenue_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_sax_o")
-    sax = materialize_once(
-        spark,
-        _sax_symbols_sql(SPARK, "sales_telegram_bot_data_pipeline_sax_o"),
-        "sax_syms",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _sax_sql(SPARK, "sales_telegram_bot_data_pipeline_sax_o", sax_rel=sax)
-    )
+    orders = table_view(spark, sf_dir, "orders")
+    sax = materialize_once(spark, _sax_symbols_sql(SPARK, orders), "sax_syms", key=sf_dir)
+    return spark.sql(_sax_sql(SPARK, orders, sax_rel=sax))
 
 
 # --------------------------------------------------------------------------
@@ -575,7 +553,7 @@ FROM tot t CROSS JOIN agg a
 def mutual_information_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_mi_docs")
+    view = table_view(spark, sf_dir, "documents")
     # Materialize the bounded contingency grid once (guide §3.3): the
     # ms/ml/tot marginals and three term CTEs expanded it into 18 static
     # corpus scans per statement.
@@ -626,7 +604,7 @@ ORDER BY g.source
     tags=("curation", "audit", "agg"),
 )
 def loso_source_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_lo_docs")
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_loso_sql(SPARK, view))
 
 
@@ -771,10 +749,10 @@ def hilbert_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bits = 8
     grid = 1 << bits
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_hi_o")
+    orders = table_view(spark, sf_dir, "orders")
     base = spark.sql(
         f"""
-WITH base AS ({_zorder_base_sql(SPARK, "sales_telegram_bot_data_pipeline_hi_o")})
+WITH base AS ({_zorder_base_sql(SPARK, orders)})
 SELECT okey, bx, by, z, {_hilbert_fold_expr(bits)} AS hd FROM base
 """
     ).localCheckpoint()
@@ -926,5 +904,5 @@ ORDER BY bucket
     tags=("curation", "packing", "plan"),
 )
 def bucketed_packing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_bp_docs")
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_bucketed_packing_sql(SPARK, view))

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import table_view
 
 _LN19 = "2.9444389791664403e0"  # ln(19): Wald bounds for alpha=beta=0.05
 _LN105 = "0.04879016416943205e0"  # ln(1.05)
@@ -158,10 +158,8 @@ FROM {events} GROUP BY user_id
 def qini_uplift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scalars_extra import range_ranked
 
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_qn_ev")
-    users = spark.sql(_qini_users_sql(SPARK, "sales_telegram_bot_data_pipeline_qn_ev")).withColumn(
-        "neg_ev", -F.col("n_ev")
-    )
+    events = table_view(spark, sf_dir, "events")
+    users = spark.sql(_qini_users_sql(SPARK, events)).withColumn("neg_ev", -F.col("n_ev"))
     ranked, _ = range_ranked(spark, users, ["neg_ev", "user_id"])
     if ranked is None:
         return spark.sql(
@@ -268,11 +266,9 @@ t AS (
 def sprt_poisson_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scalars_extra import range_prefix_summed
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_sp_o")
+    orders = table_view(spark, sf_dir, "orders")
     dayno = "datediff(to_date(o_orderdate), to_date('1970-01-01'))"
-    daily = spark.sql(
-        _SPRT_DAILY.format(dayno=dayno, orders="sales_telegram_bot_data_pipeline_sp_o")
-    ).localCheckpoint(eager=False)
+    daily = spark.sql(_SPRT_DAILY.format(dayno=dayno, orders=orders)).localCheckpoint(eager=False)
     daily.createOrReplaceTempView("sales_telegram_bot_data_pipeline_sp_daily")
     inc = spark.sql(
         "WITH lam AS (SELECT CAST(SUM(x) AS DOUBLE) / COUNT(*) AS l0 "
@@ -376,9 +372,8 @@ ORDER BY r.source
     tags=("analytics", "stats", "agg"),
 )
 def beta_binomial_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .curation import _doc_view
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_bb_docs")
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_betabin_sql(SPARK, view))
 
 
@@ -434,7 +429,6 @@ FROM s
     tags=("dedup", "audit", "stats"),
 )
 def capture_recapture_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .curation import _doc_view
     from .dedup import (
         _jaccard_stopshingle_sql,
         _lsh_pairs_view,
@@ -443,7 +437,7 @@ def capture_recapture_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         session_view,
     )
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     lsh = _lsh_pairs_view(spark, sf_dir)
     # stop-shingle pairs as a stored session relation built from the
     # shared shingle/df views (the twin stays live-measured by its op)

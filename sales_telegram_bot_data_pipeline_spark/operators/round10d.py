@@ -35,8 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
 from ..registry import register
-from ..sources.tables import load_table
-from .curation import _doc_view
+from ..sources.tables import table_view
 
 
 # --------------------------------------------------------------------------
@@ -140,7 +139,7 @@ ORDER BY gg.source
 def kruskal_wallis_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_kw_docs")
+    view = table_view(spark, sf_dir, "documents")
     # Materialize the bounded (source x value) grid once (guide §3.3):
     # vals/ranks/g/ties expanded it into 18 static corpus scans per
     # statement.  The oracle keeps the single-statement form.
@@ -291,7 +290,7 @@ FROM tot t CROSS JOIN mlo ml CROSS JOIN mhi mh
 def hodges_lehmann_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_hl_docs")
+    view = table_view(spark, sf_dir, "documents")
     dgrid = materialize_once(spark, _hl_diffs_sql(SPARK, view), "hl_diffs", key=sf_dir)
     return spark.sql(_hl_sql(SPARK, view, diffs_rel=f"SELECT * FROM {dgrid}"))
 
@@ -354,8 +353,8 @@ ORDER BY c.s
     tags=("analytics", "stats", "agg"),
 )
 def cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ca_o")
-    return spark.sql(_catrend_sql(SPARK, "sales_telegram_bot_data_pipeline_ca_o"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_catrend_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -431,8 +430,6 @@ ORDER BY t.stratum
     tags=("analytics", "causal", "stats"),
 )
 def mantel_haenszel_or(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_mh_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_mh_c")
-    return spark.sql(
-        _mh_sql(SPARK, "sales_telegram_bot_data_pipeline_mh_o", "sales_telegram_bot_data_pipeline_mh_c")
-    )
+    orders = table_view(spark, sf_dir, "orders")
+    customer = table_view(spark, sf_dir, "customer")
+    return spark.sql(_mh_sql(SPARK, orders, customer))

@@ -29,8 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
 from ..registry import register
-from ..sources.tables import load_table
-from .curation import _doc_view
+from ..sources.tables import table_view
 
 _CENTS = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
 _DAYNO = {
@@ -125,16 +124,9 @@ CROSS JOIN tot t
 def binary_segmentation_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_bs_o")
-    daily = materialize_once(
-        spark,
-        _binseg_daily_sql(SPARK, "sales_telegram_bot_data_pipeline_bs_o"),
-        "bs_daily",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _binseg_sql(SPARK, "sales_telegram_bot_data_pipeline_bs_o", daily_rel=daily)
-    )
+    orders = table_view(spark, sf_dir, "orders")
+    daily = materialize_once(spark, _binseg_daily_sql(SPARK, orders), "bs_daily", key=sf_dir)
+    return spark.sql(_binseg_sql(SPARK, orders, daily_rel=daily))
 
 
 # --------------------------------------------------------------------------
@@ -204,18 +196,11 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
     from .analytics import _markov_trans_sql
 
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_er_ev")
+    events = table_view(spark, sf_dir, "events")
     # Materialize the bounded transition grid once (guide §3.3; shares
     # the stationary-distribution builder — columns aliased i/j/c here).
-    trans = materialize_once(
-        spark,
-        _markov_trans_sql("sales_telegram_bot_data_pipeline_er_ev"),
-        "er_trans",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _entropy_rate_sql(SPARK, "sales_telegram_bot_data_pipeline_er_ev", trans_rel=trans)
-    )
+    trans = materialize_once(spark, _markov_trans_sql(events), "er_trans", key=sf_dir)
+    return spark.sql(_entropy_rate_sql(SPARK, events, trans_rel=trans))
 
 
 # --------------------------------------------------------------------------
@@ -293,7 +278,7 @@ def cramer_von_mises_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
     from .round10d import _src2_cells_sql
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_cvm_docs")
+    view = table_view(spark, sf_dir, "documents")
     # Materialize the side-tagged two-source value grid once (guide §3.3):
     # na/nb/pooled/cum/terms plus the lo/hi scalar subqueries expanded it
     # into 36 static corpus scans per statement.

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
 from ..registry import register
-from .curation import _doc_view
+from ..sources.tables import table_view
 
 
 # --------------------------------------------------------------------------
@@ -77,7 +77,7 @@ def cles_effect_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
     from .round10d import _src2_cells_sql
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_cl_docs")
+    view = table_view(spark, sf_dir, "documents")
     # Materialize the side-tagged two-source value grid once (guide §3.3):
     # na/nb/u plus the lo/hi scalar subqueries expanded it into 20 static
     # corpus scans per statement.
@@ -139,7 +139,7 @@ def hellinger_bhattacharyya(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
     from .round10d import _src2_cells_sql
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_hb_docs")
+    view = table_view(spark, sf_dir, "documents")
     # Materialize the side-tagged two-source value grid once (guide §3.3):
     # na/nb/terms plus the lo/hi scalar subqueries expanded it into 28
     # static corpus scans per statement.
@@ -211,5 +211,5 @@ ORDER BY g.bin
     tags=("evaluation", "calibration", "stats"),
 )
 def expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_ece_docs")
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_ece_sql(SPARK, view))

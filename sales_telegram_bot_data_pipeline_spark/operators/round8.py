@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_view
 
 # --------------------------------------------------------------------------
 # exact dyadic EWMA over weekly revenue
@@ -124,16 +124,14 @@ ORDER BY week
     tags=("analytics", "timeseries", "exact"),
 )
 def ewma_dyadic_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ewma_o")
+    orders = table_view(spark, sf_dir, "orders")
     # weekly feeds THREE consumers (w0 + both band-join sides): Spark
     # inlines CTEs, so materialize the orders scan+aggregate once
     spark.sql(
-        _EWMA_WEEKLY_SQL.format(
-            epoch_diff=_EPOCH_DIFF["spark"], orders="sales_telegram_bot_data_pipeline_ewma_o"
-        )
+        _EWMA_WEEKLY_SQL.format(epoch_diff=_EPOCH_DIFF["spark"], orders=orders)
     ).localCheckpoint(eager=False).createOrReplaceTempView("sales_telegram_bot_data_pipeline_ewma_w")
     return spark.sql(
-        _ewma_sql(SPARK, "sales_telegram_bot_data_pipeline_ewma_o",
+        _ewma_sql(SPARK, orders,
                   weekly_rel="SELECT x, cents FROM sales_telegram_bot_data_pipeline_ewma_w")
     )
 
@@ -197,8 +195,8 @@ ORDER BY b.dow
     tags=("analytics", "timeseries", "agg"),
 )
 def seasonal_dow_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_seas_o")
-    return spark.sql(_seasonal_sql(SPARK, "sales_telegram_bot_data_pipeline_seas_o"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_seasonal_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -266,13 +264,13 @@ s AS (
 def runs_test_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scalars_extra import range_ranked
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_runs_o")
+    orders = table_view(spark, sf_dir, "orders")
     d = SPARK
     daily = spark.sql(f"""
 SELECT CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x,
        CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
             AS BIGINT) AS cents
-FROM sales_telegram_bot_data_pipeline_runs_o GROUP BY 1
+FROM {orders} GROUP BY 1
 """)
     ranked, n = range_ranked(spark, daily, ["day_x"])
     if ranked is None:
@@ -423,9 +421,8 @@ FROM err
     tags=("similarity", "audit", "sketch"),
 )
 def jl_projection_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _emb_view
 
-    return spark.sql(_jl_sql(SPARK, _emb_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_jl_emb")))
+    return spark.sql(_jl_sql(SPARK, table_view(spark, sf_dir, "embeddings")))
 
 
 # --------------------------------------------------------------------------
@@ -474,13 +471,13 @@ _COVIS_UT_SQL = "SELECT DISTINCT user_id, event_type FROM {events}"
     tags=("analytics", "graph", "self-join"),
 )
 def covisitation_item_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_cov_ev")
+    events = table_view(spark, sf_dir, "events")
     # the distinct incidence relation feeds FOUR consumers (margins, the
     # user count, both pair-join sides): materialize the events
     # scan+DISTINCT once — at 100 TB re-deriving it per consumer is the
     # dominant cost, not the bounded |catalog|^2 tail
     spark.sql(
-        _COVIS_UT_SQL.format(events="sales_telegram_bot_data_pipeline_cov_ev")
+        _COVIS_UT_SQL.format(events=events)
     ).localCheckpoint(eager=False).createOrReplaceTempView("sales_telegram_bot_data_pipeline_cov_ut")
     return spark.sql(
         _COVIS_SQL.format(incidence="SELECT user_id, event_type FROM sales_telegram_bot_data_pipeline_cov_ut")
@@ -616,17 +613,17 @@ FROM scored CROSS JOIN tot t2
     tags=("analytics", "timeseries", "evaluation"),
 )
 def naive_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_bt_o")
+    orders = table_view(spark, sf_dir, "orders")
     # daily feeds four consumers (tot + three join sides): materialize once
     spark.sql(f"""
 SELECT CAST({_EPOCH_DIFF['spark']} AS BIGINT) AS day_x,
        CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
             AS BIGINT) AS cents
-FROM sales_telegram_bot_data_pipeline_bt_o GROUP BY 1
+FROM {orders} GROUP BY 1
 """).localCheckpoint(eager=False).createOrReplaceTempView("sales_telegram_bot_data_pipeline_bt_d")
     return spark.sql(
         _backtest_sql(
-            SPARK, "sales_telegram_bot_data_pipeline_bt_o",
+            SPARK, orders,
             daily_rel="SELECT day_x, cents FROM sales_telegram_bot_data_pipeline_bt_d",
         )
     )
@@ -724,9 +721,8 @@ ORDER BY source_a, source_b
     tags=("textops", "stats", "stylometry"),
 )
 def stylometric_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .curation import _doc_view
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_bd_docs")
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_burrows_sql(SPARK, view))
 
 
@@ -786,8 +782,8 @@ GROUP BY 1 ORDER BY entropy_bucket
     tags=("analytics", "stats", "entropy"),
 )
 def behavioral_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ent_ev")
-    return spark.sql(_entropy_sql(SPARK, "sales_telegram_bot_data_pipeline_ent_ev"))
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_entropy_sql(SPARK, events))
 
 
 # --------------------------------------------------------------------------
@@ -893,8 +889,8 @@ ORDER BY c.channel
     tags=("analytics", "attribution", "agg"),
 )
 def shapley_channel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_shp_ev")
-    return spark.sql(_shapley_sql(SPARK, "sales_telegram_bot_data_pipeline_shp_ev"))
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_shapley_sql(SPARK, events))
 
 
 # --------------------------------------------------------------------------
@@ -979,10 +975,9 @@ qh AS (SELECT MIN(s_u) AS q_u FROM calr CROSS JOIN kk WHERE cum >= kk.k)
     tags=("evaluation", "stats", "distributed-rank"),
 )
 def conformal_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .curation import _doc_view
     from .scalars_extra import range_prefix_summed
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_conf_docs")
+    view = table_view(spark, sf_dir, "documents")
     sc = spark.sql(_conformal_scored_sql(SPARK, view)).localCheckpoint(eager=False)
     sc.createOrReplaceTempView("sales_telegram_bot_data_pipeline_conf_sc")
     calg = (
@@ -1065,9 +1060,8 @@ ORDER BY source_a, source_b
     tags=("textops", "dedup", "self-join"),
 )
 def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .curation import _doc_view
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_svo_docs")
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_vocab_overlap_sql(SPARK, view))
 
 
@@ -1148,9 +1142,8 @@ GROUP BY t.n, t.syt, t.sqt
     tags=("evaluation", "stats", "calibration"),
 )
 def brier_score_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .curation import _doc_view
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_brier_docs")
+    view = table_view(spark, sf_dir, "documents")
     return spark.sql(_brier_sql(SPARK, view))
 
 
@@ -1215,5 +1208,5 @@ FROM pairs p CROSS JOIN tot t CROSS JOIN margx mx CROSS JOIN margy my
     tags=("analytics", "stats", "agg"),
 )
 def kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_kt_li")
-    return spark.sql(_kendall_sql(SPARK, "sales_telegram_bot_data_pipeline_kt_li"))
+    lineitem = table_view(spark, sf_dir, "lineitem")
+    return spark.sql(_kendall_sql(SPARK, lineitem))

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import table_view
 
 _EPOCH_DIFF = {
     "spark": "datediff(to_date(o_orderdate), to_date('1970-01-01'))",
@@ -182,8 +182,8 @@ FROM scal
     tags=("evaluation", "causal", "agg"),
 )
 def cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_cuped_o")
-    return spark.sql(_cuped_sql(SPARK, "sales_telegram_bot_data_pipeline_cuped_o"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_cuped_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -248,8 +248,8 @@ FROM wide
     tags=("evaluation", "causal", "agg"),
 )
 def did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_did_o")
-    return spark.sql(_did_sql(SPARK, "sales_telegram_bot_data_pipeline_did_o"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_did_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -354,16 +354,9 @@ ORDER BY recency_bin
 def isotonic_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_iso_o")
-    pre = materialize_once(
-        spark,
-        _isotonic_pre_sql(SPARK, "sales_telegram_bot_data_pipeline_iso_o"),
-        "iso_pre",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _isotonic_sql(SPARK, "sales_telegram_bot_data_pipeline_iso_o", pre_rel=pre)
-    )
+    orders = table_view(spark, sf_dir, "orders")
+    pre = materialize_once(spark, _isotonic_pre_sql(SPARK, orders), "iso_pre", key=sf_dir)
+    return spark.sql(_isotonic_sql(SPARK, orders, pre_rel=pre))
 
 
 # --------------------------------------------------------------------------
@@ -473,18 +466,16 @@ ORDER BY r.priority, r.segment
 def ipf_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ipf_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ipf_c")
+    orders = table_view(spark, sf_dir, "orders")
+    customer = table_view(spark, sf_dir, "customer")
     return spark.sql(
         _ipf_sql(
             SPARK,
-            "sales_telegram_bot_data_pipeline_ipf_o",
-            "sales_telegram_bot_data_pipeline_ipf_c",
+            orders,
+            customer,
             cells_rel="SELECT * FROM " + materialize_once(
                 spark,
-                _ipf_cells_sql(
-                    SPARK, "sales_telegram_bot_data_pipeline_ipf_o", "sales_telegram_bot_data_pipeline_ipf_c"
-                ),
+                _ipf_cells_sql(SPARK, orders, customer),
                 "ipf_cells",
                 key=sf_dir,
             ),
@@ -600,8 +591,8 @@ def zorder_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .scalars_extra import range_ranked
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_zo_o")
-    base = spark.sql(_zorder_base_sql(SPARK, "sales_telegram_bot_data_pipeline_zo_o")).localCheckpoint()
+    orders = table_view(spark, sf_dir, "orders")
+    base = spark.sql(_zorder_base_sql(SPARK, orders)).localCheckpoint()
     # ONE distributed rank pass for BOTH layout axes (guide §2.4 — the
     # spearman/rfm axis-fusion): the two sort legs are axis-tagged and
     # unioned, and under (axis, key, okey) ordering each leg is a
@@ -742,16 +733,9 @@ ORDER BY priority
 def bradley_terry_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_bt_o")
-    duels = materialize_once(
-        spark, _bt_duels_sql(SPARK, "sales_telegram_bot_data_pipeline_bt_o"), "bt_duels",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _bradley_terry_sql(
-            SPARK, "sales_telegram_bot_data_pipeline_bt_o", duels_rel=f"SELECT * FROM {duels}"
-        )
-    )
+    orders = table_view(spark, sf_dir, "orders")
+    duels = materialize_once(spark, _bt_duels_sql(SPARK, orders), "bt_duels", key=sf_dir)
+    return spark.sql(_bradley_terry_sql(SPARK, orders, duels_rel=f"SELECT * FROM {duels}"))
 
 
 # --------------------------------------------------------------------------
@@ -848,17 +832,17 @@ ORDER BY source_a, source_b
 def ks_two_sample_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ks_d")
+    docs = table_view(spark, sf_dir, "documents")
     # Materialize the bounded (source x value) grid once (guide §3.3):
     # tot/merged expanded it into 16 static corpus scans per statement.
     vals = materialize_once(
         spark,
         "SELECT source, CAST(n_chars AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS c\n"
-        "FROM sales_telegram_bot_data_pipeline_ks_d GROUP BY 1, 2",
+        f"FROM {docs} GROUP BY 1, 2",
         "ks_vals",
         key=sf_dir,
     )
-    return spark.sql(_ks_sql(SPARK, "sales_telegram_bot_data_pipeline_ks_d", vals_rel=vals))
+    return spark.sql(_ks_sql(SPARK, docs, vals_rel=vals))
 
 
 # --------------------------------------------------------------------------
@@ -924,8 +908,8 @@ ORDER BY event_type
     tags=("evaluation", "stats", "agg"),
 )
 def overdispersion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_od_e")
-    return spark.sql(_overdispersion_sql(SPARK, "sales_telegram_bot_data_pipeline_od_e"))
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_overdispersion_sql(SPARK, events))
 
 
 # --------------------------------------------------------------------------
@@ -1012,11 +996,9 @@ ORDER BY covariate
     tags=("evaluation", "causal", "agg"),
 )
 def covariate_balance_smd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_smd_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_smd_c")
-    return spark.sql(
-        _smd_sql(SPARK, "sales_telegram_bot_data_pipeline_smd_o", "sales_telegram_bot_data_pipeline_smd_c")
-    )
+    orders = table_view(spark, sf_dir, "orders")
+    customer = table_view(spark, sf_dir, "customer")
+    return spark.sql(_smd_sql(SPARK, orders, customer))
 
 
 # --------------------------------------------------------------------------
@@ -1104,5 +1086,5 @@ FROM scal
     tags=("evaluation", "causal", "agg"),
 )
 def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_mde_o")
-    return spark.sql(_mde_sql(SPARK, "sales_telegram_bot_data_pipeline_mde_o"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_mde_sql(SPARK, orders))

@@ -41,8 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
 from ..registry import register
-from ..sources.tables import load_table
-from .curation import _doc_view
+from ..sources.tables import table_view
 from .lm_quality import _bigram_rel
 
 # --------------------------------------------------------------------------
@@ -153,7 +152,7 @@ ORDER BY bh_rank
     tags=("evaluation", "stats", "audit"),
 )
 def bh_fdr_source_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_bh_fdr_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_bh_fdr_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -212,7 +211,7 @@ FROM cells
     tags=("evaluation", "stats", "text"),
 )
 def mcnemar_gate_disagreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_mcnemar_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_mcnemar_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -300,7 +299,7 @@ ORDER BY dim
     tags=("curation", "audit", "text"),
 )
 def feature_hashing_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     wc = spark.sql(_bigram_wc_sql(SPARK, view)).localCheckpoint()
     wc.createOrReplaceTempView("sales_telegram_bot_data_pipeline_feathash_wc")
     return spark.sql(
@@ -373,11 +372,9 @@ ORDER BY c.segment, c.priority
     tags=("curation", "relational", "agg"),
 )
 def target_encoding_smoothed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_te_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_te_c")
-    return spark.sql(
-        _target_encoding_sql(SPARK, "sales_telegram_bot_data_pipeline_te_o", "sales_telegram_bot_data_pipeline_te_c")
-    )
+    orders = table_view(spark, sf_dir, "orders")
+    customer = table_view(spark, sf_dir, "customer")
+    return spark.sql(_target_encoding_sql(SPARK, orders, customer))
 
 
 # --------------------------------------------------------------------------
@@ -448,7 +445,7 @@ ORDER BY a.r
     tags=("curation", "text", "agg"),
 )
 def good_turing_smoothing_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     wc = spark.sql(_bigram_wc_sql(SPARK, view)).localCheckpoint()
     wc.createOrReplaceTempView("sales_telegram_bot_data_pipeline_gt_wc")
     return spark.sql(

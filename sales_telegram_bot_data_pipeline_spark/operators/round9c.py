@@ -40,8 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
 from ..registry import register
-from ..sources.tables import load_table
-from .curation import _doc_view
+from ..sources.tables import table_view
 
 # --------------------------------------------------------------------------
 # mean-excess (EVT) tail audit
@@ -106,8 +105,8 @@ ORDER BY g.j
     tags=("evaluation", "stats", "audit"),
 )
 def mean_excess_tail_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_me_o")
-    return spark.sql(_mean_excess_sql(SPARK, "sales_telegram_bot_data_pipeline_me_o"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_mean_excess_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -186,7 +185,7 @@ ORDER BY ninth
     tags=("evaluation", "stats", "text"),
 )
 def decision_stump_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_stump_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_stump_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -264,7 +263,7 @@ ORDER BY m.source
     tags=("evaluation", "stats", "agg"),
 )
 def james_stein_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_james_stein_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_james_stein_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -331,7 +330,7 @@ def pr_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .lm_quality import _logreg_sql
     from .scalars_extra import range_prefix_summed
 
-    view = _doc_view(spark, sf_dir, "sales_telegram_bot_data_pipeline_prauc_docs")
+    view = table_view(spark, sf_dir, "documents")
     scored = spark.sql(_logreg_sql(SPARK, view)).select(
         F.col("quality_prob").alias("v"), (F.col("lang") == "en").alias("pos")
     )
@@ -476,5 +475,5 @@ FROM agg
     tags=("evaluation", "relational", "agg"),
 )
 def rbo_ranking_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_rbo_l")
-    return spark.sql(_rbo_sql(SPARK, "sales_telegram_bot_data_pipeline_rbo_l"))
+    lineitem = table_view(spark, sf_dir, "lineitem")
+    return spark.sql(_rbo_sql(SPARK, lineitem))

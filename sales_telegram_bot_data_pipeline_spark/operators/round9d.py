@@ -40,8 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
 from ..registry import register
-from ..sources.tables import load_table
-from .curation import _doc_view
+from ..sources.tables import table_view
 from .evaluation import _KM_DUR_SQL
 
 # --------------------------------------------------------------------------
@@ -109,10 +108,10 @@ cum AS (
 def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scalars_extra import range_prefix_summed_pair
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_na_o")
+    orders = table_view(spark, sf_dir, "orders")
     g = spark.sql(
         _KM_DUR_SQL.format(
-            orders="sales_telegram_bot_data_pipeline_na_o",
+            orders=orders,
             dd_event="datediff(s.d2, s.d1)",
             dd_censor="datediff(h.hmax, s.d1)",
         )
@@ -195,7 +194,7 @@ FROM agg
     tags=("evaluation", "stats", "text"),
 )
 def cochran_q_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_cochran_q_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_cochran_q_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -342,28 +341,19 @@ FROM mass
 def harrell_c_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ci_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ci_c")
+    orders = table_view(spark, sf_dir, "orders")
+    customer = table_view(spark, sf_dir, "customer")
     # Materialize the per-customer cohort once (guide §3.3): the dense-grid
     # tail references it through bounds x binned x cells x taxis, and CTE
     # inlining expanded that into 16 executed orders/customer scans per
     # call.  The oracle keeps the single-statement form.
     cohort = materialize_once(
         spark,
-        _cindex_cohort_sql(
-            SPARK, "sales_telegram_bot_data_pipeline_ci_o", "sales_telegram_bot_data_pipeline_ci_c"
-        ),
+        _cindex_cohort_sql(SPARK, orders, customer),
         "ci_cohort",
         key=sf_dir,
     )
-    return spark.sql(
-        _cindex_sql(
-            SPARK,
-            "sales_telegram_bot_data_pipeline_ci_o",
-            "sales_telegram_bot_data_pipeline_ci_c",
-            cohort_rel=f"SELECT * FROM {cohort}",
-        )
-    )
+    return spark.sql(_cindex_sql(SPARK, orders, customer, cohort_rel=f"SELECT * FROM {cohort}"))
 
 
 # --------------------------------------------------------------------------
@@ -429,8 +419,8 @@ ORDER BY ninth
     tags=("evaluation", "stats", "agg"),
 )
 def quantile_pinball_fit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_pb_o")
-    return spark.sql(_pinball_sql(SPARK, "sales_telegram_bot_data_pipeline_pb_o"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_pinball_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -518,8 +508,6 @@ ORDER BY policy
     tags=("evaluation", "causal", "agg"),
 )
 def snips_offpolicy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_sn_o")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_sn_c")
-    return spark.sql(
-        _snips_sql(SPARK, "sales_telegram_bot_data_pipeline_sn_o", "sales_telegram_bot_data_pipeline_sn_c")
-    )
+    orders = table_view(spark, sf_dir, "orders")
+    customer = table_view(spark, sf_dir, "customer")
+    return spark.sql(_snips_sql(SPARK, orders, customer))

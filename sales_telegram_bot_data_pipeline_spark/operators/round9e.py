@@ -40,8 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
 from ..registry import register
-from ..sources.tables import load_table
-from .curation import _doc_view
+from ..sources.tables import table_view
 
 _EPOCH_DIFF = {
     "spark": "datediff(to_date(o_orderdate), to_date('1970-01-01'))",
@@ -151,7 +150,7 @@ def ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dominates) and measured 1.09 vs 0.87 s in an interleaved A/B — the
     # checkpoint action costs more than the scans it removes at any
     # scale where a projection scan is cheap relative to an action.
-    return spark.sql(_ndcg_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_ndcg_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -258,7 +257,7 @@ def graph_modularity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
     from .dedup import _lsh_pairs_view
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # Materialize the source-labeled edge list once (guide §3.3): the
     # m/within/deg re-aggregations expanded the pairs-join-src subtree
     # into 32 static scans per statement.  One checkpoint -> one pass over
@@ -320,8 +319,8 @@ FROM xy
     tags=("evaluation", "stats", "agg"),
 )
 def price_elasticity_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_el_l")
-    return spark.sql(_elasticity_sql(SPARK, "sales_telegram_bot_data_pipeline_el_l"))
+    lineitem = table_view(spark, sf_dir, "lineitem")
+    return spark.sql(_elasticity_sql(SPARK, lineitem))
 
 
 # --------------------------------------------------------------------------
@@ -401,8 +400,8 @@ FROM fit
     tags=("evaluation", "stats", "temporal"),
 )
 def adf_stationarity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_adf_o")
-    return spark.sql(_adf_sql(SPARK, "sales_telegram_bot_data_pipeline_adf_o"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_adf_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -465,4 +464,4 @@ FROM agg
     tags=("evaluation", "stats", "text"),
 )
 def spiegelhalter_calibration_z(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_spiegelhalter_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_spiegelhalter_sql(SPARK, table_view(spark, sf_dir, "documents")))

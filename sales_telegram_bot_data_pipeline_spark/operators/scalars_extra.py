@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_view
 
 
 @register(
@@ -56,34 +56,27 @@ def string_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "percentile_prices",
-    oracle="""
+_PERCENTILES_SQL = """
 SELECT o_orderpriority,
        CAST(ROUND(percentile_cont(0.5) WITHIN GROUP (ORDER BY o_totalprice), 6) AS DOUBLE) AS median_price,
        CAST(ROUND(percentile_cont(0.9) WITHIN GROUP (ORDER BY o_totalprice), 6) AS DOUBLE) AS p90_price,
        CAST(MIN(o_totalprice) AS DOUBLE) AS min_price,
        CAST(MAX(o_totalprice) AS DOUBLE) AS max_price
-FROM orders
+FROM {orders}
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
-""",
+"""
+
+
+@register(
+    "percentile_prices",
+    oracle=_PERCENTILES_SQL.format(orders="orders"),
     doc="Ordered-set aggregates: exact linear-interpolation percentiles "
     "(median / p90) per group.",
     tags=("agg", "percentile"),
 )
 def percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_ord3")
-    return spark.sql("""
-SELECT o_orderpriority,
-       CAST(ROUND(percentile_cont(0.5) WITHIN GROUP (ORDER BY o_totalprice), 6) AS DOUBLE) AS median_price,
-       CAST(ROUND(percentile_cont(0.9) WITHIN GROUP (ORDER BY o_totalprice), 6) AS DOUBLE) AS p90_price,
-       CAST(MIN(o_totalprice) AS DOUBLE) AS min_price,
-       CAST(MAX(o_totalprice) AS DOUBLE) AS max_price
-FROM sales_telegram_bot_data_pipeline_ord3
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-""")
+    return spark.sql(_PERCENTILES_SQL.format(orders=table_view(spark, sf_dir, "orders")))
 
 
 _MOMENTS_ORACLE = """
@@ -113,8 +106,8 @@ FROM m ORDER BY l_returnflag
     tags=("agg", "stats"),
 )
 def moment_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_li2")
-    return spark.sql(_MOMENTS_ORACLE.replace("FROM lineitem", "FROM sales_telegram_bot_data_pipeline_li2"))
+    lineitem = table_view(spark, sf_dir, "lineitem")
+    return spark.sql(_MOMENTS_ORACLE.replace("FROM lineitem", f"FROM {lineitem}"))
 
 
 @register(
@@ -376,10 +369,8 @@ FROM agg ORDER BY event_type
     tags=("agg", "sketch", "approx"),
 )
 def sketch_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ev_sketch"
-    )
-    return spark.sql(_SKETCH_AUDIT_SQL.format(table="sales_telegram_bot_data_pipeline_ev_sketch"))
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_SKETCH_AUDIT_SQL.format(table=events))
 
 
 def _sketch_quantile_sql(approx_fn: str) -> str:
@@ -413,14 +404,8 @@ FROM agg ORDER BY o_orderpriority
     tags=("agg", "sketch", "approx", "percentile"),
 )
 def sketch_quantile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ord_sketch"
-    )
-    return spark.sql(
-        _sketch_quantile_sql("approx_percentile").format(
-            table="sales_telegram_bot_data_pipeline_ord_sketch"
-        )
-    )
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_sketch_quantile_sql("approx_percentile").format(table=orders))
 
 
 @register(
@@ -597,20 +582,26 @@ ORDER BY c.c_custkey, total_price DESC, o_orderkey
     tags=("relational", "subquery", "lateral"),
 )
 def lateral_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_lat_cust")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_lat_ord")
-    return spark.sql(
-        _LATERAL_TOPK_SQL.format(
-            customer="sales_telegram_bot_data_pipeline_lat_cust",
-            orders="sales_telegram_bot_data_pipeline_lat_ord",
-        )
-    )
+    customer = table_view(spark, sf_dir, "customer")
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_LATERAL_TOPK_SQL.format(customer=customer, orders=orders))
 
 
 # --------------------------------------------------------------------------
 # equi-width histogram (two-phase: bounds scan + bucket counts)
 # --------------------------------------------------------------------------
 HIST_BUCKETS = 20
+
+
+def _hist_bound(k: str) -> str:
+    """Bucket bound ``mn + k * (mx - mn) / HIST_BUCKETS`` in exact DECIMAL
+    (the division is a multiplication by the decimal literal 1/B), so both
+    engines round the same value half up to cents.  A double bound that
+    lands on a half cent rounds either way depending on each engine's
+    float path."""
+    mn, mx = "CAST(mn AS DECIMAL(18,2))", "CAST(mx AS DECIMAL(18,2))"
+    return f"CAST(ROUND({mn} + {k} * ({mx} - {mn}) * {1 / HIST_BUCKETS}, 2) AS DOUBLE)"
+
 
 _HISTOGRAM_SQL = f"""
 WITH stats AS (
@@ -626,8 +617,8 @@ bucketed AS (
   FROM {{orders}} CROSS JOIN stats s
 )
 SELECT bucket,
-       CAST(ROUND(mn + bucket * (mx - mn) / {HIST_BUCKETS}, 2) AS DOUBLE) AS bucket_lo,
-       CAST(ROUND(mn + (bucket + 1) * (mx - mn) / {HIST_BUCKETS}, 2) AS DOUBLE) AS bucket_hi,
+       {_hist_bound("bucket")} AS bucket_lo,
+       {_hist_bound("(bucket + 1)")} AS bucket_hi,
        CAST(COUNT(*) AS BIGINT) AS n_orders
 FROM bucketed
 GROUP BY bucket, mn, mx
@@ -642,15 +633,13 @@ ORDER BY bucket
     "the classic two-phase shape: an O(1) bounds aggregate broadcast into "
     "a single bucketing scan with map-side combinable counts; the "
     "exact-layout sibling of the quantile sketch (sketch_quantile_audit). "
-    "All bucket math in IEEE doubles from identical inputs, so both "
-    "engines bucket identically.",
+    "Bucket assignment in IEEE doubles from identical inputs, bucket "
+    "bounds in exact DECIMAL, so both engines bucket and round identically.",
     tags=("agg", "stats", "two-phase"),
 )
 def price_histogram_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_hist_ord"
-    )
-    return spark.sql(_HISTOGRAM_SQL.format(orders="sales_telegram_bot_data_pipeline_hist_ord"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_HISTOGRAM_SQL.format(orders=orders))
 
 
 # --------------------------------------------------------------------------
@@ -1125,8 +1114,8 @@ best AS (SELECT MIN(e) AS cms_estimate FROM est),
 def join_cardinality_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_jc_ord")
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_jc_li")
+    orders = table_view(spark, sf_dir, "orders")
+    lineitem = table_view(spark, sf_dir, "lineitem")
     # Materialize each per-key count relation once (guide §3.3): the
     # sketch explode, exact join and sample join each re-ran the fact
     # aggregation (12 static scans per statement); the views also let the
@@ -1136,14 +1125,14 @@ def join_cardinality_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     a_kc = materialize_once(
         spark,
         "SELECT o_orderkey AS k, COUNT(*) AS n "
-        "FROM sales_telegram_bot_data_pipeline_jc_ord GROUP BY o_orderkey",
+        f"FROM {orders} GROUP BY o_orderkey",
         "jc_a",
         key=sf_dir,
     )
     b_kc = materialize_once(
         spark,
         "SELECT l_orderkey AS k, COUNT(*) AS n "
-        "FROM sales_telegram_bot_data_pipeline_jc_li GROUP BY l_orderkey",
+        f"FROM {lineitem} GROUP BY l_orderkey",
         "jc_b",
         key=sf_dir,
     )
@@ -1187,8 +1176,8 @@ FROM tot t CROSS JOIN tops s
     tags=("stats", "join", "audit"),
 )
 def join_key_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sales_telegram_bot_data_pipeline_skew_li")
-    return spark.sql(_join_skew_sql().format(lineitem="sales_telegram_bot_data_pipeline_skew_li"))
+    lineitem = table_view(spark, sf_dir, "lineitem")
+    return spark.sql(_join_skew_sql().format(lineitem=lineitem))
 
 
 # ---------------------------------------------------------------------------
@@ -1279,8 +1268,8 @@ ORDER BY layout, bucket
     tags=("stats", "layout", "pruning"),
 )
 def zorder_clustering_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_zo_ord")
-    return spark.sql(_zorder_sql("spark").format(orders="sales_telegram_bot_data_pipeline_zo_ord"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_zorder_sql("spark").format(orders=orders))
 
 
 # ---------------------------------------------------------------------------
@@ -1374,13 +1363,9 @@ FROM verdicts
     tags=("stats", "join", "pruning", "sketch"),
 )
 def bloom_semijoin_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sales_telegram_bot_data_pipeline_bf_cust")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sales_telegram_bot_data_pipeline_bf_ord")
-    return spark.sql(
-        _bloom_prune_sql("spark").format(
-            customer="sales_telegram_bot_data_pipeline_bf_cust", orders="sales_telegram_bot_data_pipeline_bf_ord"
-        )
-    )
+    customer = table_view(spark, sf_dir, "customer")
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_bloom_prune_sql("spark").format(customer=customer, orders=orders))
 
 
 # --------------------------------------------------------------------------

@@ -282,7 +282,7 @@ def _hrw_register():
 
     from ..functions.dialect import DUCKDB, SPARK, Dialect
     from ..registry import register
-    from ..sources.tables import load_table
+    from ..sources.tables import table_view
 
     def _hrw_sql(d: Dialect, table: str) -> str:
         w = d.md5_prefix_int(
@@ -338,10 +338,8 @@ ORDER BY shard
         tags=("scale", "sharding", "audit"),
     )
     def rendezvous_shard_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
-        load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-            "sales_telegram_bot_data_pipeline_hrw_docs"
-        )
-        return spark.sql(_hrw_sql(SPARK, "sales_telegram_bot_data_pipeline_hrw_docs"))
+        docs = table_view(spark, sf_dir, "documents")
+        return spark.sql(_hrw_sql(SPARK, docs))
 
 
 _hrw_register()

@@ -37,18 +37,13 @@ from pyspark.sql import functions as F
 from ..functions.dialect import DUCKDB, SPARK, Dialect
 from ..registry import register
 from ..session import fixed_plan
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_view
 
 N_QUERIES = 5  # vec_id < 5 are the query vectors
 TOP_K = 5
 N_BANDS = 4
 BAND_BITS = 6  # 64 buckets per band; bands use disjoint embedding dims
 NEARDUP_THRESHOLD = 0.3  # synthetic embeddings max pairwise cosine ~0.37
-
-
-def _emb_view(spark: SparkSession, sf_dir: str, name: str = "sales_telegram_bot_data_pipeline_emb") -> str:
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView(name)
-    return name
 
 
 def _dots(d: Dialect, a: str, b: str) -> str:
@@ -187,7 +182,7 @@ def _bruteforce_scored(d: Dialect, table: str) -> str:
     tags=("similarity", "topk"),
 )
 def knn_cosine_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_rank_twostage_sql(_bruteforce_scored(SPARK, _emb_view(spark, sf_dir))))
+    return spark.sql(_rank_twostage_sql(_bruteforce_scored(SPARK, table_view(spark, sf_dir, "embeddings"))))
 
 
 # --------------------------------------------------------------------------
@@ -220,7 +215,7 @@ JOIN {table} c ON c.vec_id = cand.neighbor_id
     tags=("similarity", "lsh", "topk"),
 )
 def knn_cosine_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_rank_twostage_sql(_lsh_scored(SPARK, _emb_view(spark, sf_dir))))
+    return spark.sql(_rank_twostage_sql(_lsh_scored(SPARK, table_view(spark, sf_dir, "embeddings"))))
 
 
 # --------------------------------------------------------------------------
@@ -302,7 +297,7 @@ JOIN {table} c ON c.vec_id = a.vec_id
     tags=("similarity", "ivf", "topk"),
 )
 def knn_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_rank_twostage_sql(_ivf_scored(SPARK, _emb_view(spark, sf_dir))))
+    return spark.sql(_rank_twostage_sql(_ivf_scored(SPARK, table_view(spark, sf_dir, "embeddings"))))
 
 
 # --------------------------------------------------------------------------
@@ -345,7 +340,7 @@ ORDER BY vec_a, vec_b
     tags=("similarity", "dedup", "lsh"),
 )
 def embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_neardup_banded_sql(SPARK, _emb_view(spark, sf_dir)))
+    return spark.sql(_neardup_banded_sql(SPARK, table_view(spark, sf_dir, "embeddings")))
 
 
 def _neardup_pairs_view(spark: SparkSession, sf_dir: str) -> str:
@@ -356,9 +351,9 @@ def _neardup_pairs_view(spark: SparkSession, sf_dir: str) -> str:
     pagerank / k-core / triangle / clustering-coefficient / LPA graph
     ops read the stored table."""
     from ..functions.dialect import strip_order_by
-    from .dedup import session_view
+    from ..session import session_view
 
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     return session_view(
         spark, sf_dir, "ndpairs",
         lambda: spark.sql(strip_order_by(_neardup_banded_sql(SPARK, view))),
@@ -440,7 +435,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the candidate join then references it TWICE (both pair sides).
     # Materialize it once (integer (vec_id, cid) pairs — tiny) instead of
     # trusting exchange reuse to merge the two heavy subtrees.
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     cent, assigned = _cent_assigned_ctes(SPARK, view, k=SEM_K)
     spark.sql(f"WITH cent AS ({cent}) {assigned}").localCheckpoint().createOrReplaceTempView(
         "sales_telegram_bot_data_pipeline_semdedup_assign"
@@ -650,7 +645,7 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (38 static Exchanges per statement).
     from ..session import materialize_once
 
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     units_rel = "SELECT vec_id, pos, uval FROM " + materialize_once(
         spark, _units_sql(SPARK, view), "kmeans_units", key=sf_dir
     )
@@ -699,7 +694,7 @@ def kmeans_separation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # statement.
     from ..session import materialize_once
 
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     units_rel = "SELECT vec_id, pos, uval FROM " + materialize_once(
         spark, _units_sql(SPARK, view), "sil_units", key=sf_dir
     )
@@ -751,7 +746,7 @@ ORDER BY vec_a, vec_b
     tags=("similarity", "baseline"),
 )
 def embedding_cosine_allpairs_small(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_pair_sim_sql(SPARK, _emb_view(spark, sf_dir)))
+    return spark.sql(_pair_sim_sql(SPARK, table_view(spark, sf_dir, "embeddings")))
 
 
 def _centroids_sql(d: Dialect, table: str) -> str:
@@ -810,7 +805,7 @@ ORDER BY d.label
     tags=("similarity", "agg"),
 )
 def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_centroids_sql(SPARK, _emb_view(spark, sf_dir)))
+    return spark.sql(_centroids_sql(SPARK, table_view(spark, sf_dir, "embeddings")))
 
 
 # --------------------------------------------------------------------------
@@ -953,7 +948,7 @@ JOIN {table} c ON c.vec_id = cand.neighbor_id
     tags=("similarity", "topk", "quantization"),
 )
 def knn_cosine_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_sq8_sql(SPARK, _emb_view(spark, sf_dir)))
+    return spark.sql(_sq8_sql(SPARK, table_view(spark, sf_dir, "embeddings")))
 
 
 def standardize_embeddings_by_label_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1297,12 +1292,10 @@ ORDER BY doc_a, doc_b
     tags=("similarity", "retrieval", "text"),
 )
 def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb_view(spark, sf_dir)
+    emb = table_view(spark, sf_dir, "embeddings")
     from ..sources.tables import load_table
 
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_bitext_docs"
-    )
+    docs = table_view(spark, sf_dir, "documents")
     # materialize the cross-language scored pair relation once (guide
     # §3.3): it feeds BOTH neighborhood aggregates and the final margin
     # projection, and the old scored-only checkpoint still re-joined the
@@ -1310,20 +1303,8 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # banded join + cosine + lang filter now execute exactly once.
     from ..session import materialize_once
 
-    cross = materialize_once(
-        spark,
-        _bitext_cross_sql(SPARK, emb, "sales_telegram_bot_data_pipeline_bitext_docs"),
-        "bitext_cross",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _bitext_mining_sql(
-            SPARK,
-            emb,
-            "sales_telegram_bot_data_pipeline_bitext_docs",
-            cross_rel=cross,
-        )
-    )
+    cross = materialize_once(spark, _bitext_cross_sql(SPARK, emb, docs), "bitext_cross", key=sf_dir)
+    return spark.sql(_bitext_mining_sql(SPARK, emb, docs, cross_rel=cross))
 
 
 # --------------------------------------------------------------------------
@@ -1379,7 +1360,7 @@ ORDER BY vec_id
     tags=("similarity", "curation", "clustering"),
 )
 def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     spark.sql(_units_sql(SPARK, view)).localCheckpoint().createOrReplaceTempView(
         "sales_telegram_bot_data_pipeline_cbal_units"
     )
@@ -1498,7 +1479,7 @@ ORDER BY v.np
     tags=("similarity", "ivf", "audit"),
 )
 def ivf_nprobe_tuning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     cent, assigned = _cent_assigned_ctes(SPARK, view)
     pre = f"WITH cent AS ({cent}) "
     # The four shared-index materializations run under fixed_plan (VERDICT
@@ -1705,7 +1686,7 @@ ORDER BY query_id, rank
 def knn_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    view = _emb_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "embeddings")
     # Materialize the PQ encode pass once per call (guide §3.3): CTE
     # inlining re-ran the corpus x codebook argmin GROUP BY once per
     # subspace union leg — 18 executed embedding scans per statement.
@@ -1785,7 +1766,7 @@ ORDER BY dim
     tags=("similarity", "audit", "topk"),
 )
 def matryoshka_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_mrl_sql(SPARK, _emb_view(spark, sf_dir)))
+    return spark.sql(_mrl_sql(SPARK, table_view(spark, sf_dir, "embeddings")))
 
 
 # --------------------------------------------------------------------------
@@ -1849,7 +1830,7 @@ ORDER BY rank
     tags=("similarity", "topk", "audit"),
 )
 def mips_topk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_mips_sql(SPARK, _emb_view(spark, sf_dir)))
+    return spark.sql(_mips_sql(SPARK, table_view(spark, sf_dir, "embeddings")))
 
 
 # --------------------------------------------------------------------------
@@ -1933,4 +1914,4 @@ FROM err
     tags=("similarity", "audit", "quantization"),
 )
 def sq8_quantization_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_sq8_err_sql(SPARK, _emb_view(spark, sf_dir)))
+    return spark.sql(_sq8_err_sql(SPARK, table_view(spark, sf_dir, "embeddings")))

@@ -28,7 +28,7 @@ from pyspark.sql.window import Window
 
 from ..functions.dialect import DUCKDB, SPARK
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_view
 
 
 def _dec(col: str, prec: int = 18, scale: int = 2) -> F.Column:
@@ -628,10 +628,8 @@ ORDER BY t.event_type, s.day
     tags=("temporal", "timeseries", "join"),
 )
 def date_spine_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ev_spine"
-    )
-    return spark.sql(_gap_fill_sql(SPARK, "sales_telegram_bot_data_pipeline_ev_spine"))
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_gap_fill_sql(SPARK, events))
 
 
 _DAU_SQL = """
@@ -666,10 +664,8 @@ ORDER BY d.day
     tags=("temporal", "timeseries", "window"),
 )
 def daily_active_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ev_dau"
-    )
-    return spark.sql(_DAU_SQL.format(table="sales_telegram_bot_data_pipeline_ev_dau"))
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_DAU_SQL.format(table=events))
 
 
 # --------------------------------------------------------------------------
@@ -750,10 +746,8 @@ ORDER BY user_id
     tags=("temporal", "window", "agg"),
 )
 def user_cadence_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ev_cad"
-    )
-    return spark.sql(_cadence_sql(SPARK).format(table="sales_telegram_bot_data_pipeline_ev_cad"))
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_cadence_sql(SPARK).format(table=events))
 
 
 # --------------------------------------------------------------------------
@@ -806,10 +800,8 @@ ORDER BY custkey, period_id
     tags=("temporal", "window"),
 )
 def validity_interval_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ord_iv"
-    )
-    return spark.sql(_COALESCE_SQL.format(table="sales_telegram_bot_data_pipeline_ord_iv"))
+    orders = table_view(spark, sf_dir, "orders")
+    return spark.sql(_COALESCE_SQL.format(table=orders))
 
 
 # --------------------------------------------------------------------------
@@ -899,10 +891,8 @@ ORDER BY user_id, session_seq
     tags=("temporal", "window", "session"),
 )
 def sessionize_gap_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ev_sess"
-    )
-    return spark.sql(_sessionize_sql(SPARK).format(table="sales_telegram_bot_data_pipeline_ev_sess"))
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_sessionize_sql(SPARK).format(table=events))
 
 
 # --------------------------------------------------------------------------
@@ -956,12 +946,8 @@ FROM per_sess
     tags=("temporal", "session", "funnel"),
 )
 def session_conversion_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ev_sconv"
-    )
-    return spark.sql(
-        _session_conversion_sql(SPARK).format(table="sales_telegram_bot_data_pipeline_ev_sconv")
-    )
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_session_conversion_sql(SPARK).format(table=events))
 
 
 # --------------------------------------------------------------------------
@@ -1026,12 +1012,8 @@ ORDER BY event_type
     tags=("temporal", "decay", "agg"),
 )
 def freshness_decay_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ev_fresh"
-    )
-    return spark.sql(
-        _freshness_decay_sql(SPARK).format(table="sales_telegram_bot_data_pipeline_ev_fresh")
-    )
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_freshness_decay_sql(SPARK).format(table=events))
 
 
 # --------------------------------------------------------------------------
@@ -1072,8 +1054,8 @@ ORDER BY user_id, valid_from, event_type, event_id
     tags=("temporal", "scd2", "window"),
 )
 def scd2_build_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_scd2b_ev")
-    return spark.sql(_SCD2_BUILD_SQL.format(events="sales_telegram_bot_data_pipeline_scd2b_ev"))
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_SCD2_BUILD_SQL.format(events=events))
 
 
 # --------------------------------------------------------------------------
@@ -1117,10 +1099,10 @@ FROM closed GROUP BY user_id ORDER BY user_id
     tags=("temporal", "window", "agg"),
 )
 def time_weighted_average_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_twap_ev")
+    events = table_view(spark, sf_dir, "events")
     return spark.sql(
         _TWAP_SQL.format(
-            events="sales_telegram_bot_data_pipeline_twap_ev",
+            events=events,
             # ts reads as TIMESTAMP_NTZ; the cast shifts both operands of the
             # difference identically (UTC session), so durations are exact
             epoch_us="unix_micros(cast(",
@@ -1181,7 +1163,7 @@ ORDER BY w.week
     tags=("temporal", "retention", "window"),
 )
 def growth_accounting_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_gr_ev")
+    events = table_view(spark, sf_dir, "events")
     return spark.sql(
         _GROWTH_SQL.format(
             # FLOOR (not `div`, which truncates toward zero) so a timestamp
@@ -1189,7 +1171,7 @@ def growth_accounting_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
             # both engines (day -3 -> week -1, matching DuckDB floor-division).
             week="CAST(FLOOR(datediff(to_date(ts), to_date('2024-01-01'))"
             " / 7.0) AS BIGINT)",
-            events="sales_telegram_bot_data_pipeline_gr_ev",
+            events=events,
         )
     )
 
@@ -1337,10 +1319,8 @@ MTA_HORIZON_MIN = 24 * 60  # wider than the 1:1 interval join: multi-touch
     tags=("temporal", "attribution", "window"),
 )
 def multitouch_attribution_credit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_mta_ev")
-    return spark.sql(
-        _MTA_SQL.format(events="sales_telegram_bot_data_pipeline_mta_ev", horizon=MTA_HORIZON_MIN)
-    )
+    events = table_view(spark, sf_dir, "events")
+    return spark.sql(_MTA_SQL.format(events=events, horizon=MTA_HORIZON_MIN))
 
 
 # ---------------------------------------------------------------------------
@@ -1383,12 +1363,12 @@ ORDER BY dow, hour_of_day
     tags=("temporal", "timeseries", "agg"),
 )
 def activity_heatmap_dow_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("sales_telegram_bot_data_pipeline_hm_ev")
+    events = table_view(spark, sf_dir, "events")
     return spark.sql(
         _HEATMAP_SQL.format(
             daynum="datediff(to_date(ts), to_date('1970-01-01'))",
             hour="hour(ts)",
-            events="sales_telegram_bot_data_pipeline_hm_ev",
+            events=events,
         )
     )
 

@@ -21,12 +21,7 @@ from ..functions.text import (
     token_count_sql,
 )
 from ..registry import register
-from ..sources.tables import load_table
-
-
-def _doc_view(spark: SparkSession, sf_dir: str, name: str = "sales_telegram_bot_data_pipeline_docs") -> str:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(name)
-    return name
+from ..sources.tables import table_view
 
 
 # Inject reference-shaped dirt (tab, pipe, NBSP, diacritics) so the
@@ -55,7 +50,7 @@ def _norm_query_sql(d: Dialect, table: str) -> str:
     tags=("text", "scalar"),
 )
 def preprocess_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_norm_query_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_norm_query_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 def _lang_query_sql(d: Dialect, table: str) -> str:
@@ -75,7 +70,7 @@ def _lang_query_sql(d: Dialect, table: str) -> str:
     tags=("text",),
 )
 def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_lang_query_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_lang_query_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 def _quality_query_sql(d: Dialect, table: str) -> str:
@@ -92,7 +87,7 @@ def _quality_query_sql(d: Dialect, table: str) -> str:
     tags=("text",),
 )
 def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_quality_query_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_quality_query_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 def _tokcount_query_sql(d: Dialect, table: str) -> str:
@@ -111,7 +106,7 @@ def _tokcount_query_sql(d: Dialect, table: str) -> str:
     tags=("text",),
 )
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_tokcount_query_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_tokcount_query_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 def _fp_query_sql(d: Dialect, table: str) -> str:
@@ -128,7 +123,7 @@ def _fp_query_sql(d: Dialect, table: str) -> str:
     tags=("text", "hash"),
 )
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_fp_query_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_fp_query_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -186,7 +181,7 @@ ORDER BY p.doc_id
     tags=("text", "quality", "two-phase"),
 )
 def vocab_coverage_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_vocab_coverage_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_vocab_coverage_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -233,7 +228,7 @@ ORDER BY doc_id
     tags=("text", "quality"),
 )
 def lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_lexical_diversity_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_lexical_diversity_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -302,7 +297,7 @@ LIMIT {PMI_TOP_K}
     tags=("text", "agg", "retrieval"),
 )
 def collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_pmi_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_pmi_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -393,7 +388,7 @@ ORDER BY t.doc_id
     tags=("text", "curation", "dedup"),
 )
 def boilerplate_segment_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_boilerplate_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_boilerplate_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -465,7 +460,7 @@ ORDER BY doc_id
     tags=("text", "quality", "curation"),
 )
 def gopher_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_gopher_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_gopher_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -512,7 +507,7 @@ FROM scored GROUP BY source ORDER BY source
     tags=("text", "quality", "agg"),
 )
 def readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_readability_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_readability_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -607,7 +602,7 @@ LIMIT {PPMI_TOP_K}
 def ppmi_window_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     # Materialize the co-occurrence pair counts once (guide §3.3): tot,
     # both margin arms and the scoring join each re-ran the corpus
     # explode + groupBy (12 static scans per statement).
@@ -672,7 +667,7 @@ ORDER BY p.source
     tags=("text", "curation", "agg"),
 )
 def vocab_novelty_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_vocab_novelty_sql(SPARK, _doc_view(spark, sf_dir)))
+    return spark.sql(_vocab_novelty_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -738,7 +733,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .scalars_extra import range_ranked
 
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     w = SPARK.splitws("lower(text)")
     vocab = spark.sql(
         f"SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt FROM "

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_view
 
 
 def _dec(col: str, prec: int = 18, scale: int = 2) -> F.Column:
@@ -71,27 +71,19 @@ JOIN {region} r ON r.r_regionkey = n.n_regionkey
 WHERE r.r_name = 'EUROPE'
 """
 
-_Q2_SQL = """
-WITH eligible AS ({eligible})
+_Q2_PART_PRED = "p_size <= 10 AND p_type = 'SMALL'"
+
+_Q2_SQL = f"""
+WITH eligible AS ({{eligible}})
 SELECT e.s_acctbal, e.s_name, e.n_name, p.p_partkey, p.p_name,
        CAST(e.supplycost AS DOUBLE) AS supplycost
-FROM {part} p JOIN eligible e ON p.p_partkey = e.partkey
-WHERE p.p_size <= 10 AND p.p_type = 'SMALL'
+FROM {{part}} p JOIN eligible e ON p.p_partkey = e.partkey
+WHERE {_Q2_PART_PRED}
   AND e.supplycost = (SELECT MIN(e2.supplycost) FROM eligible e2
                       WHERE e2.partkey = p.p_partkey)
 ORDER BY e.s_acctbal DESC, e.n_name, e.s_name, p.p_partkey
 LIMIT 100
 """
-
-
-def _views(spark: SparkSession, sf_dir: str, tables: list[str]) -> dict[str, str]:
-    """Register temp views for the template tables; returns the name map."""
-    out = {}
-    for t in tables:
-        view = f"sales_telegram_bot_data_pipeline_th_{t}"
-        load_table(spark, sf_dir, t).createOrReplaceTempView(view)
-        out[t] = view
-    return out
 
 
 @register(
@@ -112,7 +104,10 @@ def _views(spark: SparkSession, sf_dir: str, tables: list[str]) -> dict[str, str
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import materialize_once
 
-    v = _views(spark, sf_dir, ["lineitem", "supplier", "nation", "region", "part"])
+    v = {
+        t: table_view(spark, sf_dir, t)
+        for t in ("lineitem", "supplier", "nation", "region", "part")
+    }
     # Materialize the eligible (part, supplier, cost) relation once,
     # pre-filtered to qualifying parts (guide §3.2/§3.3): the correlated
     # scalar MIN referenced `eligible` twice, re-running the lineitem
@@ -124,8 +119,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     eligible = materialize_once(
         spark,
         _Q2_ELIGIBLE_SQL.format(**v)
-        + f""" AND sp.partkey IN (SELECT p_partkey FROM {v['part']}
-                        WHERE p_size <= 10 AND p_type = 'SMALL')""",
+        + f" AND sp.partkey IN (SELECT p_partkey FROM {v['part']} WHERE {_Q2_PART_PRED})",
         "q2_elig",
         key=sf_dir,
     )
@@ -289,7 +283,7 @@ ORDER BY part_value DESC, partkey
     tags=("relational", "subquery", "tpch"),
 )
 def q11_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _views(spark, sf_dir, ["lineitem", "supplier", "nation"])
+    v = {t: table_view(spark, sf_dir, t) for t in ("lineitem", "supplier", "nation")}
     return spark.sql(_Q11_SQL.format(**v))
 
 
@@ -361,7 +355,7 @@ ORDER BY s.s_suppkey
     tags=("relational", "subquery", "tpch"),
 )
 def q15_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _views(spark, sf_dir, ["lineitem", "supplier"])
+    v = {t: table_view(spark, sf_dir, t) for t in ("lineitem", "supplier")}
     return spark.sql(_Q15_SQL.format(**v))
 
 
@@ -389,7 +383,7 @@ WHERE p.p_brand = 'Brand#13' AND p.p_type = 'MEDIUM'
     tags=("relational", "subquery", "tpch"),
 )
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _views(spark, sf_dir, ["lineitem", "part"])
+    v = {t: table_view(spark, sf_dir, t) for t in ("lineitem", "part")}
     return spark.sql(_Q17_SQL.format(**v))
 
 
@@ -597,5 +591,5 @@ ORDER BY cntrycode
     tags=("relational", "anti-join", "tpch"),
 )
 def q22_dormant_high_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _views(spark, sf_dir, ["customer", "orders"])
+    v = {t: table_view(spark, sf_dir, t) for t in ("customer", "orders")}
     return spark.sql(_Q22_SQL.format(**v))

@@ -1,4 +1,7 @@
-"""SparkSession construction with scale-oriented defaults.
+"""SparkSession construction with scale-oriented defaults, and the
+session-scoped relations queries share: stored session views
+(``session_view``) and per-call checkpoints (``materialize_once``), named
+by the same sf-keyed scheme as ``sources.tables.table_view``.
 
 The driver passes its own session to ``queries()`` callables, so nothing in
 the engine may *depend* on these configs (all expressions are written
@@ -9,9 +12,12 @@ and bench.py use locally.
 from __future__ import annotations
 
 import os
+import re
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+from .sources.tables import _view_name
 
 
 def get_spark(
@@ -53,10 +59,54 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def materialize_once(
-    spark: SparkSession, sql_text: str, tag: str, key: str = "",
-    reliable: bool = False,
-) -> str:
+# Stored-view POLICY, pinned (VERDICT r12 task 5): every stored session
+# view must designate the registry query that keeps its BUILD cost
+# live-measured on the bench — converting a bench row to stored reads is a
+# deliberate, reviewable edit to this map, exactly like a BNLJ allowlist
+# entry.  ``session_view`` refuses unknown tags at runtime and
+# tests/test_plan_hygiene.py pins the key set, the twin names, and the
+# call-site tags.  Dynamic det2feed tags carry the padding as a
+# ``_p<int>`` suffix, stripped before lookup.
+SESSION_VIEW_LIVE_TWINS = {
+    "shingles": "dedup_ngram_jaccard",          # shingle explode, live
+    "shdf": "dedup_jaccard_stopshingle",        # df table rebuilt inline
+    "lshp": "dedup_minhash_lsh",                # strict pair generation
+    "cc_labels": "dedup_connected_components",  # CC fixpoint, live
+    "detfeed": "nested_detections_table",       # detection synthesis
+    "det2feed": "nested_detections_table",      # model2 twin of the same
+    "loosep": "dedup_minhash_lsh",              # loose banding = same primitive
+    "ssjac": "dedup_jaccard_stopshingle",       # stop-shingle pair join
+    "ndpairs": "embedding_cosine_neardup",      # banded vector pair join
+    "tune_sig": "dedup_minhash_lsh",            # band-tune minhash signatures
+    "wide": "detected_data_native",             # wide detected_data relation
+}
+
+
+def session_view(spark: SparkSession, sf_dir: str, tag: str, build) -> str:
+    """Materialize a relation ONCE per (session, sf) as a localCheckpointed
+    temp view and return its name — the stored-production-artifact
+    discipline: relations a real pipeline writes once (the detected_data
+    table, minhash signatures, cluster assignments, candidate-pair
+    tables) and every downstream consumer reads.  ``build()`` must return
+    a DataFrame.  Unknown tags are refused: declare the live-measured
+    twin in ``SESSION_VIEW_LIVE_TWINS`` first."""
+    base = re.sub(r"_p\d+$", "", tag)
+    if base not in SESSION_VIEW_LIVE_TWINS:
+        raise ValueError(
+            f"undeclared stored-view tag {tag!r}: add it (and its "
+            "live-measured twin query) to SESSION_VIEW_LIVE_TWINS"
+        )
+    name = _view_name(tag, sf_dir)
+    # catalog probe, not a try/except spark.table(): a failed table()
+    # resolution is a failed QueryExecution that every registered
+    # ExecutionListener (e.g. Observation's) re-walks and error-logs
+    if spark.catalog.tableExists(name):
+        return name
+    build().localCheckpoint().createOrReplaceTempView(name)
+    return name
+
+
+def materialize_once(spark: SparkSession, sql_text: str, tag: str, key: str) -> str:
     """Per-CALL localCheckpoint of a subquery, returned as a temp-view
     name (r13, guide §3.3).  Spark INLINES every multi-referenced CTE
     (InlineCTE has no materialization path), so a query whose CTE chain
@@ -68,36 +118,19 @@ def materialize_once(
     keep paying the build (no cross-run reuse; the stored-view policy and
     its allowlist are unaffected).
 
-    ``key`` (pass the sf_dir) namespaces the view name with a short md5,
-    the same discipline as every stored-view helper (ADVICE r13):
-    correctness never RELIES on the name (the checkpoint binds eagerly,
-    per call), but interleaved multi-sf sessions must not watch one
-    dataset's materialization appear under the other's name.
+    ``key`` is the sf_dir: correctness never RELIES on the name (the
+    checkpoint binds eagerly, per call), but interleaved multi-sf
+    sessions must not watch one dataset's materialization appear under
+    the other's name.
 
     Scale note (VERDICT r13 item 7): ``localCheckpoint`` stores on
     executors WITHOUT replication and truncates lineage, so a lost
     executor fails the query instead of recomputing.  Every call site in
     this repo materializes a BOUNDED relation (parameter grids, per-group
-    aggregates, banded pair sets — orders of magnitude below the corpus);
-    for corpus-sized shared relations pass ``reliable=True``, which uses
-    a RELIABLE ``checkpoint()`` (materialized to the checkpoint dir —
-    storage that survives executor loss) instead."""
-    import hashlib
-    import os
-    import tempfile
-
-    suffix = f"_{hashlib.md5(key.encode()).hexdigest()[:8]}" if key else ""
-    name = f"sales_telegram_bot_data_pipeline_mat_{tag}{suffix}"
-    df = spark.sql(sql_text)
-    if reliable:
-        if not spark.sparkContext.getCheckpointDir():
-            spark.sparkContext.setCheckpointDir(
-                os.path.join(tempfile.gettempdir(), "sales_telegram_bot_data_pipeline_ckpt")
-            )
-        df = df.checkpoint()
-    else:
-        df = df.localCheckpoint()
-    df.createOrReplaceTempView(name)
+    aggregates, banded pair sets — orders of magnitude below the
+    corpus)."""
+    name = _view_name(f"mat_{tag}", key)
+    spark.sql(sql_text).localCheckpoint().createOrReplaceTempView(name)
     return name
 
 

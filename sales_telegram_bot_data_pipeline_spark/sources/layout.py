@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .tables import load_table
+from .tables import _view_name, load_table
 
 DOC_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
 
@@ -249,18 +249,9 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     in tests/test_round6d_ops.py).  saveAsTable targets an explicit
     external path; the in-memory catalog entry is per-session, the files
     are not."""
-    import hashlib
-
     base = _scratch(spark, "bucketed", sf_dir)
-    # key the cache on the FULL path, not the basename (review fix: two
-    # datasets whose dirs share a basename must not reuse each other)
-    suffix = (
-        os.path.basename(sf_dir.rstrip("/")).replace(".", "_").replace("-", "_")
-        + "_"
-        + hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:8]
-    )
-    t_orders = f"sales_telegram_bot_data_pipeline_bkt_orders_{suffix}"
-    t_lineitem = f"sales_telegram_bot_data_pipeline_bkt_lineitem_{suffix}"
+    t_orders = _view_name("bkt_orders", sf_dir)
+    t_lineitem = _view_name("bkt_lineitem", sf_dir)
     # The layout investment is ONE-TIME by design — that is the entire
     # point of bucketing (pay the clustered write once, delete the join
     # exchange forever).  Inputs are read-only testdata keyed into the

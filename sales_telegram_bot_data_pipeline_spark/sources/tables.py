@@ -9,6 +9,7 @@ pushdown + column pruning for free.  At cluster scale the same call reads
 
 from __future__ import annotations
 
+import hashlib
 import os
 import weakref
 
@@ -81,6 +82,26 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(path)
     per_session[key] = df
     return df
+
+
+def _view_name(kind: str, sf_dir: str) -> str:
+    """The one SQL name scheme for per-dataset relations: the relation
+    kind, the dataset directory's basename, and an md5 of its FULL path
+    (two datasets whose dirs share a basename must not share a name)."""
+    path = sf_dir.rstrip("/")
+    base = os.path.basename(path).replace(".", "_").replace("-", "_")
+    digest = hashlib.md5(path.encode()).hexdigest()[:8]
+    return f"sales_telegram_bot_data_pipeline_{kind}_{base}_{digest}"
+
+
+def table_view(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Expose one base table to SQL and return its view name.  The
+    session-cached ``load_table`` DataFrame is (re)registered on every
+    call under its sf-keyed name, so a statement binds the dataset it
+    was built for even when sessions interleave scale factors."""
+    view = _view_name(name, sf_dir)
+    load_table(spark, sf_dir, name).createOrReplaceTempView(view)
+    return view
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

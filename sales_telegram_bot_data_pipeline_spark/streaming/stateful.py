@@ -296,8 +296,9 @@ def _register_streaming_mg():
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from ..operators.curation import MG_CAPACITY, MG_TOPK, _doc_view
+    from ..operators.curation import MG_CAPACITY, MG_TOPK
     from ..registry import register
+    from ..sources.tables import table_view
     from .windows import _MEMSINK_SEQ, run_to_completion, stream_session
 
     @register(
@@ -353,7 +354,7 @@ def _register_streaming_mg():
         )
         # exact recount restricted to the candidates, then true top-k —
         # same tail as the batch operator
-        view = _doc_view(batch_spark, sf_dir, "sales_telegram_bot_data_pipeline_smg_docs")
+        view = table_view(batch_spark, sf_dir, "documents")
         words = batch_spark.sql(f"SELECT explode({w}) AS word FROM {view}")
         cands = batch_spark.createDataFrame(
             [(wd,) for wd in cand_words] or [("",)], "word string"

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..sources.tables import table_view
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -248,12 +249,12 @@ def streaming_lsh_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..functions.dialect import SPARK as SPARK_D
-    from ..operators.dedup import INC_MOD, _bands_rel_sql, _doc_view
+    from ..operators.dedup import INC_MOD, _bands_rel_sql
 
     # everything (static index, spool write, stream) on the cloned session:
     # a stream-static join cannot mix DataFrames from two sessions
     spark = stream_session(spark)
-    view = _doc_view(spark, sf_dir)
+    view = table_view(spark, sf_dir, "documents")
     bands = spark.sql(_bands_rel_sql(SPARK_D, view)).localCheckpoint()
     index_df = bands.where(F.col("doc_id") % INC_MOD != 0)
     batch_bands = bands.where(F.col("doc_id") % INC_MOD == 0)

@@ -270,13 +270,10 @@ def test_countmin_overcount_guarantee_for_all_words(spark):
     top-20 the registered audit emits): join full exact counts against the
     sketch point queries and assert the invariant corpus-wide."""
     from sales_telegram_bot_data_pipeline_spark.functions.dialect import SPARK as D
-    from sales_telegram_bot_data_pipeline_spark.operators.curation import (
-        CMS_D,
-        CMS_W,
-        _doc_view,
-    )
+    from sales_telegram_bot_data_pipeline_spark.operators.curation import CMS_D, CMS_W
+    from sales_telegram_bot_data_pipeline_spark.sources.tables import table_view
 
-    view = _doc_view(spark, "/root/testdata/sf0.001")
+    view = table_view(spark, "/root/testdata/sf0.001", "documents")
     w = D.splitws("lower(text)")
     words_rel = (
         f"SELECT word FROM (SELECT {w} AS ws FROM {view}) s "

@@ -441,14 +441,12 @@ def test_stored_view_policy_pinned():
     deliberate step as a BNLJ allowlist entry."""
     import pathlib
 
-    from sales_telegram_bot_data_pipeline_spark.operators.dedup import (
-        SESSION_VIEW_LIVE_TWINS,
-    )
+    from sales_telegram_bot_data_pipeline_spark.session import SESSION_VIEW_LIVE_TWINS
 
     # 1. pinned key set — edit deliberately, with a bench-note update
     assert set(SESSION_VIEW_LIVE_TWINS) == {
         "shingles", "shdf", "lshp", "cc_labels", "detfeed", "det2feed",
-        "loosep", "ssjac", "ndpairs", "tune_sig",
+        "loosep", "ssjac", "ndpairs", "tune_sig", "wide",
     }
     # 2. every designated twin is a real registered query (live-measured
     #    on the bench by construction: every registry query is a bench row)
@@ -475,7 +473,7 @@ def test_stored_view_policy_pinned():
 
 def test_stored_view_unknown_tag_refused(spark):
     """The runtime gate: an undeclared tag raises before materializing."""
-    from sales_telegram_bot_data_pipeline_spark.operators.dedup import session_view
+    from sales_telegram_bot_data_pipeline_spark.session import session_view
 
     with pytest.raises(ValueError, match="undeclared stored-view tag"):
         session_view(spark, SF_SMOKE, "rogue_new_view", lambda: None)

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from sales_telegram_bot_data_pipeline_spark.operators import similarity as sim
 from sales_telegram_bot_data_pipeline_spark.operators.similarity import (
-    _emb_view,
     _pq_sql,
     SPARK,
     TOP_K,
@@ -19,6 +18,7 @@ from sales_telegram_bot_data_pipeline_spark.operators.similarity import (
     knn_cosine_pq,
     matryoshka_recall_audit,
 )
+from sales_telegram_bot_data_pipeline_spark.sources.tables import table_view
 
 from conftest import SF_SMOKE
 
@@ -28,7 +28,7 @@ def test_pq_full_candidate_pool_equals_bruteforce(spark, monkeypatch):
     exact-cosine rerank must reproduce brute force bit-for-bit — pins that
     the approximation lives ONLY in candidate selection, never scoring."""
     monkeypatch.setattr(sim, "PQ_CAND", 10_000)
-    full = spark.sql(_pq_sql(SPARK, _emb_view(spark, SF_SMOKE))).collect()
+    full = spark.sql(_pq_sql(SPARK, table_view(spark, SF_SMOKE, "embeddings"))).collect()
     bf = knn_cosine_bruteforce(spark, SF_SMOKE).collect()
     key = lambda r: (r["query_id"], r["rank"])
     assert {key(r): (r["neighbor_id"], r["cosine"]) for r in full} == {
@@ -49,7 +49,7 @@ def test_pq_shape_and_rerank_scores_exact(spark):
         (r["query_id"], r["neighbor_id"]): r["cosine"]
         for r in spark.sql(
             sim._rank_window_sql(
-                sim._bruteforce_scored(SPARK, _emb_view(spark, SF_SMOKE)), k=10_000
+                sim._bruteforce_scored(SPARK, table_view(spark, SF_SMOKE, "embeddings")), k=10_000
             )
         ).collect()
     }
@@ -93,7 +93,7 @@ def test_kcore_converged_and_matches_python_peel(spark):
     assert all(r["core_degree"] >= KCORE_K for r in rows)
 
     pairs = spark.sql(
-        _neardup_banded_sql(SPARK, _emb_view(spark, SF_SMOKE))
+        _neardup_banded_sql(SPARK, table_view(spark, SF_SMOKE, "embeddings"))
     ).collect()
     adj: dict[int, set] = {}
     for p in pairs:

@@ -27,7 +27,7 @@ from sales_telegram_bot_data_pipeline_spark.operators.retrieval import (
     MMR_K,
     mmr_diversified_topk,
 )
-from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table
+from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table, table_view
 
 from conftest import SF_SMOKE
 
@@ -357,7 +357,7 @@ def test_epoch_shuffle_decorrelated_and_complete(spark):
     from sales_telegram_bot_data_pipeline_spark.functions.dialect import SPARK as _SP
     from sales_telegram_bot_data_pipeline_spark.operators.curation import _epoch_shuffle_sql
 
-    sql = _epoch_shuffle_sql(_SP, "sales_telegram_bot_data_pipeline_docs")
+    sql = _epoch_shuffle_sql(_SP, table_view(spark, SF_SMOKE, "documents"))
     head = sql.split("SELECT epoch, shard,")[0]
     per_doc = spark.sql(
         head

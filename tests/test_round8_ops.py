@@ -394,13 +394,13 @@ def test_conformal_selection_and_coverage_match_python(spark):
     collect the scored relation, pick the ceil((n+1)(1-alpha))-th
     smallest calibration score in Python, recompute coverage."""
     from sales_telegram_bot_data_pipeline_spark.functions.dialect import SPARK as SP
-    from sales_telegram_bot_data_pipeline_spark.operators.curation import _doc_view
+    from sales_telegram_bot_data_pipeline_spark.sources.tables import table_view
     from sales_telegram_bot_data_pipeline_spark.operators.round8 import (
         CONFORMAL_ALPHA_PCT,
         _conformal_scored_sql,
     )
 
-    view = _doc_view(spark, SF_SMOKE, "sales_telegram_bot_data_pipeline_conf_test_docs")
+    view = table_view(spark, SF_SMOKE, "documents")
     scored = spark.sql(_conformal_scored_sql(SP, view)).collect()
     cal = sorted(r.s_u for r in scored if r.is_cal)
     ev = [r.s_u for r in scored if not r.is_cal]
@@ -448,10 +448,10 @@ def test_brier_decomposition_identity_and_python(spark):
     pure-Python recomputation from the Spark-scored relation (the logreg
     score itself is pinned by the quality-suite golden tests)."""
     from sales_telegram_bot_data_pipeline_spark.functions.dialect import SPARK as SP
-    from sales_telegram_bot_data_pipeline_spark.operators.curation import _doc_view
+    from sales_telegram_bot_data_pipeline_spark.sources.tables import table_view
     from sales_telegram_bot_data_pipeline_spark.operators.lm_quality import _logreg_sql
 
-    view = _doc_view(spark, SF_SMOKE, "sales_telegram_bot_data_pipeline_brier_test_docs")
+    view = table_view(spark, SF_SMOKE, "documents")
     scored = spark.sql(_logreg_sql(SP, view)).select("quality_prob", "lang").collect()
     pu = [round(r.quality_prob * 1e6) for r in scored]
     yu = [1_000_000 if r.lang == "en" else 0 for r in scored]

@@ -102,10 +102,10 @@ def test_pr_auc_matches_python(spark):
     # Python twin on the engine's own scored relation (logreg is pinned
     # elsewhere): grouped average precision with nano-unit truncation
     from sales_telegram_bot_data_pipeline_spark.operators.lm_quality import _logreg_sql
-    from sales_telegram_bot_data_pipeline_spark.operators.curation import _doc_view
+    from sales_telegram_bot_data_pipeline_spark.sources.tables import table_view
     from sales_telegram_bot_data_pipeline_spark.functions.dialect import SPARK
 
-    view = _doc_view(spark, SF_SMOKE)
+    view = table_view(spark, SF_SMOKE, "documents")
     scored = spark.sql(_logreg_sql(SPARK, view)).selectExpr(
         "quality_prob AS v", "(lang = 'en') AS pos"
     ).collect()

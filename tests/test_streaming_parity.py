@@ -380,18 +380,15 @@ def test_lsh_admission_stream_matches_batch(spark, scratch):
     that have band rows — docs too short to shingle never reach the stream
     and are admitted trivially by the batch query)."""
     from sales_telegram_bot_data_pipeline_spark.functions.dialect import SPARK as SPARK_D
-    from sales_telegram_bot_data_pipeline_spark.operators.dedup import (
-        INC_MOD,
-        _bands_rel_sql,
-        _doc_view,
-    )
+    from sales_telegram_bot_data_pipeline_spark.operators.dedup import INC_MOD, _bands_rel_sql
     from sales_telegram_bot_data_pipeline_spark.queries import REGISTRY
+    from sales_telegram_bot_data_pipeline_spark.sources.tables import table_view
     from sales_telegram_bot_data_pipeline_spark.streaming.windows import (
         lsh_admission_stream,
         run_to_completion,
     )
 
-    view = _doc_view(spark, SF_SMOKE)
+    view = table_view(spark, SF_SMOKE, "documents")
     bands = spark.sql(_bands_rel_sql(SPARK_D, view)).localCheckpoint()
     index_df = bands.where(F.col("doc_id") % INC_MOD != 0)
     batch_bands = bands.where(F.col("doc_id") % INC_MOD == 0)
