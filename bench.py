@@ -20,7 +20,7 @@ timed out):
   compile cost before any timing: measured, detected_data_pipeline's first
   sf0.1 run is 9.6 s vs 3.0 s steady state.  Untimed, so job interleaving
   cannot pollute any number.  The warm-up also PRE-BUILDS every
-  materialize-once session view (dedup.session_view: shingles, shingle-df,
+  materialize-once session view (session.session_view: shingles, shingle-df,
   LSH pairs, detection feed, ...) because it executes every query once —
   so no TIMED row ever absorbs a view build and per-row timings are
   order-independent (ADVICE r10); `--quiet-head` gets the same guarantee
