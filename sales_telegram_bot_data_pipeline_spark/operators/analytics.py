@@ -80,6 +80,8 @@ ORDER BY brand_a, brand_b
     tags=("analytics", "association", "self-join"),
 )
 def association_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..session import materialize_once
+
     lineitem = table_view(spark, sf_dir, "lineitem")
     part = table_view(spark, sf_dir, "part")
     # Materialize the basket relation ONCE per call (guide §3.3): Spark
@@ -90,11 +92,10 @@ def association_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orders x the 25-value brand domain, so one checkpoint is tiny; the
     # oracle keeps the single-statement CTE form (DuckDB materializes
     # CTEs) and its unchanged PASS is the equivalence proof.
-    baskets = spark.sql(_ASSOC_BASKETS_SQL.format(lineitem=lineitem, part=part)).localCheckpoint()
-    baskets.createOrReplaceTempView("sales_telegram_bot_data_pipeline_ar_baskets")
-    return spark.sql(
-        _ASSOC_SQL.format(baskets="SELECT * FROM sales_telegram_bot_data_pipeline_ar_baskets")
+    baskets = materialize_once(
+        spark, _ASSOC_BASKETS_SQL.format(lineitem=lineitem, part=part), "ar_baskets", sf_dir
     )
+    return spark.sql(_ASSOC_SQL.format(baskets=f"SELECT * FROM {baskets}"))
 
 
 # --------------------------------------------------------------------------
@@ -1687,7 +1688,7 @@ d AS (
 
 _CUSUM_SQL = _CUSUM_D_SQL + """,
 p AS ({prefix_rel}),
--- CUSUM closed form: S_t = max(0, P_t - min_{{k<=t}} P_k); the running
+-- CUSUM closed form: S_t = max(0, P_t - min_(k<=t) P_k); the running
 -- min comes from a bounded |weeks|^2 triangular self-join (the weekly
 -- relation is calendar-bounded), never a global window on the Spark side
 runmin AS (
@@ -1745,7 +1746,7 @@ def cusum_change_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     inner = _CUSUM_SQL.format(
         datediff="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
         orders=orders,
-        prefix_rel="SELECT x, pc FROM sales_telegram_bot_data_pipeline_cu_prefix",
+        prefix_rel="SELECT x, pc FROM {prefix}",
     )
     d_sql = (
         _CUSUM_D_SQL.format(
@@ -1758,12 +1759,10 @@ def cusum_change_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     summed, _tot = range_prefix_summed(spark, d_df, ["x"], "dv")
     if summed is None:
         return spark.createDataFrame([], "week bigint, cusum_dollars double, alarm boolean")
-    summed.select(
+    prefix = summed.select(
         "x", (F.col("cum_before") + F.col("dv")).cast("decimal(38,0)").alias("pc")
-    ).localCheckpoint(eager=False).createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_cu_prefix"
-    )
-    return spark.sql(inner)
+    ).localCheckpoint(eager=False)
+    return spark.sql(inner, prefix=prefix)
 
 
 # --------------------------------------------------------------------------

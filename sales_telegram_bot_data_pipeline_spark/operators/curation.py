@@ -515,13 +515,9 @@ def curation_pipeline_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     view = table_view(spark, sf_dir, "documents")
     labels = spark.table(_cc_labels_view(spark, sf_dir))
-    labels.where(F.col("doc_id") == F.col("cluster_rep")).select(
-        "doc_id"
-    ).createOrReplaceTempView("sales_telegram_bot_data_pipeline_cur_reps")
     return spark.sql(
-        _curation_pipeline_tail_sql(
-            _S, view, "SELECT doc_id FROM sales_telegram_bot_data_pipeline_cur_reps"
-        )
+        _curation_pipeline_tail_sql(_S, view, "SELECT doc_id FROM {reps}"),
+        reps=labels.where(F.col("doc_id") == F.col("cluster_rep")).select("doc_id"),
     )
 
 
@@ -1139,18 +1135,18 @@ ORDER BY true_count DESC, word
     tags=("curation", "sketch", "agg", "text"),
 )
 def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..session import materialize_once
+
     view = table_view(spark, sf_dir, "documents")
     w = SPARK.splitws("lower(text)")
     words_rel = (
         f"SELECT word FROM (SELECT {w} AS ws FROM {view}) s "
         f"LATERAL VIEW explode(ws) t AS word WHERE length(word) > 0"
     )
-    spark.sql(
-        f"SELECT word, COUNT(*) AS cnt FROM ({words_rel}) ws GROUP BY word"
-    ).localCheckpoint().createOrReplaceTempView("sales_telegram_bot_data_pipeline_cms_wc")
-    return spark.sql(
-        _countmin_sql(SPARK, view, wc_rel="SELECT * FROM sales_telegram_bot_data_pipeline_cms_wc")
+    wc = materialize_once(
+        spark, f"SELECT word, COUNT(*) AS cnt FROM ({words_rel}) ws GROUP BY word", "cms_wc", sf_dir
     )
+    return spark.sql(_countmin_sql(SPARK, view, wc_rel=f"SELECT * FROM {wc}"))
 
 
 # --------------------------------------------------------------------------
@@ -1387,14 +1383,8 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _lsh_pairs_view
 
     view = table_view(spark, sf_dir, "documents")
-    spark.table(_lsh_pairs_view(spark, sf_dir)).createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_leak_pairs"
-    )
-    return spark.sql(
-        _split_leakage_sql(
-            SPARK, view, pairs_rel="SELECT * FROM sales_telegram_bot_data_pipeline_leak_pairs"
-        )
-    )
+    pairs_rel = f"SELECT * FROM {_lsh_pairs_view(spark, sf_dir)}"
+    return spark.sql(_split_leakage_sql(SPARK, view, pairs_rel=pairs_rel))
 
 
 # --------------------------------------------------------------------------
@@ -1475,7 +1465,6 @@ def curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"SELECT *, {richness} AS richness FROM {view} "
         f"WHERE {richness} >= {V2_MIN_DISTINCT_WORDS}"
     )
-    gated.createOrReplaceTempView("sales_telegram_bot_data_pipeline_v2_gated")
     # A doc's MinHash bands depend only on its own text, so the gated
     # subset's LSH pairs are EXACTLY the stored corpus pair view
     # restricted to both endpoints passing the gate (band-bucket equi-join
@@ -1502,13 +1491,9 @@ def curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rk") == 1)
         .select("doc_id", "cluster_size")
     )
-    reps.createOrReplaceTempView("sales_telegram_bot_data_pipeline_v2_reps")
     return spark.sql(
-        _curation_v2_sql(
-            _S,
-            view,
-            reps_rel="SELECT doc_id, cluster_size FROM sales_telegram_bot_data_pipeline_v2_reps",
-        )
+        _curation_v2_sql(_S, view, reps_rel="SELECT doc_id, cluster_size FROM {reps}"),
+        reps=reps,
     )
 
 
@@ -1686,18 +1671,14 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup_minhash_lsh, the fixpoint by dedup_connected_components)
     from .dedup import _cc_labels_view, _lsh_pairs_view
 
-    spark.table(_lsh_pairs_view(spark, sf_dir)).createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_lss_pairs"
-    )
-    spark.table(_cc_labels_view(spark, sf_dir)).createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_lss_labels"
-    )
+    pairs = _lsh_pairs_view(spark, sf_dir)
+    labels = _cc_labels_view(spark, sf_dir)
     return spark.sql(
         _leakage_safe_split_sql(
             SPARK,
             view,
-            cc_rel="SELECT doc_id, cluster_rep FROM sales_telegram_bot_data_pipeline_lss_labels",
-            pairs_rel="SELECT doc_a, doc_b FROM sales_telegram_bot_data_pipeline_lss_pairs",
+            cc_rel=f"SELECT doc_id, cluster_rep FROM {labels}",
+            pairs_rel=f"SELECT doc_a, doc_b FROM {pairs}",
         )
     )
 
@@ -1872,15 +1853,9 @@ def source_quality_ranksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source string, n_docs bigint, rank_sum bigint, u_stat bigint, "
             "u_expected double, z_score double, skew_flag boolean",
         )
-    ranked.select("source", "r").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ranksum_ranked"
-    )
     return spark.sql(
-        _ranksum_sql(
-            SPARK,
-            view,
-            ranked_rel="SELECT source, r FROM sales_telegram_bot_data_pipeline_ranksum_ranked",
-        )
+        _ranksum_sql(SPARK, view, ranked_rel="SELECT source, r FROM {ranked}"),
+        ranked=ranked.select("source", "r"),
     )
 
 
@@ -2540,13 +2515,12 @@ def neyman_allocated_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F2.col("ta.source").alias("source"))
         .agg(F2.coalesce(F2.sum("tb.c"), F2.lit(0)).cast("bigint").alias("off"))
     )
-    ranked.join(F2.broadcast(starts), "source").select(
+    ranked = ranked.join(F2.broadcast(starts), "source").select(
         "source", "doc_id", "n_chars", (F2.col("r") - F2.col("off")).alias("rs")
-    ).createOrReplaceTempView("sales_telegram_bot_data_pipeline_ney_ranked")
+    )
     return spark.sql(
         _neyman_sample_sql(
-            SPARK,
-            view,
-            ranked_rel="SELECT source, doc_id, n_chars, rs FROM sales_telegram_bot_data_pipeline_ney_ranked",
-        )
+            SPARK, view, ranked_rel="SELECT source, doc_id, n_chars, rs FROM {ranked}"
+        ),
+        ranked=ranked,
     )

@@ -140,21 +140,6 @@ WHERE n_common * 1.0 / (ca.n_sh + cb.n_sh - n_common) >= {JACCARD_THRESHOLD}
 """
 
 
-def _materialized_shingles(spark: SparkSession, view: str, name: str) -> str:
-    """Evaluate the shingle explode+distinct ONCE and register the result
-    as a temp view.  The downstream SQL references the relation 3-5 times
-    (df counts, both join sides, per-doc counts); Catalyst inlines CTEs, and
-    exchange reuse only merges IDENTICAL subtrees — the executed plan still
-    carried 5 Generate nodes over the corpus.  localCheckpoint truncates to
-    one materialization (the same move connected_components makes for its
-    edge list).  At cluster scale this is an explicit intermediate — sized
-    O(corpus tokens) as 8-byte-int pairs, spilled by the block manager, far
-    cheaper than re-exploding the text column per consumer."""
-    sh = spark.sql(_shingles_sql(SPARK, view)).localCheckpoint()
-    sh.createOrReplaceTempView(name)
-    return f"SELECT doc_id, sh FROM {name}"
-
-
 @register(
     "dedup_ngram_jaccard",
     oracle=_jaccard_sql(DUCKDB, "documents"),
@@ -163,9 +148,18 @@ def _materialized_shingles(spark: SparkSession, view: str, name: str) -> str:
     tags=("dedup", "join"),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..session import materialize_once
+
     view = table_view(spark, sf_dir, "documents")
-    rel = _materialized_shingles(spark, view, "sales_telegram_bot_data_pipeline_sh_j")
-    return spark.sql(_jaccard_sql(SPARK, view, shingles_rel=rel))
+    # Evaluate the shingle explode+distinct ONCE.  The downstream SQL
+    # references the relation 3-5 times (df counts, both join sides,
+    # per-doc counts); Catalyst inlines CTEs, and exchange reuse only
+    # merges IDENTICAL subtrees — the executed plan still carried 5
+    # Generate nodes over the corpus.  At cluster scale this is an
+    # explicit intermediate — sized O(corpus tokens) as 8-byte-int pairs,
+    # far cheaper than re-exploding the text column per consumer.
+    sh = materialize_once(spark, _shingles_sql(SPARK, view), "jaccard_sh", sf_dir)
+    return spark.sql(_jaccard_sql(SPARK, view, shingles_rel=f"SELECT doc_id, sh FROM {sh}"))
 
 
 # --------------------------------------------------------------------------
@@ -895,7 +889,7 @@ def dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     view = table_view(spark, sf_dir, "documents")
     # Materialize the O(tokens) gram explode once (guide §3.3): the df
     # aggregation and the mark join-back each re-ran the full explode —
-    # the same move _materialized_shingles makes for the Jaccard index.
+    # the same move dedup_ngram_jaccard makes for its shingle index.
     grams = materialize_once(
         spark, _dup_spans_grams_sql(SPARK, view), "span_grams", key=sf_dir
     )
@@ -990,14 +984,8 @@ def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     view = table_view(spark, sf_dir, "embeddings")
     # the stored pair view feeds every unrolled iteration via the edges
     # CTE (Spark would otherwise inline and recompute it PR_ITERS times)
-    spark.table(_neardup_pairs_view(spark, sf_dir)).createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_pr_pairs"
-    )
-    return spark.sql(
-        _pagerank_sql(
-            SPARK, view, pairs_rel="SELECT * FROM sales_telegram_bot_data_pipeline_pr_pairs"
-        )
-    )
+    pairs_rel = f"SELECT * FROM {_neardup_pairs_view(spark, sf_dir)}"
+    return spark.sql(_pagerank_sql(SPARK, view, pairs_rel=pairs_rel))
 
 
 # --------------------------------------------------------------------------
@@ -1053,19 +1041,17 @@ ORDER BY bd.doc_id
     tags=("dedup", "lsh", "incremental"),
 )
 def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..session import materialize_once
+
     view = table_view(spark, sf_dir, "documents")
     # bands is referenced twice (idx + batch); materialize once — the same
     # move every multi-consumer relation in this module makes.  On a real
     # deployment idx is ALREADY a stored table; only the batch's bands are
     # computed at ingest.
-    spark.sql(_bands_rel_sql(SPARK, view)).localCheckpoint().createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_inc_bands"
-    )
+    bands = materialize_once(spark, _bands_rel_sql(SPARK, view), "inc_bands", sf_dir)
     return spark.sql(
         _incremental_lsh_sql(
-            SPARK,
-            view,
-            bands_rel="SELECT doc_id, band, band_key FROM sales_telegram_bot_data_pipeline_inc_bands",
+            SPARK, view, bands_rel=f"SELECT doc_id, band, band_key FROM {bands}"
         )
     )
 
@@ -1126,12 +1112,8 @@ def triangle_count_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     view = table_view(spark, sf_dir, "embeddings")
     # stored pair view: the relation feeds three aliases of the edges CTE,
     # which Spark would inline and recompute
-    spark.table(_neardup_pairs_view(spark, sf_dir)).createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_tri_pairs"
-    )
-    return spark.sql(
-        _triangle_sql(SPARK, view, pairs_rel="SELECT * FROM sales_telegram_bot_data_pipeline_tri_pairs")
-    )
+    pairs_rel = f"SELECT * FROM {_neardup_pairs_view(spark, sf_dir)}"
+    return spark.sql(_triangle_sql(SPARK, view, pairs_rel=pairs_rel))
 
 
 # --------------------------------------------------------------------------
@@ -1285,13 +1267,16 @@ ORDER BY doc_a, doc_b
     tags=("dedup", "text", "fingerprint"),
 )
 def winnowing_doc_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..session import materialize_once
+
     view = table_view(spark, sf_dir, "documents")
-    spark.sql(
-        f"SELECT DISTINCT doc_id, h FROM ({_wnw_selected_rel(SPARK, view)}) s WHERE sel = 1"
-    ).localCheckpoint().createOrReplaceTempView("sales_telegram_bot_data_pipeline_wnw_fp")
-    return spark.sql(
-        _wnw_matches_sql(SPARK, view, fp_rel="SELECT * FROM sales_telegram_bot_data_pipeline_wnw_fp")
+    fp = materialize_once(
+        spark,
+        f"SELECT DISTINCT doc_id, h FROM ({_wnw_selected_rel(SPARK, view)}) s WHERE sel = 1",
+        "wnw_fp",
+        sf_dir,
     )
+    return spark.sql(_wnw_matches_sql(SPARK, view, fp_rel=f"SELECT * FROM {fp}"))
 
 
 def _cluster_size_histogram_sql(d: Dialect, table: str) -> str:
@@ -1426,12 +1411,8 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     from .similarity import _neardup_pairs_view
 
     view = table_view(spark, sf_dir, "embeddings")
-    spark.table(_neardup_pairs_view(spark, sf_dir)).createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_lpa_pairs"
-    )
-    return spark.sql(
-        _lpa_sql(SPARK, view, pairs_rel="SELECT * FROM sales_telegram_bot_data_pipeline_lpa_pairs")
-    )
+    pairs_rel = f"SELECT * FROM {_neardup_pairs_view(spark, sf_dir)}"
+    return spark.sql(_lpa_sql(SPARK, view, pairs_rel=pairs_rel))
 
 
 # --------------------------------------------------------------------------
@@ -1492,23 +1473,22 @@ FROM cls
     tags=("dedup", "lsh", "audit"),
 )
 def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..session import materialize_once
+
     view = table_view(spark, sf_dir, "documents")
     # audits read the STORED shingle table (production writes it once per
     # corpus snapshot); the explode itself stays live-measured by
     # dedup_ngram_jaccard's own per-call materialization
     rel = _shingles_session_rel(spark, sf_dir)
-    spark.sql(
-        _jaccard_sql(SPARK, view, shingles_rel=rel, ordered=False)
-    ).localCheckpoint().createOrReplaceTempView("sales_telegram_bot_data_pipeline_ra_truth")
-    spark.table(_lsh_pairs_view(spark, sf_dir)).createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_ra_cand"
+    truth = materialize_once(
+        spark, _jaccard_sql(SPARK, view, shingles_rel=rel, ordered=False), "ra_truth", sf_dir
     )
     return spark.sql(
         _lsh_recall_sql(
             SPARK,
             view,
-            truth_rel="SELECT doc_a, doc_b FROM sales_telegram_bot_data_pipeline_ra_truth",
-            cand_rel="SELECT doc_a, doc_b FROM sales_telegram_bot_data_pipeline_ra_cand",
+            truth_rel=f"SELECT doc_a, doc_b FROM {truth}",
+            cand_rel=f"SELECT doc_a, doc_b FROM {_lsh_pairs_view(spark, sf_dir)}",
         )
     )
 
@@ -1780,14 +1760,9 @@ ORDER BY doc_id
 )
 def dedup_cluster_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     view = table_view(spark, sf_dir, "documents")
-    labels = spark.table(_cc_labels_view(spark, sf_dir))
-    labels.createOrReplaceTempView("sales_telegram_bot_data_pipeline_ccap_labels")
+    labels = _cc_labels_view(spark, sf_dir)
     return spark.sql(
-        _cluster_cap_sql(
-            SPARK,
-            view,
-            cc_rel="SELECT doc_id, cluster_rep FROM sales_telegram_bot_data_pipeline_ccap_labels",
-        )
+        _cluster_cap_sql(SPARK, view, cc_rel=f"SELECT doc_id, cluster_rep FROM {labels}")
     )
 
 
@@ -1869,14 +1844,11 @@ def minhash_estimate_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     view = table_view(spark, sf_dir, "documents")
     # reads the stored shingle table (see lsh_recall_audit note)
     rel = _shingles_session_rel(spark, sf_dir)
-    spark.table(_lsh_pairs_view(spark, sf_dir)).createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_me_pairs"
-    )
     return spark.sql(
         _minhash_estimate_error_sql(
             SPARK,
             view,
-            pairs_rel="SELECT doc_a, doc_b FROM sales_telegram_bot_data_pipeline_me_pairs",
+            pairs_rel=f"SELECT doc_a, doc_b FROM {_lsh_pairs_view(spark, sf_dir)}",
             shingles_rel=rel,
         )
     )
@@ -2155,24 +2127,27 @@ def _tune_sig_view(spark: SparkSession, sf_dir: str, view: str) -> str:
     tags=("dedup", "lsh", "audit"),
 )
 def lsh_band_tuning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..session import materialize_once
+
     view = _band_tune_corpus(SPARK, table_view(spark, sf_dir, "documents"))
     sig_view = _tune_sig_view(spark, sf_dir, view)
-    cands = spark.sql(
-        _band_cands_sql(SPARK, view, sig_rel=f"SELECT * FROM {sig_view}")
-    ).localCheckpoint()
-    cands.createOrReplaceTempView("sales_telegram_bot_data_pipeline_tune_cands")
+    cands = materialize_once(
+        spark,
+        _band_cands_sql(SPARK, view, sig_rel=f"SELECT * FROM {sig_view}"),
+        "tune_cands",
+        sf_dir,
+    )
     # intermediate truth relation: the global ORDER BY in _jaccard_sql is
     # presentation-only — strip it before materializing (one sort shuffle)
-    truth = spark.sql(
-        _jaccard_sql(SPARK, view, ordered=False)
-    ).localCheckpoint()
-    truth.createOrReplaceTempView("sales_telegram_bot_data_pipeline_tune_truth")
+    truth = materialize_once(
+        spark, _jaccard_sql(SPARK, view, ordered=False), "tune_truth", sf_dir
+    )
     return spark.sql(
         _band_tuning_sql(
             SPARK,
             view,
-            truth_rel="SELECT doc_a, doc_b FROM sales_telegram_bot_data_pipeline_tune_truth",
-            cands_rel="SELECT n_bands, doc_a, doc_b FROM sales_telegram_bot_data_pipeline_tune_cands",
+            truth_rel=f"SELECT doc_a, doc_b FROM {truth}",
+            cands_rel=f"SELECT n_bands, doc_a, doc_b FROM {cands}",
         )
     )
 
@@ -2621,16 +2596,14 @@ def clustering_coefficient_neardup(spark: SparkSession, sf_dir: str) -> DataFram
     from .similarity import _neardup_pairs_view
 
     view = table_view(spark, sf_dir, "embeddings")
-    spark.table(_neardup_pairs_view(spark, sf_dir)).createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_cc_pairs"
-    )
+    pairs = _neardup_pairs_view(spark, sf_dir)
     # Materialize the per-node degree and triangle-count aggregates once
     # (guide §3.3): tot + the final projection re-ran the 3-way wedge
     # join and the symmetric degree union per reference — 62 static
     # Exchanges in one statement.  The bodies mirror the builder's
     # default CTEs; the oracle runs the single-statement form, so any
     # drift between the two fails the value compare.
-    e = "SELECT vec_a AS a, vec_b AS b FROM sales_telegram_bot_data_pipeline_cc_pairs"
+    e = f"SELECT vec_a AS a, vec_b AS b FROM {pairs}"
     deg = materialize_once(
         spark,
         f"SELECT node, CAST(COUNT(*) AS BIGINT) AS degree FROM ("
@@ -2662,7 +2635,7 @@ SELECT node, CAST(COUNT(*) AS BIGINT) AS n_triangles FROM (
         _clustering_coeff_sql(
             SPARK,
             view,
-            pairs_rel="SELECT * FROM sales_telegram_bot_data_pipeline_cc_pairs",
+            pairs_rel=f"SELECT * FROM {pairs}",
             deg_rel=deg,
             tcount_rel=tcount,
         )
@@ -2833,16 +2806,11 @@ ORDER BY doc_a, doc_b
     tags=("dedup", "similarity", "prefix-filter"),
 )
 def apss_cosine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..session import materialize_once
 
     view = table_view(spark, sf_dir, "documents")
     # materialize-once: the weighted posting relation feeds tails, norms,
     # candidates and BOTH sides of the verify join — Spark inlines CTEs, so
     # without a break the tokenize/tf/df chain recomputes per consumer
-    spark.sql(_apss_pw_sql(SPARK, view)).localCheckpoint().createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_apss_pw"
-    )
-    return spark.sql(
-        _apss_sql(
-            SPARK, view, pw_rel="SELECT * FROM sales_telegram_bot_data_pipeline_apss_pw"
-        )
-    )
+    pw = materialize_once(spark, _apss_pw_sql(SPARK, view), "apss_pw", sf_dir)
+    return spark.sql(_apss_sql(SPARK, view, pw_rel=f"SELECT * FROM {pw}"))

@@ -135,8 +135,7 @@ def roc_auc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c_pos").cast("bigint").alias("n1"),
         F.sum("c").cast("bigint").alias("n"),
     )
-    s.createOrReplaceTempView("sales_telegram_bot_data_pipeline_auc_s")
-    return spark.sql(_AUC_FINAL.replace("FROM s", "FROM sales_telegram_bot_data_pipeline_auc_s"))
+    return spark.sql(_AUC_FINAL.replace("FROM s", "FROM {s}"), s=s)
 
 
 # --------------------------------------------------------------------------
@@ -420,8 +419,7 @@ def kaplan_meier_repurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = cum.withColumn(
         "cum_lq", (F.col("cum_before2") + F.col("lq")).cast("bigint")
     )
-    cum.createOrReplaceTempView("sales_telegram_bot_data_pipeline_km_cum")
-    return spark.sql(_KM_FINAL_SQL.format(cum="sales_telegram_bot_data_pipeline_km_cum"))
+    return spark.sql(_KM_FINAL_SQL, cum=cum)
 
 
 # --------------------------------------------------------------------------
@@ -578,9 +576,7 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread the B-fold md5 work: orders is one small parquet split, so the
     # post-explode hash column would otherwise compute in a SINGLE task
     # (B x |orders| md5 calls, measured 11 s at sf0.1 -> 1.9 s spread)
-    load_table(spark, sf_dir, "orders").repartition(nparts).createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_bs_o"
-    )
+    o = load_table(spark, sf_dir, "orders").repartition(nparts)
     # materialize-once: the means relation feeds the ranked relation AND its
     # correlated order-statistic subquery — Spark inlines CTEs, so without a
     # break the B-replicate corpus scan runs three times
@@ -588,26 +584,27 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"({SPARK.strcast('o_orderkey')} || ':' || {SPARK.strcast('b')})"
     )
     u = f"(({h}) / 1152921504606846976.0)"
-    spark.sql(
+    means = spark.sql(
         f"""
 SELECT b, ROUND(CAST(SUM(CAST(k AS DECIMAL(38,0)) * cents) AS DOUBLE)
          / NULLIF(SUM(k), 0) / 100, 6) AS rep_mean
 FROM (
   SELECT b, {_pois_case(u)} AS k,
          CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-  FROM sales_telegram_bot_data_pipeline_bs_o
+  FROM {{o}}
   CROSS JOIN (SELECT explode(sequence(0, {BOOT_B - 1})) AS b) s
 ) rep GROUP BY b
-"""
-    ).localCheckpoint().createOrReplaceTempView("sales_telegram_bot_data_pipeline_bs_means")
+""",
+        o=o,
+    ).localCheckpoint()
     return spark.sql(
         f"""
 WITH ranked AS (
   SELECT m.b, m.rep_mean,
-         (SELECT COUNT(*) FROM sales_telegram_bot_data_pipeline_bs_means y
+         (SELECT COUNT(*) FROM {{means}} y
           WHERE y.rep_mean < m.rep_mean
              OR (y.rep_mean = m.rep_mean AND y.b < m.b)) AS rnk
-  FROM sales_telegram_bot_data_pipeline_bs_means m
+  FROM {{means}} m
 ),
 ci AS (
   SELECT MAX(CASE WHEN rnk = 1 THEN rep_mean END) AS ci_lo,
@@ -618,12 +615,14 @@ full_mean AS (
   SELECT ROUND(CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
                             AS DECIMAL(38,0))) AS DOUBLE)
                / COUNT(*) / 100, 6) AS mean_price
-  FROM sales_telegram_bot_data_pipeline_bs_o
+  FROM {{o}}
 )
 SELECT r.b, r.rep_mean, c.ci_lo, c.ci_hi, f.mean_price
 FROM ranked r CROSS JOIN ci c CROSS JOIN full_mean f
 ORDER BY r.b
-"""
+""",
+        means=means,
+        o=o,
     )
 
 

@@ -141,13 +141,11 @@ def synthesize_pages_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                     i,
                 )
 
-    load_table(spark, sf_dir, "part").select("p_partkey").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_udtf_part"
-    )
     spark.udtf.register("sales_telegram_bot_data_pipeline_explode_pages", ExplodePages)
     return spark.sql(
-        "SELECT t.* FROM sales_telegram_bot_data_pipeline_udtf_part p, "
-        "LATERAL sales_telegram_bot_data_pipeline_explode_pages(p.p_partkey) t"
+        "SELECT t.* FROM {part} p, "
+        "LATERAL sales_telegram_bot_data_pipeline_explode_pages(p.p_partkey) t",
+        part=load_table(spark, sf_dir, "part").select("p_partkey"),
     )
 
 

@@ -195,6 +195,8 @@ ORDER BY doc_id
     tags=("quality", "sampling", "text"),
 )
 def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..session import materialize_once
+
     # The feats relation (bigram explode + md5 per occurrence) is referenced
     # TWICE in the template (bucket counts + scoring); Spark inlines CTEs,
     # so the naive plan runs the explode+hash pass twice over the corpus.
@@ -207,16 +209,8 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"SELECT doc_id, ({h}) % {DSIR_BUCKETS} AS f "
         f"FROM ({_bigram_rel(SPARK, view)}) bg"
     )
-    spark.sql(feats).localCheckpoint().createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_dsir_feats"
-    )
-    return spark.sql(
-        _dsir_sql(
-            SPARK,
-            view,
-            feats_rel="SELECT doc_id, f FROM sales_telegram_bot_data_pipeline_dsir_feats",
-        )
-    )
+    rel = materialize_once(spark, feats, "dsir_feats", sf_dir)
+    return spark.sql(_dsir_sql(SPARK, view, feats_rel=f"SELECT doc_id, f FROM {rel}"))
 
 
 # --------------------------------------------------------------------------
@@ -416,15 +410,9 @@ def score_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "decile int, n_docs bigint, n_pos bigint, pos_rate double, "
             "cum_capture double, lift double",
         )
-    ranked.select("doc_id", "is_pos", "r").createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_lift_ranked"
-    )
     return spark.sql(
-        _lift_sql(
-            SPARK,
-            view,
-            ranked_rel="SELECT doc_id, is_pos, r FROM sales_telegram_bot_data_pipeline_lift_ranked",
-        )
+        _lift_sql(SPARK, view, ranked_rel="SELECT doc_id, is_pos, r FROM {ranked}"),
+        ranked=ranked.select("doc_id", "is_pos", "r"),
     )
 
 

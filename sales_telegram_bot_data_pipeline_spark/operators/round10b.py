@@ -792,14 +792,13 @@ SELECT okey, bx, by, z, {_hilbert_fold_expr(bits)} AS hd FROM base
         ((F.col("r") - 1 - offset) / ZORDER_FILE_ROWS).cast("long").alias("file_id"),
         "bx", "by",
     )
-    assigned.createOrReplaceTempView("sales_telegram_bot_data_pipeline_hi_assigned")
     return spark.sql(
         f"""
 WITH files AS (
   SELECT layout, file_id,
          MIN(bx) AS mn_bx, MAX(bx) AS mx_bx,
          MIN(by) AS mn_by, MAX(by) AS mx_by
-  FROM sales_telegram_bot_data_pipeline_hi_assigned GROUP BY layout, file_id
+  FROM {{assigned}} GROUP BY layout, file_id
 )
 SELECT layout,
        CAST(COUNT(*) AS BIGINT) AS n_files,
@@ -813,7 +812,8 @@ SELECT layout,
 FROM files
 GROUP BY layout
 ORDER BY layout
-"""
+""",
+        assigned=assigned,
     )
 
 

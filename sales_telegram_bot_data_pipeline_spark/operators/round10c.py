@@ -168,24 +168,10 @@ def qini_uplift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(0.0 AS DOUBLE) AS random_uplift, "
             "CAST(0.0 AS DOUBLE) AS qini_coefficient WHERE 1 = 0"
         )
-    ranked.createOrReplaceTempView("sales_telegram_bot_data_pipeline_qn_ranked")
-    from ..session import materialize_once
-
-    cells = materialize_once(
-        spark,
-        _qini_cells_sql(
-            SPARK,
-            "(SELECT user_id, treated, converted, r FROM sales_telegram_bot_data_pipeline_qn_ranked)",
-        ),
-        "qn_cells",
-        key=sf_dir,
-    )
+    users_ranked = "(SELECT user_id, treated, converted, r FROM {ranked})"
+    cells = spark.sql(_qini_cells_sql(SPARK, users_ranked), ranked=ranked).localCheckpoint()
     return spark.sql(
-        _qini_tail_sql(
-            SPARK,
-            "(SELECT user_id, treated, converted, r FROM sales_telegram_bot_data_pipeline_qn_ranked)",
-            cells_rel=cells,
-        )
+        _qini_tail_sql(SPARK, users_ranked, cells_rel="{cells}"), ranked=ranked, cells=cells
     )
 
 
@@ -269,13 +255,10 @@ def sprt_poisson_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table_view(spark, sf_dir, "orders")
     dayno = "datediff(to_date(o_orderdate), to_date('1970-01-01'))"
     daily = spark.sql(_SPRT_DAILY.format(dayno=dayno, orders=orders)).localCheckpoint(eager=False)
-    daily.createOrReplaceTempView("sales_telegram_bot_data_pipeline_sp_daily")
     inc = spark.sql(
-        "WITH lam AS (SELECT CAST(SUM(x) AS DOUBLE) / COUNT(*) AS l0 "
-        "FROM sales_telegram_bot_data_pipeline_sp_daily) "
-        + _SPRT_INC.format(
-            daily="sales_telegram_bot_data_pipeline_sp_daily", lam="lam", ln105=_LN105
-        )
+        "WITH lam AS (SELECT CAST(SUM(x) AS DOUBLE) / COUNT(*) AS l0 FROM {daily}) "
+        + _SPRT_INC.format(daily="{daily}", lam="lam", ln105=_LN105),
+        daily=daily,
     )
     summed, _ = range_prefix_summed(spark, inc, ["day"], "inc_nano")
     if summed is None:
@@ -284,29 +267,31 @@ def sprt_poisson_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(0.0 AS DOUBLE) AS final_llr, CAST(0 AS BIGINT) AS "
             "first_crossing_day, CAST('continue' AS STRING) AS decision WHERE 1=0"
         )
-    summed.withColumn(
+    path = summed.withColumn(
         "cum_nano", (F.col("cum_before") + F.col("inc_nano")).cast("long")
-    ).createOrReplaceTempView("sales_telegram_bot_data_pipeline_sp_path")
+    )
     return spark.sql(
         f"""
 WITH crossed AS (
   SELECT day, cum_nano,
          CASE WHEN cum_nano > {_LN19} * 1e9 THEN 1
               WHEN cum_nano < -({_LN19}) * 1e9 THEN -1 ELSE 0 END AS sgn
-  FROM sales_telegram_bot_data_pipeline_sp_path
+  FROM {{path}}
 ),
 t AS (
-  SELECT (SELECT COUNT(*) FROM sales_telegram_bot_data_pipeline_sp_daily) AS n,
+  SELECT (SELECT COUNT(*) FROM {{daily}}) AS n,
          (SELECT CAST(SUM(x) AS DOUBLE) / COUNT(*)
-          FROM sales_telegram_bot_data_pipeline_sp_daily) AS l0,
-         (SELECT cum_nano FROM sales_telegram_bot_data_pipeline_sp_path
+          FROM {{daily}}) AS l0,
+         (SELECT cum_nano FROM {{path}}
           ORDER BY day DESC LIMIT 1) AS final_nano,
          (SELECT MIN(day) FROM crossed WHERE sgn <> 0) AS cross_day,
          COALESCE((SELECT sgn FROM crossed WHERE sgn <> 0
                    ORDER BY day LIMIT 1), 0) AS cross_sign
 )
 {_SPRT_FINAL.format(t="t")}
-"""
+""",
+        daily=daily,
+        path=path,
     )
 
 

@@ -127,13 +127,10 @@ def ewma_dyadic_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table_view(spark, sf_dir, "orders")
     # weekly feeds THREE consumers (w0 + both band-join sides): Spark
     # inlines CTEs, so materialize the orders scan+aggregate once
-    spark.sql(
+    w = spark.sql(
         _EWMA_WEEKLY_SQL.format(epoch_diff=_EPOCH_DIFF["spark"], orders=orders)
-    ).localCheckpoint(eager=False).createOrReplaceTempView("sales_telegram_bot_data_pipeline_ewma_w")
-    return spark.sql(
-        _ewma_sql(SPARK, orders,
-                  weekly_rel="SELECT x, cents FROM sales_telegram_bot_data_pipeline_ewma_w")
-    )
+    ).localCheckpoint(eager=False)
+    return spark.sql(_ewma_sql(SPARK, orders, weekly_rel="SELECT x, cents FROM {w}"), w=w)
 
 
 # --------------------------------------------------------------------------
@@ -301,11 +298,10 @@ FROM {orders} GROUP BY 1
             (F.lit(1) + F.coalesce(F.col("f"), F.lit(0))).cast("bigint").alias("r"),
         )
     )
-    s.createOrReplaceTempView("sales_telegram_bot_data_pipeline_runs_s")
     # format placeholder, not string surgery on rendered SQL (the CUSUM
     # advisory class: a .replace("FROM s", ...) would also prefix-rewrite
     # any future "FROM signs"/"FROM scored")
-    return spark.sql(_RUNS_FINAL.format(rel="sales_telegram_bot_data_pipeline_runs_s"))
+    return spark.sql(_RUNS_FINAL, rel=s)
 
 
 # --------------------------------------------------------------------------
@@ -476,11 +472,9 @@ def covisitation_item_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # user count, both pair-join sides): materialize the events
     # scan+DISTINCT once — at 100 TB re-deriving it per consumer is the
     # dominant cost, not the bounded |catalog|^2 tail
-    spark.sql(
-        _COVIS_UT_SQL.format(events=events)
-    ).localCheckpoint(eager=False).createOrReplaceTempView("sales_telegram_bot_data_pipeline_cov_ut")
+    ut = spark.sql(_COVIS_UT_SQL.format(events=events)).localCheckpoint(eager=False)
     return spark.sql(
-        _COVIS_SQL.format(incidence="SELECT user_id, event_type FROM sales_telegram_bot_data_pipeline_cov_ut")
+        _COVIS_SQL.format(incidence="SELECT user_id, event_type FROM {ut}"), ut=ut
     )
 
 
@@ -615,17 +609,14 @@ FROM scored CROSS JOIN tot t2
 def naive_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table_view(spark, sf_dir, "orders")
     # daily feeds four consumers (tot + three join sides): materialize once
-    spark.sql(f"""
+    d = spark.sql(f"""
 SELECT CAST({_EPOCH_DIFF['spark']} AS BIGINT) AS day_x,
        CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
             AS BIGINT) AS cents
 FROM {orders} GROUP BY 1
-""").localCheckpoint(eager=False).createOrReplaceTempView("sales_telegram_bot_data_pipeline_bt_d")
+""").localCheckpoint(eager=False)
     return spark.sql(
-        _backtest_sql(
-            SPARK, orders,
-            daily_rel="SELECT day_x, cents FROM sales_telegram_bot_data_pipeline_bt_d",
-        )
+        _backtest_sql(SPARK, orders, daily_rel="SELECT day_x, cents FROM {d}"), d=d
     )
 
 
@@ -979,7 +970,6 @@ def conformal_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     view = table_view(spark, sf_dir, "documents")
     sc = spark.sql(_conformal_scored_sql(SPARK, view)).localCheckpoint(eager=False)
-    sc.createOrReplaceTempView("sales_telegram_bot_data_pipeline_conf_sc")
     calg = (
         sc.where("is_cal").groupBy("s_u").agg(F.count(F.lit(1)).alias("c"))
     )
@@ -996,12 +986,7 @@ def conformal_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     qh = summed.where(
         (F.col("cum_before") + F.col("c")) >= k
     ).agg(F.min("s_u").alias("q_u"))
-    qh.createOrReplaceTempView("sales_telegram_bot_data_pipeline_conf_qh")
-    return spark.sql(
-        _conformal_final_sql().format(
-            sc="sales_telegram_bot_data_pipeline_conf_sc", qh="sales_telegram_bot_data_pipeline_conf_qh"
-        )
-    )
+    return spark.sql(_conformal_final_sql(), sc=sc, qh=qh)
 
 
 # --------------------------------------------------------------------------

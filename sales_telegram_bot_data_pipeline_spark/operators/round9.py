@@ -624,13 +624,13 @@ def zorder_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("file_id"),
         "bx", "by",
     )
-    assigned.createOrReplaceTempView("sales_telegram_bot_data_pipeline_zo_assigned")
     grid = 1 << ZORDER_BITS
     return spark.sql(
         "WITH files AS (SELECT layout, file_id, "
         "MIN(bx) AS mn_bx, MAX(bx) AS mx_bx, MIN(by) AS mn_by, MAX(by) AS mx_by "
-        "FROM sales_telegram_bot_data_pipeline_zo_assigned GROUP BY layout, file_id) "
-        + _ZORDER_FINAL.format(grid=grid, grid2=grid * grid, files="files")
+        "FROM {assigned} GROUP BY layout, file_id) "
+        + _ZORDER_FINAL.format(grid=grid, grid2=grid * grid, files="files"),
+        assigned=assigned,
     )
 
 

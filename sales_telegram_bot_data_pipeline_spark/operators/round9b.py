@@ -299,14 +299,11 @@ ORDER BY dim
     tags=("curation", "audit", "text"),
 )
 def feature_hashing_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..session import materialize_once
+
     view = table_view(spark, sf_dir, "documents")
-    wc = spark.sql(_bigram_wc_sql(SPARK, view)).localCheckpoint()
-    wc.createOrReplaceTempView("sales_telegram_bot_data_pipeline_feathash_wc")
-    return spark.sql(
-        _feat_hash_sql(
-            SPARK, view, wc_rel="SELECT * FROM sales_telegram_bot_data_pipeline_feathash_wc"
-        )
-    )
+    wc = materialize_once(spark, _bigram_wc_sql(SPARK, view), "feathash_wc", sf_dir)
+    return spark.sql(_feat_hash_sql(SPARK, view, wc_rel=f"SELECT * FROM {wc}"))
 
 
 # --------------------------------------------------------------------------
@@ -445,9 +442,8 @@ ORDER BY a.r
     tags=("curation", "text", "agg"),
 )
 def good_turing_smoothing_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..session import materialize_once
+
     view = table_view(spark, sf_dir, "documents")
-    wc = spark.sql(_bigram_wc_sql(SPARK, view)).localCheckpoint()
-    wc.createOrReplaceTempView("sales_telegram_bot_data_pipeline_gt_wc")
-    return spark.sql(
-        _good_turing_sql(SPARK, view, wc_rel="SELECT * FROM sales_telegram_bot_data_pipeline_gt_wc")
-    )
+    wc = materialize_once(spark, _bigram_wc_sql(SPARK, view), "gt_wc", sf_dir)
+    return spark.sql(_good_turing_sql(SPARK, view, wc_rel=f"SELECT * FROM {wc}"))

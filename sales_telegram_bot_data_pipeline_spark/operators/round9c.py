@@ -362,16 +362,16 @@ def pr_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST((cum_before + packed) % 2147483648 AS BIGINT) AS tp",
     )
     term = SPARK.idiv("CAST(c_pos AS DECIMAL(38,0)) * 1000000000 * tp", "pred")
-    cum.createOrReplaceTempView("sales_telegram_bot_data_pipeline_prauc_cum")
-    spark.sql(
+    s = spark.sql(
         f"""
 SELECT CAST(SUM({term}) AS DECIMAL(38,0)) AS num_nano,
        CAST(SUM(c_pos) AS BIGINT) AS n1,
        CAST(SUM(c) AS BIGINT) AS n
-FROM sales_telegram_bot_data_pipeline_prauc_cum
-"""
-    ).createOrReplaceTempView("sales_telegram_bot_data_pipeline_prauc_s")
-    return spark.sql(_PR_FINAL.replace("FROM s", "FROM sales_telegram_bot_data_pipeline_prauc_s"))
+FROM {{cum}}
+""",
+        cum=cum,
+    )
+    return spark.sql(_PR_FINAL.replace("FROM s", "FROM {s}"), s=s)
 
 
 # --------------------------------------------------------------------------

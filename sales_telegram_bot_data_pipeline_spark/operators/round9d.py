@@ -136,8 +136,7 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
             "t_days bigint, at_risk bigint, n_event bigint, n_censor bigint, cum_hazard double",
         )
     cum = cum.withColumn("cum_hq", (F.col("cum_before2") + F.col("hq")).cast("bigint"))
-    cum.createOrReplaceTempView("sales_telegram_bot_data_pipeline_na_cum")
-    return spark.sql(_NA_FINAL_SQL.format(cum="sales_telegram_bot_data_pipeline_na_cum"))
+    return spark.sql(_NA_FINAL_SQL, cum=cum)
 
 
 # --------------------------------------------------------------------------

@@ -295,7 +295,6 @@ ORDER BY user_id, ts, event_id
 )
 def range_interval_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id") < 40)
-    ev.createOrReplaceTempView("sales_telegram_bot_data_pipeline_riw_events")
     return spark.sql("""
 SELECT user_id, event_id, ts,
        CAST(SUM(CAST(value AS DECIMAL(18,2)))
@@ -305,9 +304,9 @@ SELECT user_id, event_id, ts,
        COUNT(*) OVER (PARTITION BY user_id ORDER BY ts
                       RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
             AS rolling_1h_n
-FROM sales_telegram_bot_data_pipeline_riw_events
+FROM {ev}
 ORDER BY user_id, ts, event_id
-""")
+""", ev=ev)
 
 
 @register(
@@ -1633,8 +1632,7 @@ def trimmed_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("r") == k + 1, F.col("v"))).cast("bigint").alias("lo_val"),
         F.max(F.when(F.col("r") == n - k, F.col("v"))).cast("bigint").alias("hi_val"),
     )
-    agg.createOrReplaceTempView("sales_telegram_bot_data_pipeline_trim_agg")
-    return spark.sql(_TRIM_FINAL_SQL.format(agg="sales_telegram_bot_data_pipeline_trim_agg"))
+    return spark.sql(_TRIM_FINAL_SQL, agg=agg)
 
 
 # --------------------------------------------------------------------------

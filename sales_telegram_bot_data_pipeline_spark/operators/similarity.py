@@ -435,17 +435,15 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the candidate join then references it TWICE (both pair sides).
     # Materialize it once (integer (vec_id, cid) pairs — tiny) instead of
     # trusting exchange reuse to merge the two heavy subtrees.
+    from ..session import materialize_once
+
     view = table_view(spark, sf_dir, "embeddings")
     cent, assigned = _cent_assigned_ctes(SPARK, view, k=SEM_K)
-    spark.sql(f"WITH cent AS ({cent}) {assigned}").localCheckpoint().createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_semdedup_assign"
+    assign = materialize_once(
+        spark, f"WITH cent AS ({cent}) {assigned}", "semdedup_assign", sf_dir
     )
     return spark.sql(
-        _semantic_dedup_sql(
-            SPARK,
-            view,
-            assigned_rel="SELECT vec_id, cid FROM sales_telegram_bot_data_pipeline_semdedup_assign",
-        )
+        _semantic_dedup_sql(SPARK, view, assigned_rel=f"SELECT vec_id, cid FROM {assign}")
     )
 
 
@@ -1360,25 +1358,21 @@ ORDER BY vec_id
     tags=("similarity", "curation", "clustering"),
 )
 def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..session import materialize_once
+
     view = table_view(spark, sf_dir, "embeddings")
-    spark.sql(_units_sql(SPARK, view)).localCheckpoint().createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_cbal_units"
-    )
+    units = materialize_once(spark, _units_sql(SPARK, view), "cbal_units", sf_dir)
     assign = spark.sql(
         _kmeans_sql(
             SPARK,
             view,
-            units_rel="SELECT vec_id, pos, uval FROM sales_telegram_bot_data_pipeline_cbal_units",
+            units_rel=f"SELECT vec_id, pos, uval FROM {units}",
             final="assignments",
         )
     )
-    assign.createOrReplaceTempView("sales_telegram_bot_data_pipeline_cbal_assign")
     return spark.sql(
-        _cluster_balanced_sql(
-            SPARK,
-            view,
-            assign_rel="SELECT vec_id, cid FROM sales_telegram_bot_data_pipeline_cbal_assign",
-        )
+        _cluster_balanced_sql(SPARK, view, assign_rel="SELECT vec_id, cid FROM {assign}"),
+        assign=assign,
     )
 
 
@@ -1479,6 +1473,8 @@ ORDER BY v.np
     tags=("similarity", "ivf", "audit"),
 )
 def ivf_nprobe_tuning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..session import materialize_once
+
     view = table_view(spark, sf_dir, "embeddings")
     cent, assigned = _cent_assigned_ctes(SPARK, view)
     pre = f"WITH cent AS ({cent}) "
@@ -1488,39 +1484,38 @@ def ivf_nprobe_tuning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the VALUES grid) or parquet-backed with static stats, so the static
     # planner already picks the broadcast plans AQE would re-derive.
     with fixed_plan(spark, 8):
-        spark.sql(pre + assigned).localCheckpoint().createOrReplaceTempView(
-            "sales_telegram_bot_data_pipeline_np_assigned"
-        )
+        assign = materialize_once(spark, pre + assigned, "np_assigned", sf_dir)
         cos_qc = _cosine(SPARK, "q.embedding", "cent.embedding")
-        spark.sql(
+        qrank = materialize_once(
+            spark,
             pre
             + f"SELECT q.vec_id AS query_id, cent.cid AS cid, "
             f"ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY {cos_qc} DESC, cent.cid) AS r "
-            f"FROM {view} q JOIN cent ON q.vec_id < {N_QUERIES}"
-        ).localCheckpoint().createOrReplaceTempView("sales_telegram_bot_data_pipeline_np_qrank")
-        spark.sql(
-            _rank_window_sql(_bruteforce_scored(SPARK, view))
-        ).localCheckpoint().createOrReplaceTempView("sales_telegram_bot_data_pipeline_np_truth")
+            f"FROM {view} q JOIN cent ON q.vec_id < {N_QUERIES}",
+            "np_qrank",
+            sf_dir,
+        )
+        truth = materialize_once(
+            spark, _rank_window_sql(_bruteforce_scored(SPARK, view)), "np_truth", sf_dir
+        )
         cos_qn = _cosine(SPARK, "q.embedding", "c.embedding")
         scored = f"""
 SELECT cf.np, p.query_id, a.vec_id AS neighbor_id, {cos_qn} AS cosine
 FROM (SELECT * FROM (VALUES {", ".join(f"({n})" for n in _NPROBE_CONFIGS)}) AS v(np)) cf
-JOIN sales_telegram_bot_data_pipeline_np_qrank p ON p.r <= cf.np
-JOIN sales_telegram_bot_data_pipeline_np_assigned a ON a.cid = p.cid AND a.vec_id <> p.query_id
+JOIN {qrank} p ON p.r <= cf.np
+JOIN {assign} a ON a.cid = p.cid AND a.vec_id <> p.query_id
 JOIN {view} q ON q.vec_id = p.query_id
 JOIN {view} c ON c.vec_id = a.vec_id
 """
-        spark.sql(scored).localCheckpoint().createOrReplaceTempView(
-            "sales_telegram_bot_data_pipeline_np_scored"
-        )
+        scored = materialize_once(spark, scored, "np_scored", sf_dir)
     return spark.sql(
         _nprobe_tuning_sql(
             SPARK,
             view,
-            assigned_rel="SELECT vec_id, cid FROM sales_telegram_bot_data_pipeline_np_assigned",
-            qrank_rel="SELECT query_id, cid, r FROM sales_telegram_bot_data_pipeline_np_qrank",
-            truth_rel="SELECT query_id, neighbor_id FROM sales_telegram_bot_data_pipeline_np_truth",
-            scored_rel="SELECT np, query_id, neighbor_id, cosine FROM sales_telegram_bot_data_pipeline_np_scored",
+            assigned_rel=f"SELECT vec_id, cid FROM {assign}",
+            qrank_rel=f"SELECT query_id, cid, r FROM {qrank}",
+            truth_rel=f"SELECT query_id, neighbor_id FROM {truth}",
+            scored_rel=f"SELECT np, query_id, neighbor_id, cosine FROM {scored}",
         )
     )
 

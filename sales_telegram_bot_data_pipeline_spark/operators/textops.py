@@ -747,13 +747,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "budget int, n_types_used bigint, covered_tokens bigint, "
             "coverage double, oov_rate double",
         )
-    ranked.drop("neg").localCheckpoint(eager=False).createOrReplaceTempView(
-        "sales_telegram_bot_data_pipeline_covcurve_rv"
-    )
     return spark.sql(
-        _coverage_curve_sql(
-            SPARK,
-            view,
-            "SELECT w, cnt, r FROM sales_telegram_bot_data_pipeline_covcurve_rv",
-        )
+        _coverage_curve_sql(SPARK, view, "SELECT w, cnt, r FROM {rv}"),
+        rv=ranked.drop("neg").localCheckpoint(eager=False),
     )

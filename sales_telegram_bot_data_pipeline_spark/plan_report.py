@@ -50,7 +50,7 @@ def plan_facts(plan: str) -> dict:
         "codegen_spans": len(set(re.findall(r"codegen id : (\d+)", plan))),
         "pushed_scans": sum(1 for p in pushed if p.strip()),
         "total_scans_with_pushdown_slot": len(pushed),
-        # localCheckpointed session views (dedup.session_view's
+        # localCheckpointed session views (session.session_view's
         # materialize-once relations) surface as ExistingRDD scans: rows
         # with stored>0 read a pre-built relation whose build cost was
         # paid once per session — bench.py's untimed warm-up pass runs

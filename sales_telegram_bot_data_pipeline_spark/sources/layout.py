@@ -163,15 +163,15 @@ def dynamic_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame
     orders = load_table(spark, sf_dir, "orders")
     path = _scratch(spark, "part_orders_dpp", sf_dir)
     write_orders_partitioned(orders, path)
-    orders.createOrReplaceTempView("sales_telegram_bot_data_pipeline_dpp_orders_src")
-    spark.read.parquet(path).createOrReplaceTempView("sales_telegram_bot_data_pipeline_dpp_fact")
     return spark.sql(
         _DPP_AGG_SQL.format(
-            fact="sales_telegram_bot_data_pipeline_dpp_fact",
-            dim=_DPP_DIM_SQL.format(orders="sales_telegram_bot_data_pipeline_dpp_orders_src"),
+            fact="{fact}",
+            dim=_DPP_DIM_SQL.format(orders="{orders}"),
             # the partition column reads back as STRING from directory names
             prio_col="o_orderpriority",
-        )
+        ),
+        fact=spark.read.parquet(path),
+        orders=orders,
     )
 
 

@@ -1,15 +1,21 @@
 """How relations get their names in Spark SQL: ``sources.tables.table_view``
 for base tables, ``session.session_view`` for stored session views and
 ``session.materialize_once`` for per-call checkpoints, all named by one
-private function keyed on the dataset directory."""
+private function keyed on the dataset directory.  A relation that lives
+for one statement gets no name at all: it goes to ``spark.sql`` as a
+DataFrame keyword (``spark.sql(text, cum=cum)``), which binds it under a
+fresh unique name for that statement only."""
 
 from __future__ import annotations
 
+import ast
 import inspect
 import pathlib
 import re
 import subprocess
 import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 from sales_telegram_bot_data_pipeline_spark import queries as q
 from sales_telegram_bot_data_pipeline_spark.sources.tables import table_view
@@ -41,20 +47,34 @@ def test_table_view_names_each_dataset_apart(spark):
     assert stats(small) == want_small
 
 
+def _calls(name: str):
+    """(path relative to the package, enclosing top-level function, call
+    node) for every call of ``name`` in the package, as a plain name or an
+    attribute."""
+    for p in sorted(PKG.rglob("*.py")):
+        for top in ast.parse(p.read_text()).body:
+            for node in ast.walk(top):
+                fn = getattr(node, "func", None)
+                if isinstance(node, ast.Call) and name in (
+                    getattr(fn, "id", None), getattr(fn, "attr", None)
+                ):
+                    yield str(p.relative_to(PKG)), getattr(top, "name", None), node
+
+
 def test_relation_names_have_one_source():
-    """No module registers a base table under a hand-picked name, and the
-    three naming entry points are each defined exactly once."""
-    inline = re.compile(r"load_table\([^()]*\)\s*\.createOrReplaceTempView\(")
-    offenders = [
-        str(p.relative_to(PKG))
-        for p in PKG.rglob("*.py")
-        if p.name != "tables.py" and inline.search(p.read_text())
-    ]
-    assert not offenders, f"register base tables through table_view: {offenders}"
+    """Only the three naming entry points register a temp view, each is
+    defined exactly once, and every other relation reaches SQL through
+    them or as a ``spark.sql`` DataFrame keyword."""
+    registrations = sorted((path, fn) for path, fn, _ in _calls("createOrReplaceTempView"))
+    assert registrations == [
+        ("session.py", "materialize_once"),
+        ("session.py", "session_view"),
+        ("sources/tables.py", "table_view"),
+    ], registrations
     src = "\n".join(p.read_text() for p in PKG.rglob("*.py"))
     for fn in ("table_view", "session_view", "_view_name", "materialize_once"):
         assert len(re.findall(rf"^def {fn}\(", src, re.M)) == 1, fn
-    for gone in ("_doc_view", "_emb_view"):
+    for gone in ("_doc_view", "_emb_view", "_materialized_shingles"):
         assert not re.search(rf"\b{gone}\b", src), gone
     from sales_telegram_bot_data_pipeline_spark import session
     from sales_telegram_bot_data_pipeline_spark.operators import dedup
@@ -64,6 +84,22 @@ def test_relation_names_have_one_source():
     assert params["key"].default is inspect.Parameter.empty
     # the benchmark's tracer wraps session_view where dedup binds it
     assert dedup.session_view is session.session_view
+
+
+def test_materialize_once_tags_are_unique():
+    """A ``materialize_once`` name is keyed on the tag and the dataset,
+    not on the call, so two call sites sharing a literal tag would read
+    each other's relation when run at the same time on one dataset."""
+    sites = {}
+    for path, _, call in _calls("materialize_once"):
+        tag = call.args[2] if len(call.args) > 2 else next(
+            k.value for k in call.keywords if k.arg == "tag"
+        )
+        assert isinstance(tag, ast.Constant), f"{path}:{call.lineno} tag is not a literal"
+        sites.setdefault(tag.value, []).append(f"{path}:{call.lineno}")
+    assert sites
+    shared = {tag: where for tag, where in sites.items() if len(where) > 1}
+    assert not shared, shared
 
 
 def test_queries_import_fails_loudly_on_a_broken_module():
@@ -80,3 +116,27 @@ def test_queries_import_fails_loudly_on_a_broken_module():
     )
     assert out.returncode != 0, "queries imported with round10f missing"
     assert "ImportError" in out.stderr or "ModuleNotFoundError" in out.stderr
+
+
+def test_concurrent_datasets_get_their_own_answers(spark):
+    """Two threads on one session run the same query on two datasets at
+    the same moment; each must get its own dataset's serial answer.  A
+    per-call relation registered under a fixed global name lets one
+    thread's statement read the other thread's rows."""
+    fns = q.queries()
+    sfs = (SF_SMOKE, SF_ORACLE)
+    wrong = {}
+    for name in ("conformal_coverage_audit", "kaplan_meier_repurchase"):
+        fn = fns[name]
+        want = {sf: sorted(fn(spark, sf).collect()) for sf in sfs}
+        assert want[SF_SMOKE] != want[SF_ORACLE], name
+        start = threading.Barrier(len(sfs), timeout=120)
+
+        def run(sf):
+            start.wait()
+            return sorted(fn(spark, sf).collect())
+
+        with ThreadPoolExecutor(len(sfs)) as pool:
+            rounds = [dict(zip(sfs, pool.map(run, sfs))) for _ in range(8)]
+        wrong[name] = sum(got != want for got in rounds)
+    assert not any(wrong.values()), f"rounds of 8 that read the other dataset: {wrong}"
