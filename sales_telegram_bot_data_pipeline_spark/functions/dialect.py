@@ -165,21 +165,6 @@ class Dialect:
             return f"({a} div {b})"
         return f"({a} // {b})"
 
-    # --- structs ---------------------------------------------------------
-    def struct_lit(self, fields: dict[str, str]) -> str:
-        """Named struct from {field: sql}.  Callers must type-align the
-        field exprs across CASE branches (cast NULLs)."""
-        if self.name == "spark":
-            inner = ", ".join(f"'{k}', {v}" for k, v in fields.items())
-            return f"named_struct({inner})"
-        inner = ", ".join(f"{k} := {v}" for k, v in fields.items())
-        return f"struct_pack({inner})"
-
-    def struct_get(self, s: str, field: str) -> str:
-        if self.name == "spark":
-            return f"({s}).{field}"
-        return f"struct_extract({s}, '{field}')"
-
 
 SPARK = Dialect("spark")
 DUCKDB = Dialect("duckdb")

@@ -8,11 +8,11 @@ expressions: regexp/CASE/array lambdas inside whole-stage codegen, no Python
 in the hot path.
 
 The reference's ragged returns (float | dict with varying keys | None) are
-normalized into one nullable struct::
+normalized into seven nullable fields::
 
-    STRUCT<item_price DOUBLE, initial_price DOUBLE, member_price DOUBLE,
-           member_price_note STRING, volume STRING, packaging STRING,
-           price_ex_vat DOUBLE>
+    item_price DOUBLE, initial_price DOUBLE, member_price DOUBLE,
+    member_price_note STRING, volume STRING, packaging STRING,
+    price_ex_vat DOUBLE
 
 Faithfulness notes (each verified against the reference by execution):
 - implied-cents rule: no decimal point and len>2 ⇒ last 2 digits are cents
@@ -32,7 +32,7 @@ Faithfulness notes (each verified against the reference by execution):
 - Billa 'bodi/bodu' yields the literal member note '75bodi'
   (price_processing.py:70-71) — kept in member_price_note;
 - Globus/Tamda accept only item/member price types; unknown class_id or shop
-  ⇒ NULL struct (price_processing.py:302-334, 338-389).
+  ⇒ all fields NULL (price_processing.py:302-334, 338-389).
 """
 
 from __future__ import annotations
@@ -380,29 +380,12 @@ def _shop_cond(shop: str, shops: tuple[str, ...]) -> str:
     return f"{shop} IN ({', '.join(repr(s) for s in shops)})"
 
 
-def dispatcher_struct_sql(d: Dialect, shop: str, x: str, cls: str) -> str:
-    """op 40 (price_processing.py:338-389) as ONE struct-valued CASE: each
-    shop branch builds the whole normalized struct, so every parser body
-    appears exactly once in the plan.  (The per-field formulation repeated
-    each parser up to 7x — Spark does not reliably CSE across SELECT items,
-    which blew task binaries past 1 MiB.)  Fields are cast per branch so the
-    struct type is identical across branches in both engines."""
-    valid_cls = f"{cls} IN ('item_price', 'item_member_price', 'item_initial_price')"
-    branches = []
-    for shops, fn in _PARSERS:
-        fields = fn(d, x, cls)
-        typed = {f: f"cast({fields[f]} as {_ftype(d, f)})" for f in FIELDS}
-        branches.append(f"WHEN {_shop_cond(shop, shops)} THEN {d.struct_lit(typed)}")
-    # invalid class_id / unknown shop → NULL struct; field extraction of a
-    # NULL struct is NULL in both engines, same projected values as the old
-    # per-field NULLs
-    return f"CASE WHEN NOT ({valid_cls}) THEN NULL " + " ".join(branches) + " END"
-
-
 def dispatcher_fields(d: Dialect, shop: str, x: str, cls: str) -> dict[str, str]:
-    """Per-field view of the dispatcher — for call sites that consume ONE
-    field (e.g. pipeline_native's three per-class columns).  Multi-field
-    consumers should project from ``dispatcher_struct_sql`` instead."""
+    """op 40 (price_processing.py:338-389) as one CASE per output field:
+    invalid class / unknown shop → NULL.  Multi-field consumers hoist the
+    shared parses out first (``hoist_price_context_extended`` over
+    ``price_context_sql``), which leaves each parser body once per field
+    instead of once per parse call."""
     valid_cls = f"{cls} IN ('item_price', 'item_member_price', 'item_initial_price')"
     out = {}
     for field in FIELDS:
@@ -413,11 +396,6 @@ def dispatcher_fields(d: Dialect, shop: str, x: str, cls: str) -> dict[str, str]
     return out
 
 
-def price_struct_col(shop: str = "shop_name", text: str = "ocr_text", cls: str = "class_id") -> Column:
-    """DataFrame-API entry: the normalized price struct as a Column."""
-    return F.expr(dispatcher_struct_sql(SPARK, shop, text, cls))
-
-
 def dispatcher_value_sql(d: Dialect, shop: str, x: str, cls: str) -> str:
     """Scalar dispatcher for detection ROWS: the one parsed value this row's
     class_id selects (price classes only; item_name / unknown → NULL).
@@ -425,10 +403,11 @@ def dispatcher_value_sql(d: Dialect, shop: str, x: str, cls: str) -> str:
     This is the smallest possible formulation for per-row dispatch: the
     class is re-stated as a LITERAL inside each branch, so every per-class
     gate inside the parser bodies constant-folds away and each (shop, field)
-    body appears at most once in the whole expression.  Extracting N fields
-    from ``dispatcher_struct_sql`` instead replicates the full 7-field CASE
-    N times (SimplifyExtractValueOps pushes the extraction into every
-    branch), which is what blew detected_data's task binaries past 1 MiB.
+    body appears at most once in the whole expression.  (Extracting N
+    fields from one struct-valued CASE instead replicates the full 7-field
+    CASE N times — SimplifyExtractValueOps pushes the extraction into every
+    branch — which is what once blew detected_data's task binaries past
+    1 MiB.)
     """
     pairs = (
         ("item_price", "item_price"),
@@ -462,27 +441,19 @@ TOK_COL = "__price_tokens"
 PP_COL = "__price_parsed"
 
 
-def price_context_exprs(d: Dialect, x: str) -> dict[str, str]:
-    """The two hoisted shared subexpressions of the dispatcher over ``x``."""
-    return {TOK_COL: _parsed(d, x), PP_COL: parse_price_sql(d, x)}
-
-
-def hoist_price_context(sql: str, d: Dialect, x: str) -> str:
-    """Rewrite a dispatcher SQL string to reference the hoisted columns."""
-    return sql.replace(_parsed(d, x), TOK_COL).replace(parse_price_sql(d, x), PP_COL)
-
-
 def extended_price_context_exprs(d: Dialect, x: str) -> dict[str, str]:
-    """Second hoisting layer: the five shops whose parsers run their OWN
-    token pipeline over a transformed input (Albert, Tesco, Globus, Tamda,
-    Makro) each re-instantiated that pipeline once per class branch of
-    ``dispatcher_value_sql`` — three textual copies apiece, which pushed
-    the dispatched-value SQL to ~53k chars and made per-call Catalyst
-    analysis+optimization (~1.4 s, data-independent) the dominant cost of
-    the detected_data queries.  Hoisting each shop's class-independent
-    parsed VALUE to one context column shrinks the tree ~3x; runtime work
-    also drops (one parse per row instead of one per matching branch)."""
-    ctx = price_context_exprs(d, x)
+    """The hoisted shared subexpressions of the dispatcher over ``x``: the
+    token parse, the whole-string parse, and the five shops whose parsers
+    run their OWN token pipeline over a transformed input (Albert, Tesco,
+    Globus, Tamda, Makro).  Those five each re-instantiated that pipeline
+    once per class branch of ``dispatcher_value_sql`` — three textual
+    copies apiece, which pushed the dispatched-value SQL to ~53k chars and
+    made per-call Catalyst analysis+optimization (~1.4 s, data-independent)
+    the dominant cost of the detected_data queries.  Hoisting each shop's
+    class-independent parsed VALUE to one context column shrinks the tree
+    ~3x; runtime work also drops (one parse per row instead of one per
+    matching branch)."""
+    ctx = {TOK_COL: _parsed(d, x), PP_COL: parse_price_sql(d, x)}
     ctx["__alb_val"] = _albert_val(d, x)
     ctx["__tsc_val"] = _tesco_val(d, x)
     ctx["__glb_val"] = _globus_val(d, x)
@@ -534,6 +505,19 @@ def price_context_gates(shop: str = "shop_name") -> dict[str, str]:
     }
 
 
+def price_context_sql(d: Dialect, shop: str, x: str, cls: str) -> str:
+    """The hoisted context columns as one SELECT-list fragment, each gated
+    to price-class rows and to its own shops (``price_context_gates``), for
+    a relation with columns ``shop``, ``x`` and ``cls``.  Dispatcher text
+    rewritten by ``hoist_price_context_extended`` reads these columns."""
+    price_cls = f"{cls} IN ('item_price', 'item_member_price', 'item_initial_price')"
+    gates = price_context_gates(shop)
+    return ", ".join(
+        f"CASE WHEN {price_cls} AND {gates[name]} THEN {expr} END AS {name}"
+        for name, expr in extended_price_context_exprs(d, x).items()
+    )
+
+
 # --------------------------------------------------------------------------
 # driver-facing queries: deterministic OCR-ish samples synthesized from the
 # part table (integer-only string math so both engines build identical text),
@@ -582,19 +566,15 @@ def _samples_sql(d: Dialect, part_table: str) -> str:
 
 
 def build_dispatcher_query_sql(d: Dialect, part_table: str) -> str:
-    # Seven per-field dispatchers over hoisted shared subexpressions: each
-    # parser body appears exactly once across the SELECT items (extracting
-    # the fields from one struct CASE instead replicates the whole chain
-    # per extraction — SimplifyExtractValueOps pushes the GetStructField
-    # into every branch).
+    # Seven per-field dispatchers over the gated, hoisted context columns
+    # (the same projection detected_data's tail runs): each parser body
+    # appears once per field instead of once per shared-parse call.
     fields = dispatcher_fields(d, "shop_name", "ocr_text", "class_id")
     cols = ", ".join(
-        f"cast({hoist_price_context(fields[f], d, 'ocr_text')} as {_ftype(d, f)}) AS {f}"
+        f"cast({hoist_price_context_extended(fields[f], d, 'ocr_text')} as {_ftype(d, f)}) AS {f}"
         for f in FIELDS
     )
-    ctx_cols = ", ".join(
-        f"{expr} AS {name}" for name, expr in price_context_exprs(d, "ocr_text").items()
-    )
+    ctx_cols = price_context_sql(d, "shop_name", "ocr_text", "class_id")
     return (
         f"WITH samples AS ({_samples_sql(d, part_table)}), "
         f"ctx AS (SELECT *, {ctx_cols} FROM samples) "

@@ -455,26 +455,19 @@ def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 CC_MAX_ITERS = 20  # safety cap; loop exits at fixpoint (diameter iterations)
 
-CC_PARTITIONS_CONF = "spark.sales_telegram_bot_data_pipeline.ccLoopPartitions"
+# Shuffle-partition count for the CC fixpoint's in-loop stages.  The
+# label/edge relations the loop shuffles are the near-dup SUBSET of the
+# corpus — orders of magnitude smaller than the documents table — so the
+# session shuffle default oversplits them into per-task overhead (the
+# same class as ``scalars_extra.RANK_PARTITIONS``).  Deployments size this
+# UP with the candidate-graph cardinality; label exactness never depends
+# on the count.
+CC_PARTITIONS = 8
 
 # label relations at or below this edge count broadcast inside the CC loop
 # (2 cols x ~2M rows ~= tens of MB, comfortably under executor memory);
 # larger graphs take the sort-merge path
 _CC_BROADCAST_EDGES = 2_000_000
-
-
-def _cc_partitions(spark: SparkSession) -> int:
-    """Shuffle-partition count for the CC fixpoint's in-loop stages.  The
-    label/edge relations the loop shuffles are the near-dup SUBSET of the
-    corpus — orders of magnitude smaller than the documents table — so the
-    session shuffle default oversplits them into per-task overhead (the
-    same class as ``scalars_extra.RANK_PARTITIONS_CONF``).  Deployments
-    size this UP with the candidate-graph cardinality via the conf key;
-    label exactness never depends on the count."""
-    try:
-        return int(spark.conf.get(CC_PARTITIONS_CONF, "8"))
-    except Exception:
-        return 8
 
 
 def connected_components(spark: SparkSession, nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -510,7 +503,7 @@ def connected_components(spark: SparkSession, nodes: DataFrame, edges: DataFrame
     # round count at identical total shuffle volume; (b) the changed-label
     # count rides the checkpoint job as an Observation instead of a
     # separate count action; (c) AQE is gated OFF and shuffle partitions
-    # right-sized (``CC_PARTITIONS_CONF``) inside the loop — each round's
+    # right-sized (``CC_PARTITIONS``) inside the loop — each round's
     # plan is a fixed small-relation shape that gains nothing from runtime
     # re-planning, and AQE materializes every exchange as its own job
     # (measured 8 jobs/round -> 1).  The corpus-scale stages (pair
@@ -518,7 +511,6 @@ def connected_components(spark: SparkSession, nodes: DataFrame, edges: DataFrame
     # the gate and keep AQE; min-label propagation stays exact and
     # order-insensitive.
     spark = nodes.sparkSession
-    nparts = _cc_partitions(spark)
     # ONE materialization for pair SQL + symmetric fan-out (r13: was two —
     # an eager `edges` checkpoint and then a sym checkpoint over it): the
     # explode form has a single branch over the pair lineage, so the
@@ -537,11 +529,11 @@ def connected_components(spark: SparkSession, nodes: DataFrame, edges: DataFrame
             ).alias("e")
         )
         .select("e.src", "e.dst")
-        .repartition(nparts, "src")
+        .repartition(CC_PARTITIONS, "src")
         .observe(obs_n, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    with fixed_plan(spark, nparts):
+    with fixed_plan(spark, CC_PARTITIONS):
         # The label relation is bounded by the symmetric edge count; below
         # the broadcast bound the label side rides to every edge partition
         # and the (possibly huge) symmetric edge relation is NEVER
@@ -2263,7 +2255,7 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # flag semantics are unchanged; the last two of the fixed
     # KCORE_ROUNDS run as SINGLE peels so a non-converged run still stops
     # at exactly the oracle's unrolled peel count.
-    with fixed_plan(spark, _cc_partitions(spark)):
+    with fixed_plan(spark, CC_PARTITIONS):
         obs_e = Observation()
         edges = (
             pairs.selectExpr("vec_a AS src", "vec_b AS dst")

@@ -2,7 +2,9 @@
 the whole of DAG #1 (dags/data_pipeline.py:35-150) as ONE declarative Spark
 job — page rows → model-1 detections → pad/clamp → nested detections table →
 model-2 + OCR → class pivot (last-wins) → price/name processing → wide
-``detected_data`` records.
+``detected_data`` records.  Everything after the model-2 detection feed is
+the SQL tail ``pipeline_native._wide_sql``, which ``detected_data_native``
+runs over its native detection feed: the two pipelines share one tail.
 
 The reference runs this as 4 Airflow tasks with stringly-typed XCom
 boundaries, a serial per-image loop, and one HTTP round-trip per image per
@@ -357,114 +359,40 @@ def group_detections(df: DataFrame) -> DataFrame:
     )
 
 
-def pivot_last_wins(df: DataFrame) -> DataFrame:
-    """op 41: class-keyed fold to a wide row; deterministic last-wins via
-    max_by(ocr_text, det_idx) (the reference's loop makes 'last' an
-    iteration-order accident, data_pipeline.py:109-123)."""
-    return (
-        df.groupBy("image_id", "shop_name")
-        .pivot("class_name", list(MODEL2_CLASSES))
-        .agg(F.expr("max_by(ocr_text, det_idx)"))
-    )
-
-
-def _det2_feed_view(spark: SparkSession, sf_dir: str, padding: float = 0.10) -> str:
+def _det2_feed_view(spark: SparkSession, sf_dir: str) -> str:
     """The padded model2+OCR detection feed as a STORED session view —
     the reference's DAG #1 runs inference once per image batch and every
     downstream task reads the resulting detection records (r9 verdict
     task 4: the two capstone bench heads were re-synthesizing this feed
     per run).  Generation itself stays live-measured by
     ``nested_detections_table`` (the model1 twin of the same
-    pages → stub_detect → pad_clamp chain).  Tag carries the padding so
-    a non-default pad never reuses the default feed."""
+    pages → stub_detect → pad_clamp chain)."""
     from ..session import session_view
 
     def build():
         pages = synthesize_pages(spark, sf_dir)
         det2 = stub_detect(pages, model="model2", include_ocr=True)
-        return pad_clamp(det2.where(F.col("error").isNull()), padding)
+        return pad_clamp(det2.where(F.col("error").isNull()))
 
-    tag = f"det2feed_p{int(round(padding * 100))}"
-    return session_view(spark, sf_dir, tag, build)
+    return session_view(spark, sf_dir, "det2feed", build)
 
 
-def detected_data(spark: SparkSession, sf_dir: str, padding: float = 0.10) -> DataFrame:
+def detected_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full DAG #1 tail: wide detected_data records (FIXTURES.md §B5
     shape, typed NULLs instead of the reference's str(None) — op 42 not
-    reproduced)."""
-    det2 = spark.table(_det2_feed_view(spark, sf_dir, padding))
-    # Dispatch BEFORE the pivot, as ONE SCALAR expression: each detection
-    # row's class_id selects exactly one parsed value (dispatcher_value_sql —
-    # every parser body appears at most once in the whole plan), then raw
-    # and parsed values fold through the same last-wins aggregation.
-    # parse() is deterministic per text, so max_by(parse(text), idx) ==
-    # parse(max_by(text, idx)).  The struct-valued form is NOT usable here:
-    # extracting 3 fields from one struct CASE inlines the full 7-field
-    # parser chain 3x (SimplifyExtractValueOps), which pushed task binaries
-    # past 1 MiB and Janino compile times past 10 s per fresh plan.
-    # The token-parse and whole-string-parse subexpressions are hoisted to
-    # real columns (computed once per detection row); the dispatcher body
-    # references them by name instead of re-deriving them per parser.
-    from ..functions.dialect import SPARK
-    from ..functions.prices import (
-        dispatcher_value_sql,
-        extended_price_context_exprs,
-        hoist_price_context_extended,
-        price_context_gates,
-    )
+    reproduced).  The same SQL tail as ``detected_data_native``
+    (``pipeline_native._wide_sql``: gated price context → scalar
+    dispatch → last-wins pivot) over the mapInPandas detection feed.
+    Deviation (documented): ``processed_item_name`` is ``lower(item_name)``
+    here; the full reference composition (op 20 process_single_word,
+    data_pipeline.py:113-115) is wired into detected_data_pipeline, which
+    routes this column through the broadcast-trie DP segmenter."""
+    from ..functions.dialect import SPARK, strip_order_by
+    from .pipeline_native import _wide_sql
 
-    ctx = extended_price_context_exprs(SPARK, "ocr_text")
-    gates = price_context_gates("shop_name")
-    price_cls = "class_name IN ('item_price', 'item_member_price', 'item_initial_price')"
-    pv_sql = hoist_price_context_extended(
-        dispatcher_value_sql(SPARK, "shop_name", "ocr_text", "class_name"), SPARK, "ocr_text"
-    )
-    parsed = det2
-    for name, expr_sql in ctx.items():
-        # gate each context column to price-class rows AND its own shops:
-        # only the matching shop's dispatcher branch reads it, so ungated
-        # every row would pay every shop's token pipeline (see
-        # price_context_gates)
-        parsed = parsed.withColumn(
-            name,
-            F.expr(f"CASE WHEN {price_cls} AND {gates[name]} THEN {expr_sql} END"),
-        )
-    parsed = parsed.withColumn("pv", F.expr(pv_sql))
-
-    def last_wins(value, cls: str):
-        cond_val = F.when(F.col("class_name") == cls, value)
-        cond_ord = F.when(F.col("class_name") == cls, F.col("det_idx"))
-        return F.max_by(cond_val, cond_ord)
-
-    return (
-        parsed.groupBy("image_id", "shop_name")
-        .agg(
-            last_wins(F.col("ocr_text"), "item_name").alias("item_name"),
-            last_wins(F.col("ocr_text"), "item_price").alias("item_price"),
-            last_wins(F.col("ocr_text"), "item_member_price").alias("item_member_price"),
-            last_wins(F.col("ocr_text"), "item_initial_price").alias("item_initial_price"),
-            last_wins(F.col("pv"), "item_price").alias("processed_item_price"),
-            last_wins(F.col("pv"), "item_member_price").alias("processed_item_member_price"),
-            last_wins(F.col("pv"), "item_initial_price").alias("processed_item_initial_price"),
-        )
-        .select(
-            "image_id",
-            "shop_name",
-            F.col("item_name"),
-            # Deviation (documented): the NATIVE/SQL-expressible twin keeps
-            # lower() here; the full reference composition (op 20
-            # process_single_word, data_pipeline.py:113-115) is wired into
-            # detected_data_pipeline, which routes this column through the
-            # broadcast-trie DP segmenter.
-            F.lower(F.col("item_name")).alias("processed_item_name"),
-            F.col("item_price"),
-            "processed_item_price",
-            F.col("item_member_price"),
-            "processed_item_member_price",
-            F.col("item_initial_price"),
-            "processed_item_initial_price",
-            F.lit(True).alias("valid"),  # op 43: code sets True (README disagrees; code wins)
-        )
+    det2 = _det2_feed_view(spark, sf_dir)
+    return spark.sql(
+        strip_order_by(_wide_sql(SPARK, "unused", detections_rel=f"SELECT * FROM {det2}"))
     )
 
 

@@ -1,12 +1,13 @@
 """detected_data, fully native and oracle-checked end-to-end.
 
-operators/inference.py runs the DAG #1 tail with mapInPandas stubs (the real
-deployment shape — external model calls live in Python).  This module is the
-same pipeline expressed 100% in native SQL with portable hash math, so the
-ENTIRE chain — detection synthesis → deterministic last-wins pivot → price
-dispatcher → wide record — is hash-compared against DuckDB.  Together they
-give: the plumbing is exercised with real Python batching, AND the
-relational semantics of the tail are oracle-proven.
+operators/inference.py synthesizes the DAG #1 detections with mapInPandas
+stubs (the real deployment shape — external model calls live in Python).
+This module synthesizes the same feed in native SQL with portable hash
+math, so the ENTIRE chain — detection synthesis → deterministic last-wins
+pivot → price dispatcher → wide record — is hash-compared against DuckDB.
+Both pipelines run ONE tail, ``_wide_sql``, over their own detection feed:
+the plumbing is exercised with real Python batching, AND the relational
+semantics of the tail are oracle-proven.
 """
 
 from __future__ import annotations
@@ -17,9 +18,8 @@ from ..functions.dialect import DUCKDB, SPARK, Dialect
 from ..functions.prices import (
     SHOPS,
     dispatcher_value_sql,
-    extended_price_context_exprs,
     hoist_price_context_extended,
-    price_context_gates,
+    price_context_sql,
 )
 from ..registry import register
 from ..session import session_view
@@ -133,20 +133,14 @@ def _wide_sql(d: Dialect, part_table: str, detections_rel: str | None = None) ->
     # carried a textual copy each, and per-call Catalyst analysis of the
     # ~53k-char tree cost ~1.4 s regardless of data size).  parse() is
     # deterministic per text, so arg_max(parse(text), idx) ==
-    # parse(arg_max(text, idx)).  The struct form is unusable here:
+    # parse(arg_max(text, idx)).  A struct-valued dispatcher is unusable:
     # extracting 3 fields replicates the whole 7-field parser chain 3x
     # (SimplifyExtractValueOps), >1 MiB task binaries and 10 s+ Janino
     # compiles.  Context columns are gated to price-class rows AND to each
-    # column's own shops (price_context_gates — the inline form's CASE
+    # column's own shops (price_context_sql — the inline form's CASE
     # laziness got this for free; ungated, every row paid every shop's
     # token pipeline), and projections are narrowed to the pivot's input.
-    price_cls = "class_name IN ('item_price', 'item_member_price', 'item_initial_price')"
-    ctx = extended_price_context_exprs(d, "ocr_text")
-    gates = price_context_gates("shop_name")
-    ctx_cols = ", ".join(
-        f"CASE WHEN {price_cls} AND {gates[name]} THEN {expr} END AS {name}"
-        for name, expr in ctx.items()
-    )
+    ctx_cols = price_context_sql(d, "shop_name", "ocr_text", "class_name")
     pv = hoist_price_context_extended(
         dispatcher_value_sql(d, "shop_name", "ocr_text", "class_name"), d, "ocr_text"
     )

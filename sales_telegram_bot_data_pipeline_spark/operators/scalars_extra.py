@@ -644,31 +644,23 @@ def price_histogram_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # distributed exact global rank (shared by equi-depth / robust stats)
 # --------------------------------------------------------------------------
-RANK_PARTITIONS_CONF = "spark.sales_telegram_bot_data_pipeline.rankPartitions"
+# Range-partition count for the rank/prefix-sum primitives.  The
+# relations these primitives order are distinct-value / bounded
+# aggregates — typically orders of magnitude smaller than the corpus — so
+# the session shuffle default oversplits them into per-task overhead
+# (A/B/A/B at sf0.1: 8 partitions ~18% faster than 32 across 7
+# primitive-backed queries, two jobs each).  Deployments size this UP
+# with the ranked relation's cardinality; exactness never depends on the
+# count.
+RANK_PARTITIONS = 8
 
 
-def _rank_partitions(spark: SparkSession) -> int:
-    """Range-partition count for the rank/prefix-sum primitives.  The
-    relations these primitives order are distinct-value / bounded
-    aggregates — typically orders of magnitude smaller than the corpus —
-    so the session shuffle default oversplits them into per-task overhead
-    (A/B/A/B at sf0.1: 8 partitions ~18% faster than 32 across 7
-    primitive-backed queries, two jobs each).  Deployments size this UP
-    with the ranked relation's cardinality via the conf key; exactness
-    never depends on the count."""
-    try:
-        return int(spark.conf.get(RANK_PARTITIONS_CONF, "8"))
-    except Exception:
-        return 8
-
-
-def _range_parted(spark: SparkSession, df: DataFrame, cols) -> DataFrame:
+def _range_parted(df: DataFrame, cols) -> DataFrame:
     """Shared head of the rank/prefix-sum primitives: range-partition on
     the ordering key, checkpoint so the offset job and the window job see
     identical partition assignments, tag rows with the partition id."""
-    nparts = _rank_partitions(spark)
     return (
-        df.repartitionByRange(nparts, *cols)
+        df.repartitionByRange(RANK_PARTITIONS, *cols)
         .localCheckpoint(eager=False)
         .withColumn("pid", F.spark_partition_id())
     )
@@ -734,7 +726,7 @@ def range_ranked(spark: SparkSession, df: DataFrame, cols: list[str]):
     columns plus BIGINT ``r``; ``(None, 0)`` on empty input."""
     from pyspark.sql.window import Window
 
-    parted = _range_parted(spark, df, cols)
+    parted = _range_parted(df, cols)
     pcounts = {
         r["pid"]: r["n"]
         for r in parted.groupBy("pid").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -767,7 +759,7 @@ def range_prefix_summed(spark: SparkSession, df: DataFrame, cols: list[str], sum
     ``cols`` order (ties impossible by contract: ``cols`` must be a key of
     ``df`` — e.g. the distinct-value relation of a CDF/rank computation).
     ``(None, 0)`` on empty input."""
-    parted = _range_parted(spark, df, cols)
+    parted = _range_parted(df, cols)
     psums = _partition_sums(parted, sum_col)
     if not psums:
         return None, 0
@@ -794,7 +786,7 @@ def range_prefix_summed_pair(spark: SparkSession, df: DataFrame, cols, sum_col: 
     helpers, and all-NULL partition sums coalesce to 0).  Returns
     ``(frame2 + cum_before2, grand_total)``; ``(None, 0)`` on empty
     input."""
-    parted = _range_parted(spark, df, cols)
+    parted = _range_parted(df, cols)
     psums = _partition_sums(parted, sum_col)
     if not psums:
         return None, 0

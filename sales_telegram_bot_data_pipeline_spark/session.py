@@ -12,7 +12,6 @@ and bench.py use locally.
 from __future__ import annotations
 
 import os
-import re
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -65,8 +64,7 @@ def get_spark(
 # deliberate, reviewable edit to this map, exactly like a BNLJ allowlist
 # entry.  ``session_view`` refuses unknown tags at runtime and
 # tests/test_plan_hygiene.py pins the key set, the twin names, and the
-# call-site tags.  Dynamic det2feed tags carry the padding as a
-# ``_p<int>`` suffix, stripped before lookup.
+# call-site tags.
 SESSION_VIEW_LIVE_TWINS = {
     "shingles": "dedup_ngram_jaccard",          # shingle explode, live
     "shdf": "dedup_jaccard_stopshingle",        # df table rebuilt inline
@@ -90,8 +88,7 @@ def session_view(spark: SparkSession, sf_dir: str, tag: str, build) -> str:
     tables) and every downstream consumer reads.  ``build()`` must return
     a DataFrame.  Unknown tags are refused: declare the live-measured
     twin in ``SESSION_VIEW_LIVE_TWINS`` first."""
-    base = re.sub(r"_p\d+$", "", tag)
-    if base not in SESSION_VIEW_LIVE_TWINS:
+    if tag not in SESSION_VIEW_LIVE_TWINS:
         raise ValueError(
             f"undeclared stored-view tag {tag!r}: add it (and its "
             "live-measured twin query) to SESSION_VIEW_LIVE_TWINS"
@@ -145,7 +142,7 @@ def fixed_plan(spark: SparkSession, partitions: int = 8):
     when the shuffled relations are bounded (parameter grids, per-query
     top-k sets, near-dup subsets).  Inside this gate, plans are fixed at
     planning time and shuffles are right-sized via ``partitions`` — the
-    same discipline as ``scalars_extra.RANK_PARTITIONS_CONF``.  Join-side
+    same discipline as ``scalars_extra.RANK_PARTITIONS``.  Join-side
     choices AQE would have made at runtime must be made statically by the
     caller (broadcast hints on constant-bounded sides, or an observed
     count as in the CC loop).  Corpus-scale scans should stay OUTSIDE the

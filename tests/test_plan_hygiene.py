@@ -453,7 +453,7 @@ def test_stored_view_policy_pinned():
     for tag, twin in SESSION_VIEW_LIVE_TWINS.items():
         assert twin in q.REGISTRY, f"{tag}: twin {twin!r} not in REGISTRY"
     # 3. every literal session_view(...) call-site tag in the package is
-    #    declared (dynamic det2feed tags carry a _p<int> suffix)
+    #    declared
     pkg = pathlib.Path(q.__file__).resolve().parent
     tags_in_source = set()
     for p in pkg.rglob("*.py"):
@@ -464,10 +464,7 @@ def test_stored_view_policy_pinned():
             tags_in_source.add(m.group(1))
         # keyword/f-string tag sites are covered by the runtime gate in
         # session_view itself (raises ValueError on undeclared tags)
-    undeclared = {
-        t for t in tags_in_source
-        if re.sub(r"_p\d+$", "", t) not in SESSION_VIEW_LIVE_TWINS
-    }
+    undeclared = tags_in_source - set(SESSION_VIEW_LIVE_TWINS)
     assert not undeclared, f"undeclared stored-view tags: {undeclared}"
 
 

@@ -15,13 +15,14 @@ import duckdb
 import pandas as pd
 import pytest
 
-from sales_telegram_bot_data_pipeline_spark.functions.dialect import DUCKDB
+from sales_telegram_bot_data_pipeline_spark.functions.dialect import DUCKDB, SPARK
 from sales_telegram_bot_data_pipeline_spark.functions.prices import (
     CLASS_IDS,
     FIELDS,
     SHOPS,
     dispatcher_fields,
-    price_struct_col,
+    hoist_price_context_extended,
+    price_context_sql,
 )
 
 # --------------------------------------------------------------------------
@@ -256,21 +257,41 @@ def test_model_matches_b7_fixtures():
         assert nonnull == pytest.approx(want), f"{shop}/{cls}/{text!r}: {nonnull} != {want}"
 
 
+def _hoisted_dispatch_sql(d, table: str) -> str:
+    """The dispatcher as production runs it (``price_dispatcher_suite``,
+    ``detected_data*``): per-field CASEs reading the gated context columns
+    of ``price_context_sql``, over ``table`` (id, shop_name, class_id,
+    ocr_text)."""
+    fields = dispatcher_fields(d, "shop_name", "ocr_text", "class_id")
+    cols = ", ".join(
+        f"{hoist_price_context_extended(sql, d, 'ocr_text')} AS {name}"
+        for name, sql in fields.items()
+    )
+    ctx = price_context_sql(d, "shop_name", "ocr_text", "class_id")
+    return f"SELECT id, {cols} FROM (SELECT *, {ctx} FROM {table}) c ORDER BY id"
+
+
+def _assert_matches_model(rows, res):
+    bad = []
+    for (rid, *vals), (rid2, shop, cls, text) in zip(res, rows, strict=True):
+        assert rid == rid2
+        want = [model_dispatch(shop, text, cls)[f] for f in FIELDS]
+        if vals != pytest.approx(want):
+            bad.append((shop, cls, text, want, vals))
+    assert not bad, f"{len(bad)} mismatches; first: {bad[0]}"
+
+
 def test_spark_matches_model(spark):
     rows = _corpus()
     df = spark.createDataFrame(rows, "id long, shop_name string, class_id string, ocr_text string")
-    got = {
-        r["id"]: r
-        for r in df.select("id", "shop_name", "class_id", "ocr_text", price_struct_col().alias("p")).collect()
-    }
-    bad = []
-    for rid, shop, cls, text in rows:
-        want = model_dispatch(shop, text, cls)
-        # NULL struct (invalid class / unknown shop) projects to all-NULL fields
-        have = got[rid]["p"].asDict() if got[rid]["p"] is not None else {f: None for f in FIELDS}
-        if {k: v for k, v in have.items()} != pytest.approx(want):
-            bad.append((shop, cls, text, want, have))
-    assert not bad, f"{len(bad)} mismatches; first: {bad[0]}"
+    # a test-local view, not a spark.sql keyword: keyword binding formats
+    # the text, and the dispatcher carries literal braces (Tesco's \d{1,2})
+    df.createOrReplaceTempView("golden_price_corpus")
+    try:
+        res = spark.sql(_hoisted_dispatch_sql(SPARK, "golden_price_corpus")).collect()
+    finally:
+        spark.catalog.dropTempView("golden_price_corpus")
+    _assert_matches_model(rows, [tuple(r) for r in res])
 
 
 def test_duckdb_matches_model():
@@ -278,15 +299,7 @@ def test_duckdb_matches_model():
     pdf = pd.DataFrame(rows, columns=["id", "shop_name", "class_id", "ocr_text"])
     con = duckdb.connect()
     con.register("corpus", pdf)
-    fields = dispatcher_fields(DUCKDB, "shop_name", "ocr_text", "class_id")
-    cols = ", ".join(f"{sql} AS {name}" for name, sql in fields.items())
-    res = con.execute(f"SELECT id, {cols} FROM corpus ORDER BY id").fetchall()
-    bad = []
-    for (rid, *vals), (rid2, shop, cls, text) in zip(res, rows):
-        want = [model_dispatch(shop, text, cls)[f] for f in FIELDS]
-        if vals != pytest.approx(want):
-            bad.append((shop, cls, text, want, vals))
-    assert not bad, f"{len(bad)} mismatches; first: {bad[0]}"
+    _assert_matches_model(rows, con.execute(_hoisted_dispatch_sql(DUCKDB, "corpus")).fetchall())
 
 
 def test_dispatcher_hoisted_tree_stays_small():

@@ -175,3 +175,22 @@ def test_pipeline_wide_record_name_is_segmented(spark):
     trie = _item_trie_bc(spark).value
     assert " ".join(best_segmentation(trie, "mlekojogurtcerstve")) == "mleko jogurt cerstve"
     assert " ".join(best_segmentation(trie, "smetanovysparkline")) == "smetanovy sparkline"
+
+
+def test_pipeline_columns_match_native_twin(spark):
+    # detected_data_pipeline runs detected_data_native's SQL tail over the
+    # mapInPandas detection feed, so the two emit one record shape: same
+    # column names, order and types.
+    from conftest import SF_SMOKE
+
+    from sales_telegram_bot_data_pipeline_spark.operators.inference import (
+        detected_data_pipeline,
+    )
+    from sales_telegram_bot_data_pipeline_spark.operators.pipeline_native import (
+        detected_data_native,
+    )
+
+    assert (
+        detected_data_pipeline(spark, SF_SMOKE).dtypes
+        == detected_data_native(spark, SF_SMOKE).dtypes
+    )
