@@ -14,7 +14,8 @@ Differences handled here:
   list_filter``;
 - 1-based list indexing: ``try_element_at`` vs ``list_extract`` (both NULL
   out of bounds);
-- array length / literal / split names, integer division.
+- array length / literal / split names, integer division;
+- the timezone-free day number since 1970-01-01 (``epoch_day``).
 """
 
 from __future__ import annotations
@@ -159,6 +160,12 @@ class Dialect:
     def strcast(self, x: str) -> str:
         t = "string" if self.name == "spark" else "varchar"
         return f"cast({x} as {t})"
+
+    def epoch_day(self, x: str) -> str:
+        """Whole days from 1970-01-01 to the date of ``x``."""
+        if self.name == "spark":
+            return f"datediff(to_date({x}), to_date('1970-01-01'))"
+        return f"datediff('day', DATE '1970-01-01', CAST({x} AS DATE))"
 
     def idiv(self, a: str, b: str) -> str:
         if self.name == "spark":

@@ -41,7 +41,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .dialect import DUCKDB, SPARK, Dialect
+from .dialect import SPARK, Dialect
 
 FIELDS = (
     "item_price",
@@ -592,31 +592,28 @@ def build_parse_price_query_sql(d: Dialect, part_table: str) -> str:
 
 
 # --- registry entries ------------------------------------------------------
-from ..registry import register  # noqa: E402
-from ..sources.tables import table_view  # noqa: E402
+from ..registry import register_sql  # noqa: E402
 
 
-@register(
+register_sql(
     "parse_price_core",
-    oracle=build_parse_price_query_sql(DUCKDB, "part"),
+    build_parse_price_query_sql,
+    ("part",),
     doc="Reference op 21 parse_price: strip/normalize separators + "
     "implied-cents rule, as a native expression over synthesized OCR text.",
     tags=("scalar", "prices"),
 )
-def parse_price_core(spark, sf_dir):
-    return spark.sql(build_parse_price_query_sql(SPARK, table_view(spark, sf_dir, "part")))
 
 
-@register(
+register_sql(
     "price_dispatcher_suite",
-    oracle=build_dispatcher_query_sql(DUCKDB, "part"),
+    build_dispatcher_query_sql,
+    ("part",),
     doc="Reference ops 22-40: all 17 shop parsers + class_id dispatcher over "
     "synthesized per-shop OCR samples, returning the normalized price struct "
     "as columns.",
     tags=("scalar", "prices", "dispatcher"),
 )
-def price_dispatcher_suite(spark, sf_dir):
-    return spark.sql(build_dispatcher_query_sql(SPARK, table_view(spark, sf_dir, "part")))
 
 
 # --------------------------------------------------------------------------

@@ -27,8 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.dialect import DUCKDB, SPARK
-from ..registry import register
+from ..functions.dialect import DUCKDB, SPARK, Dialect
+from ..registry import register, register_sql
 from ..sources.tables import load_table, table_view
 
 # --------------------------------------------------------------------------
@@ -199,7 +199,7 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    ranked, total = range_ranked(spark, axes, ["axis", "v", "ck"])
+    ranked, total = range_ranked(axes, ["axis", "v", "ck"])
     if ranked is None:
         return spark.createDataFrame(
             [],
@@ -234,11 +234,11 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # chi-squared independence: event_type x day-of-week
 # --------------------------------------------------------------------------
-def _chi2_sql(dow_expr: str, events: str) -> str:
+def _chi2_sql(d: Dialect, events: str) -> str:
     # timezone-free portable weekday: day-number since epoch mod 7
     return f"""
 WITH ev AS (
-  SELECT event_type, CAST({dow_expr} AS INT) AS dow FROM {events}
+  SELECT event_type, CAST({d.epoch_day("ts")} % 7 AS INT) AS dow FROM {events}
 ),
 obs AS (SELECT event_type, dow, COUNT(*) AS n_obs FROM ev GROUP BY event_type, dow),
 rt AS (SELECT event_type, COUNT(*) AS n_row FROM ev GROUP BY event_type),
@@ -260,11 +260,10 @@ ORDER BY o.event_type, o.dow
 """
 
 
-@register(
+register_sql(
     "chi_squared_independence",
-    oracle=_chi2_sql(
-        "datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) % 7", "events"
-    ),
+    _chi2_sql,
+    ("events",),
     doc="Chi-squared independence contingency table of event_type x weekday "
     "(timezone-free epoch-day mod 7): observed counts, expected under "
     "independence, per-cell chi-squared contribution "
@@ -274,9 +273,6 @@ ORDER BY o.event_type, o.dow
     "bounded by |event_type| x 7.",
     tags=("analytics", "stats", "agg"),
 )
-def chi_squared_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(_chi2_sql("datediff(to_date(ts), to_date('1970-01-01')) % 7", events))
 
 
 # --------------------------------------------------------------------------
@@ -355,7 +351,7 @@ def spearman_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
         .select(F.lit(1).alias("axis"), "v", "c")
     )
-    summed, total = range_prefix_summed(spark, gx.unionByName(gy), ["axis", "v"], "c")
+    summed, total = range_prefix_summed(gx.unionByName(gy), ["axis", "v"], "c")
     if summed is None:
         return spark.createDataFrame([], "n_rows bigint, spearman_rho double")
     n = total // 2
@@ -398,11 +394,12 @@ def spearman_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 K_ANON_THRESHOLD = 5
 K_BAND_CAP = 10
 
-_KANON_SQL = f"""
+def _kanon_sql(d: Dialect, customer: str) -> str:
+    return f"""
 WITH q AS (
   SELECT c_nationkey, c_mktsegment,
          CAST(FLOOR(CAST(c_acctbal AS DOUBLE) / 1000.0) AS INT) AS bal_band
-  FROM {{customer}}
+  FROM {customer}
 ),
 g AS (
   SELECT c_nationkey, c_mktsegment, bal_band, COUNT(*) AS grp_n
@@ -420,9 +417,10 @@ ORDER BY k_band
 """
 
 
-@register(
+register_sql(
     "k_anonymity_audit",
-    oracle=_KANON_SQL.format(customer="customer"),
+    _kanon_sql,
+    ("customer",),
     doc=f"k-anonymity audit of a customer export under quasi-identifiers "
     "(nation, market segment, account-balance kilo-band): group-size "
     f"histogram capped at {K_BAND_CAP}+, with groups below k="
@@ -431,9 +429,6 @@ ORDER BY k_band
     "release pipeline runs before publishing.",
     tags=("analytics", "privacy", "audit"),
 )
-def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = table_view(spark, sf_dir, "customer")
-    return spark.sql(_KANON_SQL.format(customer=customer))
 
 
 # --------------------------------------------------------------------------
@@ -506,7 +501,9 @@ def band_join_price_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # closed-form OLS trend over daily revenue
 # --------------------------------------------------------------------------
-_OLS_SQL = """
+def _ols_sql(d: Dialect, orders: str) -> str:
+    datediff = d.epoch_day("o_orderdate")
+    return f"""
 WITH daily AS (
   SELECT CAST({datediff} AS BIGINT) AS x,
          CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS DECIMAL(38,0)))
@@ -540,12 +537,10 @@ FROM c
 """
 
 
-@register(
+register_sql(
     "revenue_trend_ols",
-    oracle=_OLS_SQL.format(
-        datediff="datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
-        orders="orders",
-    ),
+    _ols_sql,
+    ("orders",),
     doc="Closed-form OLS trend line over daily revenue: slope ($/day), "
     "intercept, R^2 from the five classic sums (Sx, Sy, Sxx, Syy, Sxy) — "
     "ONE aggregation pass over the bounded daily relation, every sum "
@@ -554,14 +549,6 @@ FROM c
     "'fit a regression without collecting anything': model state is O(1).",
     tags=("analytics", "stats", "regression"),
 )
-def revenue_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(
-        _OLS_SQL.format(
-            datediff="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-            orders=orders,
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -575,11 +562,13 @@ _BENFORD = {
     9: "0.045757",
 }
 
-_BENFORD_SQL = f"""
+def _benford_sql(d: Dialect, orders: str) -> str:
+    strtype = "STRING" if d.name == "spark" else "VARCHAR"
+    return f"""
 WITH digits AS (
-  SELECT CAST(substr(CAST(CAST(FLOOR(o_totalprice) AS BIGINT) AS {{strtype}}), 1, 1) AS INT)
+  SELECT CAST(substr(CAST(CAST(FLOOR(o_totalprice) AS BIGINT) AS {strtype}), 1, 1) AS INT)
            AS digit
-  FROM {{orders}} WHERE o_totalprice >= 1
+  FROM {orders} WHERE o_totalprice >= 1
 ),
 obs AS (SELECT digit, COUNT(*) AS n FROM digits GROUP BY digit),
 tot AS (SELECT COUNT(*) AS n_all FROM digits)
@@ -595,9 +584,10 @@ ORDER BY digit
 """
 
 
-@register(
+register_sql(
     "benford_first_digit_audit",
-    oracle=_BENFORD_SQL.format(strtype="VARCHAR", orders="orders"),
+    _benford_sql,
+    ("orders",),
     doc="Benford's-law data-quality audit: first-significant-digit "
     "distribution of order totals vs the log10(1+1/d) expectation "
     "(inlined as literal constants — no libm in the comparison path), "
@@ -606,9 +596,6 @@ ORDER BY digit
     "domain plus a scalar total.",
     tags=("analytics", "audit", "stats"),
 )
-def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_BENFORD_SQL.format(strtype="STRING", orders=orders))
 
 
 # --------------------------------------------------------------------------
@@ -616,12 +603,13 @@ def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 L_DIVERSITY_THRESHOLD = 3
 
-_LDIV_SQL = f"""
+def _ldiv_sql(d: Dialect, customer: str) -> str:
+    return f"""
 WITH q AS (
   SELECT c_nationkey,
          CAST(FLOOR(CAST(c_acctbal AS DOUBLE) / 1000.0) AS INT) AS bal_band,
          c_mktsegment
-  FROM {{customer}}
+  FROM {customer}
 ),
 g AS (
   SELECT c_nationkey, bal_band,
@@ -637,9 +625,10 @@ FROM g GROUP BY l ORDER BY l_value
 """
 
 
-@register(
+register_sql(
     "l_diversity_audit",
-    oracle=_LDIV_SQL.format(customer="customer"),
+    _ldiv_sql,
+    ("customer",),
     doc="l-diversity audit: within each quasi-identifier group (nation, "
     "account-balance kilo-band), how many DISTINCT sensitive values "
     "(market segment) appear — a k-anonymous group with one segment still "
@@ -648,9 +637,6 @@ FROM g GROUP BY l ORDER BY l_value
     "the release-gate sibling of k_anonymity_audit.",
     tags=("analytics", "privacy", "audit"),
 )
-def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = table_view(spark, sf_dir, "customer")
-    return spark.sql(_LDIV_SQL.format(customer=customer))
 
 
 # --------------------------------------------------------------------------
@@ -792,7 +778,7 @@ def revenue_concentration_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents")
         )
     )
-    ranked, n = range_ranked(spark, cust, ["cents", "ck"])
+    ranked, n = range_ranked(cust, ["cents", "ck"])
     if ranked is None:
         return spark.createDataFrame(
             [], "n_customers bigint, gini double, top10pct_share double, top1pct_share double"
@@ -821,10 +807,13 @@ def revenue_concentration_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # hash-split A/B conversion lift with z-test
 # --------------------------------------------------------------------------
-_AB_SQL = """
+def _ab_sql(d: Dialect, events: str) -> str:
+    strtype = "STRING" if d.name == "spark" else "VARCHAR"
+    arm_hash = d.md5_prefix_int(f"('ab|' || CAST(user_id AS {strtype}))")
+    return f"""
 WITH assign AS (
   SELECT user_id,
-         ({hash} % 2) AS grp,
+         ({arm_hash} % 2) AS grp,
          MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS converted
   FROM {events}
   GROUP BY user_id
@@ -856,12 +845,10 @@ FROM w
 """
 
 
-@register(
+register_sql(
     "ab_conversion_ztest",
-    oracle=_AB_SQL.format(
-        hash=DUCKDB.md5_prefix_int("('ab|' || CAST(user_id AS VARCHAR))"),
-        events="events",
-    ),
+    _ab_sql,
+    ("events",),
     doc="Hash-split A/B conversion test: users route to arms by a portable "
     "content hash (deterministic, balanced, no RNG — the same assignment "
     "every engine and every run), per-arm purchase-conversion rates, lift, "
@@ -870,20 +857,13 @@ FROM w
     "groupBy(user) + one tiny pivot.",
     tags=("analytics", "experiment", "stats"),
 )
-def ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(
-        _AB_SQL.format(
-            hash=SPARK.md5_prefix_int("('ab|' || CAST(user_id AS STRING))"),
-            events=events,
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # per-brand Pearson correlation of discount vs quantity
 # --------------------------------------------------------------------------
-_ELASTICITY_SQL = """
+def _elasticity_sql(d: Dialect, lineitem: str, part: str) -> str:
+    return f"""
 WITH pts AS (
   SELECT p_brand,
          CAST(ROUND(l_discount * 100) AS DECIMAL(38,0)) AS d2,
@@ -913,9 +893,10 @@ ORDER BY p_brand
 """
 
 
-@register(
+register_sql(
     "discount_quantity_correlation",
-    oracle=_ELASTICITY_SQL.format(lineitem="lineitem", part="part"),
+    _elasticity_sql,
+    ("lineitem", "part"),
     doc="Per-brand Pearson correlation of discount vs quantity (the price-"
     "elasticity proxy question).  Both variables are EXACT small integers "
     "(discount in percent points, quantity in units), the five classic "
@@ -924,16 +905,18 @@ ORDER BY p_brand
     "expression per group — the grouped sibling of revenue_trend_ols.",
     tags=("analytics", "stats", "agg"),
 )
-def discount_quantity_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = table_view(spark, sf_dir, "lineitem")
-    part = table_view(spark, sf_dir, "part")
-    return spark.sql(_ELASTICITY_SQL.format(lineitem=lineitem, part=part))
 
 
 # --------------------------------------------------------------------------
 # shipping SLA buckets per priority
 # --------------------------------------------------------------------------
-_SLA_SQL = """
+def _sla_sql(d: Dialect, orders: str, lineitem: str) -> str:
+    dd_args = (
+        "to_date(l_shipdate), to_date(o_orderdate)"
+        if d.name == "spark"
+        else "'day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE)"
+    )
+    return f"""
 WITH lagdays AS (
   SELECT o_orderpriority AS pri,
          datediff({dd_args}) AS lag_days
@@ -957,35 +940,23 @@ ORDER BY o_orderpriority, sla_bucket
 """
 
 
-@register(
+register_sql(
     "shipping_sla_buckets",
-    oracle=_SLA_SQL.format(
-        dd_args="'day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE)",
-        orders="orders",
-        lineitem="lineitem",
-    ),
+    _sla_sql,
+    ("orders", "lineitem"),
     doc="Order-to-ship SLA distribution: per priority, lineitems bucketed "
     "by days from order to ship (0-7 / 8-14 / 15-30 / 31+) with exact "
     "shares — the fulfilment-latency scorecard.  One co-partitioned "
     "fact-to-fact equi-join, integer day math, map-combinable buckets.",
     tags=("analytics", "sla", "agg"),
 )
-def shipping_sla_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    lineitem = table_view(spark, sf_dir, "lineitem")
-    return spark.sql(
-        _SLA_SQL.format(
-            dd_args="to_date(l_shipdate), to_date(o_orderdate)",
-            orders=orders,
-            lineitem=lineitem,
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # referential integrity audit
 # --------------------------------------------------------------------------
-_RI_SQL = """
+def _ri_sql(d: Dialect, lineitem: str, orders: str, customer: str) -> str:
+    return f"""
 WITH l_orphans AS (
   SELECT COUNT(*) AS n_total,
          SUM(CASE WHEN o.o_orderkey IS NULL THEN 1 ELSE 0 END) AS n_orphans
@@ -1017,9 +988,10 @@ ORDER BY relation
 """
 
 
-@register(
+register_sql(
     "referential_integrity_audit",
-    oracle=_RI_SQL.format(lineitem="lineitem", orders="orders", customer="customer"),
+    _ri_sql,
+    ("lineitem", "orders", "customer"),
     doc="Referential-integrity audit across the fact chain: lineitems whose "
     "order is missing, orders whose customer is missing, and childless "
     "orders — each as a LEFT-join orphan count with exact violation rates. "
@@ -1028,17 +1000,15 @@ ORDER BY relation
     "3-row output.",
     tags=("analytics", "audit", "integrity"),
 )
-def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = table_view(spark, sf_dir, "lineitem")
-    orders = table_view(spark, sf_dir, "orders")
-    customer = table_view(spark, sf_dir, "customer")
-    return spark.sql(_RI_SQL.format(lineitem=lineitem, orders=orders, customer=customer))
 
 
 # --------------------------------------------------------------------------
 # Theil–Sen robust trend (median of pairwise slopes) over daily revenue
 # --------------------------------------------------------------------------
-_THEILSEN_SQL = """
+def _theilsen_sql(d: Dialect, orders: str) -> str:
+    datediff = d.epoch_day("o_orderdate")
+    median_fn = "percentile(slope, 0.5)" if d.name == "spark" else "quantile_cont(slope, 0.5)"
+    return f"""
 WITH weekly AS (
   -- WEEKLY grain, not daily: Theil-Sen is O(points^2) by definition, and
   -- ~345 weeks -> 59k pairs keeps the pair relation trivially bounded
@@ -1074,13 +1044,10 @@ FROM med m CROSS JOIN anchor a
 """
 
 
-@register(
+register_sql(
     "theilsen_trend_robust",
-    oracle=_THEILSEN_SQL.format(
-        datediff="datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
-        orders="orders",
-        median_fn="quantile_cont(slope, 0.5)",
-    ),
+    _theilsen_sql,
+    ("orders",),
     doc="Theil–Sen robust trend over WEEKLY revenue: the MEDIAN of all "
     "pairwise week-to-week slopes — the estimator that shrugs off the "
     "outlier periods that drag revenue_trend_ols (its closed-form "
@@ -1091,15 +1058,6 @@ FROM med m CROSS JOIN anchor a
     "exact interpolated median runs on that bounded relation.",
     tags=("analytics", "stats", "regression"),
 )
-def theilsen_trend_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(
-        _THEILSEN_SQL.format(
-            datediff="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-            orders=orders,
-            median_fn="percentile(slope, 0.5)",
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1107,12 +1065,13 @@ def theilsen_trend_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 T_CLOSENESS_THRESHOLD = 0.35  # max total-variation distance before flagging
 
-_TCLOSE_SQL = f"""
+def _tclose_sql(d: Dialect, customer: str) -> str:
+    return f"""
 WITH q AS (
   SELECT c_nationkey,
          CAST(FLOOR(CAST(c_acctbal AS DOUBLE) / 1000.0) AS INT) AS bal_band,
          c_mktsegment
-  FROM {{customer}}
+  FROM {customer}
 ),
 segtot AS (
   SELECT c_mktsegment, COUNT(*) AS g_n FROM q GROUP BY c_mktsegment
@@ -1154,9 +1113,10 @@ ORDER BY t_bucket
 """
 
 
-@register(
+register_sql(
     "t_closeness_audit",
-    oracle=_TCLOSE_SQL.format(customer="customer"),
+    _tclose_sql,
+    ("customer",),
     doc="t-closeness audit completing the privacy triple (k_anonymity_"
     "audit, l_diversity_audit): per quasi-identifier group (nation, "
     "balance kilo-band), the total-variation distance between the group's "
@@ -1167,9 +1127,6 @@ ORDER BY t_bucket
     "flagged, output histogrammed by 0.05 distance buckets.",
     tags=("analytics", "privacy", "audit"),
 )
-def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = table_view(spark, sf_dir, "customer")
-    return spark.sql(_TCLOSE_SQL.format(customer=customer))
 
 
 # --------------------------------------------------------------------------
@@ -1179,11 +1136,13 @@ CCHART_WINDOW = 13  # trailing days in the control window
 CCHART_MIN_N = 8  # minimum trailing days before a verdict
 CCHART_SIGMA = 3.0
 
-_CCHART_SQL = f"""
+def _cchart_sql(d: Dialect, events: str) -> str:
+    datediff = d.epoch_day("ts")
+    return f"""
 WITH daily AS (
-  SELECT event_type, CAST({{datediff}} AS BIGINT) AS day_no,
+  SELECT event_type, CAST({datediff} AS BIGINT) AS day_no,
          COUNT(*) AS n_events
-  FROM {{events}} GROUP BY event_type, {{datediff}}
+  FROM {events} GROUP BY event_type, {datediff}
 ),
 win AS (
   SELECT event_type, day_no, n_events,
@@ -1213,12 +1172,10 @@ ORDER BY event_type, day_no
 """
 
 
-@register(
+register_sql(
     "control_chart_anomalies",
-    oracle=_CCHART_SQL.format(
-        datediff="datediff('day', DATE '1970-01-01', CAST(ts AS DATE))",
-        events="events",
-    ),
+    _cchart_sql,
+    ("events",),
     doc=f"Rolling control-chart anomaly detection: per event_type, each "
     f"day's count vs the trailing-{CCHART_WINDOW}-day mean/std (exact "
     "integer window sums -> identical double variance in both engines), "
@@ -1228,11 +1185,6 @@ ORDER BY event_type, day_no
     "(O(days) per partition, never corpus rows).",
     tags=("analytics", "timeseries", "anomaly", "window"),
 )
-def control_chart_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(
-        _CCHART_SQL.format(datediff="datediff(to_date(ts), to_date('1970-01-01'))", events=events)
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1241,30 +1193,37 @@ def control_chart_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 CHURN_HORIZON_DAYS = 365  # orders span ~7 years; 1y horizon gives ~20% churn
 
 
-_CHURN_SQL = f"""
+def _churn_sql(d: Dialect, orders: str) -> str:
+    if d.name == "spark":
+        cutoff = f"date_sub(h.dmax, {CHURN_HORIZON_DAYS})"
+        gap = f"datediff(date_sub(h.dmax, {CHURN_HORIZON_DAYS}), agg.last_obs_day)"
+    else:
+        cutoff = f"(h.dmax - {CHURN_HORIZON_DAYS})"
+        gap = f"datediff('day', agg.last_obs_day, h.dmax - {CHURN_HORIZON_DAYS})"
+    return f"""
 WITH h AS (
-  SELECT CAST(MAX(CAST(o_orderdate AS DATE)) AS DATE) AS dmax FROM {{orders}}
+  SELECT CAST(MAX(CAST(o_orderdate AS DATE)) AS DATE) AS dmax FROM {orders}
 ),
 agg AS (
   SELECT o_custkey AS custkey,
-         CAST(SUM(CASE WHEN CAST(o_orderdate AS DATE) < {{cutoff}} THEN 1 ELSE 0 END)
+         CAST(SUM(CASE WHEN CAST(o_orderdate AS DATE) < {cutoff} THEN 1 ELSE 0 END)
               AS BIGINT) AS n_orders,
-         CAST(SUM(CASE WHEN CAST(o_orderdate AS DATE) < {{cutoff}}
+         CAST(SUM(CASE WHEN CAST(o_orderdate AS DATE) < {cutoff}
                        THEN CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
                                  AS DECIMAL(38,0)) ELSE 0 END)
               AS DECIMAL(38,0)) AS spend_cents,
-         CAST(COUNT(DISTINCT CASE WHEN CAST(o_orderdate AS DATE) < {{cutoff}}
+         CAST(COUNT(DISTINCT CASE WHEN CAST(o_orderdate AS DATE) < {cutoff}
                                   THEN CAST(o_orderdate AS DATE) END) AS BIGINT)
            AS order_days,
-         MAX(CASE WHEN CAST(o_orderdate AS DATE) < {{cutoff}}
+         MAX(CASE WHEN CAST(o_orderdate AS DATE) < {cutoff}
                   THEN CAST(o_orderdate AS DATE) END) AS last_obs_day,
-         CAST(SUM(CASE WHEN CAST(o_orderdate AS DATE) >= {{cutoff}} THEN 1 ELSE 0 END)
+         CAST(SUM(CASE WHEN CAST(o_orderdate AS DATE) >= {cutoff} THEN 1 ELSE 0 END)
               AS BIGINT) AS n_after
-  FROM {{orders}} CROSS JOIN h
+  FROM {orders} CROSS JOIN h
   GROUP BY o_custkey
 )
 SELECT custkey, n_orders, CAST(spend_cents AS BIGINT) AS spend_cents, order_days,
-       CAST({{gap}} AS BIGINT) AS last_gap_days,
+       CAST({gap} AS BIGINT) AS last_gap_days,
        (n_after = 0) AS churned
 FROM agg CROSS JOIN h
 WHERE n_orders > 0
@@ -1272,13 +1231,10 @@ ORDER BY custkey
 """
 
 
-@register(
+register_sql(
     "churn_label_features",
-    oracle=_CHURN_SQL.format(
-        orders="orders",
-        cutoff=f"(h.dmax - {CHURN_HORIZON_DAYS})",
-        gap=f"datediff('day', agg.last_obs_day, h.dmax - {CHURN_HORIZON_DAYS})",
-    ),
+    _churn_sql,
+    ("orders",),
     doc=f"Supervised training-set builder for churn: label = customer "
     f"places NO order in the final {CHURN_HORIZON_DAYS}-day horizon; "
     "features (order count, exact-cents spend, distinct order days, "
@@ -1290,15 +1246,6 @@ ORDER BY custkey
     "self-join.",
     tags=("analytics", "training", "agg"),
 )
-def churn_label_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(
-        _CHURN_SQL.format(
-            orders=orders,
-            cutoff=f"date_sub(h.dmax, {CHURN_HORIZON_DAYS})",
-            gap=f"datediff(date_sub(h.dmax, {CHURN_HORIZON_DAYS}), agg.last_obs_day)",
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1551,7 +1498,7 @@ ORDER BY n.lag
     "acf_daily_revenue",
     oracle=_ACF_SQL.format(
         daily=_ACF_DAILY_SQL.format(
-            dayno="datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
+            dayno=DUCKDB.epoch_day("o_orderdate"),
             orders="orders",
         ),
         lags_rel=f"SELECT unnest(generate_series(1, {ACF_MAX_LAG})) AS lag",
@@ -1575,7 +1522,7 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = materialize_once(
         spark,
         _ACF_DAILY_SQL.format(
-            dayno="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
+            dayno=SPARK.epoch_day("o_orderdate"),
             orders=orders,
         ),
         "acf_daily",
@@ -1592,7 +1539,9 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Mann-Kendall trend test on the weekly revenue series
 # --------------------------------------------------------------------------
-_MK_TREND_SQL = """
+def _mk_trend_sql(d: Dialect, orders: str) -> str:
+    datediff = d.epoch_day("o_orderdate")
+    return f"""
 WITH weekly AS (
   SELECT CAST(FLOOR(CAST({datediff} AS BIGINT) / 7.0) AS BIGINT) AS x,
          CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS DECIMAL(38,0)))
@@ -1628,12 +1577,10 @@ FROM s CROSS JOIN ties CROSS JOIN n
 """
 
 
-@register(
+register_sql(
     "mann_kendall_trend",
-    oracle=_MK_TREND_SQL.format(
-        datediff="datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
-        orders="orders",
-    ),
+    _mk_trend_sql,
+    ("orders",),
     doc="Mann-Kendall monotone-trend TEST on the weekly revenue series — "
     "the significance companion to theilsen_trend_robust's slope (same "
     "weekly grain, same bounded O(weeks^2) pair relation): S = sum of "
@@ -1643,14 +1590,6 @@ FROM s CROSS JOIN ties CROSS JOIN n
     "assumption, unlike revenue_trend_ols's F.",
     tags=("analytics", "timeseries", "stats"),
 )
-def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(
-        _MK_TREND_SQL.format(
-            datediff="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-            orders=orders,
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1722,7 +1661,7 @@ def _cusum_prefix_oracle() -> str:
 @register(
     "cusum_change_detection",
     oracle=_CUSUM_SQL.format(
-        datediff="datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
+        datediff=DUCKDB.epoch_day("o_orderdate"),
         orders="orders",
         prefix_rel=_cusum_prefix_oracle(),
     ),
@@ -1744,19 +1683,19 @@ def cusum_change_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scalars_extra import range_prefix_summed
 
     inner = _CUSUM_SQL.format(
-        datediff="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
+        datediff=SPARK.epoch_day("o_orderdate"),
         orders=orders,
         prefix_rel="SELECT x, pc FROM {prefix}",
     )
     d_sql = (
         _CUSUM_D_SQL.format(
-            datediff="datediff(to_date(o_orderdate), to_date('1970-01-01'))",
+            datediff=SPARK.epoch_day("o_orderdate"),
             orders=orders,
         )
         + "\nSELECT x, dv FROM d"
     )
     d_df = spark.sql(d_sql)
-    summed, _tot = range_prefix_summed(spark, d_df, ["x"], "dv")
+    summed, _tot = range_prefix_summed(d_df, ["x"], "dv")
     if summed is None:
         return spark.createDataFrame([], "week bigint, cusum_dollars double, alarm boolean")
     prefix = summed.select(
@@ -1768,7 +1707,8 @@ def cusum_change_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # aggregate sensitivity audit (max single-user contribution per cell)
 # --------------------------------------------------------------------------
-_SENS_SQL = """
+def _sens_sql(d: Dialect, events: str) -> str:
+    return f"""
 WITH per_user AS (
   SELECT event_type, user_id,
          CAST(COUNT(*) AS BIGINT) AS n_u,
@@ -1793,9 +1733,10 @@ FROM cell ORDER BY event_type
 """
 
 
-@register(
+register_sql(
     "aggregate_sensitivity_audit",
-    oracle=_SENS_SQL.format(events="events"),
+    _sens_sql,
+    ("events",),
     doc="Per-aggregate-cell SENSITIVITY audit: the largest single user's "
     "row and value contribution share per event_type — the number that "
     "(a) flags cells effectively describing one individual before a "
@@ -1806,15 +1747,17 @@ FROM cell ORDER BY event_type
     "release family beside k-anonymity / l-diversity / t-closeness.",
     tags=("analytics", "privacy", "agg"),
 )
-def aggregate_sensitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(_SENS_SQL.format(events=events))
 
 
 # --------------------------------------------------------------------------
 # circular (directional) statistics of event time-of-day
 # --------------------------------------------------------------------------
-_CIRC_SQL = """
+def _circ_sql(d: Dialect, events: str) -> str:
+    if d.name == "spark":
+        sod = "hour(ts) * 3600 + minute(ts) * 60 + second(ts)"
+    else:
+        sod = "EXTRACT(hour FROM ts) * 3600 + EXTRACT(minute FROM ts) * 60 + EXTRACT(second FROM ts)"
+    return f"""
 WITH pts AS (
   SELECT event_type,
          -- second-of-day as an angle; per-row libm cos/sin quantized to
@@ -1845,12 +1788,10 @@ FROM agg ORDER BY event_type
 """
 
 
-@register(
+register_sql(
     "circular_time_profile",
-    oracle=_CIRC_SQL.format(
-        events="events",
-        sod="EXTRACT(hour FROM ts) * 3600 + EXTRACT(minute FROM ts) * 60 + EXTRACT(second FROM ts)",
-    ),
+    _circ_sql,
+    ("events",),
     doc="Circular (directional) statistics of event time-of-day per type: "
     "the mean hour computed on the CIRCLE (23:00 and 01:00 average to "
     "midnight, not noon — the error every linear mean makes on clock "
@@ -1861,17 +1802,22 @@ FROM agg ORDER BY event_type
     "empirical contract as the freshness profile).",
     tags=("analytics", "timeseries", "stats"),
 )
-def circular_time_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(
-        _CIRC_SQL.format(events=events, sod="hour(ts) * 3600 + minute(ts) * 60 + second(ts)")
-    )
 
 
 # --------------------------------------------------------------------------
 # cohort LTV triangle (cohort quarter x quarters-since-acquisition)
 # --------------------------------------------------------------------------
-_LTV_SQL = """
+def _ltv_sql(d: Dialect, orders: str) -> str:
+    div = "div" if d.name == "spark" else "//"
+    # d1 is already a DATE, so it is not re-cast
+    d1 = (
+        "datediff(d1, to_date('1970-01-01'))"
+        if d.name == "spark"
+        else "datediff('day', DATE '1970-01-01', d1)"
+    )
+    qnum_d1 = f"{d1} {div} 91"
+    qnum_o = f"{d.epoch_day('o.o_orderdate')} {div} 91"
+    return f"""
 WITH firsts AS (
   SELECT o_custkey AS ck, MIN(CAST(o_orderdate AS DATE)) AS d1
   FROM {orders} GROUP BY o_custkey
@@ -1900,13 +1846,10 @@ ORDER BY c.cohort_q, c.age_q
 """
 
 
-@register(
+register_sql(
     "cohort_ltv_triangle",
-    oracle=_LTV_SQL.format(
-        orders="orders",
-        qnum_d1="datediff('day', DATE '1970-01-01', d1) // 91",
-        qnum_o="datediff('day', DATE '1970-01-01', CAST(o.o_orderdate AS DATE)) // 91",
-    ),
+    _ltv_sql,
+    ("orders",),
     doc="Cohort LTV triangle: acquisition-quarter x quarters-since-"
     "acquisition revenue matrix with per-cohort-member normalization — "
     "the finance view of customer lifetime value (each cohort row reads "
@@ -1918,12 +1861,3 @@ ORDER BY c.cohort_q, c.age_q
     "(presence), growth_accounting_weekly (flows), this (value).",
     tags=("analytics", "cohort", "agg"),
 )
-def cohort_ltv_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(
-        _LTV_SQL.format(
-            orders=orders,
-            qnum_d1="datediff(d1, to_date('1970-01-01')) div 91",
-            qnum_o="datediff(to_date(o.o_orderdate), to_date('1970-01-01')) div 91",
-        )
-    )

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
-from ..registry import register
+from ..registry import register, register_sql
 from ..sources.tables import load_table, table_view
 from .dedup import _shingles_sql
 
@@ -73,17 +73,16 @@ FROM routed GROUP BY split_name ORDER BY split_name
 """
 
 
-@register(
+register_sql(
     "dataset_hash_split",
-    oracle=_hash_split_sql(DUCKDB, "documents"),
+    _hash_split_sql,
+    ("documents",),
     doc=f"Deterministic {TRAIN_PCT}/{VAL_PCT - TRAIN_PCT}/{100 - VAL_PCT} "
     "train/val/test split by portable md5(doc_id) hash bucket — no RNG, no "
     "seed, membership reproducible from the row alone (survives "
     "repartitioning and appends); per-split stats.",
     tags=("curation", "sampling"),
 )
-def dataset_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_hash_split_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -104,17 +103,16 @@ ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "stratified_sample",
-    oracle=_stratified_sample_sql(DUCKDB, "documents"),
+    _stratified_sample_sql,
+    ("documents",),
     doc=f"Stratified deterministic sample: keep {EN_RATE_PERMILLE / 10:.0f}% "
     f"of dominant-language (en) docs and {OTHER_RATE_PERMILLE / 10:.0f}% of "
     "tail languages via a salted hash threshold — shuffle-free projection, "
     "reproducible without RNG state.",
     tags=("curation", "sampling"),
 )
-def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_stratified_sample_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -148,17 +146,16 @@ ORDER BY h.doc_id
 """
 
 
-@register(
+register_sql(
     "contamination_overlap",
-    oracle=_contamination_sql(DUCKDB, "documents"),
+    _contamination_sql,
+    ("documents",),
     doc="Benchmark-contamination scan: distinct shingles of the frozen "
     f"benchmark subset (doc_id % {BENCH_MOD} = 0) broadcast against corpus "
     "shingles; per-doc overlap count + fraction. Map-side semi-join shape — "
     "corpus text never shuffles.",
     tags=("curation", "text", "join"),
 )
-def contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_contamination_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -256,16 +253,15 @@ ORDER BY doc_id, chunk_idx
 """
 
 
-@register(
+register_sql(
     "document_chunking",
-    oracle=_chunking_sql(DUCKDB, "documents"),
+    _chunking_sql,
+    ("documents",),
     doc=f"Overlapping context-window chunking: {CHUNK_TOKENS}-token windows "
     f"every {CHUNK_STRIDE} tokens (1→N generator/explode, row-parallel, no "
     "shuffle); redundant short tails dropped deterministically.",
     tags=("curation", "text", "explode"),
 )
-def document_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_chunking_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -306,28 +302,26 @@ ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "pii_redaction",
-    oracle=_pii_sql(DUCKDB, "documents"),
+    _pii_sql,
+    ("documents",),
     doc="PII detection + redaction: email/phone/IPv4 regex counts and "
     "[EMAIL]/[PHONE]/[IP] replacement over PII-injected document text — "
     "pure projection, shuffle-free, whole-stage-codegen regexes.",
     tags=("curation", "text", "scalar"),
 )
-def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_pii_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
-@register(
+register_sql(
     "quality_repetition",
-    oracle=_repetition_sql(DUCKDB, "documents"),
+    _repetition_sql,
+    ("documents",),
     doc="Gopher-style repetition quality metrics per doc: top-word mass, "
     "top-bigram mass, and duplicate-bigram mass — explode→count→ratio "
     "chains whose only shuffle key is doc_id (partial agg applies).",
     tags=("curation", "text", "quality"),
 )
-def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_repetition_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -389,9 +383,10 @@ ORDER BY shard, pack_id, pos_in_pack
 """.replace("PACK_BUDGET_LIT", str(PACK_BUDGET))
 
 
-@register(
+register_sql(
     "sequence_packing",
-    oracle=_sequence_packing_sql(DUCKDB, "documents"),
+    _sequence_packing_sql,
+    ("documents",),
     doc=f"Sequence packing: concat-and-split docs into {PACK_BUDGET}-token "
     "training sequences across hash-routed shards whose count scales with "
     f"the corpus (ceil(n_docs/{PACK_TARGET_DOCS_PER_SHARD})) — running "
@@ -400,8 +395,6 @@ ORDER BY shard, pack_id, pos_in_pack
     "deterministic.",
     tags=("curation", "packing", "window"),
 )
-def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_sequence_packing_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -430,17 +423,15 @@ FROM {table}
 """
 
 
-@register(
+register_sql(
     "table_audit_orders",
-    oracle=_table_audit_sql(DUCKDB, "orders"),
+    _table_audit_sql,
+    ("orders",),
     doc="Data-quality audit in ONE scan: null counts, duplicate-key check "
     "via COUNT vs COUNT DISTINCT, domain/range violations, min/max — the "
     "pre-promotion contract check; O(1) output, map-side partial aggs.",
     tags=("curation", "audit", "agg"),
 )
-def table_audit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_table_audit_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -561,9 +552,10 @@ ORDER BY source, source_rank
 """
 
 
-@register(
+register_sql(
     "source_cap_sample",
-    oracle=_source_cap_sql(DUCKDB, "documents"),
+    _source_cap_sql,
+    ("documents",),
     doc=f"Per-source document cap (domain-cap sampling): within each source "
     f"keep the {SOURCE_CAP} most fluent docs (ROW_NUMBER over a source-"
     "partitioned window).  The data-mixing guard that stops one hot domain "
@@ -571,8 +563,6 @@ ORDER BY source, source_rank
     "token_budget_selection's token-budget fill.",
     tags=("curation", "sampling", "window"),
 )
-def source_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_source_cap_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -616,17 +606,16 @@ ORDER BY source
 """
 
 
-@register(
+register_sql(
     "mixture_weights_alpha",
-    oracle=_mixture_weights_sql(DUCKDB, "documents"),
+    _mixture_weights_sql,
+    ("documents",),
     doc="Temperature-scaled data-mixing weights: per-source token counts in "
     "one scan, weight ∝ tokens^0.3 normalized over sources, plus effective "
     "epochs (oversampling factor) — the corpus-mixing math run before "
     "training; O(sources) output, broadcast total.",
     tags=("curation", "sampling", "agg"),
 )
-def mixture_weights_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_mixture_weights_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -699,9 +688,10 @@ ORDER BY column_name
     return f"WITH agg AS ({agg}) {branches} ORDER BY column_name"
 
 
-@register(
+register_sql(
     "column_profile_lineitem",
-    oracle=_profile_sql(DUCKDB, "lineitem"),
+    _profile_sql,
+    ("lineitem",),
     doc="ANALYZE-style column profiler: per-column null count, exact NDV, "
     "min/max for six lineitem columns, stack()-unpivoted from ONE wide "
     "aggregate so the scan is referenced once (the UNION-ALL-per-column "
@@ -711,9 +701,6 @@ ORDER BY column_name
     "same query shape. Column-level sibling of table_audit_orders.",
     tags=("curation", "audit", "agg"),
 )
-def column_profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = table_view(spark, sf_dir, "lineitem")
-    return spark.sql(_profile_sql(SPARK, lineitem))
 
 
 # --------------------------------------------------------------------------
@@ -755,23 +742,22 @@ ORDER BY split_name, lang
 """
 
 
-@register(
+register_sql(
     "split_balance_audit",
-    oracle=_split_balance_sql(DUCKDB, "documents"),
+    _split_balance_sql,
+    ("documents",),
     doc="Stratification audit of the hash split: split x lang contingency "
     "table with expected-under-independence counts and chi-square terms — "
     "flags a hash that correlates with a stratum.  One corpus pass to an "
     "O(cells) table; marginals join on the aggregate, not the corpus.",
     tags=("curation", "audit", "sampling"),
 )
-def split_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_split_balance_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
 # order-independent table checksums (anti-entropy / replication audit)
 # --------------------------------------------------------------------------
-def _checksum_sql(d: Dialect) -> str:
+def _checksum_sql(d: Dialect, lineitem: str, orders: str, customer: str) -> str:
     """One row per table: row count plus two order-independent checksums
     (bit_xor and modular sum of a 60-bit row hash).  This is the
     anti-entropy audit run after a backfill, replication, or engine
@@ -795,33 +781,30 @@ def _checksum_sql(d: Dialect) -> str:
         return d.md5_prefix_int(" || '|' || ".join(c(p) for p in parts))
 
     li = row_hash(["l_orderkey", "l_linenumber", "CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)"])
-    orders = row_hash(["o_orderkey", "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)", "o_orderstatus"])
+    ords = row_hash(["o_orderkey", "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)", "o_orderstatus"])
     cust = row_hash(["c_custkey", "CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)", "c_mktsegment"])
     branches = []
-    for name, h in (("lineitem", li), ("orders", orders), ("customer", cust)):
+    tables = (("lineitem", lineitem, li), ("orders", orders, ords), ("customer", customer, cust))
+    for name, rel, h in tables:
         branches.append(f"""
 SELECT '{name}' AS table_name,
        CAST(COUNT(*) AS BIGINT) AS n_rows,
        CAST(BIT_XOR({h}) AS BIGINT) AS xor_checksum,
        CAST(SUM(CAST(({h}) % 1000000007 AS DECIMAL(38,0))) % 1000000007 AS BIGINT) AS sum_checksum
-FROM {{{name}}}""")
+FROM {rel}""")
     return " UNION ALL ".join(branches) + " ORDER BY table_name"
 
 
-@register(
+register_sql(
     "table_checksum_audit",
-    oracle=_checksum_sql(DUCKDB).format(
-        lineitem="lineitem", orders="orders", customer="customer"
-    ),
+    _checksum_sql,
+    ("lineitem", "orders", "customer"),
     doc="Anti-entropy table checksums: count + bit_xor + modular-sum of a "
     "portable 60-bit row hash per table — commutative, partial-aggregable, "
     "identical under any partitioning/order/engine; the post-backfill "
     "integrity check, O(1) output per table.",
     tags=("curation", "audit", "agg"),
 )
-def table_checksum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    views = {t: table_view(spark, sf_dir, t) for t in ("lineitem", "orders", "customer")}
-    return spark.sql(_checksum_sql(SPARK).format(**views))
 
 
 # --------------------------------------------------------------------------
@@ -884,9 +867,10 @@ ORDER BY doc_id, chunk_id
 """
 
 
-@register(
+register_sql(
     "content_defined_chunks",
-    oracle=_cdc_sql(DUCKDB, "documents"),
+    _cdc_sql,
+    ("documents",),
     doc=f"Content-defined chunking: boundaries where token hash % "
     f"{CDC_BOUNDARY_MOD} = 0 (edit-stable, unlike fixed-stride chunking) — "
     "running boundary SUM per doc assigns chunk ids, per-chunk commutative "
@@ -894,8 +878,6 @@ ORDER BY doc_id, chunk_id
     "shuffle key is doc_id only.",
     tags=("curation", "dedup", "window"),
 )
-def content_defined_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_cdc_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -934,17 +916,16 @@ ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "ngram_novelty",
-    oracle=_novelty_sql(DUCKDB, "documents"),
+    _novelty_sql,
+    ("documents",),
     doc="Per-doc n-gram novelty: fraction of the doc's distinct 3-gram "
     "shingles with corpus document-frequency 1 — the span-memorization "
     "risk / boilerplate signal beside contamination (cross-set) and "
     "repetition (within-doc); int-keyed shingle shuffle, map-side df.",
     tags=("curation", "text", "dedup", "quality"),
 )
-def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_novelty_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -1033,9 +1014,10 @@ LIMIT {WSAMP_K}
 """
 
 
-@register(
+register_sql(
     "weighted_sample_aes",
-    oracle=_weighted_sample_sql(DUCKDB, "documents"),
+    _weighted_sample_sql,
+    ("documents",),
     doc=f"Deterministic weighted sample without replacement, K={WSAMP_K} "
     "(Efraimidis-Spirakis A-ES): key = u^(1/weight) from a salted portable "
     "row hash, ranked in the log domain with FLOOR integer-unit "
@@ -1044,8 +1026,6 @@ LIMIT {WSAMP_K}
     "repartitioning/appends.",
     tags=("curation", "sampling"),
 )
-def weighted_sample_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_weighted_sample_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -1191,17 +1171,16 @@ FROM xy
 """
 
 
-@register(
+register_sql(
     "zipf_fit_audit",
-    oracle=_zipf_sql(DUCKDB, "documents"),
+    _zipf_sql,
+    ("documents",),
     doc="Zipf-law corpus audit: OLS fit of ln(freq) ~ ln(rank) over the "
     "aggregated vocabulary via REGR_SLOPE/INTERCEPT/R2 — one corpus scan "
     "to O(|vocab|), one scalar regression; flags templated corpora whose "
     "frequency curve departs from the power law.",
     tags=("curation", "audit", "agg", "text"),
 )
-def zipf_fit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_zipf_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -1257,17 +1236,16 @@ ORDER BY change_type
 """
 
 
-@register(
+register_sql(
     "snapshot_diff_audit",
-    oracle=_snapshot_diff_sql(DUCKDB, "documents"),
+    _snapshot_diff_sql,
+    ("documents",),
     doc="Keyed snapshot diff: two corpus versions collapse to (key, "
     "portable content hash) at the scan, FULL OUTER equi-join on the key, "
     "added/removed/changed/unchanged counts. The row-level sibling of "
     "table_checksum_audit — O(16 bytes/row) join input, O(classes) output.",
     tags=("curation", "audit", "join"),
 )
-def snapshot_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_snapshot_diff_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -1310,9 +1288,10 @@ ORDER BY lang
 """
 
 
-@register(
+register_sql(
     "incremental_agg_maintenance",
-    oracle=_ivm_merge_sql(DUCKDB, "documents"),
+    _ivm_merge_sql,
+    ("documents",),
     doc="Incremental view maintenance for distributive aggregates: base + "
     "delta partials merged by addition vs the from-scratch full aggregate, "
     "per group, in one conditional-aggregation scan. The emitted "
@@ -1321,8 +1300,6 @@ ORDER BY lang
     "partial verification is table_checksum_audit/snapshot_diff's job).",
     tags=("curation", "audit", "agg"),
 )
-def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_ivm_merge_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -1583,9 +1560,10 @@ WHERE w.rn = 1
 """
 
 
-@register(
+register_sql(
     "split_distribution_drift",
-    oracle=_split_drift_sql(DUCKDB, "documents"),
+    _split_drift_sql,
+    ("documents",),
     doc=f"Two-sample KS drift audit between the hash split's train and "
     f"test length distributions: exact bucketed KS distance over a shared "
     f"{DRIFT_BUCKETS}-bucket equi-width grid, flagged above the SIZE-AWARE "
@@ -1596,8 +1574,6 @@ WHERE w.rn = 1
     "distribution and evaluates on another.",
     tags=("curation", "audit", "stats"),
 )
-def split_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_split_drift_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -1755,7 +1731,7 @@ def quality_rank_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("n_chars", "r_chars"),
     ):
         part = sig.select("doc_id", (-F.col(col)).alias("__neg"))
-        ranked, n = range_ranked(spark, part, ["__neg", "doc_id"])
+        ranked, n = range_ranked(part, ["__neg", "doc_id"])
         if n == 0:
             return spark.createDataFrame(
                 [],
@@ -1846,7 +1822,7 @@ def source_quality_ranksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     view = table_view(spark, sf_dir, "documents")
     docs = spark.table(view).select("doc_id", "source", "n_chars")
-    ranked, n = range_ranked(spark, docs, ["n_chars", "doc_id"])
+    ranked, n = range_ranked(docs, ["n_chars", "doc_id"])
     if n == 0:
         return spark.createDataFrame(
             [],
@@ -1969,9 +1945,10 @@ ORDER BY epoch, shard
 """
 
 
-@register(
+register_sql(
     "epoch_shuffle_plan",
-    oracle=_epoch_shuffle_sql(DUCKDB, "documents"),
+    _epoch_shuffle_sql,
+    ("documents",),
     doc=f"Deterministic multi-epoch shuffle plan: for each of "
     f"{SHUFFLE_EPOCHS} training epochs, every document routes to one of "
     f"{SHUFFLE_SHARDS} shards by a portable hash of (epoch, doc_id) — a "
@@ -1982,8 +1959,6 @@ ORDER BY epoch, shard
     "the hash-independence test pins cross-epoch decorrelation.",
     tags=("curation", "sampling", "sharding"),
 )
-def epoch_shuffle_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_epoch_shuffle_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -2002,9 +1977,10 @@ LIMIT {SAMPLE_EXACT_N}
 """
 
 
-@register(
+register_sql(
     "deterministic_sample_exact_n",
-    oracle=_exact_n_sql(DUCKDB, "documents"),
+    _exact_n_sql,
+    ("documents",),
     doc=f"Exact-size uniform sample without RNG: take the {SAMPLE_EXACT_N} "
     "documents with the smallest portable content hashes — hash order is a "
     "fixed pseudo-random permutation, so this is uniform, reproducible, "
@@ -2014,8 +1990,6 @@ LIMIT {SAMPLE_EXACT_N}
     "ORDER BY rand() doesn't exist at 100 TB.",
     tags=("curation", "sampling", "topk"),
 )
-def deterministic_sample_exact_n(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_exact_n_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -2051,9 +2025,10 @@ ORDER BY w.source
 """
 
 
-@register(
+register_sql(
     "neyman_allocation_plan",
-    oracle=_neyman_sql(DUCKDB, "documents"),
+    _neyman_sql,
+    ("documents",),
     doc=f"Neyman-optimal stratified-sampling allocation: a budget of "
     f"{NEYMAN_BUDGET} samples split across sources proportionally to "
     "stratum_size x stratum_stddev (of doc length) — variance-minimizing "
@@ -2064,8 +2039,6 @@ ORDER BY w.source
     "documented largest-remainder trade-off.",
     tags=("curation", "sampling", "stats"),
 )
-def neyman_allocation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_neyman_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -2126,9 +2099,14 @@ ORDER BY c.o_custkey, c.pos_partkey, c.neg_idx
 """
 
 
-@register(
+# Examined r14 and kept the two-relation form: fusing pos/allpos into
+# one tagged grouped pass + checkpoint measured SLOWER (1.95 -> 2.62 s
+# same host) — the saved join is the CHEAP filtered one, while the
+# checkpoint materializes the large unfiltered pair set.
+register_sql(
     "negative_sampling_plan",
-    oracle=_neg_sample_sql(DUCKDB, "lineitem", "orders", "part"),
+    _neg_sample_sql,
+    ("lineitem", "orders", "part"),
     doc=f"Deterministic negative sampling for training-pair construction: "
     f"for each (customer, purchased part) positive, {NEG_K} hash-derived "
     "candidate negatives over the part-key domain, accidental positives "
@@ -2139,15 +2117,6 @@ ORDER BY c.o_custkey, c.pos_partkey, c.neg_idx
     "The recsys/contrastive twin of the curation samplers.",
     tags=("curation", "sampling", "training"),
 )
-def negative_sampling_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Examined r14 and kept the two-relation form: fusing pos/allpos into
-    # one tagged grouped pass + checkpoint measured SLOWER (1.95 -> 2.62 s
-    # same host) — the saved join is the CHEAP filtered one, while the
-    # checkpoint materializes the large unfiltered pair set.
-    lineitem = table_view(spark, sf_dir, "lineitem")
-    orders = table_view(spark, sf_dir, "orders")
-    part = table_view(spark, sf_dir, "part")
-    return spark.sql(_neg_sample_sql(SPARK, lineitem, orders, part))
 
 
 # --------------------------------------------------------------------------
@@ -2197,9 +2166,10 @@ ORDER BY doc_id, span_idx
 """
 
 
-@register(
+register_sql(
     "span_corruption_plan",
-    oracle=_span_plan_sql(DUCKDB, "documents"),
+    _span_plan_sql,
+    ("documents",),
     doc=f"T5-style span-corruption PLAN: per document, "
     f"~{SPAN_MASK_RATIO_PCT}% of tokens in {SPAN_MEAN_LEN}-token spans, "
     "each span's offset derived from a seed-free md5 of (doc_id, span "
@@ -2210,9 +2180,6 @@ ORDER BY doc_id, span_idx
     "trainer's data loader applies offsets at read time.",
     tags=("curation", "training", "text"),
 )
-def span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = table_view(spark, sf_dir, "documents")
-    return spark.sql(_span_plan_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -2257,9 +2224,10 @@ ORDER BY bucket_len
 """
 
 
-@register(
+register_sql(
     "padding_waste_audit",
-    oracle=_padding_waste_sql(DUCKDB, "documents"),
+    _padding_waste_sql,
+    ("documents",),
     doc=f"Padding-waste audit for length-bucketed batching: token counts "
     f"round up to {PAD_BUCKET}-token buckets, per-bucket padded-vs-real "
     "token mass and waste fraction, beside the single-max-length loader's "
@@ -2268,9 +2236,6 @@ ORDER BY bucket_len
     "sibling that QUANTIFIES what sequence_packing eliminates.",
     tags=("curation", "training", "agg"),
 )
-def padding_waste_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = table_view(spark, sf_dir, "documents")
-    return spark.sql(_padding_waste_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -2311,9 +2276,10 @@ ORDER BY g.lang, g.fold
 """
 
 
-@register(
+register_sql(
     "stratified_kfold_plan",
-    oracle=_kfold_sql(DUCKDB, "documents"),
+    _kfold_sql,
+    ("documents",),
     doc=f"Stratified {KFOLD_K}-fold cross-validation plan: seed-free "
     "md5(lang:doc_id) mod K routing (reproducible, disjoint, stratified "
     "per language), per-(lang, fold) sizes plus each stratum's fold-size "
@@ -2321,9 +2287,6 @@ ORDER BY g.lang, g.fold
     "Pure projection + bounded aggregates.",
     tags=("curation", "split", "projection"),
 )
-def stratified_kfold_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = table_view(spark, sf_dir, "documents")
-    return spark.sql(_kfold_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -2500,7 +2463,7 @@ def neyman_allocated_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     view = table_view(spark, sf_dir, "documents")
     h = SPARK.md5_prefix_int(SPARK.strcast("doc_id"))
     base = spark.sql(f"SELECT source, doc_id, n_chars, ({h}) AS h FROM {view}")
-    ranked, _n = range_ranked(spark, base, ["source", "h", "doc_id"])
+    ranked, _n = range_ranked(base, ["source", "h", "doc_id"])
     if ranked is None:
         return spark.createDataFrame(
             [],

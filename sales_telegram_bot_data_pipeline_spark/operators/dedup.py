@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
-from ..registry import register
+from ..registry import register, register_sql
 from ..session import fixed_plan, session_view
 from ..sources.tables import table_view
 
@@ -49,15 +49,14 @@ def _exact_sql(d: Dialect, table: str) -> str:
     )
 
 
-@register(
+register_sql(
     "dedup_exact",
-    oracle=_exact_sql(DUCKDB, "documents"),
+    _exact_sql,
+    ("documents",),
     doc="Exact dedup: 60-bit content hash groupBy, keep min doc_id per "
     "group. Map-side combine; text never shuffles.",
     tags=("dedup",),
 )
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_exact_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -310,16 +309,15 @@ ORDER BY doc_a, doc_b
 """
 
 
-@register(
+register_sql(
     "dedup_minhash_lsh",
-    oracle=_lsh_pairs_sql(DUCKDB, "documents"),
+    _lsh_pairs_sql,
+    ("documents",),
     doc="MinHash (8 portable hash fns over 3-gram shingles) + LSH banding "
     "(4 bands x 2): candidate near-dup pairs from band-bucket equi-join — "
     "4 rows/doc join input regardless of document size.",
     tags=("dedup", "lsh"),
 )
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_lsh_pairs_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -345,15 +343,14 @@ FROM hashed GROUP BY doc_id ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "dedup_simhash",
-    oracle=_simhash_sql(DUCKDB, "documents"),
+    _simhash_sql,
+    ("documents",),
     doc="SimHash: 16-bit majority fingerprint over portable word hashes; "
     "near-dups land in Hamming-adjacent fingerprints.",
     tags=("dedup", "hash"),
 )
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_simhash_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -435,9 +432,10 @@ ORDER BY doc_a, doc_b
 """
 
 
-@register(
+register_sql(
     "simhash_neardup",
-    oracle=_simhash_neardup_sql(DUCKDB, "documents"),
+    _simhash_neardup_sql,
+    ("documents",),
     doc=f"SimHash near-dup, EXACT at Hamming <= {HAMMING_K} and paired at "
     f"fingerprint granularity: {SIMHASH_BITS}-bit fingerprints grouped "
     f"(rep, count), pigeonhole {N_BLOCKS}x{BLOCK_BITS}-bit block equi-join "
@@ -446,8 +444,6 @@ ORDER BY doc_a, doc_b
     "output stays linear in distinct fingerprints on dup-heavy corpora.",
     tags=("dedup", "hash", "join"),
 )
-def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_simhash_neardup_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -1200,9 +1196,10 @@ ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "winnowing_fingerprint_density",
-    oracle=_wnw_density_sql(DUCKDB, "documents"),
+    _wnw_density_sql,
+    ("documents",),
     doc=f"Winnowing fingerprint selection (Schleimer et al. 2003 / MOSS): "
     f"{WNW_K}-word gram hashes, rightmost-min selection over every "
     f"{WNW_W}-gram window via 2*(W-1) fixed-frame MINs on one per-doc sort "
@@ -1210,8 +1207,6 @@ ORDER BY doc_id
     "guaranteed-coverage sparse sketch for substring-level matching.",
     tags=("dedup", "text", "fingerprint", "window"),
 )
-def winnowing_fingerprint_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_wnw_density_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 def _wnw_matches_sql(d: Dialect, table: str, fp_rel: str | None = None) -> str:

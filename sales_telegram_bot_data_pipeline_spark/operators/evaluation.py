@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
+from ..registry import register, register_sql
 from ..sources.tables import load_table, table_view
 
 # --------------------------------------------------------------------------
@@ -118,7 +118,7 @@ def roc_auc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("c"),
         F.sum(F.when(F.col("pos"), 1).otherwise(0)).alias("c_pos"),
     )
-    summed, _n = range_prefix_summed(spark, g, ["v"], "c")
+    summed, _n = range_prefix_summed(g, ["v"], "c")
     if summed is None:
         return spark.createDataFrame(
             [], "n_docs bigint, n_pos bigint, n_neg bigint, auc double, gini double"
@@ -142,7 +142,8 @@ def roc_auc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Welch's unequal-variance t-test between every source pair (doc length)
 # --------------------------------------------------------------------------
 # Plain ANSI — the SAME text runs on both engines (only the table differs).
-_WELCH_SQL = """
+def _welch_sql(d: Dialect, table: str) -> str:
+    return f"""
 WITH agg AS (
   SELECT source,
          CAST(COUNT(*) AS BIGINT) AS n,
@@ -187,9 +188,10 @@ ORDER BY source_a, source_b
 """
 
 
-@register(
+register_sql(
     "welch_ttest_sources",
-    oracle=_WELCH_SQL.format(table="documents"),
+    _welch_sql,
+    ("documents",),
     doc="Welch's unequal-variance t-test of mean doc length between every "
     "pair of sources: one map-combinable per-source (n, sum, sumsq) "
     "aggregate collapses the corpus to |sources| rows, then a bounded "
@@ -200,9 +202,6 @@ ORDER BY source_a, source_b
     "sums exact in BIGINT (sumsq <= len^2 * rows ~ 3e17 at 100 TB).",
     tags=("evaluation", "stats", "self-join"),
 )
-def welch_ttest_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = table_view(spark, sf_dir, "documents")
-    return spark.sql(_WELCH_SQL.format(table=view))
 
 
 # --------------------------------------------------------------------------
@@ -410,7 +409,7 @@ def kaplan_meier_repurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return risk.withColumn("lq", lq), "lq"
 
-    cum, _ = range_prefix_summed_pair(spark, g, ["t"], "c_total", derive)
+    cum, _ = range_prefix_summed_pair(g, ["t"], "c_total", derive)
     if cum is None:
         return spark.createDataFrame(
             [],
@@ -462,9 +461,10 @@ ORDER BY cm.declared_lang
 """
 
 
-@register(
+register_sql(
     "langid_eval_confusion",
-    oracle=_langid_confusion_sql(DUCKDB, "documents"),
+    _langid_confusion_sql,
+    ("documents",),
     doc="Confusion table of the registered lang_id_heuristic detector "
     "against the declared language label: per-language detection rates "
     "plus corpus precision/recall/F1 of the 'en' class (one-row scalar "
@@ -473,9 +473,6 @@ ORDER BY cm.declared_lang
     "free) and quality_gate_agreement_kappa (gate-vs-gate).",
     tags=("evaluation", "text", "agg"),
 )
-def langid_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = table_view(spark, sf_dir, "documents")
-    return spark.sql(_langid_confusion_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -629,7 +626,8 @@ ORDER BY r.b
 # --------------------------------------------------------------------------
 # one-way ANOVA across sources (doc length) — the k-group F-test
 # --------------------------------------------------------------------------
-_ANOVA_SQL = """
+def _anova_sql(d: Dialect, table: str) -> str:
+    return f"""
 WITH g AS (
   SELECT source,
          CAST(COUNT(*) AS BIGINT) AS n,
@@ -667,9 +665,10 @@ FROM sums s2 CROSS JOIN tot t
 """
 
 
-@register(
+register_sql(
     "anova_sources_doclen",
-    oracle=_ANOVA_SQL.format(table="documents"),
+    _anova_sql,
+    ("documents",),
     doc="One-way ANOVA of doc length across ALL sources (the k-group "
     "extension of welch_ttest_sources): F = MSB/MSW and eta^2 from one "
     "per-source (n, sum, sumsq) aggregate.  Per-group fractional SS "
@@ -678,6 +677,3 @@ FROM sums s2 CROSS JOIN tot t
     "Identical ANSI text on both engines; O(1) output.",
     tags=("evaluation", "stats", "agg"),
 )
-def anova_sources_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = table_view(spark, sf_dir, "documents")
-    return spark.sql(_ANOVA_SQL.format(table=view))

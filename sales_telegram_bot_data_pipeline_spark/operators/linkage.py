@@ -36,11 +36,8 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
-from ..sources.tables import table_view
+from ..functions.dialect import Dialect
+from ..registry import register_sql
 
 MIN_TOKEN_LEN = 4  # tokens shorter than this are ambiguous at distance 1
 
@@ -126,9 +123,10 @@ ORDER BY token
 """
 
 
-@register(
+register_sql(
     "symspell_name_correction",
-    oracle=_symspell_sql(DUCKDB, "documents", "part"),
+    _symspell_sql,
+    ("documents", "part"),
     doc="SymSpell fuzzy name correction as a delete-neighborhood EQUI-join: "
     "every string expands to its k=1 deletion keys, distance<=1 pairs "
     "necessarily collide on a key, levenshtein refines candidates only — "
@@ -137,9 +135,6 @@ ORDER BY token
     "vocabulary.",
     tags=("linkage", "text", "join"),
 )
-def symspell_name_correction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = table_view(spark, sf_dir, "part")
-    return spark.sql(_symspell_sql(SPARK, table_view(spark, sf_dir, "documents"), part))
 
 
 # --------------------------------------------------------------------------
@@ -151,7 +146,8 @@ CUSTKEY_MOD = 20  # fact-side sample keeps the driver-hashed output bounded
 # operators/scale.py::scd2_dimension_update, with the initial version opened
 # at the fact table's epoch so every fact date is covered) joined to facts
 # on the KEY, with version-interval containment as a residual predicate.
-_PIT_SQL = """
+def _pit_sql(d: Dialect, orders: str, customer: str) -> str:
+    return f"""
 WITH upd_keys AS (
   SELECT DISTINCT o_custkey FROM {orders}
   WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-07-01'
@@ -181,7 +177,7 @@ versions AS (
 facts AS (
   SELECT o_orderkey, o_custkey, o_orderdate,
          CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS total_price
-  FROM {orders} WHERE o_custkey % {mod} = 0
+  FROM {orders} WHERE o_custkey % {CUSTKEY_MOD} = 0
 )
 SELECT f.o_orderkey, f.o_custkey, f.o_orderdate, f.total_price,
        v.c_mktsegment AS segment_at_order,
@@ -196,9 +192,10 @@ ORDER BY f.o_orderkey
 """
 
 
-@register(
+register_sql(
     "pit_join_scd2",
-    oracle=_PIT_SQL.format(orders="orders", customer="customer", mod=CUSTKEY_MOD),
+    _pit_sql,
+    ("orders", "customer"),
     doc="Point-in-time join: each fact row picks the SCD2 dimension version "
     "current AT its event time — equi-join on the dimension key with "
     "[valid_from, valid_to) containment as a residual predicate (never a "
@@ -207,10 +204,6 @@ ORDER BY f.o_orderkey
     "engine form of the reference's valid_from/valid_to validity model.",
     tags=("linkage", "temporal", "join", "scd2"),
 )
-def pit_join_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    customer = table_view(spark, sf_dir, "customer")
-    return spark.sql(_PIT_SQL.format(orders=orders, customer=customer, mod=CUSTKEY_MOD))
 
 
 # --------------------------------------------------------------------------
@@ -267,9 +260,10 @@ ORDER BY dirty_key
 """
 
 
-@register(
+register_sql(
     "record_linkage_blocked",
-    oracle=_record_linkage_sql(DUCKDB, "customer"),
+    _record_linkage_sql,
+    ("customer",),
     doc="Blocked pairwise record linkage: deterministically corrupted "
     "customer twins linked back to the master table via a "
     "corruption-preserved blocking key (last-4-chars + length equi-join) "
@@ -278,6 +272,3 @@ ORDER BY dirty_key
     "(is_correct column). Never all-pairs.",
     tags=("linkage", "fuzzy-join", "blocking"),
 )
-def record_linkage_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = table_view(spark, sf_dir, "customer")
-    return spark.sql(_record_linkage_sql(SPARK, customer))

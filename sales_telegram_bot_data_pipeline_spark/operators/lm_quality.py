@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
 from ..functions.text import quality_fields_sql, stopword_ratio_sql
-from ..registry import register
+from ..registry import register, register_sql
 from ..sources.tables import table_view
 from .curation import BENCH_MOD
 
@@ -123,9 +123,10 @@ ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "bigram_lm_score",
-    oracle=_bigram_lm_sql(DUCKDB, "documents"),
+    _bigram_lm_sql,
+    ("documents",),
     doc="CCNet-style LM quality filter: add-1/2-smoothed bigram LM trained "
     f"on the frozen target subset (doc_id % {BENCH_MOD} = 0), every other "
     "doc scored by avg conditional log-prob + perplexity.  Model tables are "
@@ -136,8 +137,6 @@ ORDER BY doc_id
     "not guaranteed by construction).",
     tags=("quality", "lm", "text"),
 )
-def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_bigram_lm_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -258,16 +257,15 @@ ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "quality_logreg_score",
-    oracle=_logreg_sql(DUCKDB, "documents"),
+    _logreg_sql,
+    ("documents",),
     doc="Classifier-based quality filtering (fasttext-classifier shape, "
     "deterministic stand-in weights): rule-based features -> codegen "
     "sigmoid -> keep flag.  Pure projection, shuffle-free, no Python.",
     tags=("quality", "scalar", "text"),
 )
-def quality_logreg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_logreg_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -306,17 +304,16 @@ ORDER BY source, doc_id
 """
 
 
-@register(
+register_sql(
     "token_budget_selection",
-    oracle=_token_budget_sql(DUCKDB, "documents"),
+    _token_budget_sql,
+    ("documents",),
     doc=f"Data mixing: fill each source's {TOKEN_BUDGET_PER_SOURCE}-token "
     "budget with its most fluent docs — source-partitioned window cumsum "
     "(source is the parallel unit; skewed sources -> salted variant in "
     "operators/scale.py), prefix selection, fully deterministic.",
     tags=("curation", "sampling", "window"),
 )
-def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_token_budget_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -403,7 +400,7 @@ def score_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"SELECT doc_id, (lang = 'en') AS is_pos, -quality_prob AS neg "
         f"FROM ({scored}) sc"
     )
-    ranked, n = range_ranked(spark, base, ["neg", "doc_id"])
+    ranked, n = range_ranked(base, ["neg", "doc_id"])
     if n == 0:
         return spark.createDataFrame(
             [],
@@ -562,9 +559,10 @@ FROM r
 """
 
 
-@register(
+register_sql(
     "quality_gate_agreement_kappa",
-    oracle=_kappa_sql(DUCKDB, "documents"),
+    _kappa_sql,
+    ("documents",),
     doc="Cohen's kappa between the two quality gates the engine ships — "
     "the published-heuristics gate (gopher_quality_gate) and the "
     "model-based gate (quality_logreg_score): confusion counts, observed "
@@ -575,8 +573,6 @@ FROM r
     "to 1.  One doc_id equi-join of two projections.",
     tags=("quality", "audit", "agg"),
 )
-def quality_gate_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_kappa_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -605,9 +601,10 @@ FROM joined GROUP BY bin ORDER BY bin
 """
 
 
-@register(
+register_sql(
     "quality_score_calibration",
-    oracle=_calibration_sql(DUCKDB, "documents"),
+    _calibration_sql,
+    ("documents",),
     doc="Reliability table for the model-based quality gate: logreg "
     "probability binned into deciles, mean predicted probability (exact "
     "1e-6-unit integer sums) vs the observed pass rate of the independent "
@@ -617,5 +614,3 @@ FROM joined GROUP BY bin ORDER BY bin
     "equi-join of two projections, <=10-row output.",
     tags=("quality", "audit", "calibration"),
 )
-def quality_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_calibration_sql(SPARK, table_view(spark, sf_dir, "documents")))

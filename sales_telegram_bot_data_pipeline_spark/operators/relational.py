@@ -24,7 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..registry import register
+from ..functions.dialect import Dialect
+from ..registry import register, register_sql
 from ..sources.tables import load_table, table_view
 
 
@@ -474,26 +475,8 @@ def cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Explicit GROUPING SETS (beyond rollup/cube): chosen subtotal combinations.
 # ---------------------------------------------------------------------------
-@register(
-    "grouping_sets_flag_priority",
-    oracle="""
-SELECT
-  COALESCE(l_returnflag, 'ALL') AS returnflag,
-  COALESCE(o_orderpriority, 'ALL') AS orderpriority,
-  COUNT(*) AS n_rows,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-GROUP BY GROUPING SETS ((l_returnflag), (o_orderpriority))
-ORDER BY returnflag, orderpriority
-""",
-    doc="Explicit GROUPING SETS: two independent subtotal dimensions in one "
-    "pass over the join.",
-    tags=("agg", "grouping-sets"),
-)
-def grouping_sets_flag_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = table_view(spark, sf_dir, "lineitem")
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(f"""
+def _grouping_sets_sql(d: Dialect, lineitem: str, orders: str) -> str:
+    return f"""
 SELECT
   COALESCE(l_returnflag, 'ALL') AS returnflag,
   COALESCE(o_orderpriority, 'ALL') AS orderpriority,
@@ -502,38 +485,42 @@ SELECT
 FROM {lineitem} JOIN {orders} ON l_orderkey = o_orderkey
 GROUP BY GROUPING SETS ((l_returnflag), (o_orderpriority))
 ORDER BY returnflag, orderpriority
-""")
+"""
+
+
+register_sql(
+    "grouping_sets_flag_priority",
+    _grouping_sets_sql,
+    ("lineitem", "orders"),
+    doc="Explicit GROUPING SETS: two independent subtotal dimensions in one "
+    "pass over the join.",
+    tags=("agg", "grouping-sets"),
+)
 
 
 # ---------------------------------------------------------------------------
 # Correlated scalar subquery (optimizer surface: decorrelation to join).
 # ---------------------------------------------------------------------------
-@register(
-    "correlated_max_order",
-    oracle="""
-SELECT c_custkey, c_name,
-       (SELECT CAST(MAX(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        FROM orders WHERE o_custkey = c_custkey) AS max_order_price
-FROM customer
-WHERE c_custkey < 100
-ORDER BY c_custkey
-""",
-    doc="Correlated scalar subquery (Catalyst decorrelates it into an "
-    "aggregate + left join — same shape the reference's per-key point "
-    "lookups collapse into at scale).",
-    tags=("subquery", "join"),
-)
-def correlated_max_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = table_view(spark, sf_dir, "customer")
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(f"""
+def _correlated_max_sql(d: Dialect, customer: str, orders: str) -> str:
+    return f"""
 SELECT c_custkey, c_name,
        (SELECT CAST(MAX(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
         FROM {orders} WHERE o_custkey = c_custkey) AS max_order_price
 FROM {customer}
 WHERE c_custkey < 100
 ORDER BY c_custkey
-""")
+"""
+
+
+register_sql(
+    "correlated_max_order",
+    _correlated_max_sql,
+    ("customer", "orders"),
+    doc="Correlated scalar subquery (Catalyst decorrelates it into an "
+    "aggregate + left join — same shape the reference's per-key point "
+    "lookups collapse into at scale).",
+    tags=("subquery", "join"),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -700,26 +687,23 @@ def disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Global-average subquery filter (TPC-H Q22 shape).
 # ---------------------------------------------------------------------------
-@register(
-    "above_avg_balance_customers",
-    oracle="""
-SELECT c_custkey, c_acctbal
-FROM customer
-WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer WHERE c_acctbal > 0)
-ORDER BY c_custkey
-""",
-    doc="Uncorrelated scalar-subquery filter (above-average balances, "
-    "TPC-H Q22 shape) — one tiny broadcast of the aggregate.",
-    tags=("subquery", "filter"),
-)
-def above_avg_balance_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = table_view(spark, sf_dir, "customer")
-    return spark.sql(f"""
+def _above_avg_sql(d: Dialect, customer: str) -> str:
+    return f"""
 SELECT c_custkey, c_acctbal
 FROM {customer}
 WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM {customer} WHERE c_acctbal > 0)
 ORDER BY c_custkey
-""")
+"""
+
+
+register_sql(
+    "above_avg_balance_customers",
+    _above_avg_sql,
+    ("customer",),
+    doc="Uncorrelated scalar-subquery filter (above-average balances, "
+    "TPC-H Q22 shape) — one tiny broadcast of the aggregate.",
+    tags=("subquery", "filter"),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1186,7 +1170,7 @@ def full_outer_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hierarchy_sql(idiv) -> str:
+def _hierarchy_sql(d: Dialect, table: str) -> str:
     """Recursive-CTE hierarchy walk (Spark 4.1's WITH RECURSIVE — UNION ALL
     form, which both engines share; Spark does not yet support UNION
     inside recursion, so the cyclic-graph closure stays the CC loop's job).
@@ -1196,25 +1180,26 @@ def _hierarchy_sql(idiv) -> str:
     Per-root rollup: members, max depth, exact-decimal balance total."""
     return f"""
 WITH RECURSIVE chain (custkey, root, depth) AS (
-  SELECT c_custkey, c_custkey, 0 FROM {{table}} WHERE c_custkey < 10
+  SELECT c_custkey, c_custkey, 0 FROM {table} WHERE c_custkey < 10
   UNION ALL
   SELECT c.c_custkey, ch.root, ch.depth + 1
-  FROM {{table}} c JOIN chain ch ON {idiv} = ch.custkey
+  FROM {table} c JOIN chain ch ON {d.idiv("c.c_custkey", "10")} = ch.custkey
   WHERE c.c_custkey >= 10
 )
 SELECT ch.root,
        COUNT(*) AS n_members,
        MAX(ch.depth) AS max_depth,
        CAST(SUM(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_acctbal
-FROM chain ch JOIN {{table}} c ON c.c_custkey = ch.custkey
+FROM chain ch JOIN {table} c ON c.c_custkey = ch.custkey
 GROUP BY ch.root
 ORDER BY ch.root
 """
 
 
-@register(
+register_sql(
     "recursive_hierarchy_rollup",
-    oracle=_hierarchy_sql("(c.c_custkey // 10)").format(table="customer"),
+    _hierarchy_sql,
+    ("customer",),
     doc="WITH RECURSIVE hierarchy walk (Spark 4.1 recursive CTE, UNION ALL "
     "form shared verbatim with the DuckDB oracle): an acyclic customer "
     "forest (parent = custkey div 10), per-root member count / max depth / "
@@ -1222,15 +1207,13 @@ ORDER BY ch.root
     "the cyclic-graph closure remains connected_components' iterative job.",
     tags=("relational", "recursive", "hierarchy"),
 )
-def recursive_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = table_view(spark, sf_dir, "customer")
-    return spark.sql(_hierarchy_sql("(c.c_custkey div 10)").format(table=customer))
 
 
 # --------------------------------------------------------------------------
 # event-transition matrix (first-order Markov chain over user sessions)
 # --------------------------------------------------------------------------
-_TRANSITION_SQL = """
+def _transition_sql(d: Dialect, events: str) -> str:
+    return f"""
 WITH seq AS (
   SELECT user_id, event_type,
          LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
@@ -1250,9 +1233,10 @@ ORDER BY t.from_type, t.to_type
 """
 
 
-@register(
+register_sql(
     "event_transition_matrix",
-    oracle=_TRANSITION_SQL.format(events="events"),
+    _transition_sql,
+    ("events",),
     doc="First-order Markov transition matrix over per-user event "
     "sequences: LEAD window per user (user_id is the natural parallel "
     "unit, ties broken by event_id for determinism), transition counts "
@@ -1262,9 +1246,6 @@ ORDER BY t.from_type, t.to_type
     "transition-prior a sequence model trains against.",
     tags=("relational", "events", "window", "agg"),
 )
-def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(_TRANSITION_SQL.format(events=events))
 
 
 # --------------------------------------------------------------------------
@@ -1308,25 +1289,17 @@ FROM freq ORDER BY n_users DESC, path LIMIT {PATH_TOP_K}
 """
 
 
-def _register_paths():
-    from ..functions.dialect import DUCKDB, SPARK
-
-    @register(
-        "top_event_paths",
-        oracle=_event_paths_sql(DUCKDB, "events"),
-        doc=f"Path analysis: each user's first {PATH_PREFIX_LEN}-event "
-        "journey as an ordered path string, top-"
-        f"{PATH_TOP_K} paths by user count — one user_id shuffle + "
-        "map-side path counts + TakeOrdered; the sequence-mining "
-        "companion to funnel_conversion and event_transition_matrix.",
-        tags=("relational", "events", "agg", "topk"),
-    )
-    def top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-        events = table_view(spark, sf_dir, "events")
-        return spark.sql(_event_paths_sql(SPARK, events))
-
-
-_register_paths()
+register_sql(
+    "top_event_paths",
+    _event_paths_sql,
+    ("events",),
+    doc=f"Path analysis: each user's first {PATH_PREFIX_LEN}-event "
+    "journey as an ordered path string, top-"
+    f"{PATH_TOP_K} paths by user count — one user_id shuffle + "
+    "map-side path counts + TakeOrdered; the sequence-mining "
+    "companion to funnel_conversion and event_transition_matrix.",
+    tags=("relational", "events", "agg", "topk"),
+)
 
 
 # --------------------------------------------------------------------------
@@ -1487,24 +1460,40 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 UNPIVOT_DOC_MOD = 20  # sampled key subset keeps the long output oracle-sized
 
 
-@register(
-    "unpivot_doc_metrics",
-    oracle=f"""
-WITH wide AS (
-  SELECT doc_id,
-         CAST(n_chars AS BIGINT) AS n_chars,
-         CAST(len(list_filter(regexp_split_to_array(text, '\\s+'), t -> t <> ''))
+def _unpivot_sql(d: Dialect, docs: str) -> str:
+    """Spark rotates with its native UNPIVOT (stack(): one projection, no
+    per-metric rescan); the DuckDB text is the equivalent UNION ALL."""
+    if d.name == "spark":
+        metrics = """CAST(size(filter(split(text, '\\\\s+'), t -> t <> '')) AS BIGINT) AS n_words,
+         CAST(regexp_count(text, '[0-9]') AS BIGINT) AS n_digits"""
+        rotate = """SELECT doc_id, metric, value
+FROM wide
+UNPIVOT (value FOR metric IN (n_chars, n_digits, n_words))"""
+    else:
+        metrics = """CAST(len(list_filter(regexp_split_to_array(text, '\\s+'), t -> t <> ''))
               AS BIGINT) AS n_words,
-         CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS n_digits
-  FROM documents WHERE doc_id % {UNPIVOT_DOC_MOD} = 0
-)
-SELECT doc_id, metric, value FROM (
+         CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS n_digits"""
+        rotate = """SELECT doc_id, metric, value FROM (
   SELECT doc_id, 'n_chars' AS metric, n_chars AS value FROM wide
   UNION ALL SELECT doc_id, 'n_digits', n_digits FROM wide
   UNION ALL SELECT doc_id, 'n_words', n_words FROM wide
-) u
+) u"""
+    return f"""
+WITH wide AS (
+  SELECT doc_id,
+         CAST(n_chars AS BIGINT) AS n_chars,
+         {metrics}
+  FROM {docs} WHERE doc_id % {UNPIVOT_DOC_MOD} = 0
+)
+{rotate}
 ORDER BY doc_id, metric
-""",
+"""
+
+
+register_sql(
+    "unpivot_doc_metrics",
+    _unpivot_sql,
+    ("documents",),
     doc="UNPIVOT (melt): wide per-document metric columns rotated into the "
     "long (doc_id, metric, value) shape every metrics store and plotting "
     "layer ingests — the inverse of pivot_last_event_value.  Spark side "
@@ -1513,23 +1502,6 @@ ORDER BY doc_id, metric
     "(3 scans) — same rows, which is the point: stack is pure fan-out.",
     tags=("relational", "unpivot", "projection"),
 )
-def unpivot_doc_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table_view(spark, sf_dir, "documents")
-    return spark.sql(
-        f"""
-WITH wide AS (
-  SELECT doc_id,
-         CAST(n_chars AS BIGINT) AS n_chars,
-         CAST(size(filter(split(text, '\\\\s+'), t -> t <> '')) AS BIGINT) AS n_words,
-         CAST(regexp_count(text, '[0-9]') AS BIGINT) AS n_digits
-  FROM {docs} WHERE doc_id % {UNPIVOT_DOC_MOD} = 0
-)
-SELECT doc_id, metric, value
-FROM wide
-UNPIVOT (value FOR metric IN (n_chars, n_digits, n_words))
-ORDER BY doc_id, metric
-"""
-    )
 
 
 # --------------------------------------------------------------------------

@@ -27,9 +27,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
-from ..sources.tables import load_table, table_view
+from ..functions.dialect import Dialect
+from ..registry import register, register_sql
+from ..sources.tables import load_table
 
 QUERY_TERMS = ("spark", "join", "window", "vector")
 K1 = "1.2e0"
@@ -81,17 +81,16 @@ LIMIT {k}
 """
 
 
-@register(
+register_sql(
     "bm25_topk_search",
-    oracle=_bm25_sql(DUCKDB, "documents"),
+    _bm25_sql,
+    ("documents",),
     doc="BM25 keyword search, top-25: inverted-index-shaped plan — postings "
     "filtered to the query terms at the explode (candidate set = union of "
     "posting lists, never the full vocabulary), scalar corpus stats, "
     "TakeOrdered final ranking. One dual-dialect SQL template.",
     tags=("retrieval", "text"),
 )
-def bm25_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_bm25_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -159,9 +158,10 @@ LIMIT {RRF_OUT_K}
 """
 
 
-@register(
+register_sql(
     "hybrid_rrf_retrieval",
-    oracle=_rrf_sql(DUCKDB, "documents", "embeddings"),
+    _rrf_sql,
+    ("documents", "embeddings"),
     doc=f"Hybrid sparse+dense retrieval fused by reciprocal rank "
     f"(1/({RRF_C}+rank), Cormack et al. 2009): BM25 top-{RRF_ARM_K} "
     f"(inverted-index-shaped) + query-by-example cosine top-{RRF_ARM_K} "
@@ -169,11 +169,6 @@ LIMIT {RRF_OUT_K}
     f"2x{RRF_ARM_K} candidate rows.  The RAG retrieval stack in one plan.",
     tags=("retrieval", "similarity", "text"),
 )
-def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    docs = table_view(spark, sf_dir, "documents")
-    emb = table_view(spark, sf_dir, "embeddings")
-    return spark.sql(_rrf_sql(SPARK, docs, emb))
 
 
 # --------------------------------------------------------------------------
@@ -226,9 +221,10 @@ ORDER BY doc_id, rk
 """
 
 
-@register(
+register_sql(
     "tfidf_top_terms",
-    oracle=_tfidf_top_terms_sql(DUCKDB, "documents"),
+    _tfidf_top_terms_sql,
+    ("documents",),
     doc=f"TF-IDF keyword extraction: top-{TFIDF_TOP_K} terms per document "
     "by tf x smooth-idf. One map-side tf aggregate, term-partitioned df "
     "window over the aggregated relation, doc-partitioned ranking window "
@@ -236,8 +232,6 @@ ORDER BY doc_id, rk
     "cannot flip ranks. No doc-doc joins, nothing global.",
     tags=("retrieval", "text", "window"),
 )
-def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_tfidf_top_terms_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------

@@ -56,13 +56,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
-from ..registry import register
+from ..registry import register, register_sql
 from ..sources.tables import table_view
 
-_DAYNO = {
-    "spark": "datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-    "duckdb": "datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
-}
 
 _CENTS = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
 
@@ -212,9 +208,10 @@ FROM agg a CROSS JOIN thresh t
 """
 
 
-@register(
+register_sql(
     "hill_tail_index",
-    oracle=_hill_sql(DUCKDB, "orders"),
+    _hill_sql,
+    ("orders",),
     doc=f"Hill estimator of the Pareto tail exponent of order values "
     f"over the top-{_HILL_K} order statistics: one TakeOrdered "
     f"LIMIT-{_HILL_K + 1} pass (never a global sort — the rank window "
@@ -224,9 +221,6 @@ FROM agg a CROSS JOIN thresh t
     "statistics tail estimator beside mean_excess_tail_audit (POT).",
     tags=("analytics", "stats", "evt", "topk"),
 )
-def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_hill_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -383,7 +377,7 @@ def theil_inequality_decomposition(spark: SparkSession, sf_dir: str) -> DataFram
 # Granger lag-1 causality: daily order count -> daily revenue
 # --------------------------------------------------------------------------
 def _granger_sql(d: Dialect, orders: str) -> str:
-    dayno = _DAYNO[d.name]
+    dayno = d.epoch_day("o_orderdate")
     return f"""
 WITH daily AS (
   SELECT CAST({dayno} AS BIGINT) AS day,
@@ -450,9 +444,10 @@ FROM fit
 """
 
 
-@register(
+register_sql(
     "granger_lag_causality",
-    oracle=_granger_sql(DUCKDB, "orders"),
+    _granger_sql,
+    ("orders",),
     doc="Granger causality (lag 1) of daily order count on daily "
     "revenue: restricted vs unrestricted OLS on the aggregated day "
     "grid, lag via the exact day+1 self-join (adf pattern), RSS in "
@@ -462,9 +457,6 @@ FROM fit
     "acf/adf/naive-forecast.",
     tags=("analytics", "timeseries", "stats"),
 )
-def granger_lag_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_granger_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -477,7 +469,7 @@ def _ljung_box_daily_sql(d: Dialect, orders: str) -> str:
     """The bounded day-grid revenue series — the relation every tail CTE
     of the Ljung-Box statistic references (CTE inlining expanded it into
     16 static corpus scans per statement, guide §3.3)."""
-    dayno = _DAYNO[d.name]
+    dayno = d.epoch_day("o_orderdate")
     return f"""
 SELECT CAST({dayno} AS BIGINT) AS day,
        CAST(SUM({_CENTS}) AS DECIMAL(38,0)) AS cents
@@ -947,9 +939,10 @@ LIMIT {_QL_TOPK}
 """
 
 
-@register(
+register_sql(
     "query_likelihood_dirichlet",
-    oracle=_ql_sql(DUCKDB, "documents"),
+    _ql_sql,
+    ("documents",),
     doc=f"Query-likelihood retrieval with Dirichlet smoothing (mu = "
     f"{_QL_MU}), top-{_QL_TOPK}: the language-modeling ranker beside "
     "BM25 (tf saturation) and the RRF/dense arms — candidates are docs "
@@ -959,9 +952,6 @@ LIMIT {_QL_TOPK}
     "integer-ordered top-k.",
     tags=("retrieval", "text", "topk"),
 )
-def query_likelihood_dirichlet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = table_view(spark, sf_dir, "documents")
-    return spark.sql(_ql_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -993,9 +983,10 @@ FROM agg a
 """
 
 
-@register(
+register_sql(
     "mrr_retrieval_eval",
-    oracle=_mrr_sql(DUCKDB, "documents"),
+    _mrr_sql,
+    ("documents",),
     doc="Reciprocal rank and success@5/10 of the BM25 ranking against "
     "the graded relevance labels (ndcg_retrieval_eval's rel case): the "
     "first-hit IR metric completing the eval triangle beside nDCG "
@@ -1003,9 +994,6 @@ FROM agg a
     "window runs on the LIMIT-25 BM25 sublist, never the corpus.",
     tags=("evaluation", "retrieval", "stats"),
 )
-def mrr_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = table_view(spark, sf_dir, "documents")
-    return spark.sql(_mrr_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -1034,9 +1022,10 @@ ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "curriculum_schedule_plan",
-    oracle=_curriculum_sql(DUCKDB, "documents"),
+    _curriculum_sql,
+    ("documents",),
     doc=f"Curriculum training schedule: docs band into {_CURR_BANDS} "
     "equi-width difficulty bands by length (shorter = easier first, the "
     "standard length-based curriculum), band b enters the mix at epoch "
@@ -1046,9 +1035,6 @@ ORDER BY doc_id
     "against a one-row bounds scalar; no shuffle beyond the scan.",
     tags=("curation", "sampling", "plan"),
 )
-def curriculum_schedule_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = table_view(spark, sf_dir, "documents")
-    return spark.sql(_curriculum_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -1119,9 +1105,10 @@ ORDER BY s.stratum
 """
 
 
-@register(
+register_sql(
     "ipw_ate_stratified",
-    oracle=_ipw_sql(DUCKDB, "events"),
+    _ipw_sql,
+    ("events",),
     doc=f"Stratified average-treatment-effect estimator: users hash-"
     f"assign to arms (portable salted md5 bit — deterministic, no RNG), "
     f"stratify into {_IPW_STRATA} activity bands by the exact integer "
@@ -1132,6 +1119,3 @@ ORDER BY s.stratum
     "snips (off-policy reweighting).",
     tags=("analytics", "causal", "experiment"),
 )
-def ipw_ate_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(_ipw_sql(SPARK, events))

@@ -51,14 +51,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
+from ..registry import register, register_sql
 from ..sources.tables import table_view
 
 _CENTS = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
-_DAYNO = {
-    "spark": "datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-    "duckdb": "datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
-}
 _YM = {
     "spark": "date_format(to_date(o_orderdate), 'yyyy-MM')",
     "duckdb": "strftime(CAST(o_orderdate AS DATE), '%Y-%m')",
@@ -72,7 +68,7 @@ _SQRT6_OVER_PI = "0.7796968012336761e0"  # sqrt(6)/pi
 # Gumbel block-maxima fit (monthly maxima of daily revenue)
 # --------------------------------------------------------------------------
 def _gumbel_sql(d: Dialect, orders: str) -> str:
-    dayno = _DAYNO[d.name]
+    dayno = d.epoch_day("o_orderdate")
     ym = _YM[d.name]
     return f"""
 WITH daily AS (
@@ -111,9 +107,10 @@ FROM fit
 """
 
 
-@register(
+register_sql(
     "gumbel_block_maxima_fit",
-    oracle=_gumbel_sql(DUCKDB, "orders"),
+    _gumbel_sql,
+    ("orders",),
     doc="Gumbel fit of monthly block maxima of daily revenue by method "
     "of moments (Euler-Mascheroni and sqrt(6)/pi as literals — no libm "
     "beyond one SQRT/LN on the one-row fit), variance via the n-scaled "
@@ -122,9 +119,6 @@ FROM fit
     "stats).  Two bounded aggregations: day grid, then month grid.",
     tags=("analytics", "evt", "timeseries"),
 )
-def gumbel_block_maxima_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_gumbel_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -411,7 +405,7 @@ def _sax_symbols_sql(d: Dialect, orders: str) -> str:
     """The bounded day-grid SAX symbol series — the relation the 3-way
     motif self-join references (12 static corpus scans per statement,
     guide §3.3)."""
-    dayno = _DAYNO[d.name]
+    dayno = d.epoch_day("o_orderdate")
     # N(0,1) quartile breakpoints for a 4-symbol alphabet
     sym = (
         "CASE WHEN z < -0.6745e0 THEN 'a' WHEN z < 0.0e0 THEN 'b' "
@@ -591,9 +585,10 @@ ORDER BY g.source
 """
 
 
-@register(
+register_sql(
     "loso_source_influence",
-    oracle=_loso_sql(DUCKDB, "documents"),
+    _loso_sql,
+    ("documents",),
     doc="Leave-one-source-out influence of each source on the corpus "
     "mean doc length: delta = mean_all - mean_without_source, every "
     "contrast from ONE pass of exact integer sums (never a per-source "
@@ -603,9 +598,6 @@ ORDER BY g.source
     "screen before influence functions.",
     tags=("curation", "audit", "agg"),
 )
-def loso_source_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = table_view(spark, sf_dir, "documents")
-    return spark.sql(_loso_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -773,7 +765,7 @@ SELECT okey, bx, by, z, {_hilbert_fold_expr(bits)} AS hd FROM base
     union = legs[0]
     for leg in legs[1:]:
         union = union.unionByName(leg)
-    ranked, total = range_ranked(spark, union, ["layout", "k", "okey"])
+    ranked, total = range_ranked(union, ["layout", "k", "okey"])
     if ranked is None:
         return spark.sql(
             "SELECT CAST(NULL AS STRING) AS layout, CAST(0 AS BIGINT) AS n_files, "
@@ -888,9 +880,10 @@ ORDER BY bucket
 """
 
 
-@register(
+register_sql(
     "bucketed_packing_plan",
-    oracle=_bucketed_packing_sql(DUCKDB, "documents"),
+    _bucketed_packing_sql,
+    ("documents",),
     doc=f"Whole-document length-bucket packing plan ({_PACK_CAP}-token "
     "bins, power-of-two buckets): docs route to hash shards sized "
     f"~{_PACK_SHARD_DOCS} docs (shard count scales with the corpus), "
@@ -903,6 +896,3 @@ ORDER BY bucket
     "padding_waste_audit measures for the naive loader.",
     tags=("curation", "packing", "plan"),
 )
-def bucketed_packing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = table_view(spark, sf_dir, "documents")
-    return spark.sql(_bucketed_packing_sql(SPARK, view))

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
-from ..registry import register
+from ..registry import register, register_sql
 from ..sources.tables import table_view
 
 _LN19 = "2.9444389791664403e0"  # ln(19): Wald bounds for alpha=beta=0.05
@@ -160,7 +160,7 @@ def qini_uplift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = table_view(spark, sf_dir, "events")
     users = spark.sql(_qini_users_sql(SPARK, events)).withColumn("neg_ev", -F.col("n_ev"))
-    ranked, _ = range_ranked(spark, users, ["neg_ev", "user_id"])
+    ranked, _ = range_ranked(users, ["neg_ev", "user_id"])
     if ranked is None:
         return spark.sql(
             "SELECT CAST(0 AS INT) AS decile, CAST(0 AS BIGINT) AS cum_treated, "
@@ -204,7 +204,7 @@ FROM {t} t
 
 
 def _sprt_oracle() -> str:
-    dayno = "datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))"
+    dayno = DUCKDB.epoch_day("o_orderdate")
     daily = _SPRT_DAILY.format(dayno=dayno, orders="orders")
     return f"""
 WITH daily AS ({daily}),
@@ -253,14 +253,14 @@ def sprt_poisson_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scalars_extra import range_prefix_summed
 
     orders = table_view(spark, sf_dir, "orders")
-    dayno = "datediff(to_date(o_orderdate), to_date('1970-01-01'))"
+    dayno = SPARK.epoch_day("o_orderdate")
     daily = spark.sql(_SPRT_DAILY.format(dayno=dayno, orders=orders)).localCheckpoint(eager=False)
     inc = spark.sql(
         "WITH lam AS (SELECT CAST(SUM(x) AS DOUBLE) / COUNT(*) AS l0 FROM {daily}) "
         + _SPRT_INC.format(daily="{daily}", lam="lam", ln105=_LN105),
         daily=daily,
     )
-    summed, _ = range_prefix_summed(spark, inc, ["day"], "inc_nano")
+    summed, _ = range_prefix_summed(inc, ["day"], "inc_nano")
     if summed is None:
         return spark.sql(
             "SELECT CAST(0 AS BIGINT) AS n_days, CAST(0.0 AS DOUBLE) AS lambda0, "
@@ -344,9 +344,10 @@ ORDER BY r.source
 """
 
 
-@register(
+register_sql(
     "beta_binomial_shrinkage",
-    oracle=_betabin_sql(DUCKDB, "documents"),
+    _betabin_sql,
+    ("documents",),
     doc="Empirical-Bayes Beta-Binomial shrinkage of per-source English "
     "rates: method-of-moments (alpha, beta) from the k per-source rates "
     "(nano-quantized before the bounded moment sums; prior strength "
@@ -356,10 +357,6 @@ ORDER BY r.source
     "RATE analogue of james_stein_shrinkage (normal means).",
     tags=("analytics", "stats", "agg"),
 )
-def beta_binomial_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    view = table_view(spark, sf_dir, "documents")
-    return spark.sql(_betabin_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
+from ..registry import register, register_sql
 from ..sources.tables import table_view
 
 
@@ -341,9 +341,10 @@ ORDER BY c.s
 """
 
 
-@register(
+register_sql(
     "cochran_armitage_trend",
-    oracle=_catrend_sql(DUCKDB, "orders"),
+    _catrend_sql,
+    ("orders",),
     doc="Cochran-Armitage test for a linear trend in order-fulfillment "
     "rate across the five ORDERED priority levels (scores parsed from "
     "the priority prefix): one map-side-combinable groupBy to the "
@@ -352,9 +353,6 @@ ORDER BY c.s
     "beside chi_squared_independence (which ignores the ordering).",
     tags=("analytics", "stats", "agg"),
 )
-def cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_catrend_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -417,9 +415,10 @@ ORDER BY t.stratum
 """
 
 
-@register(
+register_sql(
     "mantel_haenszel_or",
-    oracle=_mh_sql(DUCKDB, "orders", "customer"),
+    _mh_sql,
+    ("orders", "customer"),
     doc="Mantel-Haenszel pooled odds ratio and CMH chi-squared of "
     "(hash-assigned exposure) x (order fulfilled) across market-"
     "segment strata: one groupBy to the bounded 5x2x2 table, "
@@ -429,7 +428,3 @@ ORDER BY t.stratum
     "stratified analysis reports together.",
     tags=("analytics", "causal", "stats"),
 )
-def mantel_haenszel_or(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    customer = table_view(spark, sf_dir, "customer")
-    return spark.sql(_mh_sql(SPARK, orders, customer))

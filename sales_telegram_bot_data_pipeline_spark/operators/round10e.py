@@ -32,10 +32,6 @@ from ..registry import register
 from ..sources.tables import table_view
 
 _CENTS = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
-_DAYNO = {
-    "spark": "datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-    "duckdb": "datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
-}
 
 
 # --------------------------------------------------------------------------
@@ -44,7 +40,7 @@ _DAYNO = {
 def _binseg_daily_sql(d: Dialect, orders: str) -> str:
     """The bounded day-grid revenue series the triangular prefix join
     re-references (12 static scans per statement, guide §3.3)."""
-    dayno = _DAYNO[d.name]
+    dayno = d.epoch_day("o_orderdate")
     return f"""
 SELECT CAST({dayno} AS BIGINT) AS day,
        CAST(SUM({_CENTS}) AS DECIMAL(38,0)) AS y

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
+from ..registry import register, register_sql
 from ..sources.tables import table_view
 
 
@@ -198,9 +198,10 @@ ORDER BY g.bin
 """
 
 
-@register(
+register_sql(
     "expected_calibration_error",
-    oracle=_ece_sql(DUCKDB, "documents"),
+    _ece_sql,
+    ("documents",),
     doc="Expected and maximum calibration error (ECE/MCE) of the logreg "
     "quality probability vs the lang='en' label over 10 decile bins: "
     "per-bin |accuracy - confidence| from exact micro-unit integer "
@@ -210,6 +211,3 @@ ORDER BY g.bin
     "(brier), fit (isotonic), and test (spiegelhalter).",
     tags=("evaluation", "calibration", "stats"),
 )
-def expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = table_view(spark, sf_dir, "documents")
-    return spark.sql(_ece_sql(SPARK, view))

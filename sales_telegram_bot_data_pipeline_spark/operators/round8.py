@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
+from ..registry import register, register_sql
 from ..sources.tables import load_table, table_view
 
 # --------------------------------------------------------------------------
@@ -56,10 +56,6 @@ from ..sources.tables import load_table, table_view
 # --------------------------------------------------------------------------
 EWMA_DEPTH = 20  # 2^-20 tail mass ~1e-6: numerically invisible after ROUND 6
 
-_EPOCH_DIFF = {
-    "spark": "datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-    "duckdb": "datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
-}
 
 
 def _shl(d: Dialect, n: str) -> str:
@@ -82,7 +78,7 @@ def _ewma_sql(d: Dialect, orders: str, weekly_rel: str | None = None) -> str:
     w_num = _shl(d, f"{D} - CAST(a.x - b.x AS INT)")
     den = f"({_shl(d, str(D + 1))} - {_shl(d, f'{D} - m')})"
     weekly = weekly_rel or _EWMA_WEEKLY_SQL.format(
-        epoch_diff=_EPOCH_DIFF[d.name], orders=orders
+        epoch_diff=d.epoch_day('o_orderdate'), orders=orders
     )
     return f"""
 WITH weekly AS ({weekly}),
@@ -128,7 +124,7 @@ def ewma_dyadic_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # weekly feeds THREE consumers (w0 + both band-join sides): Spark
     # inlines CTEs, so materialize the orders scan+aggregate once
     w = spark.sql(
-        _EWMA_WEEKLY_SQL.format(epoch_diff=_EPOCH_DIFF["spark"], orders=orders)
+        _EWMA_WEEKLY_SQL.format(epoch_diff=SPARK.epoch_day("o_orderdate"), orders=orders)
     ).localCheckpoint(eager=False)
     return spark.sql(_ewma_sql(SPARK, orders, weekly_rel="SELECT x, cents FROM {w}"), w=w)
 
@@ -142,7 +138,7 @@ def _seasonal_sql(d: Dialect, orders: str) -> str:
     # 0=Sunday..6 identically in both (1970-01-01 was a Thursday).
     return f"""
 WITH daily AS (
-  SELECT CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x,
+  SELECT CAST({d.epoch_day('o_orderdate')} AS BIGINT) AS day_x,
          CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
               AS BIGINT) AS cents
   FROM {orders} GROUP BY 1
@@ -177,9 +173,10 @@ ORDER BY b.dow
 """
 
 
-@register(
+register_sql(
     "seasonal_dow_decomposition",
-    oracle=_seasonal_sql(DUCKDB, "orders"),
+    _seasonal_sql,
+    ("orders",),
     doc="Additive day-of-week seasonal decomposition of daily revenue: "
     "per-dow mean level, seasonal index (dow mean / global mean) and the "
     "seasonality STRENGTH (1 - SS_residual/SS_total — variance explained "
@@ -191,9 +188,6 @@ ORDER BY b.dow
     "circular_time_profile (phase).",
     tags=("analytics", "timeseries", "agg"),
 )
-def seasonal_dow_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_seasonal_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -218,7 +212,7 @@ def _runs_oracle() -> str:
     d = DUCKDB
     return f"""
 WITH daily AS (
-  SELECT CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x,
+  SELECT CAST({d.epoch_day('o_orderdate')} AS BIGINT) AS day_x,
          CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
               AS BIGINT) AS cents
   FROM orders GROUP BY 1
@@ -264,12 +258,12 @@ def runs_test_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table_view(spark, sf_dir, "orders")
     d = SPARK
     daily = spark.sql(f"""
-SELECT CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x,
+SELECT CAST({d.epoch_day('o_orderdate')} AS BIGINT) AS day_x,
        CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
             AS BIGINT) AS cents
 FROM {orders} GROUP BY 1
 """)
-    ranked, n = range_ranked(spark, daily, ["day_x"])
+    ranked, n = range_ranked(daily, ["day_x"])
     if ranked is None:
         return spark.createDataFrame(
             [],
@@ -398,9 +392,10 @@ FROM err
 """
 
 
-@register(
+register_sql(
     "jl_projection_distortion_audit",
-    oracle=_jl_sql(DUCKDB, "embeddings"),
+    _jl_sql,
+    ("embeddings",),
     doc=f"Johnson–Lindenstrauss ±1 sign-projection distortion audit "
     f"(d={JL_DIM} -> k={JL_K}): squared-distance ratio (proj/k — the "
     "unbiased estimator for a ±1 sign matrix) vs the exact distance "
@@ -416,9 +411,6 @@ FROM err
     "matryoshka_recall_audit (prefix truncation).",
     tags=("similarity", "audit", "sketch"),
 )
-def jl_projection_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    return spark.sql(_jl_sql(SPARK, table_view(spark, sf_dir, "embeddings")))
 
 
 # --------------------------------------------------------------------------
@@ -527,7 +519,7 @@ def key_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_orderkey").cast("bigint").alias("k"))
         .distinct()
     )
-    ranked, n = range_ranked(spark, keys, ["k"])
+    ranked, n = range_ranked(keys, ["k"])
     if ranked is None:
         return spark.createDataFrame(
             [], "gap_len bigint, n_gaps bigint, missing_keys bigint"
@@ -554,7 +546,7 @@ def key_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 def _backtest_sql(d: Dialect, orders: str, daily_rel: str | None = None) -> str:
     daily = daily_rel or f"""
-  SELECT CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x,
+  SELECT CAST({d.epoch_day('o_orderdate')} AS BIGINT) AS day_x,
          CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
               AS BIGINT) AS cents
   FROM {orders} GROUP BY 1
@@ -610,7 +602,7 @@ def naive_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table_view(spark, sf_dir, "orders")
     # daily feeds four consumers (tot + three join sides): materialize once
     d = spark.sql(f"""
-SELECT CAST({_EPOCH_DIFF['spark']} AS BIGINT) AS day_x,
+SELECT CAST({SPARK.epoch_day('o_orderdate')} AS BIGINT) AS day_x,
        CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
             AS BIGINT) AS cents
 FROM {orders} GROUP BY 1
@@ -691,9 +683,10 @@ ORDER BY source_a, source_b
 """
 
 
-@register(
+register_sql(
     "stylometric_burrows_delta",
-    oracle=_burrows_sql(DUCKDB, "documents"),
+    _burrows_sql,
+    ("documents",),
     doc=f"Burrows' Delta (the standard stylometric / authorship distance) "
     f"between every source pair: the {DELTA_TOP_WORDS} corpus-wide most "
     "frequent words (deterministic count-desc, word-asc TakeOrdered) "
@@ -711,10 +704,6 @@ ORDER BY source_a, source_b
     "welch_ttest_sources (length) and anova_sources_doclen (variance).",
     tags=("textops", "stats", "stylometry"),
 )
-def stylometric_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    view = table_view(spark, sf_dir, "documents")
-    return spark.sql(_burrows_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -757,9 +746,10 @@ GROUP BY 1 ORDER BY entropy_bucket
 """
 
 
-@register(
+register_sql(
     "behavioral_entropy_profile",
-    oracle=_entropy_sql(DUCKDB, "events"),
+    _entropy_sql,
+    ("events",),
     doc="Per-user behavioral diversity: Shannon entropy (nats) of each "
     "user's event-type distribution, profiled as a 0.25-nat histogram "
     "(bots and single-action users pool at 0; engaged users approach "
@@ -772,9 +762,6 @@ GROUP BY 1 ORDER BY entropy_bucket
     "user_cadence_profile (timing).",
     tags=("analytics", "stats", "entropy"),
 )
-def behavioral_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(_entropy_sql(SPARK, events))
 
 
 # --------------------------------------------------------------------------
@@ -862,9 +849,10 @@ ORDER BY c.channel
 """
 
 
-@register(
+register_sql(
     "shapley_channel_attribution",
-    oracle=_shapley_sql(DUCKDB, "events"),
+    _shapley_sql,
+    ("events",),
     doc="EXACT Shapley-value conversion attribution over the bounded "
     f"channel catalog {SHAPLEY_CHANNELS}: each user collapses to an "
     "exposure BITMASK + converted flag (one groupBy), coalitions to "
@@ -879,9 +867,6 @@ ORDER BY c.channel
     "the per-user groupBy is O(2^n) bounded.",
     tags=("analytics", "attribution", "agg"),
 )
-def shapley_channel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(_shapley_sql(SPARK, events))
 
 
 # --------------------------------------------------------------------------
@@ -973,7 +958,7 @@ def conformal_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     calg = (
         sc.where("is_cal").groupBy("s_u").agg(F.count(F.lit(1)).alias("c"))
     )
-    summed, n_cal = range_prefix_summed(spark, calg, ["s_u"], "c")
+    summed, n_cal = range_prefix_summed(calg, ["s_u"], "c")
     if summed is None:
         return spark.createDataFrame(
             [],
@@ -1029,9 +1014,10 @@ ORDER BY source_a, source_b
 """
 
 
-@register(
+register_sql(
     "source_vocab_overlap",
-    oracle=_vocab_overlap_sql(DUCKDB, "documents"),
+    _vocab_overlap_sql,
+    ("documents",),
     doc="Lexical type-level overlap matrix between sources: distinct "
     "(source, word-hash) incidence, per-word inverted self-join "
     "(fan-out bounded by sources-per-word <= |sources|), Jaccard + "
@@ -1044,10 +1030,6 @@ ORDER BY source_a, source_b
     "diminishing-returns curve.",
     tags=("textops", "dedup", "self-join"),
 )
-def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    view = table_view(spark, sf_dir, "documents")
-    return spark.sql(_vocab_overlap_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -1108,9 +1090,10 @@ GROUP BY t.n, t.syt, t.sqt
 """
 
 
-@register(
+register_sql(
     "brier_score_decomposition",
-    oracle=_brier_sql(DUCKDB, "documents"),
+    _brier_sql,
+    ("documents",),
     doc="Brier score of the quality classifier against the lang='en' "
     "label with the GENERALIZED Murphy decomposition: reliability "
     "(calibration badness), resolution (discrimination), uncertainty "
@@ -1126,10 +1109,6 @@ GROUP BY t.n, t.syt, t.sqt
     "roc_auc_quality_score (ranking).",
     tags=("evaluation", "stats", "calibration"),
 )
-def brier_score_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    view = table_view(spark, sf_dir, "documents")
-    return spark.sql(_brier_sql(SPARK, view))
 
 
 # --------------------------------------------------------------------------
@@ -1174,9 +1153,10 @@ FROM pairs p CROSS JOIN tot t CROSS JOIN margx mx CROSS JOIN margy my
 """
 
 
-@register(
+register_sql(
     "kendall_tau_b",
-    oracle=_kendall_sql(DUCKDB, "lineitem"),
+    _kendall_sql,
+    ("lineitem",),
     doc="Kendall tau-b rank correlation (tie-corrected) of l_quantity vs "
     "l_discount, computed from the BOUNDED contingency grid: the corpus "
     "collapses to |qty| x |discount| cells in one map-combinable "
@@ -1192,6 +1172,3 @@ FROM pairs p CROSS JOIN tot t CROSS JOIN margx mx CROSS JOIN margy my
     "axis instead).",
     tags=("analytics", "stats", "agg"),
 )
-def kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = table_view(spark, sf_dir, "lineitem")
-    return spark.sql(_kendall_sql(SPARK, lineitem))

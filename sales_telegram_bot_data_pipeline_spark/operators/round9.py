@@ -53,13 +53,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
+from ..registry import register, register_sql
 from ..sources.tables import table_view
 
-_EPOCH_DIFF = {
-    "spark": "datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-    "duckdb": "datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
-}
 
 
 def _orders_base(d: Dialect, orders: str) -> str:
@@ -72,7 +68,7 @@ def _orders_base(d: Dialect, orders: str) -> str:
     return f"""
 SELECT o_custkey AS cust,
        CAST({h} % 2 AS INT) AS treat,
-       CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x,
+       CAST({d.epoch_day('o_orderdate')} AS BIGINT) AS day_x,
        CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
 FROM {orders}
 """
@@ -169,9 +165,10 @@ FROM scal
 """
 
 
-@register(
+register_sql(
     "cuped_variance_reduction",
-    oracle=_cuped_sql(DUCKDB, "orders"),
+    _cuped_sql,
+    ("orders",),
     doc="CUPED covariate adjustment for an A/B readout (Deng et al. 2013): "
     "pre-period spend (first half of the date range) as the control "
     "variate for experiment-period spend, deterministic md5 treatment "
@@ -181,9 +178,6 @@ FROM scal
     "NULLIF-guarded divisors.",
     tags=("evaluation", "causal", "agg"),
 )
-def cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_cuped_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -236,9 +230,10 @@ FROM wide
 """
 
 
-@register(
+register_sql(
     "did_estimator",
-    oracle=_did_sql(DUCKDB, "orders"),
+    _did_sql,
+    ("orders",),
     doc="2x2 difference-in-differences: (md5-assigned treatment) x "
     "(date-midpoint period) cell means of order value in exact cents, "
     "double-differenced — the parallel-trends causal readout. One "
@@ -247,9 +242,6 @@ FROM wide
     "yields NULL, never a crash).",
     tags=("evaluation", "causal", "agg"),
 )
-def did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_did_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -264,7 +256,7 @@ def _isotonic_pre_sql(d: Dialect, orders: str) -> str:
     into 16 static corpus scans per statement, guide §3.3)."""
     return f"""
 WITH base AS (
-  SELECT CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x,
+  SELECT CAST({d.epoch_day('o_orderdate')} AS BIGINT) AS day_x,
          CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
   FROM {orders}
 ),
@@ -512,15 +504,15 @@ FROM (
               AS BIGINT) AS by
   FROM (
     SELECT o_orderkey, o_custkey,
-           CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x
+           CAST({d.epoch_day('o_orderdate')} AS BIGINT) AS day_x
     FROM {orders}
   ) s
   CROSS JOIN (
     -- key-domain bounds as a ONE-ROW aggregate broadcast, never a
     -- MIN() OVER () corpus window (the single-partition scale killer)
     SELECT MIN(o_custkey) AS mnc, MAX(o_custkey) AS mxc,
-           MIN(CAST({_EPOCH_DIFF[d.name]} AS BIGINT)) AS mnd,
-           MAX(CAST({_EPOCH_DIFF[d.name]} AS BIGINT)) AS mxd
+           MIN(CAST({d.epoch_day('o_orderdate')} AS BIGINT)) AS mnd,
+           MAX(CAST({d.epoch_day('o_orderdate')} AS BIGINT)) AS mxd
     FROM {orders}
   ) t
 ) g
@@ -606,7 +598,7 @@ def zorder_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(
         base.select(F.lit(1).alias("axis"), F.col("z").alias("k"), "okey", "bx", "by")
     )
-    ranked, total = range_ranked(spark, axes, ["axis", "k", "okey"])
+    ranked, total = range_ranked(axes, ["axis", "k", "okey"])
     if ranked is None:
         return spark.sql(
             "SELECT CAST(NULL AS STRING) AS layout, CAST(0 AS BIGINT) AS n_files, "
@@ -848,10 +840,6 @@ def ks_two_sample_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # overdispersion (variance-to-mean) audit of daily event counts
 # --------------------------------------------------------------------------
-_EV_DAY = {
-    "spark": "datediff(to_date(ts), to_date('1970-01-01'))",
-    "duckdb": "datediff('day', DATE '1970-01-01', CAST(ts AS DATE))",
-}
 
 
 def _overdispersion_sql(d: Dialect, events: str) -> str:
@@ -869,7 +857,7 @@ def _overdispersion_sql(d: Dialect, events: str) -> str:
     combinable), moments on the bounded (types x days) relation."""
     return f"""
 WITH daily AS (
-  SELECT event_type, CAST({_EV_DAY[d.name]} AS BIGINT) AS day_x,
+  SELECT event_type, CAST({d.epoch_day('ts')} AS BIGINT) AS day_x,
          CAST(COUNT(*) AS BIGINT) AS c
   FROM {events} GROUP BY 1, 2
 ),
@@ -896,9 +884,10 @@ ORDER BY event_type
 """
 
 
-@register(
+register_sql(
     "overdispersion_audit",
-    oracle=_overdispersion_sql(DUCKDB, "events"),
+    _overdispersion_sql,
+    ("events",),
     doc="Dispersion index (variance/mean of DAILY counts) per event type: "
     "the Poisson-assumption check (VMR=1 under Poisson; >1.5 flags "
     "clumped arrivals that break rate models and mean-based alert "
@@ -907,9 +896,6 @@ ORDER BY event_type
     "final ratios.",
     tags=("evaluation", "stats", "agg"),
 )
-def overdispersion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(_overdispersion_sql(SPARK, events))
 
 
 # --------------------------------------------------------------------------
@@ -983,9 +969,10 @@ ORDER BY covariate
 """
 
 
-@register(
+register_sql(
     "covariate_balance_smd",
-    oracle=_smd_sql(DUCKDB, "orders", "customer"),
+    _smd_sql,
+    ("orders", "customer"),
     doc="Covariate-balance check for the md5 A/B assignment: standardized "
     "mean difference (mean gap over pooled SD) per pre-treatment "
     "covariate (account balance, order count, total spend), |SMD| < 0.1 "
@@ -995,10 +982,6 @@ ORDER BY covariate
     "SMD only.",
     tags=("evaluation", "causal", "agg"),
 )
-def covariate_balance_smd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    customer = table_view(spark, sf_dir, "customer")
-    return spark.sql(_smd_sql(SPARK, orders, customer))
 
 
 # --------------------------------------------------------------------------
@@ -1073,9 +1056,10 @@ FROM scal
 """
 
 
-@register(
+register_sql(
     "ab_power_mde",
-    oracle=_mde_sql(DUCKDB, "orders"),
+    _mde_sql,
+    ("orders",),
     doc="Experiment power analysis for the md5 hash split: minimum "
     "detectable effect at alpha=0.05 two-sided / power=0.8 "
     "((z_a+z_b)*sqrt(var*(1/n_t+1/n_c))), raw AND CUPED-adjusted "
@@ -1085,6 +1069,3 @@ FROM scal
     "groupBy(cust) shuffle.",
     tags=("evaluation", "causal", "agg"),
 )
-def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_mde_sql(SPARK, orders))

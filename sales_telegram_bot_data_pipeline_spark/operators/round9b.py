@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
+from ..registry import register, register_sql
 from ..sources.tables import table_view
 from .lm_quality import _bigram_rel
 
@@ -139,9 +139,10 @@ ORDER BY bh_rank
 """
 
 
-@register(
+register_sql(
     "bh_fdr_source_audit",
-    oracle=_bh_fdr_sql(DUCKDB, "documents"),
+    _bh_fdr_sql,
+    ("documents",),
     doc="Benjamini-Hochberg FDR step-up across per-source mean-doc-length "
     "tests: Welch-style z^2 from exact integer moments, CHEBYSHEV "
     "p-values (min(1, 1/z^2) — distribution-free, conservative, zero "
@@ -151,8 +152,6 @@ ORDER BY bh_rank
     "to |sources| rows; all windows run on the aggregated relation.",
     tags=("evaluation", "stats", "audit"),
 )
-def bh_fdr_source_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_bh_fdr_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -200,9 +199,10 @@ FROM cells
 """
 
 
-@register(
+register_sql(
     "mcnemar_gate_disagreement",
-    oracle=_mcnemar_sql(DUCKDB, "documents"),
+    _mcnemar_sql,
+    ("documents",),
     doc="McNemar's paired test for two document quality gates on the same "
     "corpus (length rule vs token rule): exact integer 2x2 discordance "
     "cells in one scan, (b-c)^2/(b+c) and the continuity-corrected "
@@ -210,8 +210,6 @@ FROM cells
     "complementing quality_gate_agreement_kappa.",
     tags=("evaluation", "stats", "text"),
 )
-def mcnemar_gate_disagreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_mcnemar_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -358,9 +356,10 @@ ORDER BY c.segment, c.priority
 """
 
 
-@register(
+register_sql(
     "target_encoding_smoothed",
-    oracle=_target_encoding_sql(DUCKDB, "orders", "customer"),
+    _target_encoding_sql,
+    ("orders", "customer"),
     doc="Smoothed (m-estimate) target encoding of the mktsegment x "
     "orderpriority grid against order value: "
     "(cat_cents + m*global_mean) / (n + m) on exact integer cent sums, "
@@ -368,10 +367,6 @@ ORDER BY c.segment, c.priority
     "map-side-combinable groupBy, 25-row output.",
     tags=("curation", "relational", "agg"),
 )
-def target_encoding_smoothed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    customer = table_view(spark, sf_dir, "customer")
-    return spark.sql(_target_encoding_sql(SPARK, orders, customer))
 
 
 # --------------------------------------------------------------------------

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
+from ..registry import register, register_sql
 from ..sources.tables import table_view
 
 # --------------------------------------------------------------------------
@@ -93,9 +93,10 @@ ORDER BY g.j
 """
 
 
-@register(
+register_sql(
     "mean_excess_tail_audit",
-    oracle=_mean_excess_sql(DUCKDB, "orders"),
+    _mean_excess_sql,
+    ("orders",),
     doc="Extreme-value mean-excess audit of order value: e(u) = "
     "E[X-u | X>u] on an exact floor-div twelfths grid over the upper "
     "half of the range — increasing curve = generalized-Pareto heavy "
@@ -104,9 +105,6 @@ ORDER BY g.j
     "map-side-combinable groupBy.",
     tags=("evaluation", "stats", "audit"),
 )
-def mean_excess_tail_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_mean_excess_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -174,9 +172,10 @@ ORDER BY ninth
 """
 
 
-@register(
+register_sql(
     "decision_stump_split_audit",
-    oracle=_stump_sql(DUCKDB, "documents"),
+    _stump_sql,
+    ("documents",),
     doc="Decision-stump (one CART split) audit: weighted Gini impurity of "
     "every floor-div ninths length threshold for the lang='en' label, "
     "parent impurity, gain, and the ROW_NUMBER argmin flag — exact "
@@ -184,8 +183,6 @@ ORDER BY ninth
     "map-side-combinable groupBy, O(8) tail.",
     tags=("evaluation", "stats", "text"),
 )
-def decision_stump_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_stump_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -252,9 +249,10 @@ ORDER BY m.source
 """
 
 
-@register(
+register_sql(
     "james_stein_shrinkage",
-    oracle=_james_stein_sql(DUCKDB, "documents"),
+    _james_stein_sql,
+    ("documents",),
     doc="Positive-part James-Stein shrinkage of per-source mean doc "
     "lengths toward the unweighted grand mean: c = max(0, 1 - (k-3) "
     "avg(se_i^2)/S), the empirical-Bayes 'borrow strength' estimator "
@@ -262,8 +260,6 @@ ORDER BY m.source
     "map-side-combinable groupBy, O(k) tail, zero libm.",
     tags=("evaluation", "stats", "agg"),
 )
-def james_stein_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_james_stein_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -347,7 +343,7 @@ def pr_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = g.withColumn("vneg", -F.col("v")).withColumn(
         "packed", (F.col("c").cast("bigint") * pack + F.col("c_pos")).cast("bigint")
     )
-    packed_sum, _ = range_prefix_summed(spark, g, ["vneg"], "packed")
+    packed_sum, _ = range_prefix_summed(g, ["vneg"], "packed")
     if packed_sum is None:
         return spark.createDataFrame(
             [], "n_docs bigint, n_pos bigint, pr_auc double, prevalence_baseline double"
@@ -461,9 +457,10 @@ FROM agg
 """
 
 
-@register(
+register_sql(
     "rbo_ranking_overlap",
-    oracle=_rbo_sql(DUCKDB, "lineitem"),
+    _rbo_sql,
+    ("lineitem",),
     doc="Rank-biased overlap (Webber 2010) at depth 20, p=1/2, between the "
     "revenue-top-20 and quantity-top-20 part rankings: with p=1/2 every "
     "weight p^d/d is dyadic, so terms are exact BIGINTs over "
@@ -474,6 +471,3 @@ FROM agg
     "Kendall's tau cannot express.",
     tags=("evaluation", "relational", "agg"),
 )
-def rbo_ranking_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = table_view(spark, sf_dir, "lineitem")
-    return spark.sql(_rbo_sql(SPARK, lineitem))

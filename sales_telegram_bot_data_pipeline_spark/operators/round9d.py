@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
+from ..registry import register, register_sql
 from ..sources.tables import table_view
 from .evaluation import _KM_DUR_SQL
 
@@ -129,7 +129,7 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hq", F.expr(f"CAST({_na_hq(SPARK)} AS BIGINT)")
         ), "hq"
 
-    cum, _ = range_prefix_summed_pair(spark, g, ["t"], "c_total", derive)
+    cum, _ = range_prefix_summed_pair(g, ["t"], "c_total", derive)
     if cum is None:
         return spark.createDataFrame(
             [],
@@ -182,9 +182,10 @@ FROM agg
 """
 
 
-@register(
+register_sql(
     "cochran_q_gates",
-    oracle=_cochran_q_sql(DUCKDB, "documents"),
+    _cochran_q_sql,
+    ("documents",),
     doc="Cochran's Q test for three paired document quality gates (char "
     "length, token count, mean word length): the k-sample McNemar "
     "generalization, (k-1)(k*sum G_j^2 - T^2)/(k*T - sum L_i^2), every "
@@ -192,8 +193,6 @@ FROM agg
     "'all gates pass at the same rate'.",
     tags=("evaluation", "stats", "text"),
 )
-def cochran_q_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_cochran_q_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -406,9 +405,10 @@ ORDER BY ninth
 """
 
 
-@register(
+register_sql(
     "quantile_pinball_fit_audit",
-    oracle=_pinball_sql(DUCKDB, "orders"),
+    _pinball_sql,
+    ("orders",),
     doc="Pinball-loss audit of candidate constant predictors for the "
     "tau=0.9 order-value quantile on a floor-div ninths grid: 10x loss "
     "as an exact BIGINT (9(x-c) above, (c-x) below), argmin by integer "
@@ -417,9 +417,6 @@ ORDER BY ninth
     "broadcast 8-row grid, one map-side-combinable groupBy.",
     tags=("evaluation", "stats", "agg"),
 )
-def quantile_pinball_fit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_pinball_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -495,9 +492,10 @@ ORDER BY policy
 """
 
 
-@register(
+register_sql(
     "snips_offpolicy_eval",
-    oracle=_snips_sql(DUCKDB, "orders", "customer"),
+    _snips_sql,
+    ("orders", "customer"),
     doc="Off-policy (counterfactual) evaluation from md5-randomized logs: "
     "IPS and self-normalized IPS value estimates plus effective sample "
     "size for two deterministic target policies, logging propensity the "
@@ -506,7 +504,3 @@ ORDER BY policy
     "conditional-aggregation scan with a 2-row policy grid.",
     tags=("evaluation", "causal", "agg"),
 )
-def snips_offpolicy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    customer = table_view(spark, sf_dir, "customer")
-    return spark.sql(_snips_sql(SPARK, orders, customer))

@@ -39,13 +39,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
-from ..registry import register
+from ..registry import register, register_sql
 from ..sources.tables import table_view
 
-_EPOCH_DIFF = {
-    "spark": "datediff(to_date(o_orderdate), to_date('1970-01-01'))",
-    "duckdb": "datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))",
-}
 
 # --------------------------------------------------------------------------
 # nDCG@10 of the BM25 ranking
@@ -133,9 +129,15 @@ FROM dcg d1 CROSS JOIN ideal i1 CROSS JOIN grades g
 """
 
 
-@register(
+# Examined r14 and kept inline: materializing the 1-row grade counts
+# saves only two THIN rel-case projection scans (the BM25 arm
+# dominates) and measured 1.09 vs 0.87 s in an interleaved A/B — the
+# checkpoint action costs more than the scans it removes at any
+# scale where a projection scan is cheap relative to an action.
+register_sql(
     "ndcg_retrieval_eval",
-    oracle=_ndcg_sql(DUCKDB, "documents"),
+    _ndcg_sql,
+    ("documents",),
     doc="nDCG@10 / precision@10 / recall@10 of the BM25 top-25 ranking "
     "against deterministic graded relevance: position discounts "
     "1/log2(i+1) as integer nano-unit PYTHON literals, so every DCG "
@@ -144,13 +146,6 @@ FROM dcg d1 CROSS JOIN ideal i1 CROSS JOIN grades g
     "LIMIT-25 BM25 sublist only.",
     tags=("evaluation", "retrieval", "text"),
 )
-def ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Examined r14 and kept inline: materializing the 1-row grade counts
-    # saves only two THIN rel-case projection scans (the BM25 arm
-    # dominates) and measured 1.09 vs 0.87 s in an interleaved A/B — the
-    # checkpoint action costs more than the scans it removes at any
-    # scale where a projection scan is cheap relative to an action.
-    return spark.sql(_ndcg_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -308,9 +303,10 @@ FROM xy
 """
 
 
-@register(
+register_sql(
     "price_elasticity_ols",
-    oracle=_elasticity_sql(DUCKDB, "lineitem"),
+    _elasticity_sql,
+    ("lineitem",),
     doc="Price elasticity of demand: log-log OLS over the 11 aggregated "
     "discount levels (x = ln avg effective unit price, y = ln avg "
     "quantity per line) via REGR_SLOPE/INTERCEPT/R2 — one fact scan to "
@@ -318,9 +314,6 @@ FROM xy
     "floor-quantized to 1e-6 (zipf contract).",
     tags=("evaluation", "stats", "agg"),
 )
-def price_elasticity_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = table_view(spark, sf_dir, "lineitem")
-    return spark.sql(_elasticity_sql(SPARK, lineitem))
 
 
 # --------------------------------------------------------------------------
@@ -341,7 +334,7 @@ def _adf_sql(d: Dialect, orders: str) -> str:
     the closed-form b_hat / rss / se are the only doubles."""
     return f"""
 WITH daily AS (
-  SELECT CAST({_EPOCH_DIFF[d.name]} AS BIGINT) AS day_x,
+  SELECT CAST({d.epoch_day('o_orderdate')} AS BIGINT) AS day_x,
          CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
               AS BIGINT) AS cents
   FROM {orders} GROUP BY 1
@@ -387,9 +380,10 @@ FROM fit
 """
 
 
-@register(
+register_sql(
     "adf_stationarity_audit",
-    oracle=_adf_sql(DUCKDB, "orders"),
+    _adf_sql,
+    ("orders",),
     doc="Dickey-Fuller stationarity test of daily revenue: day-over-day "
     "change regressed on the lagged level, lag via an exact "
     "day_x = day_x + 1 self-join on the aggregated day axis (no window, "
@@ -399,9 +393,6 @@ FROM fit
     "forecast baseline.",
     tags=("evaluation", "stats", "temporal"),
 )
-def adf_stationarity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_adf_sql(SPARK, orders))
 
 
 # --------------------------------------------------------------------------
@@ -452,9 +443,10 @@ FROM agg
 """
 
 
-@register(
+register_sql(
     "spiegelhalter_calibration_z",
-    oracle=_spiegelhalter_sql(DUCKDB, "documents"),
+    _spiegelhalter_sql,
+    ("documents",),
     doc="Spiegelhalter's calibration Z-test of the logreg quality "
     "probability vs the lang='en' label: per-row (y-p)(1-2p) and "
     "(1-2p)^2 p(1-p) terms quantized to integer nano-units before the "
@@ -463,5 +455,3 @@ FROM agg
     "and the isotonic recalibrator.",
     tags=("evaluation", "stats", "text"),
 )
-def spiegelhalter_calibration_z(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_spiegelhalter_sql(SPARK, table_view(spark, sf_dir, "documents")))

@@ -14,7 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import register
+from ..functions.dialect import Dialect
+from ..registry import register, register_sql
 from ..sources.tables import load_table, table_view
 
 
@@ -56,7 +57,8 @@ def string_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PERCENTILES_SQL = """
+def _percentiles_sql(d: Dialect, orders: str) -> str:
+    return f"""
 SELECT o_orderpriority,
        CAST(ROUND(percentile_cont(0.5) WITHIN GROUP (ORDER BY o_totalprice), 6) AS DOUBLE) AS median_price,
        CAST(ROUND(percentile_cont(0.9) WITHIN GROUP (ORDER BY o_totalprice), 6) AS DOUBLE) AS p90_price,
@@ -68,18 +70,18 @@ ORDER BY o_orderpriority
 """
 
 
-@register(
+register_sql(
     "percentile_prices",
-    oracle=_PERCENTILES_SQL.format(orders="orders"),
+    _percentiles_sql,
+    ("orders",),
     doc="Ordered-set aggregates: exact linear-interpolation percentiles "
     "(median / p90) per group.",
     tags=("agg", "percentile"),
 )
-def percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_PERCENTILES_SQL.format(orders=table_view(spark, sf_dir, "orders")))
 
 
-_MOMENTS_ORACLE = """
+def _moments_sql(d: Dialect, lineitem: str) -> str:
+    return f"""
 WITH m AS (
   SELECT l_returnflag,
          COUNT(*) AS n,
@@ -88,7 +90,7 @@ WITH m AS (
          CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sxx,
          CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS syy,
          CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sxy
-  FROM lineitem GROUP BY l_returnflag
+  FROM {lineitem} GROUP BY l_returnflag
 )
 SELECT l_returnflag, n,
        CAST(ROUND(sqrt((sxx - sx*sx/n) / (n - 1)), 6) AS DOUBLE) AS qty_stddev,
@@ -97,17 +99,15 @@ FROM m ORDER BY l_returnflag
 """
 
 
-@register(
+register_sql(
     "moment_statistics",
-    oracle=_MOMENTS_ORACLE,
+    _moments_sql,
+    ("lineitem",),
     doc="stddev + Pearson correlation from EXACT decimal moment sums — "
     "order-independent (hash-stable) where built-in double stddev/corr "
     "aren't; still one partial-aggregable pass.",
     tags=("agg", "stats"),
 )
-def moment_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = table_view(spark, sf_dir, "lineitem")
-    return spark.sql(_MOMENTS_ORACLE.replace("FROM lineitem", f"FROM {lineitem}"))
 
 
 @register(
@@ -339,7 +339,8 @@ def set_ops_all_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("op")
 
 
-_SKETCH_AUDIT_SQL = """
+def _sketch_audit_sql(d: Dialect, table: str) -> str:
+    return f"""
 WITH agg AS (
   SELECT event_type,
          COUNT(DISTINCT user_id) AS n_exact,
@@ -353,9 +354,10 @@ FROM agg ORDER BY event_type
 """
 
 
-@register(
+register_sql(
     "sketch_cardinality_audit",
-    oracle=_SKETCH_AUDIT_SQL.format(table="events"),
+    _sketch_audit_sql,
+    ("events",),
     doc="HLL sketch audit: per-group approx_count_distinct next to the "
     "exact COUNT(DISTINCT), emitting the exact value plus a 3-sigma "
     "contract flag (15% = 3x the function's default 5% rsd — a 1-sigma "
@@ -367,24 +369,22 @@ FROM agg ORDER BY event_type
     "mergeable state, map-side partials, no distinct-expand shuffle.",
     tags=("agg", "sketch", "approx"),
 )
-def sketch_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(_SKETCH_AUDIT_SQL.format(table=events))
 
 
-def _sketch_quantile_sql(approx_fn: str) -> str:
+def _sketch_quantile_sql(d: Dialect, table: str) -> str:
     """Quantile-sketch audit: engine quantile sketch (Spark: approx_percentile
     / GK; DuckDB: approx_quantile / t-digest) next to the exact interpolated
     median, emitting the exact value and a within-5% contract flag — the
     same never-emit-the-sketch pattern as sketch_cardinality_audit.  At
     100 TB a quantile sketch is the only affordable percentile: fixed-size
     mergeable state instead of a per-group sort."""
+    approx_fn = "approx_percentile" if d.name == "spark" else "approx_quantile"
     return f"""
 WITH agg AS (
   SELECT o_orderpriority,
          CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY o_totalprice) AS DOUBLE) AS exact_p50,
          CAST({approx_fn}(o_totalprice, 0.5) AS DOUBLE) AS approx_p50
-  FROM {{table}} GROUP BY o_orderpriority
+  FROM {table} GROUP BY o_orderpriority
 )
 SELECT o_orderpriority,
        CAST(ROUND(exact_p50, 6) AS DOUBLE) AS exact_p50,
@@ -393,18 +393,16 @@ FROM agg ORDER BY o_orderpriority
 """
 
 
-@register(
+register_sql(
     "sketch_quantile_audit",
-    oracle=_sketch_quantile_sql("approx_quantile").format(table="orders"),
+    _sketch_quantile_sql,
+    ("orders",),
     doc="Quantile-sketch audit: approx median vs exact interpolated median "
     "per group with a within-5% contract flag; sketch values are engine-"
     "specific and never emitted — the contract is the checkable surface. "
     "Fixed-size mergeable sketch state replaces a per-group sort at scale.",
     tags=("agg", "sketch", "approx", "percentile"),
 )
-def sketch_quantile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_sketch_quantile_sql("approx_percentile").format(table=orders))
 
 
 @register(
@@ -550,7 +548,8 @@ def unpivot_flag_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_returnflag", "metric")
 
 
-_LATERAL_TOPK_SQL = """
+def _lateral_topk_sql(d: Dialect, customer: str, orders: str) -> str:
+    return f"""
 WITH sample_cust AS (
   SELECT c_custkey FROM {customer}
   WHERE c_mktsegment = 'BUILDING' AND c_custkey % 50 = 0
@@ -569,9 +568,10 @@ ORDER BY c.c_custkey, total_price DESC, o_orderkey
 """
 
 
-@register(
+register_sql(
     "lateral_topk_orders",
-    oracle=_LATERAL_TOPK_SQL.format(customer="customer", orders="orders"),
+    _lateral_topk_sql,
+    ("customer", "orders"),
     doc="Correlated LATERAL subquery with ORDER BY + LIMIT: top-2 orders "
     "per sampled customer expressed as a per-row subquery — the SQL:2016 "
     "lateral surface of the same semantics topk_orders_per_segment writes "
@@ -580,10 +580,6 @@ ORDER BY c.c_custkey, total_price DESC, o_orderkey
     "execution survives), so the per-row FORM costs nothing at scale.",
     tags=("relational", "subquery", "lateral"),
 )
-def lateral_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = table_view(spark, sf_dir, "customer")
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_LATERAL_TOPK_SQL.format(customer=customer, orders=orders))
 
 
 # --------------------------------------------------------------------------
@@ -602,18 +598,19 @@ def _hist_bound(k: str) -> str:
     return f"CAST(ROUND({mn} + {k} * ({mx} - {mn}) * {1 / HIST_BUCKETS}, 2) AS DOUBLE)"
 
 
-_HISTOGRAM_SQL = f"""
+def _histogram_sql(d: Dialect, orders: str) -> str:
+    return f"""
 WITH stats AS (
   SELECT CAST(MIN(o_totalprice) AS DOUBLE) AS mn,
          CAST(MAX(o_totalprice) AS DOUBLE) AS mx
-  FROM {{orders}}
+  FROM {orders}
 ),
 bucketed AS (
   SELECT CAST(LEAST(FLOOR((CAST(o_totalprice AS DOUBLE) - s.mn)
                           / NULLIF((s.mx - s.mn) / {HIST_BUCKETS}, 0)),
                     {HIST_BUCKETS - 1}) AS INT) AS bucket,
          s.mn, s.mx
-  FROM {{orders}} CROSS JOIN stats s
+  FROM {orders} CROSS JOIN stats s
 )
 SELECT bucket,
        {_hist_bound("bucket")} AS bucket_lo,
@@ -625,9 +622,10 @@ ORDER BY bucket
 """
 
 
-@register(
+register_sql(
     "price_histogram_equiwidth",
-    oracle=_HISTOGRAM_SQL.format(orders="orders"),
+    _histogram_sql,
+    ("orders",),
     doc=f"Equi-width histogram of order totals in {HIST_BUCKETS} buckets — "
     "the classic two-phase shape: an O(1) bounds aggregate broadcast into "
     "a single bucketing scan with map-side combinable counts; the "
@@ -636,9 +634,6 @@ ORDER BY bucket
     "bounds in exact DECIMAL, so both engines bucket and round identically.",
     tags=("agg", "stats", "two-phase"),
 )
-def price_histogram_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_HISTOGRAM_SQL.format(orders=orders))
 
 
 # --------------------------------------------------------------------------
@@ -707,7 +702,7 @@ def _prefix_col(frame: DataFrame, cols, col: str, sums: dict, out: str) -> DataF
     )
 
 
-def range_ranked(spark: SparkSession, df: DataFrame, cols: list[str]):
+def range_ranked(df: DataFrame, cols: list[str]):
     """Exact global 1-based rank over ``cols`` WITHOUT a single-partition
     sort — the distributed-ORDER-BY technique:
 
@@ -743,7 +738,7 @@ def range_ranked(spark: SparkSession, df: DataFrame, cols: list[str]):
     return ranked, n_total
 
 
-def range_prefix_summed(spark: SparkSession, df: DataFrame, cols: list[str], sum_col: str):
+def range_prefix_summed(df: DataFrame, cols: list[str], sum_col: str):
     """Exact EXCLUSIVE prefix sum of ``sum_col`` in ``cols`` order WITHOUT a
     single-partition sort — the summing sibling of :func:`range_ranked`:
 
@@ -768,7 +763,7 @@ def range_prefix_summed(spark: SparkSession, df: DataFrame, cols: list[str], sum
     return out, grand_total
 
 
-def range_prefix_summed_pair(spark: SparkSession, df: DataFrame, cols, sum_col: str, derive):
+def range_prefix_summed_pair(df: DataFrame, cols, sum_col: str, derive):
     """TWO chained exact exclusive prefix sums sharing ONE range
     partitioning (guide §2.4: two operations keyed the same way share one
     exchange).  Pass 1 is exactly :func:`range_prefix_summed`; ``derive``
@@ -853,7 +848,7 @@ def price_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole table to one task (VERDICT r5 'What's wrong' #1); the NTILE SQL
     remains the DuckDB oracle, so the exact semantics stay pinned."""
     orders = load_table(spark, sf_dir, "orders").select("o_totalprice", "o_orderkey")
-    ranked, n_total = range_ranked(spark, orders, ["o_totalprice", "o_orderkey"])
+    ranked, n_total = range_ranked(orders, ["o_totalprice", "o_orderkey"])
     if n_total == 0:
         return spark.createDataFrame(
             [], "bucket int, bucket_lo double, bucket_hi double, n_orders bigint"
@@ -944,7 +939,7 @@ def robust_price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_totalprice") * 100).cast("bigint").alias("v"),
         F.col("o_orderkey").alias("tiebreak"),
     )
-    ranked, n = range_ranked(spark, vals, ["v", "tiebreak"])
+    ranked, n = range_ranked(vals, ["v", "tiebreak"])
     if n == 0:
         return spark.createDataFrame(
             [],
@@ -961,7 +956,7 @@ def robust_price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     devs = vals.select(
         F.abs(2 * F.col("v") - F.lit(med2)).alias("v"), F.col("tiebreak")
     )
-    dranked, _ = range_ranked(spark, devs, ["v", "tiebreak"])
+    dranked, _ = range_ranked(devs, ["v", "tiebreak"])
     mad2 = _med2(dranked, n)
     return (
         devs.agg(
@@ -1133,7 +1128,7 @@ def join_cardinality_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 # join-key skew audit (the pre-flight check for salted_join / AQE skew hints)
 # ---------------------------------------------------------------------------
-def _join_skew_sql() -> str:
+def _join_skew_sql(d: Dialect, lineitem: str) -> str:
     """Shared-syntax SQL: how skewed is lineitem's join key?  The number
     that decides between a plain shuffle join, AQE skew splitting, and an
     explicit salted join (operators/scale.salted_join).  One per-key
@@ -1142,7 +1137,7 @@ def _join_skew_sql() -> str:
     skew mitigation decision needs.  Flag is integer arithmetic: hottest
     key > SKEW_FACTOR x the mean per-key count."""
     return f"""
-WITH kc AS (SELECT l_orderkey AS k, COUNT(*) AS n FROM {{lineitem}} GROUP BY l_orderkey),
+WITH kc AS (SELECT l_orderkey AS k, COUNT(*) AS n FROM {lineitem} GROUP BY l_orderkey),
 tot AS (SELECT SUM(n) AS n_rows, COUNT(*) AS n_keys, MAX(n) AS max_n FROM kc),
 topk AS (SELECT n FROM kc ORDER BY n DESC, k LIMIT 10),
 tops AS (SELECT SUM(n) AS top10_n FROM topk)
@@ -1157,18 +1152,16 @@ FROM tot t CROSS JOIN tops s
 """
 
 
-@register(
+register_sql(
     "join_key_skew_audit",
-    oracle=_join_skew_sql().format(lineitem="lineitem"),
+    _join_skew_sql,
+    ("lineitem",),
     doc=f"Join-key skew audit over lineitem.l_orderkey: hottest-key and "
     "top-10 share from one map-side-combinable per-key aggregate + a "
     "TakeOrdered — the pre-flight numbers that decide plain shuffle vs "
     f"AQE skew split vs salted_join (flag: hottest > {SKEW_FACTOR}x mean).",
     tags=("stats", "join", "audit"),
 )
-def join_key_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = table_view(spark, sf_dir, "lineitem")
-    return spark.sql(_join_skew_sql().format(lineitem=lineitem))
 
 
 # ---------------------------------------------------------------------------
@@ -1178,7 +1171,7 @@ ZO_BITS = 16  # bits per dimension after min-max normalization
 ZO_BUCKETS = 64  # files/row-groups the layout is split into
 
 
-def _zorder_sql(d) -> str:
+def _zorder_sql(d: Dialect, orders: str) -> str:
     """WHY multi-dimensional layout matters at 100 TB: min/max zone maps
     prune a scan only if the file's value RANGE for the filtered column is
     narrow.  Sorting by custkey makes custkey ranges narrow but leaves
@@ -1194,11 +1187,7 @@ def _zorder_sql(d) -> str:
     the z key); span fractions divide exact integers, ROUND(6).  One
     column-pruned scan per layout, each one aggregate — no shuffle beyond
     the two group-bys."""
-    from ..functions.dialect import DUCKDB as _DD
-    from ..functions.dialect import SPARK as _SS
-
-    dd = _SS if d == "spark" else _DD
-    if d == "spark":
+    if d.name == "spark":
         days = "unix_date(CAST(o_orderdate AS DATE))"
     else:
         days = "(CAST(o_orderdate AS DATE) - DATE '1970-01-01')"
@@ -1206,25 +1195,25 @@ def _zorder_sql(d) -> str:
     # z = Σ bit_i(a)·2^(2i) + bit_i(b)·2^(2i+1) — multiplication instead of
     # shiftleft keeps the expression engine-shared
     z_terms = " + ".join(
-        f"(({dd.shr('ca', i)}) & 1) * {1 << (2 * i)}"
-        f" + (({dd.shr('db', i)}) & 1) * {1 << (2 * i + 1)}"
+        f"(({d.shr('ca', i)}) & 1) * {1 << (2 * i)}"
+        f" + (({d.shr('db', i)}) & 1) * {1 << (2 * i + 1)}"
         for i in range(ZO_BITS)
     )
     zmax = 1 << (2 * ZO_BITS)
     return f"""
 WITH base AS (
-  SELECT o_custkey AS ck, {days} AS dd FROM {{orders}}
+  SELECT o_custkey AS ck, {days} AS dd FROM {orders}
 ),
 bounds AS (SELECT MIN(ck) AS c0, MAX(ck) AS c1, MIN(dd) AS d0, MAX(dd) AS d1 FROM base),
 norm AS (
-  SELECT {dd.idiv(f'(ck - c0) * {top}', '(c1 - c0 + 1)')} AS ca,
-         {dd.idiv(f'(dd - d0) * {top}', '(d1 - d0 + 1)')} AS db
+  SELECT {d.idiv(f'(ck - c0) * {top}', '(c1 - c0 + 1)')} AS ca,
+         {d.idiv(f'(dd - d0) * {top}', '(d1 - d0 + 1)')} AS db
   FROM base CROSS JOIN bounds
 ),
 keyed AS (
   SELECT ca, db,
-         {dd.idiv(f'({z_terms}) * {ZO_BUCKETS}', str(zmax))} AS z_bucket,
-         {dd.idiv(f'ca * {ZO_BUCKETS}', str(top + 1))} AS c_bucket
+         {d.idiv(f'({z_terms}) * {ZO_BUCKETS}', str(zmax))} AS z_bucket,
+         {d.idiv(f'ca * {ZO_BUCKETS}', str(top + 1))} AS c_bucket
   FROM norm
 ),
 zstats AS (
@@ -1246,9 +1235,10 @@ ORDER BY layout, bucket
 """
 
 
-@register(
+register_sql(
     "zorder_clustering_stats",
-    oracle=_zorder_sql("duckdb").format(orders="orders"),
+    _zorder_sql,
+    ("orders",),
     doc=f"Z-order layout audit: orders keyed by a {ZO_BITS}-bit-interleaved "
     "(custkey, orderdate) Morton code vs a single-column sort, "
     f"{ZO_BUCKETS} equal-width buckets each, per-bucket min-max span "
@@ -1258,9 +1248,6 @@ ORDER BY layout, bucket
     "layout.",
     tags=("stats", "layout", "pruning"),
 )
-def zorder_clustering_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_zorder_sql("spark").format(orders=orders))
 
 
 # ---------------------------------------------------------------------------
@@ -1271,7 +1258,7 @@ BF_WORDS = 66  # filter size M = 66 * 62 = 4092 bits
 BF_K = 3  # hash functions
 
 
-def _bloom_prune_sql(d) -> str:
+def _bloom_prune_sql(d: Dialect, customer: str, orders: str) -> str:
     """The runtime filter Spark builds for selective joins
     (spark.sql.optimizer.runtimeFilter.*), hand-derived so its pruning
     power and false-positive cost are AUDITED numbers instead of folklore:
@@ -1287,35 +1274,31 @@ def _bloom_prune_sql(d) -> str:
     explode touches distinct keys, never raw rows; membership is a LEFT
     join on word index + one mask test per coordinate.  Integer/bit
     arithmetic end-to-end, portable md5 positions."""
-    from ..functions.dialect import DUCKDB as _DD
-    from ..functions.dialect import SPARK as _SS
-
-    dd = _SS if d == "spark" else _DD
-    S = "STRING" if d == "spark" else "VARCHAR"
+    S = "STRING" if d.name == "spark" else "VARCHAR"
     M = BF_WORDS * BF_WORD_BITS
-    pos = dd.md5_prefix_int(f"('bf' || CAST(i AS {S}) || '|' || CAST(k AS {S}))")
-    one_shl = "shiftleft(CAST(1 AS BIGINT), bit)" if d == "spark" else "(CAST(1 AS BIGINT) << bit)"
+    pos = d.md5_prefix_int(f"('bf' || CAST(i AS {S}) || '|' || CAST(k AS {S}))")
+    one_shl = "shiftleft(CAST(1 AS BIGINT), bit)" if d.name == "spark" else "(CAST(1 AS BIGINT) << bit)"
 
     def coords(rel: str, alias: str) -> str:
-        if d == "spark":
+        if d.name == "spark":
             ex = f"SELECT k, i FROM {alias}_keys LATERAL VIEW explode(sequence(0, {BF_K - 1})) t AS i"
         else:
             ex = f"SELECT k, unnest(generate_series(0, {BF_K - 1})) AS i FROM {alias}_keys"
         return (
             f"{alias}_keys AS ({rel}),\n"
-            f"{alias}_co AS (SELECT k, {dd.idiv(f'(({pos}) % {M})', str(BF_WORD_BITS))} AS word, "
+            f"{alias}_co AS (SELECT k, {d.idiv(f'(({pos}) % {M})', str(BF_WORD_BITS))} AS word, "
             f"(({pos}) % {M}) % {BF_WORD_BITS} AS bit FROM ({ex}) e)"
         )
 
     build = coords(
-        "SELECT DISTINCT c_custkey AS k FROM {customer} WHERE c_mktsegment = 'BUILDING'", "b"
+        f"SELECT DISTINCT c_custkey AS k FROM {customer} WHERE c_mktsegment = 'BUILDING'", "b"
     )
-    probe = coords("SELECT o_custkey AS k FROM (SELECT DISTINCT o_custkey FROM {orders}) p", "p")
+    probe = coords(f"SELECT o_custkey AS k FROM (SELECT DISTINCT o_custkey FROM {orders}) p", "p")
     return f"""
 WITH {build},
 bloom AS (SELECT word, BIT_OR({one_shl}) AS bits FROM b_co GROUP BY word),
 {probe},
-probe_rows AS (SELECT o_custkey AS k, COUNT(*) AS n_rows FROM {{orders}} GROUP BY o_custkey),
+probe_rows AS (SELECT o_custkey AS k, COUNT(*) AS n_rows FROM {orders} GROUP BY o_custkey),
 checks AS (
   SELECT pc.k,
          SUM(CASE WHEN (COALESCE(bl.bits, 0) & {one_shl}) <> 0 THEN 1 ELSE 0 END) AS n_set
@@ -1341,9 +1324,10 @@ FROM verdicts
 """
 
 
-@register(
+register_sql(
     "bloom_semijoin_prune_audit",
-    oracle=_bloom_prune_sql("duckdb").format(customer="customer", orders="orders"),
+    _bloom_prune_sql,
+    ("customer", "orders"),
     doc=f"Bloom-filter semi-join pruning audit: a {BF_WORDS * BF_WORD_BITS}-bit"
     f" / {BF_K}-hash filter over the selective build side (BUILDING "
     "customers) built as a broadcastable BIT_OR word relation, every "
@@ -1353,10 +1337,6 @@ FROM verdicts
     "integer/bit arithmetic, portable md5 positions.",
     tags=("stats", "join", "pruning", "sketch"),
 )
-def bloom_semijoin_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = table_view(spark, sf_dir, "customer")
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_bloom_prune_sql("spark").format(customer=customer, orders=orders))
 
 
 # --------------------------------------------------------------------------
@@ -1416,7 +1396,7 @@ def quantile_transform_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    summed, n = range_prefix_summed(spark, g, ["v"], "c")
+    summed, n = range_prefix_summed(g, ["v"], "c")
     if summed is None:
         return spark.createDataFrame(
             [], "bucket int, n_rows bigint, share double, abs_dev double"
@@ -1504,7 +1484,7 @@ def weighted_median_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("flag", "v_cents")
         .agg(F.sum("qty").cast("bigint").alias("w"))
     )
-    summed, _ = range_prefix_summed(spark, g, ["flag", "v_cents"], "w")
+    summed, _ = range_prefix_summed(g, ["flag", "v_cents"], "w")
     if summed is None:
         return spark.createDataFrame(
             [],
@@ -1605,7 +1585,7 @@ def trimmed_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = load_table(spark, sf_dir, "orders").select(
         (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").alias("v")
     )
-    ranked, n = range_ranked(spark, v, ["v"])
+    ranked, n = range_ranked(v, ["v"])
     if ranked is None:
         return spark.createDataFrame(
             [],
@@ -1679,7 +1659,7 @@ def hll_cumulative_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     perday = days.join(perday, "day", "left").select(
         "day", F.coalesce("n_new", F.lit(0)).cast("bigint").alias("n_new")
     )
-    summed, _tot = range_prefix_summed(spark, perday, ["day"], "n_new")
+    summed, _tot = range_prefix_summed(perday, ["day"], "n_new")
     if summed is None:
         return spark.createDataFrame(
             [], "day string, new_users bigint, exact_cum_users bigint"

@@ -278,11 +278,8 @@ HRW_REMOVED = 7  # the shard whose removal the stability audit simulates
 
 
 def _hrw_register():
-    from pyspark.sql import SparkSession
-
-    from ..functions.dialect import DUCKDB, SPARK, Dialect
-    from ..registry import register
-    from ..sources.tables import table_view
+    from ..functions.dialect import Dialect
+    from ..registry import register_sql
 
     def _hrw_sql(d: Dialect, table: str) -> str:
         w = d.md5_prefix_int(
@@ -321,9 +318,10 @@ GROUP BY f.shard_full
 ORDER BY shard
 """
 
-    @register(
+    register_sql(
         "rendezvous_shard_stability",
-        oracle=_hrw_sql(DUCKDB, "documents"),
+        _hrw_sql,
+        ("documents",),
         doc=f"Rendezvous (highest-random-weight) shard assignment over "
         f"{HRW_SHARDS} shards with the REMOVAL-STABILITY audit that is "
         "HRW's whole point: reassigning after shard "
@@ -337,9 +335,6 @@ ORDER BY shard
         "routing.",
         tags=("scale", "sharding", "audit"),
     )
-    def rendezvous_shard_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = table_view(spark, sf_dir, "documents")
-        return spark.sql(_hrw_sql(SPARK, docs))
 
 
 _hrw_register()

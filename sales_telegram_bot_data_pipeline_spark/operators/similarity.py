@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
+from ..registry import register, register_sql
 from ..session import fixed_plan
 from ..sources.tables import load_table, table_view
 
@@ -330,17 +330,16 @@ ORDER BY vec_a, vec_b
 """
 
 
-@register(
+register_sql(
     "embedding_cosine_neardup",
-    oracle=_neardup_banded_sql(DUCKDB, "embeddings"),
+    _neardup_banded_sql,
+    ("embeddings",),
     doc="Embedding-cosine near-duplicate pairs over the FULL corpus via the "
     f"banded sign-bucket join ({N_BANDS}x{BAND_BITS}-bit) + exact cosine "
     f"refine (>= {NEARDUP_THRESHOLD}) — sub-quadratic candidate generation, "
     "the embedding-space member of the dedup family.",
     tags=("similarity", "dedup", "lsh"),
 )
-def embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_neardup_banded_sql(SPARK, table_view(spark, sf_dir, "embeddings")))
 
 
 def _neardup_pairs_view(spark: SparkSession, sf_dir: str) -> str:
@@ -735,16 +734,15 @@ ORDER BY vec_a, vec_b
 """
 
 
-@register(
+register_sql(
     "embedding_cosine_allpairs_small",
-    oracle=_pair_sim_sql(DUCKDB, "embeddings"),
+    _pair_sim_sql,
+    ("embeddings",),
     doc="Exactness BASELINE for the near-dup family: all-pairs cosine over "
     "a bounded 40-vector slice. Deliberately not the scale path — the "
     "general operator is embedding_cosine_neardup (banded).",
     tags=("similarity", "baseline"),
 )
-def embedding_cosine_allpairs_small(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_pair_sim_sql(SPARK, table_view(spark, sf_dir, "embeddings")))
 
 
 def _centroids_sql(d: Dialect, table: str) -> str:
@@ -793,17 +791,16 @@ ORDER BY d.label
 """
 
 
-@register(
+register_sql(
     "embedding_centroids",
-    oracle=_centroids_sql(DUCKDB, "embeddings"),
+    _centroids_sql,
+    ("embeddings",),
     doc="Per-label embedding centroids (the IVF training step as a "
     "first-class query): posexplode to (label, dim, value), partial-agg "
     "groupBy — whole vectors never shuffle; exact decimal sums + round(6) "
     "for cross-engine stability.",
     tags=("similarity", "agg"),
 )
-def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_centroids_sql(SPARK, table_view(spark, sf_dir, "embeddings")))
 
 
 # --------------------------------------------------------------------------
@@ -935,9 +932,10 @@ JOIN {table} c ON c.vec_id = cand.neighbor_id
     return _rank_window_sql(rerank)
 
 
-@register(
+register_sql(
     "knn_cosine_sq8",
-    oracle=_sq8_sql(DUCKDB, "embeddings"),
+    _sq8_sql,
+    ("embeddings",),
     doc=f"Scalar-quantized ANN: per-vector int8 codes (4x memory cut), "
     "exact-integer quantized cosine ranks candidates (two-stage top-k on "
     f"the Spark side), top-{SQ8_CAND} survivors rerank at full precision "
@@ -945,8 +943,6 @@ JOIN {table} c ON c.vec_id = cand.neighbor_id
     "never O(corpus).",
     tags=("similarity", "topk", "quantization"),
 )
-def knn_cosine_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_sq8_sql(SPARK, table_view(spark, sf_dir, "embeddings")))
 
 
 def standardize_embeddings_by_label_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1749,9 +1745,10 @@ ORDER BY dim
 """
 
 
-@register(
+register_sql(
     "matryoshka_recall_audit",
-    oracle=_mrl_sql(DUCKDB, "embeddings"),
+    _mrl_sql,
+    ("embeddings",),
     doc=f"Matryoshka truncation-recall audit: top-{TOP_K} by prefix-dim "
     f"cosine for dims {_MRL_DIMS} vs the full-dim exact top-{TOP_K} — the "
     "storage/recall tradeoff table for truncating an embedding column at "
@@ -1760,8 +1757,6 @@ ORDER BY dim
     "self-check (test-pinned).",
     tags=("similarity", "audit", "topk"),
 )
-def matryoshka_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_mrl_sql(SPARK, table_view(spark, sf_dir, "embeddings")))
 
 
 # --------------------------------------------------------------------------
@@ -1810,9 +1805,10 @@ ORDER BY rank
 """
 
 
-@register(
+register_sql(
     "mips_topk_audit",
-    oracle=_mips_sql(DUCKDB, "embeddings"),
+    _mips_sql,
+    ("embeddings",),
     doc=f"Maximum-inner-product top-{MIPS_K} (recommendation scoring: dot "
     "product, NOT cosine — magnitude matters) with a retrievability audit "
     "against the cosine-LSH index: each exact-MIP neighbor is flagged "
@@ -1824,8 +1820,6 @@ ORDER BY rank
     "index; the rank window is over the bounded top-k relation only.",
     tags=("similarity", "topk", "audit"),
 )
-def mips_topk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_mips_sql(SPARK, table_view(spark, sf_dir, "embeddings")))
 
 
 # --------------------------------------------------------------------------
@@ -1894,9 +1888,10 @@ FROM err
 """
 
 
-@register(
+register_sql(
     "sq8_quantization_error_audit",
-    oracle=_sq8_err_sql(DUCKDB, "embeddings"),
+    _sq8_err_sql,
+    ("embeddings",),
     doc="SQ8 quantization-accuracy audit: exact float cosine vs int8-code "
     "cosine over a deterministic md5 QUARTER of the banded LSH candidate "
     "pairs — mean/max abs error and the fraction within 0.01; the "
@@ -1908,5 +1903,3 @@ FROM err
     "minhash_estimate_error_audit / ivf_nprobe_tuning_audit.",
     tags=("similarity", "audit", "quantization"),
 )
-def sq8_quantization_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_sq8_err_sql(SPARK, table_view(spark, sf_dir, "embeddings")))

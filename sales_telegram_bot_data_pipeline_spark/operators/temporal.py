@@ -26,9 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.dialect import DUCKDB, SPARK
-from ..registry import register
-from ..sources.tables import load_table, table_view
+from ..functions.dialect import Dialect
+from ..registry import register, register_sql
+from ..sources.tables import load_table
 
 
 def _dec(col: str, prec: int = 18, scale: int = 2) -> F.Column:
@@ -618,21 +618,20 @@ ORDER BY t.event_type, s.day
 """
 
 
-@register(
+register_sql(
     "date_spine_gap_fill",
-    oracle=_gap_fill_sql(DUCKDB, "events"),
+    _gap_fill_sql,
+    ("events",),
     doc="Calendar gap filling: zero-filled daily counts per event_type via "
     "a generated date spine (O(range), never scanned) CROSS JOIN types, "
     "LEFT JOIN daily partial-aggregates — the report-table densification "
     "every time-series pipeline needs; spine side broadcasts.",
     tags=("temporal", "timeseries", "join"),
 )
-def date_spine_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(_gap_fill_sql(SPARK, events))
 
 
-_DAU_SQL = """
+def _dau_sql(d: Dialect, table: str) -> str:
+    return f"""
 WITH first_seen AS (
   SELECT user_id, MIN(CAST(ts AS DATE)) AS first_day FROM {table} GROUP BY user_id
 ),
@@ -653,9 +652,10 @@ ORDER BY d.day
 """
 
 
-@register(
+register_sql(
     "daily_active_cumulative_users",
-    oracle=_DAU_SQL.format(table="events"),
+    _dau_sql,
+    ("events",),
     doc="DAU + new users + cumulative registered users per day: first-seen "
     "day per user (one groupBy on the user key), daily distincts, and a "
     "running SUM over the DAY axis — the window is O(days), not O(events), "
@@ -663,9 +663,6 @@ ORDER BY d.day
     "corpus (cast BIGINT: DuckDB HUGEINT window-SUM trap).",
     tags=("temporal", "timeseries", "window"),
 )
-def daily_active_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(_DAU_SQL.format(table=events))
 
 
 # --------------------------------------------------------------------------
@@ -675,7 +672,7 @@ CADENCE_MIN_EVENTS = 5
 BURST_MEDIAN_S = 60  # median gap under a minute + regularity -> bot-like
 
 
-def _cadence_sql(d) -> str:
+def _cadence_sql(d: Dialect, table: str) -> str:
     """Per-user inter-arrival-time profile — the bot/automation heuristic
     every event pipeline runs: LAG the user's event times, aggregate the
     gaps to median / p90 / regularity (p90/median close to 1 means
@@ -713,7 +710,7 @@ def _cadence_sql(d) -> str:
 WITH gaps AS (
   SELECT user_id,
          {ep} - LAG({ep}) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_s
-  FROM {{table}}
+  FROM {table}
 ),
 agg AS (
   SELECT user_id, COUNT(*) AS n_gaps,
@@ -735,9 +732,10 @@ ORDER BY user_id
 """
 
 
-@register(
+register_sql(
     "user_cadence_profile",
-    oracle=_cadence_sql(DUCKDB).format(table="events"),
+    _cadence_sql,
+    ("events",),
     doc="Per-user inter-arrival cadence: LAG gaps (user-partitioned "
     "window), continuous median/p90 quantiles, regularity ratio, and a "
     "too-fast-too-regular bot flag. Gap DELTAS cancel session-timezone "
@@ -745,15 +743,13 @@ ORDER BY user_id
     "engines.",
     tags=("temporal", "window", "agg"),
 )
-def user_cadence_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(_cadence_sql(SPARK).format(table=events))
 
 
 # --------------------------------------------------------------------------
 # interval coalescing (union of validity windows per key)
 # --------------------------------------------------------------------------
-_COALESCE_SQL = """
+def _coalesce_sql(d: Dialect, table: str) -> str:
+    return f"""
 WITH iv AS (
   SELECT o_custkey AS custkey,
          o_orderdate AS v_from,
@@ -786,9 +782,10 @@ ORDER BY custkey, period_id
 """
 
 
-@register(
+register_sql(
     "validity_interval_coalesce",
-    oracle=_COALESCE_SQL.format(table="orders"),
+    _coalesce_sql,
+    ("orders",),
     doc="Interval-union coalescing: each order opens a [orderdate, +90d) "
     "validity window (the reference's op-46 window semantics); overlapping "
     "windows per customer merge into coverage periods via the running-max "
@@ -799,9 +796,6 @@ ORDER BY custkey, period_id
     "consistently. Pure date/integer arithmetic, engine-portable.",
     tags=("temporal", "window"),
 )
-def validity_interval_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table_view(spark, sf_dir, "orders")
-    return spark.sql(_COALESCE_SQL.format(table=orders))
 
 
 # --------------------------------------------------------------------------
@@ -812,7 +806,7 @@ SESSIONIZE_USER_MOD = 7  # sample 1-in-7 users: bounds output while the
 #                          windows still run the full per-user machinery
 
 
-def _session_events_ctes(d, with_event_type: bool = False) -> str:
+def _session_events_ctes(d: Dialect, table: str, with_event_type: bool = False) -> str:
     """ev/marked/sess CTE bodies shared by ``sessionize_gap_islands`` and
     ``session_conversion_rate``: per-event session_seq via the LAG-mark +
     running-SUM islands pattern.  ``with_event_type`` threads event_type
@@ -829,7 +823,7 @@ def _session_events_ctes(d, with_event_type: bool = False) -> str:
     et = ", event_type" if with_event_type else ""
     return f"""ev AS (
   SELECT user_id, event_id, ts{et}, {ep} AS ep
-  FROM {{table}}
+  FROM {table}
   WHERE user_id % {SESSIONIZE_USER_MOD} = 0
 ),
 marked AS (
@@ -848,7 +842,7 @@ sess AS (
 )"""
 
 
-def _sessionize_sql(d) -> str:
+def _sessionize_sql(d: Dialect, table: str) -> str:
     """Per-user gap-based sessionization of the raw event table — the
     batch form every analytics pipeline derives before funnel/retention
     work, and the batch twin of ``F.session_window`` (which emits window
@@ -867,7 +861,7 @@ def _sessionize_sql(d) -> str:
     engines — see _cadence_sql's engine notes); all arithmetic is integer
     seconds, so the output is cross-engine exact."""
     return f"""
-WITH {_session_events_ctes(d)}
+WITH {_session_events_ctes(d, table)}
 SELECT user_id,
        CAST(session_seq AS BIGINT) AS session_seq,
        CAST(MIN(ep) AS BIGINT) AS session_start_ep,
@@ -880,9 +874,10 @@ ORDER BY user_id, session_seq
 """
 
 
-@register(
+register_sql(
     "sessionize_gap_islands",
-    oracle=_sessionize_sql(DUCKDB).format(table="events"),
+    _sessionize_sql,
+    ("events",),
     doc=f"Batch gap-based sessionization ({SESSIONIZE_GAP_S}s silence "
     "opens a new session): LAG-mark + running-SUM islands over "
     "user-partitioned windows -> one session row per (user, seq) with "
@@ -890,15 +885,12 @@ ORDER BY user_id, session_seq
     "twin of F.session_window; integer-seconds arithmetic end-to-end.",
     tags=("temporal", "window", "session"),
 )
-def sessionize_gap_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(_sessionize_sql(SPARK).format(table=events))
 
 
 # --------------------------------------------------------------------------
 # in-session funnel conversion (the session TABLE earning its keep)
 # --------------------------------------------------------------------------
-def _session_conversion_sql(d) -> str:
+def _session_conversion_sql(d: Dialect, table: str) -> str:
     """The payoff of emitting a session TABLE instead of window bounds:
     funnel questions become one grouped aggregate over the session-tagged
     events — here, what fraction of sessions that contain a 'view'
@@ -911,7 +903,7 @@ def _session_conversion_sql(d) -> str:
     one extra per-(user, session) aggregate and an O(1) rollup — integer
     epochs end-to-end."""
     return f"""
-WITH {_session_events_ctes(d, with_event_type=True)},
+WITH {_session_events_ctes(d, table, with_event_type=True)},
 per_sess AS (
   SELECT user_id, session_seq,
          MIN(CASE WHEN event_type = 'view' THEN ep END) AS first_view_ep,
@@ -935,9 +927,10 @@ FROM per_sess
 """
 
 
-@register(
+register_sql(
     "session_conversion_rate",
-    oracle=_session_conversion_sql(DUCKDB).format(table="events"),
+    _session_conversion_sql,
+    ("events",),
     doc="In-session funnel conversion: fraction of sessions containing a "
     "'view' that reach a 'purchase' AFTER that view within the SAME "
     "session — attribution bounded by the visit, composed from the shared "
@@ -945,9 +938,6 @@ FROM per_sess
     "O(1) rollup. Integer epochs end-to-end.",
     tags=("temporal", "session", "funnel"),
 )
-def session_conversion_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(_session_conversion_sql(SPARK).format(table=events))
 
 
 # --------------------------------------------------------------------------
@@ -956,7 +946,7 @@ def session_conversion_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 DECAY_HALF_LIFE_DAYS = 30  # weight halves every 30 days of age
 
 
-def _freshness_decay_sql(d) -> str:
+def _freshness_decay_sql(d: Dialect, table: str) -> str:
     """Recency-weighted accounting per event_type: every event contributes
     weight 2^(-age_days / half_life), so a stream that stopped a quarter
     ago shows near-zero decayed mass next to a live one of equal raw
@@ -983,7 +973,7 @@ def _freshness_decay_sql(d) -> str:
         f") * 1000000, 0) AS BIGINT)"
     )
     return f"""
-WITH ev AS (SELECT event_type, {ep} AS ep FROM {{table}}),
+WITH ev AS (SELECT event_type, {ep} AS ep FROM {table}),
 mx AS (SELECT MAX(ep) AS m FROM ev),
 weighted AS (
   SELECT event_type, {w_micro} AS w_micro
@@ -999,9 +989,10 @@ ORDER BY event_type
 """
 
 
-@register(
+register_sql(
     "freshness_decay_profile",
-    oracle=_freshness_decay_sql(DUCKDB).format(table="events"),
+    _freshness_decay_sql,
+    ("events",),
     doc=f"Exponential-decay freshness profile: per event_type, each event "
     f"weighted 2^(-age_days/{DECAY_HALF_LIFE_DAYS}) from the corpus max "
     "epoch — the recency signal next to raw counts. Per-row weights "
@@ -1011,9 +1002,6 @@ ORDER BY event_type
     "subquery.",
     tags=("temporal", "decay", "agg"),
 )
-def freshness_decay_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(_freshness_decay_sql(SPARK).format(table=events))
 
 
 # --------------------------------------------------------------------------
@@ -1021,10 +1009,11 @@ def freshness_decay_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 SCD2_BUILD_USER_MOD = 50  # sampled key subset keeps output oracle-sized
 
-_SCD2_BUILD_SQL = f"""
+def _scd2_build_sql(d: Dialect, events: str) -> str:
+    return f"""
 WITH ev AS (
   SELECT user_id, ts, event_type, value, event_id
-  FROM {{events}} WHERE user_id % {SCD2_BUILD_USER_MOD} = 0
+  FROM {events} WHERE user_id % {SCD2_BUILD_USER_MOD} = 0
 ),
 hist AS (
   SELECT user_id, event_type, value AS state_value,
@@ -1039,9 +1028,10 @@ ORDER BY user_id, valid_from, event_type, event_id
 """
 
 
-@register(
+register_sql(
     "scd2_build_from_events",
-    oracle=_SCD2_BUILD_SQL.format(events="events"),
+    _scd2_build_sql,
+    ("events",),
     doc="SCD2 dimension RECONSTRUCTION from a raw change-log: each event "
     "opens a validity interval closed by the key's next event "
     "(LEAD over a per-key window — partitioned by user_id, never global), "
@@ -1053,9 +1043,6 @@ ORDER BY user_id, valid_from, event_type, event_id
     "with the same ts and event_type.",
     tags=("temporal", "scd2", "window"),
 )
-def scd2_build_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(_SCD2_BUILD_SQL.format(events=events))
 
 
 # --------------------------------------------------------------------------
@@ -1063,16 +1050,24 @@ def scd2_build_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 TWAP_USER_MOD = 20
 
-_TWAP_SQL = f"""
+def _twap_sql(d: Dialect, events: str) -> str:
+    if d.name == "spark":
+        # ts reads as TIMESTAMP_NTZ; the cast shifts both operands of the
+        # difference identically (UTC session), so durations are exact
+        epoch_us, epoch_close = "unix_micros(cast(", " as timestamp))"
+    else:
+        # epoch_us() returns BIGINT micros in DuckDB
+        epoch_us, epoch_close = "epoch_us(", ")"
+    return f"""
 WITH ev AS (
   SELECT user_id, ts, value, event_id
-  FROM {{events}} WHERE user_id % {TWAP_USER_MOD} = 0
+  FROM {events} WHERE user_id % {TWAP_USER_MOD} = 0
 ),
 iv AS (
   SELECT user_id,
          CAST(ROUND(value * 1000000) AS BIGINT) AS v6,
-         {{epoch_us}}LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id){{epoch_close}}
-           - {{epoch_us}}ts{{epoch_close}} AS dur_us
+         {epoch_us}LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id){epoch_close}
+           - {epoch_us}ts{epoch_close} AS dur_us
   FROM ev
 ),
 closed AS (SELECT * FROM iv WHERE dur_us IS NOT NULL)
@@ -1085,9 +1080,10 @@ FROM closed GROUP BY user_id ORDER BY user_id
 """
 
 
-@register(
+register_sql(
     "time_weighted_average_value",
-    oracle=_TWAP_SQL.format(events="events", epoch_us="epoch_us(", epoch_close=")"),  # noqa: E501 — epoch_us() returns BIGINT micros in DuckDB
+    _twap_sql,
+    ("events",),
     doc="Time-weighted average (TWAP) of each user's event value: every "
     "event opens a state interval closed by the key's next event (the "
     "scd2_build_from_events interval model); the average weights each "
@@ -1098,23 +1094,21 @@ FROM closed GROUP BY user_id ORDER BY user_id
     "partitioned window only.",
     tags=("temporal", "window", "agg"),
 )
-def time_weighted_average_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(
-        _TWAP_SQL.format(
-            events=events,
-            # ts reads as TIMESTAMP_NTZ; the cast shifts both operands of the
-            # difference identically (UTC session), so durations are exact
-            epoch_us="unix_micros(cast(",
-            epoch_close=" as timestamp))",
-        )
-    )
 
 
 # --------------------------------------------------------------------------
 # weekly growth accounting: new / retained / resurrected / churned
 # --------------------------------------------------------------------------
-_GROWTH_SQL = """
+def _growth_sql(d: Dialect, events: str) -> str:
+    # FLOOR (not `div`, which truncates toward zero) so a timestamp before
+    # the 2024-01-01 anchor lands in the same negative week in both engines
+    # (day -3 -> week -1, matching DuckDB floor-division)
+    if d.name == "spark":
+        days = "datediff(to_date(ts), to_date('2024-01-01'))"
+    else:
+        days = "datediff('day', DATE '2024-01-01', CAST(ts AS DATE))"
+    week = f"CAST(FLOOR({days} / 7.0) AS BIGINT)"
+    return f"""
 WITH wk AS (
   SELECT DISTINCT user_id, CAST({week} AS BIGINT) AS week FROM {events}
 ),
@@ -1144,13 +1138,10 @@ ORDER BY w.week
 """
 
 
-@register(
+register_sql(
     "growth_accounting_weekly",
-    oracle=_GROWTH_SQL.format(
-        week="CAST(FLOOR(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))"
-        " / 7.0) AS BIGINT)",
-        events="events",
-    ),
+    _growth_sql,
+    ("events",),
     doc="Weekly growth accounting: per week, active users split into new "
     "(first-ever week), retained (active previous week), resurrected "
     "(returning after a gap), plus churned-from-previous (last week's "
@@ -1162,18 +1153,6 @@ ORDER BY w.week
     "DuckDB — no truncate-vs-floor divergence.",
     tags=("temporal", "retention", "window"),
 )
-def growth_accounting_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(
-        _GROWTH_SQL.format(
-            # FLOOR (not `div`, which truncates toward zero) so a timestamp
-            # before the 2024-01-01 anchor lands in the same negative week in
-            # both engines (day -3 -> week -1, matching DuckDB floor-division).
-            week="CAST(FLOOR(datediff(to_date(ts), to_date('2024-01-01'))"
-            " / 7.0) AS BIGINT)",
-            events=events,
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1255,7 +1234,8 @@ def asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # multi-touch attribution credit over the view→purchase pairs
 # ---------------------------------------------------------------------------
-_MTA_SQL = """
+def _mta_sql(d: Dialect, events: str) -> str:
+    return f"""
 WITH v AS (
   SELECT event_id AS view_id, user_id, ts AS view_ts
   FROM {events} WHERE event_type = 'view'
@@ -1268,7 +1248,7 @@ pairs AS (
   SELECT p.purchase_id, v.view_id, v.view_ts
   FROM v JOIN p ON p.user_id = v.user_id
    AND p.purchase_ts >= v.view_ts
-   AND p.purchase_ts <= v.view_ts + INTERVAL {horizon} MINUTE
+   AND p.purchase_ts <= v.view_ts + INTERVAL {MTA_HORIZON_MIN} MINUTE
 ),
 ranked AS (
   SELECT purchase_id, view_id,
@@ -1304,11 +1284,10 @@ MTA_HORIZON_MIN = 24 * 60  # wider than the 1:1 interval join: multi-touch
 # conversion window a marketing report actually uses
 
 
-@register(
+register_sql(
     "multitouch_attribution_credit",
-    oracle=_MTA_SQL.format(events="events", horizon="{h}").format(
-        h=MTA_HORIZON_MIN
-    ),
+    _mta_sql,
+    ("events",),
     doc="Multi-touch attribution: every view within the purchase horizon "
     f"({MTA_HORIZON_MIN} min) "
     "(the day-scale widening of attribution_interval_join's pairs) gets "
@@ -1318,15 +1297,15 @@ MTA_HORIZON_MIN = 24 * 60  # wider than the 1:1 interval join: multi-touch
     "twin of the interval join: who gets paid, not just who matched.",
     tags=("temporal", "attribution", "window"),
 )
-def multitouch_attribution_credit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(_MTA_SQL.format(events=events, horizon=MTA_HORIZON_MIN))
 
 
 # ---------------------------------------------------------------------------
 # day-of-week x hour activity heatmap (timezone-free integer arithmetic)
 # ---------------------------------------------------------------------------
-_HEATMAP_SQL = """
+def _heatmap_sql(d: Dialect, events: str) -> str:
+    daynum = d.epoch_day("ts")
+    hour = "hour(ts)" if d.name == "spark" else "EXTRACT(hour FROM ts)"
+    return f"""
 WITH cells AS (
   SELECT CAST(({daynum} % 7 + 3) % 7 AS INT) AS dow,
          CAST({hour} AS INT) AS hour_of_day,
@@ -1347,13 +1326,10 @@ ORDER BY dow, hour_of_day
 """
 
 
-@register(
+register_sql(
     "activity_heatmap_dow_hour",
-    oracle=_HEATMAP_SQL.format(
-        daynum="datediff('day', DATE '1970-01-01', CAST(ts AS DATE))",
-        hour="EXTRACT(hour FROM ts)",
-        events="events",
-    ),
+    _heatmap_sql,
+    ("events",),
     doc="Day-of-week x hour activity heatmap: event counts and global "
     "share per (dow, hour) cell — the seasonality fingerprint behind "
     "cron-shaped ingest anomalies.  Weekday from pure epoch-day integer "
@@ -1362,15 +1338,6 @@ ORDER BY dow, hour_of_day
     "function; one map-combinable aggregate over a 168-cell domain.",
     tags=("temporal", "timeseries", "agg"),
 )
-def activity_heatmap_dow_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = table_view(spark, sf_dir, "events")
-    return spark.sql(
-        _HEATMAP_SQL.format(
-            daynum="datediff(to_date(ts), to_date('1970-01-01'))",
-            hour="hour(ts)",
-            events=events,
-        )
-    )
 
 
 # --------------------------------------------------------------------------

@@ -20,7 +20,7 @@ from ..functions.text import (
     stopword_ratio_sql,
     token_count_sql,
 )
-from ..registry import register
+from ..registry import register, register_sql
 from ..sources.tables import table_view
 
 
@@ -41,16 +41,15 @@ def _norm_query_sql(d: Dialect, table: str) -> str:
     )
 
 
-@register(
+register_sql(
     "preprocess_text_normalize",
-    oracle=_norm_query_sql(DUCKDB, "documents"),
+    _norm_query_sql,
+    ("documents",),
     doc="Reference op 15 preprocess_text: delete tab/newline/pipe, NBSP→space, "
     "lower, fold Czech diacritics, non-ASCII→space — native expressions over "
     "dirtied document text ('Smetanový\\tjogurt | …' prefix exercises every rule).",
     tags=("text", "scalar"),
 )
-def preprocess_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_norm_query_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 def _lang_query_sql(d: Dialect, table: str) -> str:
@@ -62,15 +61,14 @@ def _lang_query_sql(d: Dialect, table: str) -> str:
     )
 
 
-@register(
+register_sql(
     "lang_id_heuristic",
-    oracle=_lang_query_sql(DUCKDB, "documents"),
+    _lang_query_sql,
+    ("documents",),
     doc="Language-ID heuristic: English-stopword density over tokens; "
     "row-parallel, no shuffle.",
     tags=("text",),
 )
-def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_lang_query_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 def _quality_query_sql(d: Dialect, table: str) -> str:
@@ -79,15 +77,14 @@ def _quality_query_sql(d: Dialect, table: str) -> str:
     return f"SELECT doc_id, {cols} FROM {table} ORDER BY doc_id"
 
 
-@register(
+register_sql(
     "text_quality_stats",
-    oracle=_quality_query_sql(DUCKDB, "documents"),
+    _quality_query_sql,
+    ("documents",),
     doc="Quality scoring: token count, avg token length, type-token ratio, "
     "stopword ratio, punctuation count per document.",
     tags=("text",),
 )
-def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_quality_query_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 def _tokcount_query_sql(d: Dialect, table: str) -> str:
@@ -98,15 +95,14 @@ def _tokcount_query_sql(d: Dialect, table: str) -> str:
     )
 
 
-@register(
+register_sql(
     "token_count",
-    oracle=_tokcount_query_sql(DUCKDB, "documents"),
+    _tokcount_query_sql,
+    ("documents",),
     doc="Token counting: whitespace tokens + BPE-ish regex pieces "
     "(word chars / isolated punctuation).",
     tags=("text",),
 )
-def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_tokcount_query_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 def _fp_query_sql(d: Dialect, table: str) -> str:
@@ -115,15 +111,14 @@ def _fp_query_sql(d: Dialect, table: str) -> str:
     return f"SELECT doc_id, {cols} FROM {table} ORDER BY doc_id"
 
 
-@register(
+register_sql(
     "doc_fingerprint",
-    oracle=_fp_query_sql(DUCKDB, "documents"),
+    _fp_query_sql,
+    ("documents",),
     doc="Document fingerprinting: md5 of canonicalized text + portable "
     "60-bit integer prefix (identical across engines).",
     tags=("text", "hash"),
 )
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_fp_query_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -171,17 +166,16 @@ ORDER BY p.doc_id
 """
 
 
-@register(
+register_sql(
     "vocab_coverage_score",
-    oracle=_vocab_coverage_sql(DUCKDB, "documents"),
+    _vocab_coverage_sql,
+    ("documents",),
     doc=f"Vocabulary-coverage quality score: corpus top-{VOCAB_TOP_K} vocab "
     "(deterministic frequency+lexicographic TakeOrdered) broadcast-joined "
     "against token instances, per-doc covered fraction via integer half-up "
     "ratio — the two-phase train-then-score shape.",
     tags=("text", "quality", "two-phase"),
 )
-def vocab_coverage_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_vocab_coverage_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -218,17 +212,16 @@ ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "lexical_diversity",
-    oracle=_lexical_diversity_sql(DUCKDB, "documents"),
+    _lexical_diversity_sql,
+    ("documents",),
     doc="Per-doc lexical diversity: type/token ratio, hapax fraction, "
     "unigram Shannon entropy via the one-pass ln(n) - sum(c ln c)/n "
     "identity — the low-entropy/low-diversity gate next to the repetition "
     "metrics; only shuffle key is doc_id, partial agg applies.",
     tags=("text", "quality"),
 )
-def lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_lexical_diversity_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -287,17 +280,16 @@ LIMIT {PMI_TOP_K}
 """
 
 
-@register(
+register_sql(
     "collocation_pmi",
-    oracle=_pmi_sql(DUCKDB, "documents"),
+    _pmi_sql,
+    ("documents",),
     doc=f"PMI collocation mining (Church & Hanks): adjacent-bigram counts "
     "in ONE corpus explode, unigram margins derived from the same bigram "
     f"relation (broadcast join-back), top-{PMI_TOP_K} pairs with count >= "
     f"{PMI_MIN_COUNT} by FLOOR-quantized PMI, TakeOrdered.",
     tags=("text", "agg", "retrieval"),
 )
-def collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_pmi_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -376,9 +368,10 @@ ORDER BY t.doc_id
 """
 
 
-@register(
+register_sql(
     "boilerplate_segment_removal",
-    oracle=_boilerplate_sql(DUCKDB, "documents"),
+    _boilerplate_sql,
+    ("documents",),
     doc=f"Corpus-frequency boilerplate removal: {BOILER_SEG_TOKENS}-token "
     f"segments appearing in > {BOILER_DF_CAP} distinct docs are dropped "
     "from every doc (doc kept, order preserved) — the between-doc "
@@ -387,8 +380,6 @@ ORDER BY t.doc_id
     "aggregate, equi-join drop, per-doc bounded reassembly.",
     tags=("text", "curation", "dedup"),
 )
-def boilerplate_segment_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_boilerplate_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -448,9 +439,10 @@ ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "gopher_quality_gate",
-    oracle=_gopher_sql(DUCKDB, "documents"),
+    _gopher_sql,
+    ("documents",),
     doc="Gopher quality heuristics (Rae et al. 2021 Table A1) as one "
     "projection: word-count and mean-word-length bounds, symbol-to-word "
     "ratio, alphabetic-word fraction, minimum stop-word hits, and the "
@@ -459,8 +451,6 @@ ORDER BY doc_id
     "Deterministic dirt on doc_id % 13 exercises the symbol/alpha rules.",
     tags=("text", "quality", "curation"),
 )
-def gopher_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_gopher_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -495,9 +485,10 @@ FROM scored GROUP BY source ORDER BY source
 """
 
 
-@register(
+register_sql(
     "readability_score",
-    oracle=_readability_sql(DUCKDB, "documents"),
+    _readability_sql,
+    ("documents",),
     doc="Flesch-style readability per source: vowel-group syllable proxy, "
     "whitespace words, terminal-punctuation sentences (floor 1) — the "
     "classic text-quality gate next to gopher_quality_gate's ratio "
@@ -506,8 +497,6 @@ FROM scored GROUP BY source ORDER BY source
     "order-independent integer sums.",
     tags=("text", "quality", "agg"),
 )
-def readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_readability_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -653,9 +642,10 @@ ORDER BY p.source
 """
 
 
-@register(
+register_sql(
     "vocab_novelty_by_source",
-    oracle=_vocab_novelty_sql(DUCKDB, "documents"),
+    _vocab_novelty_sql,
+    ("documents",),
     doc="Vocabulary-novelty curve by source (acquisition order = source "
     "name): each word type attributes to its MIN source, per-source "
     "new-type counts and novelty rate, cumulative vocabulary via a "
@@ -666,8 +656,6 @@ ORDER BY p.source
     "everything.",
     tags=("text", "curation", "agg"),
 )
-def vocab_novelty_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_vocab_novelty_sql(SPARK, table_view(spark, sf_dir, "documents")))
 
 
 # --------------------------------------------------------------------------
@@ -740,7 +728,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"(SELECT {w} AS ws FROM {view}) s LATERAL VIEW explode(ws) t AS w "
         f"GROUP BY w"
     ).withColumn("neg", -F.col("cnt"))
-    ranked, _n = range_ranked(spark, vocab, ["neg", "w"])
+    ranked, _n = range_ranked(vocab, ["neg", "w"])
     if ranked is None:
         return spark.createDataFrame(
             [],

@@ -35,7 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import register
+from ..functions.dialect import Dialect
+from ..registry import register, register_sql
 from ..sources.tables import load_table, table_view
 
 
@@ -255,7 +256,8 @@ def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
 # integer arithmetic in both engines — no decimal AVG/precision rule can
 # flip a boundary part.
 # ---------------------------------------------------------------------------
-_Q11_SQL = """
+def _q11_sql(d: Dialect, lineitem: str, supplier: str, nation: str) -> str:
+    return f"""
 WITH part_value AS (
   SELECT l.l_partkey AS partkey,
          SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(12,2))
@@ -273,18 +275,16 @@ ORDER BY part_value DESC, partkey
 """
 
 
-@register(
+register_sql(
     "q11_important_part_value",
-    oracle=_Q11_SQL.format(lineitem="lineitem", supplier="supplier", nation="nation"),
+    _q11_sql,
+    ("lineitem", "supplier", "nation"),
     doc="TPC-H Q11 shape: per-part value vs a scalar-subquery fraction of "
     "the grand total over the SAME derived relation (planned as one "
     "aggregate reused twice + broadcast scalar); integer-unit compare "
     "(vu*1000 > total) keeps the threshold exact cross-engine.",
     tags=("relational", "subquery", "tpch"),
 )
-def q11_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = {t: table_view(spark, sf_dir, t) for t in ("lineitem", "supplier", "nation")}
-    return spark.sql(_Q11_SQL.format(**v))
 
 
 # ---------------------------------------------------------------------------
@@ -331,7 +331,8 @@ def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFra
 # Q15 — top supplier (scalar MAX over a derived revenue view; exact-decimal
 # equality keeps "ties all returned" deterministic cross-engine).
 # ---------------------------------------------------------------------------
-_Q15_SQL = """
+def _q15_sql(d: Dialect, lineitem: str, supplier: str) -> str:
+    return f"""
 WITH revenue AS (
   SELECT l_suppkey AS supplier_no,
          SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(8,2)))) AS total_revenue
@@ -346,17 +347,15 @@ ORDER BY s.s_suppkey
 """
 
 
-@register(
+register_sql(
     "q15_top_revenue_supplier",
-    oracle=_Q15_SQL.format(lineitem="lineitem", supplier="supplier"),
+    _q15_sql,
+    ("lineitem", "supplier"),
     doc="TPC-H Q15 shape: quarterly revenue view, suppliers whose revenue "
     "equals the scalar MAX over that view (view computed once, scalar "
     "broadcast back); exact-decimal equality so ties are engine-stable.",
     tags=("relational", "subquery", "tpch"),
 )
-def q15_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = {t: table_view(spark, sf_dir, t) for t in ("lineitem", "supplier")}
-    return spark.sql(_Q15_SQL.format(**v))
 
 
 # ---------------------------------------------------------------------------
@@ -364,7 +363,8 @@ def q15_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # integral by construction, so 0.2*AVG is identical IEEE math in both
 # engines (exact integer sum / exact count).
 # ---------------------------------------------------------------------------
-_Q17_SQL = """
+def _q17_sql(d: Dialect, lineitem: str, part: str) -> str:
+    return f"""
 SELECT CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2))) / 7.0, 6) AS DOUBLE) AS avg_yearly
 FROM {lineitem} l JOIN {part} p ON p.p_partkey = l.l_partkey
 WHERE p.p_brand = 'Brand#13' AND p.p_type = 'MEDIUM'
@@ -374,17 +374,15 @@ WHERE p.p_brand = 'Brand#13' AND p.p_type = 'MEDIUM'
 """
 
 
-@register(
+register_sql(
     "q17_small_quantity_revenue",
-    oracle=_Q17_SQL.format(lineitem="lineitem", part="part"),
+    _q17_sql,
+    ("lineitem", "part"),
     doc="TPC-H Q17 shape: correlated scalar AVG per part (decorrelated to "
     "a per-part aggregate + join — the fact table is scanned twice but "
     "never re-scanned per row), single-row global answer.",
     tags=("relational", "subquery", "tpch"),
 )
-def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = {t: table_view(spark, sf_dir, t) for t in ("lineitem", "part")}
-    return spark.sql(_Q17_SQL.format(**v))
 
 
 # ---------------------------------------------------------------------------
@@ -563,7 +561,8 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # decimal via multiply-through (bal * n > total), so no decimal-AVG
 # precision rule can flip a boundary customer.
 # ---------------------------------------------------------------------------
-_Q22_SQL = """
+def _q22_sql(d: Dialect, customer: str, orders: str) -> str:
+    return f"""
 WITH pos AS (
   SELECT SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS tot, COUNT(*) AS n
   FROM {customer} WHERE c_acctbal > 0.0
@@ -580,9 +579,10 @@ ORDER BY cntrycode
 """
 
 
-@register(
+register_sql(
     "q22_dormant_high_balance",
-    oracle=_Q22_SQL.format(customer="customer", orders="orders"),
+    _q22_sql,
+    ("customer", "orders"),
     doc="TPC-H Q22 shape: customers above the positive-balance average "
     "(scalar subquery, broadcast one-row CROSS JOIN) with no orders in "
     "the recent window (NOT EXISTS anti join on a filtered orders scan), "
@@ -590,6 +590,3 @@ ORDER BY cntrycode
     "multiply-through in exact decimal.",
     tags=("relational", "anti-join", "tpch"),
 )
-def q22_dormant_high_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = {t: table_view(spark, sf_dir, t) for t in ("customer", "orders")}
-    return spark.sql(_Q22_SQL.format(**v))

@@ -16,6 +16,16 @@ Hash-stability rules used throughout the suite:
 - array-valued results are sorted and joined to strings;
 - portable 60-bit hashes use ``conv(substr(md5(x),1,15),16,10)`` (Spark) ≡
   ``('0x'||substr(md5(x),1,15))::bigint`` (DuckDB) — verified identical.
+
+Two ways to register:
+- ``register_sql(name, build, tables, ...)`` when the Spark side IS the
+  oracle's template: ``build(dialect, *relations)`` renders one statement,
+  the oracle is ``build(DUCKDB, *tables)`` and Spark runs
+  ``build(SPARK, ...)`` over this session's ``table_view``s of the same
+  tables.  Such a query has no hand-written Spark function.
+- ``@register`` when the Spark side really differs from the oracle text:
+  build-time checkpoints, ``materialize_once``, stored session views,
+  DataFrame-API forms, Python stages and streaming.
 """
 
 from __future__ import annotations
@@ -24,6 +34,9 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .functions.dialect import DUCKDB, SPARK
+from .sources.tables import table_view
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -123,3 +136,20 @@ def register(name: str, oracle: str | None = None, doc: str = "", tags: tuple[st
         return fn
 
     return deco
+
+
+def register_sql(
+    name: str,
+    build: Callable[..., str],
+    tables: tuple[str, ...],
+    doc: str = "",
+    tags: tuple[str, ...] = (),
+) -> None:
+    """Register a query whose Spark side is its oracle's own template:
+    ``build(DUCKDB, *tables)`` is the oracle, and Spark runs
+    ``build(SPARK, ...)`` over this session's views of the same tables."""
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return spark.sql(build(SPARK, *(table_view(spark, sf_dir, t) for t in tables)))
+
+    register(name, oracle=build(DUCKDB, *tables), doc=doc, tags=tags)(fn)

@@ -13,12 +13,11 @@ from pyspark.sql import functions as F
 from sales_telegram_bot_data_pipeline_spark.operators.analytics import (
     K_ANON_THRESHOLD,
     association_rules_lift,
-    chi_squared_independence,
-    k_anonymity_audit,
     rfm_segmentation,
     spearman_rank_correlation,
 )
 from sales_telegram_bot_data_pipeline_spark.operators.scalars_extra import range_prefix_summed
+from sales_telegram_bot_data_pipeline_spark.queries import REGISTRY
 from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
@@ -56,7 +55,7 @@ def test_rfm_quintiles_balanced_and_complete(spark):
 
 
 def test_chi2_marginals_consistent(spark):
-    rows = chi_squared_independence(spark, SF_SMOKE).collect()
+    rows = REGISTRY["chi_squared_independence"].fn(spark, SF_SMOKE).collect()
     n_events = load_table(spark, SF_SMOKE, "events").count()
     assert sum(r.n_obs for r in rows) == n_events
     # expected counts under independence also total N (cells cover all obs)
@@ -95,7 +94,7 @@ def test_range_prefix_sum_matches_serial(spark):
     df = spark.range(1000).select(
         F.col("id").alias("v"), (F.pmod(F.col("id") * 2654435761, F.lit(97)) + 1).alias("c")
     )
-    out, total = range_prefix_summed(spark, df, ["v"], "c")
+    out, total = range_prefix_summed(df, ["v"], "c")
     got = {r["v"]: r["cum_before"] for r in out.collect()}
     rows = sorted((r["v"], r["c"]) for r in df.collect())
     acc = 0
@@ -123,7 +122,7 @@ def test_range_prefix_pair_null_partition_sums(spark):
             "c2", F.when(F.col("v") >= 90, F.lit(2)).otherwise(F.lit(None))
         ), "c2"
 
-    out, total = range_prefix_summed_pair(spark, df, ["v"], "c", derive)
+    out, total = range_prefix_summed_pair(df, ["v"], "c", derive)
     assert total == 100
     got = {r["v"]: r["cum_before2"] for r in out.collect()}
     for v in range(100):
@@ -142,7 +141,7 @@ def test_rank_ops_empty_input(spark, tmp_path):
 
 
 def test_k_anonymity_accounts_for_every_customer(spark):
-    rows = k_anonymity_audit(spark, SF_SMOKE).collect()
+    rows = REGISTRY["k_anonymity_audit"].fn(spark, SF_SMOKE).collect()
     n_cust = load_table(spark, SF_SMOKE, "customer").count()
     assert sum(r.n_customers for r in rows) == n_cust
     for r in rows:

@@ -61,6 +61,21 @@ def test_driver_window_is_all_oracle():
     assert tail_oracle_flags == sorted(tail_oracle_flags, reverse=True)
 
 
+def test_rotation_candidates_are_registered_outside_the_window():
+    """The next rotation's candidates must be real oracle-backed queries
+    that are not already in the driver window."""
+    from sales_telegram_bot_data_pipeline_spark.queries import (
+        _DRIVER_WINDOW,
+        _ROTATION_CANDIDATES,
+    )
+
+    assert len(set(_ROTATION_CANDIDATES)) == len(_ROTATION_CANDIDATES)
+    for name in _ROTATION_CANDIDATES:
+        assert name in q.REGISTRY, name
+        assert q.REGISTRY[name].oracle is not None, name
+        assert name not in _DRIVER_WINDOW, name
+
+
 def test_operators_md_counts_match_registry():
     """OPERATORS.md's headline registry counts must track the code (went
     stale in round 3's capstone commit)."""

@@ -7,17 +7,15 @@ from __future__ import annotations
 from sales_telegram_bot_data_pipeline_spark.operators.curation import (
     EN_RATE_PERMILLE,
     OTHER_RATE_PERMILLE,
-    dataset_hash_split,
-    quality_repetition,
-    stratified_sample,
 )
+from sales_telegram_bot_data_pipeline_spark.queries import REGISTRY
 from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table
 
 from conftest import SF_ORACLE
 
 
 def test_hash_split_total_and_bounded(spark):
-    rows = {r["split_name"]: r for r in dataset_hash_split(spark, SF_ORACLE).collect()}
+    rows = {r["split_name"]: r for r in REGISTRY["dataset_hash_split"].fn(spark, SF_ORACLE).collect()}
     assert set(rows) == {"train", "val", "test"}
     n_total = sum(r["n_docs"] for r in rows.values())
     assert n_total == load_table(spark, SF_ORACLE, "documents").count()
@@ -27,8 +25,8 @@ def test_hash_split_total_and_bounded(spark):
 
 
 def test_stratified_sample_deterministic_and_rate_ordered(spark):
-    a = stratified_sample(spark, SF_ORACLE).collect()
-    b = stratified_sample(spark, SF_ORACLE).collect()
+    a = REGISTRY["stratified_sample"].fn(spark, SF_ORACLE).collect()
+    b = REGISTRY["stratified_sample"].fn(spark, SF_ORACLE).collect()
     assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b]  # no RNG state
 
     docs = load_table(spark, SF_ORACLE, "documents")
@@ -43,7 +41,7 @@ def test_stratified_sample_deterministic_and_rate_ordered(spark):
 
 
 def test_repetition_fractions_bounded(spark):
-    rows = quality_repetition(spark, SF_ORACLE).collect()
+    rows = REGISTRY["quality_repetition"].fn(spark, SF_ORACLE).collect()
     assert rows, "documents table produced no repetition rows"
     for r in rows:
         assert 0 < r["top_word_frac"] <= 1
@@ -120,9 +118,7 @@ def test_chunking_boundaries_hand_fixture(spark):
 
 
 def test_pii_redaction_counts_and_scrub(spark):
-    from sales_telegram_bot_data_pipeline_spark.operators.curation import pii_redaction
-
-    rows = pii_redaction(spark, SF_ORACLE).collect()
+    rows = REGISTRY["pii_redaction"].fn(spark, SF_ORACLE).collect()
     assert rows
     for r in rows[:50]:
         # the injector appends exactly 2 emails, 1 phone, 1 ip per row
@@ -133,10 +129,9 @@ def test_pii_redaction_counts_and_scrub(spark):
 
 
 def test_embedding_centroids_shape(spark):
-    from sales_telegram_bot_data_pipeline_spark.operators.similarity import embedding_centroids
     from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table
 
-    rows = embedding_centroids(spark, SF_ORACLE).collect()
+    rows = REGISTRY["embedding_centroids"].fn(spark, SF_ORACLE).collect()
     emb = load_table(spark, SF_ORACLE, "embeddings")
     assert len(rows) == emb.select("label").distinct().count()
     assert sum(r["n_vectors"] for r in rows) == emb.count()
@@ -156,14 +151,13 @@ def test_sequence_packing_shard_count_derives_from_corpus(spark):
 
     from sales_telegram_bot_data_pipeline_spark.operators.curation import (
         PACK_TARGET_DOCS_PER_SHARD,
-        sequence_packing,
     )
     from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table
 
     sf = "/root/testdata/sf0.01"
     n_docs = load_table(spark, sf, "documents").count()
     want = max(1, math.ceil(n_docs / PACK_TARGET_DOCS_PER_SHARD))
-    shards = {r["shard"] for r in sequence_packing(spark, sf).select("shard").distinct().collect()}
+    shards = {r["shard"] for r in REGISTRY["sequence_packing"].fn(spark, sf).select("shard").distinct().collect()}
     assert shards == set(range(want))
 
 
@@ -238,10 +232,11 @@ def test_table_checksum_invariant_under_repartitioning(spark):
         from sales_telegram_bot_data_pipeline_spark.functions.dialect import SPARK as _S
         from sales_telegram_bot_data_pipeline_spark.operators.curation import _checksum_sql
 
-        sql = _checksum_sql(_S).format(
-            lineitem="sales_telegram_bot_data_pipeline_cksum_lineitem",
-            orders="sales_telegram_bot_data_pipeline_cksum_orders",
-            customer="sales_telegram_bot_data_pipeline_cksum_customer",
+        sql = _checksum_sql(
+            _S,
+            "sales_telegram_bot_data_pipeline_cksum_lineitem",
+            "sales_telegram_bot_data_pipeline_cksum_orders",
+            "sales_telegram_bot_data_pipeline_cksum_customer",
         )
         return sorted(map(tuple, spark.sql(sql).collect()))
 

@@ -327,25 +327,61 @@ def test_out_of_window_queries_no_global_window(spark, name):
     assert not bad, f"{name} plans unpartitioned windows: {bad}"
 
 
-def test_registry_wide_no_unbounded_global_window(spark):
+def _formatted_plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+def _wide_decimals(schema, plan: str) -> list[str]:
+    """Decimals of precision > 18 anywhere in a final schema (top-level or
+    nested)."""
+    from pyspark.sql.types import ArrayType, DecimalType, MapType, StructType
+
+    def _walk(dt, path):
+        if isinstance(dt, DecimalType) and dt.precision > 18:
+            yield f"{path}: {dt}"
+        elif isinstance(dt, StructType):
+            for f in dt.fields:
+                yield from _walk(f.dataType, f"{path}.{f.name}")
+        elif isinstance(dt, ArrayType):
+            yield from _walk(dt.elementType, f"{path}[]")
+        elif isinstance(dt, MapType):
+            yield from _walk(dt.valueType, f"{path}{{v}}")
+
+    return [h for f in schema.fields for h in _walk(f.dataType, f.name)]
+
+
+def _cartesian_products(schema, plan: str) -> int:
+    return len(re.findall(r"^\(\d+\) CartesianProduct", plan, re.M))
+
+
+def _global_windows(schema, plan: str) -> list[str]:
+    return _unpartitioned_windows(plan)
+
+
+@pytest.fixture(scope="session")
+def registry_plans(spark) -> dict:
+    """(final schema, pre-collect formatted plan) of every registered query,
+    built once at SF_SMOKE for the registry-wide sweeps below.  Plan-only:
+    the window partition spec, the join strategy and the projection types
+    are all fixed before execution."""
+    built = {}
+    for name in sorted(q.REGISTRY):
+        df = q.REGISTRY[name].fn(spark, SF_SMOKE)
+        built[name] = (df.schema, _formatted_plan(df))
+    return built
+
+
+def test_registry_wide_no_unbounded_global_window(registry_plans):
     """VERDICT r6 task 3: sweep EVERY registered query's plan for
     unpartitioned Window nodes — a new global sort/rank/NTILE over an
     unbounded relation cannot land anywhere in the registry without either
     partitioning the window or adding an allowlist entry that names its
-    bound.  Plan-only (no collect): the window partition spec is fixed at
-    planning time, so executing the query adds nothing here and would turn
-    this into a second full-registry correctness sweep."""
-    offenders: dict[str, list[str]] = {}
-    for name in sorted(q.REGISTRY):
-        if name in _UNPARTITIONED_WINDOW_OK:
-            continue
-        df = q.REGISTRY[name].fn(spark, SF_SMOKE)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        bad = _unpartitioned_windows(plan)
-        if bad:
-            offenders[name] = bad
+    bound."""
+    offenders = {
+        name: bad
+        for name, (schema, plan) in registry_plans.items()
+        if name not in _UNPARTITIONED_WINDOW_OK and (bad := _global_windows(schema, plan))
+    }
     assert not offenders, (
         f"unpartitioned Window nodes outside the allowlist: {offenders} — "
         "single-partition global sort at scale; partition the window or "
@@ -370,7 +406,7 @@ def test_unpartitioned_window_allowlist_entries_still_flag(spark):
         )
 
 
-def test_registry_wide_no_high_precision_final_decimals(spark):
+def test_registry_wide_no_high_precision_final_decimals(registry_plans):
     """VERDICT r9 task 8: no registered query's FINAL schema (top-level or
     nested) may contain a decimal with precision > 18.  Precision-38
     decimals are int128-backed in DuckDB and were the one type the
@@ -378,29 +414,12 @@ def test_registry_wide_no_high_precision_final_decimals(spark):
     round-9 ``kendall_tau_b`` red row, whose VALUES were bit-identical to
     the oracle.  High-precision decimals stay welcome in INTERNAL CTEs
     (exact pair-mass sums); the final projection must land on
-    BIGINT/DOUBLE/decimal(<=18,*).  Schema-only: analysis fixes the
-    projection types, no execution needed."""
-    from pyspark.sql.types import ArrayType, DecimalType, MapType, StructType
-
-    def _walk(dt, path):
-        if isinstance(dt, DecimalType) and dt.precision > 18:
-            yield f"{path}: {dt}"
-        elif isinstance(dt, StructType):
-            for f in dt.fields:
-                yield from _walk(f.dataType, f"{path}.{f.name}")
-        elif isinstance(dt, ArrayType):
-            yield from _walk(dt.elementType, f"{path}[]")
-        elif isinstance(dt, MapType):
-            yield from _walk(dt.valueType, f"{path}{{v}}")
-
-    offenders: dict[str, list[str]] = {}
-    for name in sorted(q.REGISTRY):
-        df = q.REGISTRY[name].fn(spark, SF_SMOKE)
-        hits = [
-            h for f in df.schema.fields for h in _walk(f.dataType, f.name)
-        ]
-        if hits:
-            offenders[name] = hits
+    BIGINT/DOUBLE/decimal(<=18,*)."""
+    offenders = {
+        name: hits
+        for name, (schema, plan) in registry_plans.items()
+        if (hits := _wide_decimals(schema, plan))
+    }
     assert not offenders, (
         f"final schemas with precision>18 decimals: {offenders} — the "
         "driver's typed value hash is not stable for int128-backed "
@@ -409,27 +428,40 @@ def test_registry_wide_no_high_precision_final_decimals(spark):
     )
 
 
-def test_registry_wide_no_cartesian_product(spark):
+def test_registry_wide_no_cartesian_product(registry_plans):
     """Round-10 sweep companion to the unbounded-window net: NO
     registered query may plan a CartesianProduct node — not even in the
     pre-AQE initial plan (a one-row scalar cross join must broadcast as
     BNLJ; a grouped aggregate OVER a scalar cross join planned a real
-    CartesianProduct in kruskal_wallis before the round-10 fix).
-    Plan-only: the join strategy is fixed at planning time."""
-    offenders: dict[str, int] = {}
-    for name in sorted(q.REGISTRY):
-        df = q.REGISTRY[name].fn(spark, SF_SMOKE)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        hits = len(re.findall(r"^\(\d+\) CartesianProduct", plan, re.M))
-        if hits:
-            offenders[name] = hits
+    CartesianProduct in kruskal_wallis before the round-10 fix)."""
+    offenders = {
+        name: hits
+        for name, (schema, plan) in registry_plans.items()
+        if (hits := _cartesian_products(schema, plan))
+    }
     assert not offenders, (
         f"CartesianProduct nodes in plans: {offenders} — restructure so "
         "every non-equi join side is a guaranteed one-row aggregate "
         "(broadcastable) or an equi-join"
     )
+
+
+def test_registry_sweep_checks_flag_known_bad_plans(spark):
+    """Each registry-wide check flags a statement built to break it, so a
+    sweep that reports nothing is a real pass, not a parser that no longer
+    matches the plan text."""
+    checks = {
+        _cartesian_products: "SELECT /*+ SHUFFLE_REPLICATE_NL(b) */ a.id "
+        "FROM range(10) a JOIN range(10) b ON a.id < b.id",
+        _global_windows: "SELECT id, row_number() OVER (ORDER BY id) AS r FROM range(10)",
+        _wide_decimals: "SELECT CAST(1 AS DECIMAL(38,0)) AS x",
+    }
+    for check, bad_sql in checks.items():
+        df = spark.sql(bad_sql)
+        assert check(df.schema, _formatted_plan(df)), (check.__name__, bad_sql)
+        # ... and stays quiet on a plain scan
+        good = spark.sql("SELECT id FROM range(10)")
+        assert not check(good.schema, _formatted_plan(good)), check.__name__
 
 
 def test_stored_view_policy_pinned():

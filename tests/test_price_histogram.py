@@ -7,7 +7,8 @@ from decimal import ROUND_HALF_UP, Decimal
 
 import duckdb
 
-from sales_telegram_bot_data_pipeline_spark.operators.scalars_extra import _HISTOGRAM_SQL
+from sales_telegram_bot_data_pipeline_spark.functions.dialect import DUCKDB, SPARK
+from sales_telegram_bot_data_pipeline_spark.operators.scalars_extra import _histogram_sql
 
 
 def test_histogram_bounds_round_half_cents_like_duckdb(spark):
@@ -22,13 +23,13 @@ def test_histogram_bounds_round_half_cents_like_duckdb(spark):
     got = [
         tuple(r)
         for r in spark.sql(
-            _HISTOGRAM_SQL.format(orders="sales_telegram_bot_data_pipeline_hist_half_cent")
+            _histogram_sql(SPARK, "sales_telegram_bot_data_pipeline_hist_half_cent")
         ).collect()
     ]
     con = duckdb.connect()
     con.execute("CREATE TABLE orders (o_totalprice DOUBLE)")
     con.executemany("INSERT INTO orders VALUES (?)", [(p,) for p in prices])
-    want = con.execute(_HISTOGRAM_SQL.format(orders="orders")).fetchall()
+    want = con.execute(_histogram_sql(DUCKDB, "orders")).fetchall()
     assert got == [tuple(r) for r in want]
 
     mn, mx = Decimal("67110.04"), Decimal("191869.63")

@@ -14,16 +14,14 @@ from sales_telegram_bot_data_pipeline_spark.operators.scalars_extra import (
 from sales_telegram_bot_data_pipeline_spark.operators.temporal import (
     SESSIONIZE_GAP_S,
     SESSIONIZE_USER_MOD,
-    sessionize_gap_islands,
 )
 from sales_telegram_bot_data_pipeline_spark.operators.retrieval import (
     TFIDF_TOP_K,
-    tfidf_top_terms,
 )
 from sales_telegram_bot_data_pipeline_spark.operators.dedup import (
-    dedup_minhash_lsh,
     minhash_estimate_error_audit,
 )
+from sales_telegram_bot_data_pipeline_spark.queries import REGISTRY
 from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
@@ -34,7 +32,7 @@ def test_sessionize_partitions_all_sampled_events(spark):
     counts sum to the sampled event count, session sequences are dense
     from 1, and a session's span can only exceed the gap threshold via
     chained events (duration < n_events * gap)."""
-    sessions = sessionize_gap_islands(spark, SF_SMOKE).collect()
+    sessions = REGISTRY["sessionize_gap_islands"].fn(spark, SF_SMOKE).collect()
     ev = load_table(spark, SF_SMOKE, "events")
     n_sampled = ev.where(f"user_id % {SESSIONIZE_USER_MOD} = 0").count()
     assert sum(r["n_events"] for r in sessions) == n_sampled
@@ -55,7 +53,7 @@ def test_sessionize_partitions_all_sampled_events(spark):
 
 
 def test_tfidf_top_terms_ranked_and_bounded(spark):
-    rows = tfidf_top_terms(spark, SF_SMOKE).collect()
+    rows = REGISTRY["tfidf_top_terms"].fn(spark, SF_SMOKE).collect()
     by_doc: dict[int, list] = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append(r)
@@ -75,7 +73,7 @@ def test_minhash_estimate_error_within_bounds(spark):
     every per-pair error does too; mean <= max; and the audit must cover
     exactly the LSH candidate pairs."""
     row = minhash_estimate_error_audit(spark, SF_SMOKE).collect()[0]
-    n_pairs = dedup_minhash_lsh(spark, SF_SMOKE).count()
+    n_pairs = REGISTRY["dedup_minhash_lsh"].fn(spark, SF_SMOKE).count()
     assert row["n_pairs"] == n_pairs
     assert 0.0 <= row["mean_abs_err"] <= row["max_abs_err"] <= 1.0
 
@@ -147,7 +145,7 @@ def test_sessionize_matches_bruteforce_on_synthetic_users(spark):
     )
     df.createOrReplaceTempView("sales_telegram_bot_data_pipeline_sess_prop")
     got_rows = spark.sql(
-        _sessionize_sql(D).format(table="sales_telegram_bot_data_pipeline_sess_prop")
+        _sessionize_sql(D, "sales_telegram_bot_data_pipeline_sess_prop")
     ).collect()
     got = {
         (r["user_id"], r["session_seq"]): (
@@ -189,10 +187,9 @@ def test_split_drift_flags_injected_skew_and_passes_hash_split(spark):
     from sales_telegram_bot_data_pipeline_spark.operators.curation import (
         VAL_PCT,
         _split_drift_sql,
-        split_distribution_drift,
     )
 
-    quiet = split_distribution_drift(spark, SF_SMOKE).collect()[0]
+    quiet = REGISTRY["split_distribution_drift"].fn(spark, SF_SMOKE).collect()[0]
     assert quiet["drift_flag"] is False
     assert quiet["ks_distance"] <= quiet["ks_critical"]
 

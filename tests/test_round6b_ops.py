@@ -17,13 +17,12 @@ from sales_telegram_bot_data_pipeline_spark.operators.dedup import (
 )
 from sales_telegram_bot_data_pipeline_spark.operators.linkage import (
     LINK_DIRTY_MOD,
-    record_linkage_blocked,
 )
 from sales_telegram_bot_data_pipeline_spark.operators.textops import (
     BOILER_DF_CAP,
     _boilerplate_sql,
-    boilerplate_segment_removal,
 )
+from sales_telegram_bot_data_pipeline_spark.queries import REGISTRY
 from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
@@ -97,7 +96,7 @@ def test_quality_rank_blend_matches_bruteforce(spark):
 
 
 def test_record_linkage_recovers_every_dirty_twin(spark):
-    rows = record_linkage_blocked(spark, SF_SMOKE).collect()
+    rows = REGISTRY["record_linkage_blocked"].fn(spark, SF_SMOKE).collect()
     n_dirty = (
         load_table(spark, SF_SMOKE, "customer")
         .where(f"c_custkey % {LINK_DIRTY_MOD} = 0")
@@ -135,7 +134,7 @@ def test_boilerplate_removal_on_injected_corpus(spark):
 
 
 def test_boilerplate_noop_below_cap(spark):
-    rows = boilerplate_segment_removal(spark, SF_SMOKE).collect()
+    rows = REGISTRY["boilerplate_segment_removal"].fn(spark, SF_SMOKE).collect()
     docs = {r["doc_id"]: r["text"] for r in load_table(spark, SF_SMOKE, "documents").collect()}
     assert len(rows) == len(docs)
     for r in rows:
@@ -218,7 +217,6 @@ def test_band_tuning_nested_configs_and_lsh_row(spark):
 
     from sales_telegram_bot_data_pipeline_spark.operators.dedup import (
         BAND_TUNE_SUBSET_MOD,
-        dedup_minhash_lsh,
         lsh_band_tuning_audit,
     )
 
@@ -231,7 +229,7 @@ def test_band_tuning_nested_configs_and_lsh_row(spark):
         for r in lsh_band_tuning_audit(spark, SF_SMOKE).collect()
     }
     assert set(rows) == {(8, 1), (4, 2), (2, 4), (1, 8)}
-    lsh_pairs = dedup_minhash_lsh(spark, SF_SMOKE).collect()
+    lsh_pairs = REGISTRY["dedup_minhash_lsh"].fn(spark, SF_SMOKE).collect()
     expected = sum(1 for p in lsh_pairs if in_half(p.doc_a) and in_half(p.doc_b))
     assert rows[(4, 2)]["n_candidates"] == expected
     cands = [rows[k]["n_candidates"] for k in [(8, 1), (4, 2), (2, 4), (1, 8)]]
@@ -297,10 +295,9 @@ def test_join_cardinality_estimators_vs_real_join(spark):
 def test_join_skew_audit_matches_bruteforce(spark):
     from sales_telegram_bot_data_pipeline_spark.operators.scalars_extra import (
         SKEW_FACTOR,
-        join_key_skew_audit,
     )
 
-    row = join_key_skew_audit(spark, SF_SMOKE).collect()[0]
+    row = REGISTRY["join_key_skew_audit"].fn(spark, SF_SMOKE).collect()[0]
     li = load_table(spark, SF_SMOKE, "lineitem").collect()
     counts: dict[int, int] = {}
     for r in li:
@@ -365,11 +362,8 @@ def test_zorder_narrows_both_dimensions(spark):
     """The point of the layout: under custkey-sort the date span per
     bucket stays ~full-range while custkey is narrow; under z-order BOTH
     spans are materially below full range."""
-    from sales_telegram_bot_data_pipeline_spark.operators.scalars_extra import (
-        zorder_clustering_stats,
-    )
 
-    rows = zorder_clustering_stats(spark, SF_SMOKE).collect()
+    rows = REGISTRY["zorder_clustering_stats"].fn(spark, SF_SMOKE).collect()
     by_layout: dict[str, list] = {}
     for r in rows:
         by_layout.setdefault(r["layout"], []).append(r)
@@ -398,10 +392,9 @@ def test_bloom_prune_never_false_negative(spark):
         BF_K,
         BF_WORD_BITS,
         BF_WORDS,
-        bloom_semijoin_prune_audit,
     )
 
-    row = bloom_semijoin_prune_audit(spark, SF_SMOKE).collect()[0]
+    row = REGISTRY["bloom_semijoin_prune_audit"].fn(spark, SF_SMOKE).collect()[0]
     cust = load_table(spark, SF_SMOKE, "customer")
     orders = load_table(spark, SF_SMOKE, "orders")
     build = {r["c_custkey"] for r in cust.where("c_mktsegment = 'BUILDING'").collect()}
@@ -447,10 +440,9 @@ def test_session_conversion_matches_bruteforce_sessions(spark):
     from sales_telegram_bot_data_pipeline_spark.operators.temporal import (
         SESSIONIZE_GAP_S,
         SESSIONIZE_USER_MOD,
-        session_conversion_rate,
     )
 
-    row = session_conversion_rate(spark, SF_SMOKE).collect()[0]
+    row = REGISTRY["session_conversion_rate"].fn(spark, SF_SMOKE).collect()[0]
     ev = (
         load_table(spark, SF_SMOKE, "events")
         .where(f"user_id % {SESSIONIZE_USER_MOD} = 0")
@@ -513,10 +505,9 @@ def test_freshness_decay_matches_bruteforce(spark):
 
     from sales_telegram_bot_data_pipeline_spark.operators.temporal import (
         DECAY_HALF_LIFE_DAYS,
-        freshness_decay_profile,
     )
 
-    got = {r["event_type"]: r for r in freshness_decay_profile(spark, SF_SMOKE).collect()}
+    got = {r["event_type"]: r for r in REGISTRY["freshness_decay_profile"].fn(spark, SF_SMOKE).collect()}
     ev = (
         load_table(spark, SF_SMOKE, "events")
         .selectExpr(

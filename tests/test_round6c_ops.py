@@ -16,8 +16,8 @@ from sales_telegram_bot_data_pipeline_spark.operators.similarity import (
     N_QUERIES,
     knn_cosine_bruteforce,
     knn_cosine_pq,
-    matryoshka_recall_audit,
 )
+from sales_telegram_bot_data_pipeline_spark.queries import REGISTRY
 from sales_telegram_bot_data_pipeline_spark.sources.tables import table_view
 
 from conftest import SF_SMOKE
@@ -65,7 +65,7 @@ def test_pq_shape_and_rerank_scores_exact(spark):
 
 
 def test_matryoshka_full_dim_self_check(spark):
-    rows = {r["dim"]: r for r in matryoshka_recall_audit(spark, SF_SMOKE).collect()}
+    rows = {r["dim"]: r for r in REGISTRY["matryoshka_recall_audit"].fn(spark, SF_SMOKE).collect()}
     assert set(rows) == set(sim._MRL_DIMS)
     full = max(sim._MRL_DIMS)
     assert rows[full]["recall_at_k"] == 1.0
@@ -119,10 +119,9 @@ def test_gopher_gate_metrics_consistent(spark):
         GOPHER_MIN_MEAN_WLEN,
         GOPHER_MIN_STOP_HITS,
         GOPHER_MIN_WORDS,
-        gopher_quality_gate,
     )
 
-    rows = gopher_quality_gate(spark, SF_SMOKE).collect()
+    rows = REGISTRY["gopher_quality_gate"].fn(spark, SF_SMOKE).collect()
     assert len(rows) == 500
     for r in rows:
         expect = (
@@ -142,14 +141,13 @@ def test_gopher_gate_metrics_consistent(spark):
 
 def test_softdedup_weights_semantics(spark):
     from sales_telegram_bot_data_pipeline_spark.operators.dedup import (
-        dedup_minhash_lsh,
         softdedup_weights,
     )
 
     rows = softdedup_weights(spark, SF_SMOKE).collect()
     assert len(rows) == 500
     paired = set()
-    for p in dedup_minhash_lsh(spark, SF_SMOKE).collect():
+    for p in REGISTRY["dedup_minhash_lsh"].fn(spark, SF_SMOKE).collect():
         paired.add(p["doc_a"])
         paired.add(p["doc_b"])
     for r in rows:

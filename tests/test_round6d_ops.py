@@ -27,6 +27,7 @@ from sales_telegram_bot_data_pipeline_spark.operators.retrieval import (
     MMR_K,
     mmr_diversified_topk,
 )
+from sales_telegram_bot_data_pipeline_spark.queries import REGISTRY
 from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table, table_view
 
 from conftest import SF_SMOKE
@@ -134,15 +135,10 @@ def test_mmr_invariants(spark):
 
 
 def test_ols_and_benford_invariants(spark):
-    from sales_telegram_bot_data_pipeline_spark.operators.analytics import (
-        benford_first_digit_audit,
-        revenue_trend_ols,
-    )
-
-    ols = revenue_trend_ols(spark, SF_SMOKE).collect()[0]
+    ols = REGISTRY["revenue_trend_ols"].fn(spark, SF_SMOKE).collect()[0]
     assert ols.n_days > 0
     assert 0.0 <= ols.r_squared <= 1.0
-    ben = benford_first_digit_audit(spark, SF_SMOKE).collect()
+    ben = REGISTRY["benford_first_digit_audit"].fn(spark, SF_SMOKE).collect()
     assert {r.digit for r in ben} <= set(range(1, 10))
     assert abs(sum(r.share for r in ben) - 1.0) < 1e-4
     assert all(r.abs_deviation >= 0 for r in ben)
@@ -151,9 +147,7 @@ def test_ols_and_benford_invariants(spark):
 def test_scd2_build_intervals_contiguous(spark):
     from collections import defaultdict
 
-    from sales_telegram_bot_data_pipeline_spark.operators.temporal import scd2_build_from_events
-
-    rows = scd2_build_from_events(spark, SF_SMOKE).collect()
+    rows = REGISTRY["scd2_build_from_events"].fn(spark, SF_SMOKE).collect()
     assert rows
     by_user = defaultdict(list)
     for r in rows:
@@ -228,11 +222,10 @@ def test_schema_contract_green_on_testdata(spark):
 def test_l_diversity_accounts_for_every_customer(spark):
     from sales_telegram_bot_data_pipeline_spark.operators.analytics import (
         L_DIVERSITY_THRESHOLD,
-        l_diversity_audit,
     )
     from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table as _lt
 
-    rows = l_diversity_audit(spark, SF_SMOKE).collect()
+    rows = REGISTRY["l_diversity_audit"].fn(spark, SF_SMOKE).collect()
     assert sum(r.n_customers for r in rows) == _lt(spark, SF_SMOKE, "customer").count()
     assert all(r.at_risk == (r.l_value < L_DIVERSITY_THRESHOLD) for r in rows)
     assert all(1 <= r.l_value <= 5 for r in rows)  # 5 market segments
@@ -245,7 +238,6 @@ def test_twap_weights_by_duration_not_samples(spark, tmp_path):
 
     from sales_telegram_bot_data_pipeline_spark.operators.temporal import (
         TWAP_USER_MOD,
-        time_weighted_average_value,
     )
 
     d = str(tmp_path / "sf_twap")
@@ -259,7 +251,7 @@ def test_twap_weights_by_duration_not_samples(spark, tmp_path):
     spark.createDataFrame(
         rows, "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
     ).write.parquet(os.path.join(d, "events.parquet"))
-    out = time_weighted_average_value(spark, d).collect()
+    out = REGISTRY["time_weighted_average_value"].fn(spark, d).collect()
     assert len(out) == 1
     r = out[0]
     assert r.n_intervals == 2
@@ -295,9 +287,7 @@ def test_concentration_bounds_and_uniform_gini(spark, tmp_path):
 
 
 def test_readability_bounds(spark):
-    from sales_telegram_bot_data_pipeline_spark.operators.textops import readability_score
-
-    rows = readability_score(spark, SF_SMOKE).collect()
+    rows = REGISTRY["readability_score"].fn(spark, SF_SMOKE).collect()
     assert rows
     for r in rows:
         assert r.n_docs > 0
@@ -338,10 +328,9 @@ def test_epoch_shuffle_decorrelated_and_complete(spark):
     from sales_telegram_bot_data_pipeline_spark.operators.curation import (
         SHUFFLE_EPOCHS,
         SHUFFLE_SHARDS,
-        epoch_shuffle_plan,
     )
 
-    rows = epoch_shuffle_plan(spark, SF_SMOKE).collect()
+    rows = REGISTRY["epoch_shuffle_plan"].fn(spark, SF_SMOKE).collect()
     n_docs = load_table(spark, SF_SMOKE, "documents").count()
     per_epoch = {}
     for r in rows:
@@ -370,21 +359,18 @@ def test_epoch_shuffle_decorrelated_and_complete(spark):
 def test_exact_n_sample_stable_and_nested(spark):
     from sales_telegram_bot_data_pipeline_spark.operators.curation import (
         SAMPLE_EXACT_N,
-        deterministic_sample_exact_n,
     )
 
-    a = [r.doc_id for r in deterministic_sample_exact_n(spark, SF_SMOKE).collect()]
+    a = [r.doc_id for r in REGISTRY["deterministic_sample_exact_n"].fn(spark, SF_SMOKE).collect()]
     n_docs = load_table(spark, SF_SMOKE, "documents").count()
     assert len(a) == min(SAMPLE_EXACT_N, n_docs)
     assert len(set(a)) == len(a)
-    b = [r.doc_id for r in deterministic_sample_exact_n(spark, SF_SMOKE).collect()]
+    b = [r.doc_id for r in REGISTRY["deterministic_sample_exact_n"].fn(spark, SF_SMOKE).collect()]
     assert a == b  # reproducible, order included
 
 
 def test_ab_assignment_balanced_and_z_consistent(spark):
-    from sales_telegram_bot_data_pipeline_spark.operators.analytics import ab_conversion_ztest
-
-    r = ab_conversion_ztest(spark, "/root/testdata/sf0.01").collect()[0]
+    r = REGISTRY["ab_conversion_ztest"].fn(spark, "/root/testdata/sf0.01").collect()[0]
     n = r.n_a + r.n_b
     assert abs(r.n_a - r.n_b) < 0.2 * n  # hash split is near-balanced
     assert 0.0 <= r.rate_a <= 1.0 and 0.0 <= r.rate_b <= 1.0
@@ -398,9 +384,7 @@ def test_ab_assignment_balanced_and_z_consistent(spark):
 def test_sla_shares_sum_to_one(spark):
     from collections import defaultdict
 
-    from sales_telegram_bot_data_pipeline_spark.operators.analytics import shipping_sla_buckets
-
-    rows = shipping_sla_buckets(spark, SF_SMOKE).collect()
+    rows = REGISTRY["shipping_sla_buckets"].fn(spark, SF_SMOKE).collect()
     by_pri = defaultdict(float)
     for r in rows:
         assert r.sla_bucket in {"0-7", "8-14", "15-30", "31+"}
@@ -409,20 +393,14 @@ def test_sla_shares_sum_to_one(spark):
 
 
 def test_discount_corr_bounds(spark):
-    from sales_telegram_bot_data_pipeline_spark.operators.analytics import (
-        discount_quantity_correlation,
-    )
-
-    rows = discount_quantity_correlation(spark, SF_SMOKE).collect()
+    rows = REGISTRY["discount_quantity_correlation"].fn(spark, SF_SMOKE).collect()
     for r in rows:
         assert r.discount_qty_corr is None or -1.0 <= r.discount_qty_corr <= 1.0
         assert r.n_lines >= 30
 
 
 def test_referential_integrity_clean_testdata(spark):
-    from sales_telegram_bot_data_pipeline_spark.operators.analytics import referential_integrity_audit
-
-    rows = {r.relation: r for r in referential_integrity_audit(spark, SF_SMOKE).collect()}
+    rows = {r.relation: r for r in REGISTRY["referential_integrity_audit"].fn(spark, SF_SMOKE).collect()}
     assert set(rows) == {
         "lineitem_without_order",
         "order_without_customer",
@@ -434,10 +412,9 @@ def test_referential_integrity_clean_testdata(spark):
 
 
 def test_calibration_bins_cover_corpus(spark):
-    from sales_telegram_bot_data_pipeline_spark.operators.lm_quality import quality_score_calibration
     from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table as _lt
 
-    rows = quality_score_calibration(spark, SF_SMOKE).collect()
+    rows = REGISTRY["quality_score_calibration"].fn(spark, SF_SMOKE).collect()
     assert sum(r.n_docs for r in rows) == _lt(spark, SF_SMOKE, "documents").count()
     for r in rows:
         assert 0 <= r.bin <= 9
@@ -450,10 +427,9 @@ def test_calibration_bins_cover_corpus(spark):
 def test_neyman_allocation_sums_near_budget(spark):
     from sales_telegram_bot_data_pipeline_spark.operators.curation import (
         NEYMAN_BUDGET,
-        neyman_allocation_plan,
     )
 
-    rows = neyman_allocation_plan(spark, SF_SMOKE).collect()
+    rows = REGISTRY["neyman_allocation_plan"].fn(spark, SF_SMOKE).collect()
     assert rows
     total = sum(r.allocated for r in rows)
     # per-stratum rounding residue only
@@ -464,10 +440,10 @@ def test_neyman_allocation_sums_near_budget(spark):
 def test_mips_exactness_vs_numpy(spark):
     import numpy as np
 
-    from sales_telegram_bot_data_pipeline_spark.operators.similarity import MIPS_K, mips_topk_audit
+    from sales_telegram_bot_data_pipeline_spark.operators.similarity import MIPS_K
     from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table as _lt
 
-    got = [(r.rank, r.vec_id) for r in mips_topk_audit(spark, SF_SMOKE).collect()]
+    got = [(r.rank, r.vec_id) for r in REGISTRY["mips_topk_audit"].fn(spark, SF_SMOKE).collect()]
     emb = {r.vec_id: np.asarray(r.embedding, dtype=np.float64)
            for r in _lt(spark, SF_SMOKE, "embeddings").collect()}
     qid = min(emb)

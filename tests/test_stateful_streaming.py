@@ -214,7 +214,7 @@ def test_streaming_sessions_match_batch(spark, scratch):
     from sales_telegram_bot_data_pipeline_spark.functions.dialect import SPARK as D
 
     spark.read.parquet(flat).createOrReplaceTempView("sess_parity_events")
-    batch = spark.sql(_sessionize_sql(D).format(table="sess_parity_events")).collect()
+    batch = spark.sql(_sessionize_sql(D, "sess_parity_events")).collect()
     last_seq = {}
     for r in batch:
         last_seq[r["user_id"]] = max(last_seq.get(r["user_id"], 0), r["session_seq"])

@@ -86,6 +86,64 @@ def test_relation_names_have_one_source():
     assert dedup.session_view is session.session_view
 
 
+def _renders_oracle_over_table_views(fn: ast.FunctionDef) -> bool:
+    """True when ``fn`` is decorated ``@register(..., oracle=b(DUCKDB,
+    "t1", ...))`` and its body only returns ``spark.sql(b(SPARK, ...))``
+    over ``table_view``s of the same tables — what ``register_sql`` does."""
+    def tv_table(node, bound):
+        if isinstance(node, ast.Name):
+            return bound.get(node.id)
+        if (isinstance(node, ast.Call) and getattr(node.func, "id", None) == "table_view"
+                and len(node.args) == 3 and isinstance(node.args[2], ast.Constant)):
+            return node.args[2].value
+        return None
+
+    for dec in fn.decorator_list:
+        if isinstance(dec, ast.Call) and getattr(dec.func, "id", None) == "register":
+            oracle = next((k.value for k in dec.keywords if k.arg == "oracle"), None)
+            break
+    else:
+        return False
+    if not (isinstance(oracle, ast.Call) and isinstance(oracle.func, ast.Name) and oracle.args
+            and getattr(oracle.args[0], "id", None) == "DUCKDB"
+            and all(isinstance(a, ast.Constant) for a in oracle.args[1:])):
+        return False
+    body = [s for s in fn.body if not isinstance(s, ast.ImportFrom)]
+    if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+        body = body[1:]
+    bound = {}
+    for st in body[:-1]:
+        if not (isinstance(st, ast.Assign) and len(st.targets) == 1
+                and isinstance(st.targets[0], ast.Name) and tv_table(st.value, {})):
+            return False
+        bound[st.targets[0].id] = tv_table(st.value, {})
+    ret = body[-1] if body else None
+    call = getattr(ret, "value", None) if isinstance(ret, ast.Return) else None
+    if not (isinstance(call, ast.Call) and getattr(call.func, "attr", None) == "sql"
+            and len(call.args) == 1 and not call.keywords):
+        return False
+    build = call.args[0]
+    return (
+        isinstance(build, ast.Call) and getattr(build.func, "id", None) == oracle.func.id
+        and not build.keywords and bool(build.args)
+        and getattr(build.args[0], "id", None) == "SPARK"
+        and [tv_table(a, bound) for a in build.args[1:]] == [a.value for a in oracle.args[1:]]
+    )
+
+
+def test_oracle_templates_register_through_register_sql():
+    """A query whose Spark side is its oracle's own template over this
+    session's table views registers through ``registry.register_sql``; a
+    hand-written ``@register`` twin of that call must not come back."""
+    twins = sorted(
+        f"{p.relative_to(PKG)}:{node.name}"
+        for p in PKG.rglob("*.py")
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.FunctionDef) and _renders_oracle_over_table_views(node)
+    )
+    assert not twins, twins
+
+
 def test_materialize_once_tags_are_unique():
     """A ``materialize_once`` name is keyed on the tag and the dataset,
     not on the call, so two call sites sharing a literal tag would read
