@@ -44,12 +44,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dialect import DUCKDB, SPARK, Dialect, strip_order_by
-from ..functions.text import quality_fields_sql, stopword_ratio_sql
+from ..functions.text import quality_fields_sql
 from ..registry import register, register_sql
 from ..sources.tables import table_view
 from .curation import BENCH_MOD
 
-LM_K2 = 1  # add-k smoothing with k = 1/2: P = (2c2 + 1) / (2c1 + V)
 DSIR_BUCKETS = 4096
 TOKEN_BUDGET_PER_SOURCE = 1000  # binds on the test corpus (max source ~1.7k tokens)
 

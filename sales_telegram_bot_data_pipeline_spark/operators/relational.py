@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..functions.dialect import Dialect
 from ..registry import register, register_sql
@@ -38,10 +37,11 @@ def _dec(col: str, prec: int = 18, scale: int = 2) -> F.Column:
 # Q1 — flagship pricing summary (TPC-H Q1 shape).
 # Scan → filter (pushed to parquet) → groupBy low-cardinality keys → exact
 # decimal partial aggregation.  One shuffle of ~6 groups; trivially scales.
+# l_discount/l_tax are 2-decimal by construction; scale-2 casts keep the
+# double products exact under DuckDB's precision-18 multiply cap.
 # ---------------------------------------------------------------------------
-@register(
-    "q1_pricing_summary",
-    oracle="""
+def _q1_sql(d: Dialect, lineitem: str) -> str:
+    return f"""
 SELECT
   l_returnflag,
   l_linestatus,
@@ -53,37 +53,21 @@ SELECT
   ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 6) AS avg_price,
   ROUND(CAST(SUM(CAST(l_discount AS DECIMAL(8,2))) AS DOUBLE) / COUNT(*), 6) AS avg_disc,
   COUNT(*) AS count_order
-FROM lineitem
+FROM {lineitem}
 WHERE l_shipdate <= TIMESTAMP '2000-12-01'
 GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
-""",
+"""
+
+
+register_sql(
+    "q1_pricing_summary",
+    _q1_sql,
+    ("lineitem",),
     doc="Flagship: filtered scan + multi-measure exact-decimal aggregation "
     "(generalizes the reference's per-shop price summarization surface).",
     tags=("agg", "filter", "flagship"),
 )
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    # l_discount/l_tax are 2-decimal by construction; scale-2 casts keep the
-    # double products exact under DuckDB's precision-18 multiply cap.
-    disc = _dec("l_discount", 8, 2)
-    tax = _dec("l_tax", 8, 2)
-    ext = _dec("l_extendedprice", 12, 2)
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(_dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(ext * (F.lit(1) - disc)).cast("double").alias("sum_disc_price"),
-            F.sum(ext * (F.lit(1) - disc) * (F.lit(1) + tax)).cast("double").alias("sum_charge"),
-            F.round(F.sum(_dec("l_quantity")).cast("double") / F.count("*"), 6).alias("avg_qty"),
-            F.round(F.sum(_dec("l_extendedprice")).cast("double") / F.count("*"), 6).alias("avg_price"),
-            F.round(F.sum(disc).cast("double") / F.count("*"), 6).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -194,30 +178,24 @@ def q5_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Reference does one RPC per probe key (s3_dynamodb_utils.py:22-24); here the
 # dim ships once per executor and probes are hash lookups.
 # ---------------------------------------------------------------------------
-@register(
-    "broadcast_lookup_join",
-    oracle="""
+def _broadcast_lookup_sql(d: Dialect, orders: str, customer: str) -> str:
+    return f"""
 SELECT o_orderkey, o_totalprice, c_name, c_mktsegment
-FROM orders
-JOIN customer ON o_custkey = c_custkey
+FROM {orders}
+JOIN {customer} ON o_custkey = c_custkey
 WHERE o_orderpriority = '1-URGENT' AND o_orderdate >= TIMESTAMP '1998-01-01'
 ORDER BY o_orderkey
-""",
+"""
+
+
+register_sql(
+    "broadcast_lookup_join",
+    _broadcast_lookup_sql,
+    ("orders", "customer"),
     doc="Point-lookup join (reference op 4: DynamoDB get_item per key) as a "
     "broadcast hash equi-join.",
     tags=("join", "broadcast"),
 )
-def broadcast_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderpriority") == "1-URGENT")
-        & (F.col("o_orderdate") >= F.lit("1998-01-01").cast("timestamp"))
-    )
-    cust = load_table(spark, sf_dir, "customer")
-    return (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .select("o_orderkey", "o_totalprice", "c_name", "c_mktsegment")
-        .orderBy("o_orderkey")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -306,100 +284,76 @@ def topk_orders_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Top-k per group via ranking window (reference op 41 last-wins generalized).
 # ---------------------------------------------------------------------------
-@register(
-    "topk_orders_per_segment",
-    oracle="""
+def _topk_per_segment_sql(d: Dialect, orders: str, customer: str) -> str:
+    return f"""
 SELECT c_mktsegment, o_orderkey, o_totalprice, rn
 FROM (
   SELECT c_mktsegment, o_orderkey, o_totalprice,
          ROW_NUMBER() OVER (PARTITION BY c_mktsegment ORDER BY o_totalprice DESC, o_orderkey) AS rn
-  FROM orders JOIN customer ON o_custkey = c_custkey
+  FROM {orders} JOIN {customer} ON o_custkey = c_custkey
 ) t
 WHERE rn <= 3
 ORDER BY c_mktsegment, rn
-""",
+"""
+
+
+register_sql(
+    "topk_orders_per_segment",
+    _topk_per_segment_sql,
+    ("orders", "customer"),
     doc="Per-group top-k via row_number ranking window.",
     tags=("window", "topk"),
 )
-def topk_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .select("c_mktsegment", "o_orderkey", "o_totalprice")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .orderBy("c_mktsegment", "rn")
-    )
 
 
 # ---------------------------------------------------------------------------
 # Analytic window: running total per customer (exact decimal, deterministic
 # frame order).
 # ---------------------------------------------------------------------------
-@register(
-    "window_running_total",
-    oracle="""
+def _running_total_sql(d: Dialect, orders: str) -> str:
+    return f"""
 SELECT o_custkey, o_orderkey,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
             OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_spend
-FROM orders
+FROM {orders}
 WHERE o_custkey < 50
 ORDER BY o_custkey, o_orderkey
-""",
+"""
+
+
+register_sql(
+    "window_running_total",
+    _running_total_sql,
+    ("orders",),
     doc="Cumulative-frame analytic window (running spend per customer).",
     tags=("window",),
 )
-def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 50)
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        orders.select(
-            "o_custkey",
-            "o_orderkey",
-            F.sum(_dec("o_totalprice")).over(w).cast("double").alias("running_spend"),
-        )
-        .orderBy("o_custkey", "o_orderkey")
-    )
 
 
 # ---------------------------------------------------------------------------
 # lag/lead analytics: order-over-order delta per customer.
 # ---------------------------------------------------------------------------
-@register(
-    "window_lag_lead_delta",
-    oracle="""
+def _lag_lead_sql(d: Dialect, orders: str) -> str:
+    return f"""
 SELECT o_custkey, o_orderkey,
        CAST(CAST(o_totalprice AS DECIMAL(18,2)) -
             LAG(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS delta_prev,
        LEAD(o_orderkey) OVER w AS next_orderkey
-FROM orders
+FROM {orders}
 WHERE o_custkey < 50
 WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 ORDER BY o_custkey, o_orderkey
-""",
+"""
+
+
+register_sql(
+    "window_lag_lead_delta",
+    _lag_lead_sql,
+    ("orders",),
     doc="lag/lead analytic windows (order-over-order spend delta).",
     tags=("window",),
 )
-def window_lag_lead_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 50)
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    price = _dec("o_totalprice")
-    return (
-        orders.select(
-            "o_custkey",
-            "o_orderkey",
-            (price - F.lag(price).over(w)).cast("double").alias("delta_prev"),
-            F.lead("o_orderkey").over(w).alias("next_orderkey"),
-        )
-        .orderBy("o_custkey", "o_orderkey")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -439,37 +393,26 @@ def rollup_returnflag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # CUBE — all grouping combinations.
 # ---------------------------------------------------------------------------
-@register(
-    "cube_status_priority",
-    oracle="""
+def _cube_sql(d: Dialect, orders: str) -> str:
+    return f"""
 SELECT
   COALESCE(o_orderstatus, 'ALL') AS orderstatus,
   COALESCE(o_orderpriority, 'ALL') AS orderpriority,
   COUNT(*) AS n_orders,
   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-FROM orders
+FROM {orders}
 GROUP BY CUBE(o_orderstatus, o_orderpriority)
 ORDER BY orderstatus, orderpriority
-""",
+"""
+
+
+register_sql(
+    "cube_status_priority",
+    _cube_sql,
+    ("orders",),
     doc="Full grouping-combination aggregation via CUBE.",
     tags=("agg", "cube"),
 )
-def cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.sum(_dec("o_totalprice")).cast("double").alias("sum_price"),
-        )
-        .select(
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("orderstatus"),
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("orderpriority"),
-            "n_orders",
-            "sum_price",
-        )
-        .orderBy("orderstatus", "orderpriority")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -526,34 +469,27 @@ register_sql(
 # ---------------------------------------------------------------------------
 # Distribution analytics: ntile / percent_rank / cume_dist.
 # ---------------------------------------------------------------------------
-@register(
-    "window_distribution_ranks",
-    oracle="""
+def _distribution_ranks_sql(d: Dialect, orders: str) -> str:
+    return f"""
 SELECT o_orderkey,
        NTILE(4) OVER w AS quartile,
        CAST(ROUND(PERCENT_RANK() OVER w, 6) AS DOUBLE) AS pct_rank,
        CAST(ROUND(CUME_DIST() OVER w, 6) AS DOUBLE) AS cume
-FROM orders
+FROM {orders}
 WHERE o_custkey < 30
 WINDOW w AS (ORDER BY o_totalprice, o_orderkey)
 ORDER BY o_orderkey
-""",
+"""
+
+
+register_sql(
+    "window_distribution_ranks",
+    _distribution_ranks_sql,
+    ("orders",),
     doc="Distribution window functions (ntile/percent_rank/cume_dist) with "
     "a deterministic total order.",
     tags=("window",),
 )
-def window_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 30)
-    w = Window.orderBy("o_totalprice", "o_orderkey")
-    return (
-        orders.select(
-            "o_orderkey",
-            F.ntile(4).over(w).alias("quartile"),
-            F.round(F.percent_rank().over(w), 6).cast("double").alias("pct_rank"),
-            F.round(F.cume_dist().over(w), 6).cast("double").alias("cume"),
-        )
-        .orderBy("o_orderkey")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -601,26 +537,22 @@ def set_ops_customer_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Projection + distinct.
 # ---------------------------------------------------------------------------
-@register(
-    "distinct_segment_nation",
-    oracle="""
+def _distinct_segment_nation_sql(d: Dialect, customer: str, nation: str) -> str:
+    return f"""
 SELECT DISTINCT c_mktsegment, n_name
-FROM customer JOIN nation ON c_nationkey = n_nationkey
+FROM {customer} JOIN {nation} ON c_nationkey = n_nationkey
 ORDER BY c_mktsegment, n_name
-""",
+"""
+
+
+register_sql(
+    "distinct_segment_nation",
+    _distinct_segment_nation_sql,
+    ("customer", "nation"),
     doc="Column-pruned projection + distinct (dedup-exact shape on relational "
     "columns).",
     tags=("distinct",),
 )
-def distinct_segment_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    return (
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .select("c_mktsegment", "n_name")
-        .distinct()
-        .orderBy("c_mktsegment", "n_name")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -653,35 +585,24 @@ def having_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Disjunctive multi-clause predicates (TPC-H Q19 shape).
 # ---------------------------------------------------------------------------
-@register(
-    "disjunctive_predicates",
-    oracle="""
+def _disjunctive_sql(d: Dialect, lineitem: str, part: str) -> str:
+    return f"""
 SELECT COUNT(*) AS n_rows,
        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-FROM lineitem JOIN part ON l_partkey = p_partkey
+FROM {lineitem} JOIN {part} ON l_partkey = p_partkey
 WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity >= 5)
    OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30 AND l_quantity >= 10)
    OR (p_type LIKE '%BRASS%' AND l_quantity < 3)
-""",
+"""
+
+
+register_sql(
+    "disjunctive_predicates",
+    _disjunctive_sql,
+    ("lineitem", "part"),
     doc="Disjunctive predicate evaluation over a join (TPC-H Q19 shape).",
     tags=("filter", "join"),
 )
-def disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    cond = (
-        ((F.col("p_brand") == "Brand#1") & F.col("p_size").between(1, 15) & (F.col("l_quantity") >= 5))
-        | ((F.col("p_brand") == "Brand#2") & F.col("p_size").between(10, 30) & (F.col("l_quantity") >= 10))
-        | (F.col("p_type").like("%BRASS%") & (F.col("l_quantity") < 3))
-    )
-    return (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .where(cond)
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(_dec("l_extendedprice")).cast("double").alias("sum_price"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -709,9 +630,8 @@ register_sql(
 # ---------------------------------------------------------------------------
 # Date / math scalar-function suite (checklist: date + math functions).
 # ---------------------------------------------------------------------------
-@register(
-    "date_math_functions",
-    oracle="""
+def _date_math_sql(d: Dialect, orders: str) -> str:
+    return f"""
 SELECT
   CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS order_year,
   CAST(EXTRACT(month FROM o_orderdate) AS BIGINT) AS order_month,
@@ -719,33 +639,21 @@ SELECT
   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
   CAST(ROUND(SQRT(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)), 6) AS DOUBLE) AS sqrt_avg_price,
   CAST(MIN(DATE_TRUNC('month', o_orderdate)) AS TIMESTAMP) AS month_start
-FROM orders
+FROM {orders}
 WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1999-01-01'
 GROUP BY 1, 2
 ORDER BY order_year, order_month
-""",
+"""
+
+
+register_sql(
+    "date_math_functions",
+    _date_math_sql,
+    ("orders",),
     doc="Date (extract/date_trunc) + math (sqrt/round) scalar functions in "
     "one aggregate pass.",
     tags=("scalar", "date", "math"),
 )
-def date_math_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp"))
-    )
-    return (
-        orders.groupBy(
-            F.year("o_orderdate").cast("bigint").alias("order_year"),
-            F.month("o_orderdate").cast("bigint").alias("order_month"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(_dec("o_totalprice")).cast("double").alias("sum_price"),
-            F.round(F.sqrt(F.sum(_dec("o_totalprice")).cast("double") / F.count(F.lit(1))), 6).cast("double").alias("sqrt_avg_price"),
-            F.min(F.date_trunc("month", "o_orderdate")).alias("month_start"),
-        )
-        .orderBy("order_year", "order_month")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -973,69 +881,52 @@ def q4_late_orders_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q12_priority_class_by_status",
-    oracle="""
+def _q12_sql(d: Dialect, orders: str, lineitem: str) -> str:
+    return f"""
 SELECT l.l_linestatus,
        CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
        CAST(SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+FROM {orders} o JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
 WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
   AND l.l_shipdate < TIMESTAMP '1997-01-01'
 GROUP BY l.l_linestatus
 ORDER BY l.l_linestatus
-""",
+"""
+
+
+register_sql(
+    "q12_priority_class_by_status",
+    _q12_sql,
+    ("orders", "lineitem"),
     doc="TPC-H Q12 shape: fact-fact equi-join on orderkey with the filter "
     "pushed to the lineitem scan, conditional (CASE) aggregation into "
     "pivot-style measure columns.",
     tags=("relational", "join", "conditional-agg"),
 )
-def q12_priority_class_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-        .orderBy("l_linestatus")
-    )
 
 
-@register(
-    "q14_promo_revenue_ratio",
-    oracle="""
+def _q14_sql(d: Dialect, lineitem: str, part: str) -> str:
+    return f"""
 SELECT ROUND(
          100.0 * CAST(SUM(CASE WHEN p.p_type = 'PROMO'
                    THEN CAST(l.l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l.l_discount AS DECIMAL(8,2)))
                    ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE)
          / CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l.l_discount AS DECIMAL(8,2)))) AS DOUBLE),
          6) AS promo_revenue_pct
-FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+FROM {lineitem} l JOIN {part} p ON p.p_partkey = l.l_partkey
 WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
   AND l.l_shipdate < TIMESTAMP '1996-02-01'
-""",
+"""
+
+
+register_sql(
+    "q14_promo_revenue_ratio",
+    _q14_sql,
+    ("lineitem", "part"),
     doc="TPC-H Q14 shape: dim join (part broadcasts) + conditional exact-"
     "decimal revenue ratio in a single global aggregate.",
     tags=("relational", "join", "conditional-agg"),
 )
-def q14_promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-02-01")
-    )
-    part = load_table(spark, sf_dir, "part")
-    rev = _dec("l_extendedprice", 12, 2) * (F.lit(1) - _dec("l_discount", 8, 2))
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast("decimal(18,4)"))
-    return li.join(part, li.l_partkey == part.p_partkey).agg(
-        F.round(
-            F.lit(100.0) * F.sum(promo).cast("double") / F.sum(rev).cast("double"), 6
-        ).alias("promo_revenue_pct")
-    )
 
 
 @register(
@@ -1401,57 +1292,35 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q10_returned_items",
-    oracle="""
+def _q10_sql(d: Dialect, customer: str, orders: str, lineitem: str, nation: str) -> str:
+    return f"""
 SELECT c.c_custkey, c.c_name,
        CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
                 * (1 - CAST(l.l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue,
        CAST(CAST(c.c_acctbal AS DECIMAL(18,2)) AS DOUBLE) AS acctbal,
        n.n_name AS nation
-FROM customer c
-JOIN orders o ON o.o_custkey = c.c_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN nation n ON n.n_nationkey = c.c_nationkey
+FROM {customer} c
+JOIN {orders} o ON o.o_custkey = c.c_custkey
+JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
+JOIN {nation} n ON n.n_nationkey = c.c_nationkey
 WHERE o.o_orderdate >= TIMESTAMP '1996-07-01' AND o.o_orderdate < TIMESTAMP '1996-10-01'
   AND l.l_returnflag = 'R'
 GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
 ORDER BY revenue DESC, c.c_custkey
 LIMIT 20
-""",
+"""
+
+
+register_sql(
+    "q10_returned_items",
+    _q10_sql,
+    ("customer", "orders", "lineitem", "nation"),
     doc="TPC-H Q10 shape: returned-item revenue ranking — selective fact "
     "predicates (quarter + returnflag) push to the scans, the nation dim "
     "broadcasts, revenue per customer aggregates before a TakeOrdered "
     "top-20 (no global sort).",
     tags=("relational", "tpch", "topk"),
 )
-def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= "1996-07-01") & (F.col("o_orderdate") < "1996-10-01")
-    )
-    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    nat = F.broadcast(load_table(spark, sf_dir, "nation"))
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey)
-        .join(li, orders.o_orderkey == li.l_orderkey)
-        .join(nat, cust.c_nationkey == nat.n_nationkey)
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(
-            F.sum(_dec("l_extendedprice") * (F.lit(1) - F.col("l_discount").cast("decimal(12,2)")))
-            .cast("double")
-            .alias("revenue")
-        )
-        .select(
-            "c_custkey",
-            "c_name",
-            "revenue",
-            F.col("c_acctbal").cast("decimal(18,2)").cast("double").alias("acctbal"),
-            F.col("n_name").alias("nation"),
-        )
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -153,39 +153,28 @@ def map_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "window_first_last_value",
-    oracle="""
+def _first_last_value_sql(d: Dialect, orders: str) -> str:
+    return f"""
 SELECT o_custkey, o_orderkey,
        FIRST_VALUE(o_totalprice) OVER w AS first_price,
        LAST_VALUE(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                                       ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_price,
        NTH_VALUE(o_totalprice, 2) OVER w AS second_price
-FROM orders
+FROM {orders}
 WHERE o_custkey < 40
 WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 ORDER BY o_custkey, o_orderkey
-""",
+"""
+
+
+register_sql(
+    "window_first_last_value",
+    _first_last_value_sql,
+    ("orders",),
     doc="first/last/nth_value frame windows (full-partition frame for "
     "last_value, running frame for first/nth).",
     tags=("window",),
 )
-def window_first_last_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    orders = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 40)
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return (
-        orders.select(
-            "o_custkey",
-            "o_orderkey",
-            F.first("o_totalprice").over(w).alias("first_price"),
-            F.last("o_totalprice").over(w_full).alias("last_price"),
-            F.nth_value("o_totalprice", 2).over(w).alias("second_price"),
-        )
-        .orderBy("o_custkey", "o_orderkey")
-    )
 
 
 @register(

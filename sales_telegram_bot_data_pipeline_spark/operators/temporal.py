@@ -150,40 +150,29 @@ def asof_join_purchase_signup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # op 46 — temporal validity revalidation (DAG #2's core: README.md:70-75).
 # Recompute valid from the window, emit only rows whose flag flipped.
 # ---------------------------------------------------------------------------
-@register(
-    "validity_revalidation",
-    oracle="""
+def _revalidation_sql(d: Dialect, orders: str) -> str:
+    return f"""
 SELECT o_orderkey,
        (o_orderkey % 2 = 0) AS stored_valid,
        (TIMESTAMP '1997-06-01' >= o_orderdate AND
         TIMESTAMP '1997-06-01' <= o_orderdate + INTERVAL 90 DAY) AS now_valid
-FROM orders
+FROM {orders}
 WHERE (o_orderkey % 2 = 0) <>
       (TIMESTAMP '1997-06-01' >= o_orderdate AND
        TIMESTAMP '1997-06-01' <= o_orderdate + INTERVAL 90 DAY)
 ORDER BY o_orderkey
-""",
+"""
+
+
+register_sql(
+    "validity_revalidation",
+    _revalidation_sql,
+    ("orders",),
     doc="Reference op 46: scan metadata, recompute valid_from<=today<="
     "valid_to, emit the changed-set only (incremental revalidation). "
     "valid_from/valid_to/stored flag derived deterministically from orders.",
     tags=("temporal", "incremental"),
 )
-def validity_revalidation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    today = F.lit("1997-06-01").cast("timestamp")
-    orders = load_table(spark, sf_dir, "orders")
-    meta = orders.select(
-        "o_orderkey",
-        (F.col("o_orderkey") % 2 == 0).alias("stored_valid"),
-        F.col("o_orderdate").alias("valid_from"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")).alias("valid_to"),
-    )
-    now_valid = (today >= F.col("valid_from")) & (today <= F.col("valid_to"))
-    return (
-        meta.withColumn("now_valid", now_valid)
-        .where(F.col("now_valid") != F.col("stored_valid"))
-        .select("o_orderkey", "stored_valid", "now_valid")
-        .orderBy("o_orderkey")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -44,11 +44,6 @@ def _dec(col: str, prec: int = 18, scale: int = 2) -> F.Column:
     return F.col(col).cast(f"decimal({prec},{scale})")
 
 
-def _rev() -> F.Column:
-    """Exact-decimal revenue term ext*(1-disc) (scale-4, order-independent)."""
-    return _dec("l_extendedprice", 12, 2) * (F.lit(1) - _dec("l_discount", 8, 2))
-
-
 # ---------------------------------------------------------------------------
 # Q2 — min-cost supplier (correlated scalar MIN).
 # Adaptation: no partsupp, so the (part, supplier) cost relation is derived
@@ -133,9 +128,11 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q8 — national market share.  7-way join (3 broadcast dims), conditional
 # decimal aggregation, per-year share ratio.
 # ---------------------------------------------------------------------------
-@register(
-    "q8_market_share",
-    oracle="""
+def _q8_sql(
+    d: Dialect, lineitem: str, part: str, orders: str, customer: str, nation: str,
+    region: str, supplier: str,
+) -> str:
+    return f"""
 SELECT EXTRACT(YEAR FROM o.o_orderdate) AS o_year,
        ROUND(
          CAST(SUM(CASE WHEN n2.n_name = 'NATION_7'
@@ -143,58 +140,32 @@ SELECT EXTRACT(YEAR FROM o.o_orderdate) AS o_year,
                        ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE)
          / CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l.l_discount AS DECIMAL(8,2)))) AS DOUBLE),
          6) AS mkt_share
-FROM lineitem l
-JOIN part p     ON p.p_partkey = l.l_partkey
-JOIN orders o   ON o.o_orderkey = l.l_orderkey
-JOIN customer c ON c.c_custkey = o.o_custkey
-JOIN nation n1  ON n1.n_nationkey = c.c_nationkey
-JOIN region r   ON r.r_regionkey = n1.n_regionkey
-JOIN supplier s ON s.s_suppkey = l.l_suppkey
-JOIN nation n2  ON n2.n_nationkey = s.s_nationkey
+FROM {lineitem} l
+JOIN {part} p     ON p.p_partkey = l.l_partkey
+JOIN {orders} o   ON o.o_orderkey = l.l_orderkey
+JOIN {customer} c ON c.c_custkey = o.o_custkey
+JOIN {nation} n1  ON n1.n_nationkey = c.c_nationkey
+JOIN {region} r   ON r.r_regionkey = n1.n_regionkey
+JOIN {supplier} s ON s.s_suppkey = l.l_suppkey
+JOIN {nation} n2  ON n2.n_nationkey = s.s_nationkey
 WHERE r.r_name = 'AMERICA' AND p.p_type = 'ECONOMY'
   AND o.o_orderdate >= TIMESTAMP '1996-01-01'
   AND o.o_orderdate <  TIMESTAMP '1998-01-01'
 GROUP BY EXTRACT(YEAR FROM o.o_orderdate)
 ORDER BY o_year
-""",
+"""
+
+
+register_sql(
+    "q8_market_share",
+    _q8_sql,
+    ("lineitem", "part", "orders", "customer", "nation", "region", "supplier"),
     doc="TPC-H Q8 shape: market share of one supplier nation within a "
     "customer region by order year — 7-way join where every dim "
     "(part/customer/nation x2/region/supplier) broadcasts, conditional "
     "exact-decimal volume sums, share = ratio of the two.",
     tags=("relational", "join", "tpch"),
 )
-def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").where(F.col("p_type") == "ECONOMY")
-    orders = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    cust = load_table(spark, sf_dir, "customer")
-    n1 = load_table(spark, sf_dir, "nation").alias("n1")
-    n2 = load_table(spark, sf_dir, "nation").alias("n2")
-    region = load_table(spark, sf_dir, "region").where(F.col("r_name") == "AMERICA")
-    supp = load_table(spark, sf_dir, "supplier")
-    vol = _rev()
-    share_vol = F.when(F.col("n2.n_name") == "NATION_7", vol).otherwise(
-        F.lit(0).cast("decimal(18,4)")
-    )
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n1), cust.c_nationkey == F.col("n1.n_nationkey"))
-        .join(F.broadcast(region), F.col("n1.n_regionkey") == region.r_regionkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(n2), supp.s_nationkey == F.col("n2.n_nationkey"))
-        .groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            F.round(
-                F.sum(share_vol).cast("double") / F.sum(vol).cast("double"), 6
-            ).alias("mkt_share")
-        )
-        .orderBy("o_year")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -202,51 +173,34 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cost proxy = 0.5 * p_retailprice * l_quantity (exact decimal); the 5-way
 # join + expression + (nation, year) aggregation shape is untouched.
 # ---------------------------------------------------------------------------
-@register(
-    "q9_profit_by_nation_year",
-    oracle="""
+def _q9_sql(d: Dialect, lineitem: str, part: str, supplier: str, orders: str, nation: str) -> str:
+    return f"""
 SELECT n.n_name AS nation, EXTRACT(YEAR FROM o.o_orderdate) AS o_year,
        CAST(SUM(
          CAST(l.l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l.l_discount AS DECIMAL(8,2)))
          - CAST(0.5 AS DECIMAL(2,1)) * CAST(p.p_retailprice AS DECIMAL(12,2)) * CAST(l.l_quantity AS DECIMAL(8,0))
        ) AS DOUBLE) AS sum_profit
-FROM lineitem l
-JOIN part p     ON p.p_partkey = l.l_partkey
-JOIN supplier s ON s.s_suppkey = l.l_suppkey
-JOIN orders o   ON o.o_orderkey = l.l_orderkey
-JOIN nation n   ON n.n_nationkey = s.s_nationkey
+FROM {lineitem} l
+JOIN {part} p     ON p.p_partkey = l.l_partkey
+JOIN {supplier} s ON s.s_suppkey = l.l_suppkey
+JOIN {orders} o   ON o.o_orderkey = l.l_orderkey
+JOIN {nation} n   ON n.n_nationkey = s.s_nationkey
 WHERE p.p_name LIKE '%gear%'
 GROUP BY n.n_name, EXTRACT(YEAR FROM o.o_orderdate)
 ORDER BY nation, o_year DESC
-""",
+"""
+
+
+register_sql(
+    "q9_profit_by_nation_year",
+    _q9_sql,
+    ("lineitem", "part", "supplier", "orders", "nation"),
     doc="TPC-H Q9 shape: profit (revenue minus exact-decimal cost proxy — "
     "no partsupp in this schema, cost = 0.5*retail*qty) per supplier "
     "nation per order year; part filter LIKE '%gear%' pushes to the scan, "
     "dims broadcast, one (nation, year) shuffle.",
     tags=("relational", "join", "tpch"),
 )
-def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").where(F.col("p_name").like("%gear%"))
-    supp = load_table(spark, sf_dir, "supplier")
-    orders = load_table(spark, sf_dir, "orders")
-    nation = load_table(spark, sf_dir, "nation")
-    profit = _rev() - (
-        F.expr("CAST(0.5 AS DECIMAL(2,1))")
-        * _dec("p_retailprice", 12, 2)
-        * _dec("l_quantity", 8, 0)
-    )
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .groupBy(
-            F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year")
-        )
-        .agg(F.sum(profit).cast("double").alias("sum_profit"))
-        .orderBy("nation", F.desc("o_year"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -290,41 +244,31 @@ register_sql(
 # ---------------------------------------------------------------------------
 # Q13 — customer order-count distribution (left outer join histogram).
 # ---------------------------------------------------------------------------
-@register(
-    "q13_customer_order_distribution",
-    oracle="""
+def _q13_sql(d: Dialect, customer: str, orders: str) -> str:
+    return f"""
 SELECT c_count, COUNT(*) AS custdist
 FROM (
   SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-  FROM customer c
-  LEFT JOIN orders o ON o.o_custkey = c.c_custkey
+  FROM {customer} c
+  LEFT JOIN {orders} o ON o.o_custkey = c.c_custkey
                     AND o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
   GROUP BY c.c_custkey
 ) pc
 GROUP BY c_count
 ORDER BY custdist DESC, c_count DESC
-""",
+"""
+
+
+register_sql(
+    "q13_customer_order_distribution",
+    _q13_sql,
+    ("customer", "orders"),
     doc="TPC-H Q13 shape: LEFT OUTER join with an extra join-side predicate "
     "(kept in the join condition, NOT a post-filter — zero-order customers "
     "must survive), per-customer counts, then the distribution of counts. "
     "All-integer, exact.",
     tags=("relational", "outer-join", "tpch"),
 )
-def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").where(
-        ~F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    )
-    per_cust = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_outer")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -391,35 +335,26 @@ register_sql(
 # becomes a residual filter (and the p_brand IN superset pushes to the part
 # scan).
 # ---------------------------------------------------------------------------
-@register(
-    "q19_disjunctive_brand_revenue",
-    oracle="""
+def _q19_sql(d: Dialect, lineitem: str, part: str) -> str:
+    return f"""
 SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l.l_discount AS DECIMAL(8,2)))) AS DOUBLE) AS revenue
-FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+FROM {lineitem} l JOIN {part} p ON p.p_partkey = l.l_partkey
 WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 5  AND l.l_quantity BETWEEN 1 AND 11)
    OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 1 AND 10 AND l.l_quantity BETWEEN 10 AND 20)
    OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 1 AND 15 AND l.l_quantity BETWEEN 20 AND 30)
-""",
+"""
+
+
+register_sql(
+    "q19_disjunctive_brand_revenue",
+    _q19_sql,
+    ("lineitem", "part"),
     doc="TPC-H Q19 shape: three OR'd conjunct groups mixing build-side "
     "(brand/size) and probe-side (quantity) predicates — the equi-join "
     "key is still extracted (hash join, not nested loop) and the "
     "disjunction evaluates as a residual.",
     tags=("relational", "join", "tpch"),
 )
-def q19_disjunctive_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    qty = F.col("l_quantity")
-    cond = (
-        ((F.col("p_brand") == "Brand#1") & F.col("p_size").between(1, 5) & qty.between(1, 11))
-        | ((F.col("p_brand") == "Brand#2") & F.col("p_size").between(1, 10) & qty.between(10, 20))
-        | ((F.col("p_brand") == "Brand#3") & F.col("p_size").between(1, 15) & qty.between(20, 30))
-    )
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .where(cond)
-        .agg(F.sum(_rev()).cast("double").alias("revenue"))
-    )
 
 
 # ---------------------------------------------------------------------------

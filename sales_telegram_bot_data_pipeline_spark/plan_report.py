@@ -5,6 +5,11 @@ Python stages / codegen per query.
 
 Run: python -m sales_telegram_bot_data_pipeline_spark.plan_report [sf_dir] [out_md]
 
+Each query's plan is recorded from its second call in the session, after
+an untimed warm-up pass over the whole window: that is the call bench.py
+times, and a first call can plan differently (stored session views and
+cached relations built by earlier queries change what later calls read).
+
 The counts come from the EXECUTED (AQE-final) formatted plan.  Node ids are
 counted from the details section (``(N) OperatorName``), so a subtree shared
 by multiple parents (exchange/subtree reuse) counts ONCE — these are
@@ -15,8 +20,6 @@ from __future__ import annotations
 
 import re
 import sys
-
-from pyspark.sql import SparkSession
 
 
 def plan_facts(plan: str) -> dict:
@@ -69,6 +72,8 @@ def main() -> int:
     from .session import get_spark
 
     spark = get_spark(app_name="sales_telegram_bot_data_pipeline-plan-report", cpus=8)
+    for name in _DRIVER_WINDOW:  # warm-up pass, as in bench.py
+        REGISTRY[name].fn(spark, sf_dir).collect()
     rows = []
     for name in _DRIVER_WINDOW:
         df = REGISTRY[name].fn(spark, sf_dir)
@@ -82,7 +87,9 @@ def main() -> int:
         fh.write(
             "# PLANS — executed-plan scorecard (driver window)\n\n"
             f"Generated by `python -m sales_telegram_bot_data_pipeline_spark.plan_report {sf_dir}`.\n"
-            "Counts are distinct physical OPERATORS in the AQE-final plan "
+            "Each plan is from the query's second, warm call in the session "
+            "(after a warm-up pass over the whole window — the call bench.py "
+            "times).  Counts are distinct physical OPERATORS in the AQE-final plan "
             "(shared subtrees count once).  Review heuristics: `cartesian` "
             "must be 0 everywhere; `bnlj` only on one-row scalar builds; "
             "`python` only on operators whose semantics require it; scans "

@@ -22,10 +22,16 @@ Two ways to register:
   oracle's template: ``build(dialect, *relations)`` renders one statement,
   the oracle is ``build(DUCKDB, *tables)`` and Spark runs
   ``build(SPARK, ...)`` over this session's ``table_view``s of the same
-  tables.  Such a query has no hand-written Spark function.
-- ``@register`` when the Spark side really differs from the oracle text:
-  build-time checkpoints, ``materialize_once``, stored session views,
-  DataFrame-API forms, Python stages and streaming.
+  tables.  Such a query has no hand-written Spark function.  This also
+  covers a query whose DataFrame-API form would plan identically to its
+  oracle text: the DataFrame API and SQL are two front ends to one
+  optimizer, so that form is the same query written twice.
+- ``@register`` when the Spark side really differs from the oracle text
+  (build-time checkpoints, ``materialize_once``, stored session views,
+  DataFrame-API forms that plan differently, Python stages, streaming),
+  or when the query oracle-checks a library function that production
+  code also calls.  ``tests/test_views.py`` fails on an ``@register``
+  query whose plans are ``sameResult`` with its oracle's.
 """
 
 from __future__ import annotations

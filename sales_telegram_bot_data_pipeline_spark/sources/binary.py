@@ -35,11 +35,6 @@ DECODED_SCHEMA = (
 )
 
 
-def read_binary_dir(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """Cluster-scale binary ingestion: path/modificationTime/length/content."""
-    return spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-
-
 def with_binary_metadata(df: DataFrame, content_col: str = "content") -> DataFrame:
     """Typed metadata columns computed JVM-side from the bytes."""
     c = F.col(content_col)

@@ -29,8 +29,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Session-scoped catalog cache: resolving a parquet table re-reads footers
 # and rebuilds the file index on EVERY spark.read call (~130 ms/table
 # measured) — a real engine resolves tables through a catalog that caches

@@ -19,17 +19,9 @@ from ..functions.text import normalize_col
 def load_vocabulary_from_text(spark: SparkSession, path: str) -> list[str]:
     """Read a newline-delimited vocabulary file into a sorted distinct list
     of normalized words."""
-    lines = spark.read.text(path)
-    return _normalize_to_words(lines, "value")
-
-
-def load_vocabulary_from_column(df, col: str) -> list[str]:
-    return _normalize_to_words(df, col)
-
-
-def _normalize_to_words(df, col: str) -> list[str]:
     words = (
-        df.select(F.explode(F.split(normalize_col(col), r"\s+")).alias("w"))
+        spark.read.text(path)
+        .select(F.explode(F.split(normalize_col("value"), r"\s+")).alias("w"))
         .where(F.length("w") > 0)
         .distinct()
         .orderBy("w")

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from sales_telegram_bot_data_pipeline_spark.operators.analytics import (

@@ -7,7 +7,6 @@ from __future__ import annotations
 import math
 
 import duckdb
-import pytest
 
 from sales_telegram_bot_data_pipeline_spark import queries as q
 

@@ -11,7 +11,6 @@ import zlib
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from sales_telegram_bot_data_pipeline_spark.sources.binary import decode_stub, with_binary_metadata
 from sales_telegram_bot_data_pipeline_spark.sources.imagecodec import (

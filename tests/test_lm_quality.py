@@ -71,7 +71,6 @@ def test_kneser_ney_matches_hand_computation(spark):
     import math
 
     from sales_telegram_bot_data_pipeline_spark.functions.dialect import SPARK as SP
-    from sales_telegram_bot_data_pipeline_spark.operators.curation import BENCH_MOD
     from sales_telegram_bot_data_pipeline_spark.operators.lm_quality import (
         KN_DISCOUNT,
         _kneser_ney_sql,

@@ -13,7 +13,7 @@ import pytest
 from sales_telegram_bot_data_pipeline_spark import queries as q
 from sales_telegram_bot_data_pipeline_spark.queries import _DRIVER_WINDOW
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, formatted_plan
 
 # single-row-aggregate cross joins plan as BroadcastNestedLoopJoin with a
 # one-row build side — the O(1) scalar-broadcast shape, explicitly fine
@@ -327,10 +327,6 @@ def test_out_of_window_queries_no_global_window(spark, name):
     assert not bad, f"{name} plans unpartitioned windows: {bad}"
 
 
-def _formatted_plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-
-
 def _wide_decimals(schema, plan: str) -> list[str]:
     """Decimals of precision > 18 anywhere in a final schema (top-level or
     nested)."""
@@ -358,19 +354,6 @@ def _global_windows(schema, plan: str) -> list[str]:
     return _unpartitioned_windows(plan)
 
 
-@pytest.fixture(scope="session")
-def registry_plans(spark) -> dict:
-    """(final schema, pre-collect formatted plan) of every registered query,
-    built once at SF_SMOKE for the registry-wide sweeps below.  Plan-only:
-    the window partition spec, the join strategy and the projection types
-    are all fixed before execution."""
-    built = {}
-    for name in sorted(q.REGISTRY):
-        df = q.REGISTRY[name].fn(spark, SF_SMOKE)
-        built[name] = (df.schema, _formatted_plan(df))
-    return built
-
-
 def test_registry_wide_no_unbounded_global_window(registry_plans):
     """VERDICT r6 task 3: sweep EVERY registered query's plan for
     unpartitioned Window nodes — a new global sort/rank/NTILE over an
@@ -379,7 +362,7 @@ def test_registry_wide_no_unbounded_global_window(registry_plans):
     bound."""
     offenders = {
         name: bad
-        for name, (schema, plan) in registry_plans.items()
+        for name, (schema, plan, _) in registry_plans.items()
         if name not in _UNPARTITIONED_WINDOW_OK and (bad := _global_windows(schema, plan))
     }
     assert not offenders, (
@@ -417,7 +400,7 @@ def test_registry_wide_no_high_precision_final_decimals(registry_plans):
     BIGINT/DOUBLE/decimal(<=18,*)."""
     offenders = {
         name: hits
-        for name, (schema, plan) in registry_plans.items()
+        for name, (schema, plan, _) in registry_plans.items()
         if (hits := _wide_decimals(schema, plan))
     }
     assert not offenders, (
@@ -436,7 +419,7 @@ def test_registry_wide_no_cartesian_product(registry_plans):
     CartesianProduct in kruskal_wallis before the round-10 fix)."""
     offenders = {
         name: hits
-        for name, (schema, plan) in registry_plans.items()
+        for name, (schema, plan, _) in registry_plans.items()
         if (hits := _cartesian_products(schema, plan))
     }
     assert not offenders, (
@@ -458,10 +441,10 @@ def test_registry_sweep_checks_flag_known_bad_plans(spark):
     }
     for check, bad_sql in checks.items():
         df = spark.sql(bad_sql)
-        assert check(df.schema, _formatted_plan(df)), (check.__name__, bad_sql)
+        assert check(df.schema, formatted_plan(df)), (check.__name__, bad_sql)
         # ... and stays quiet on a plain scan
         good = spark.sql("SELECT id FROM range(10)")
-        assert not check(good.schema, _formatted_plan(good)), check.__name__
+        assert not check(good.schema, formatted_plan(good)), check.__name__
 
 
 def test_stored_view_policy_pinned():

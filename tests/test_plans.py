@@ -9,7 +9,6 @@ full input, Python appearing in a native-expression pipeline.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from sales_telegram_bot_data_pipeline_spark import queries as q

@@ -6,7 +6,7 @@ pure Wald-boundary identities the SPRT template relies on."""
 from __future__ import annotations
 
 import math
-from collections import Counter, defaultdict
+from collections import Counter
 
 import duckdb
 import pandas as pd

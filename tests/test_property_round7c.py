@@ -7,8 +7,6 @@ wrong."""
 
 from __future__ import annotations
 
-import math
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 

@@ -5,7 +5,6 @@ of examples run in milliseconds)."""
 
 from __future__ import annotations
 
-import math
 from collections import defaultdict
 
 from hypothesis import given, settings

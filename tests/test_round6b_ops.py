@@ -213,7 +213,6 @@ def test_band_tuning_nested_configs_and_lsh_row(spark):
     with both endpoints in the subset); recall bounded; on an empty
     corpus the 4 config rows survive with zero counts."""
     import hashlib
-    import os
 
     from sales_telegram_bot_data_pipeline_spark.operators.dedup import (
         BAND_TUNE_SUBSET_MOD,

@@ -140,8 +140,6 @@ def test_heatmap_covers_week_and_shares_sum_to_one(spark):
 
 
 def test_negative_sampling_no_accidental_positives(spark):
-    from pyspark.sql import functions as F
-
     from sales_telegram_bot_data_pipeline_spark.operators.curation import NEG_K
     from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table
 

@@ -166,10 +166,7 @@ def test_compact_dataset_reduces_files_preserves_rows(spark, tmp_path):
     partition, keep every row byte-identical, and be idempotent."""
     from pyspark.sql import functions as F
 
-    from sales_telegram_bot_data_pipeline_spark.sinks.dataset import (
-        compact_dataset,
-        write_dataset,
-    )
+    from sales_telegram_bot_data_pipeline_spark.sinks.dataset import compact_dataset
     from sales_telegram_bot_data_pipeline_spark.sources.tables import load_table
     from conftest import SF_SMOKE
 

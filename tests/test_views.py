@@ -18,7 +18,7 @@ import threading
 from concurrent.futures import ThreadPoolExecutor
 
 from sales_telegram_bot_data_pipeline_spark import queries as q
-from sales_telegram_bot_data_pipeline_spark.sources.tables import table_view
+from sales_telegram_bot_data_pipeline_spark.sources.tables import TABLE_NAMES, load_table, table_view
 
 from conftest import SF_ORACLE, SF_SMOKE
 
@@ -142,6 +142,46 @@ def test_oracle_templates_register_through_register_sql():
         if isinstance(node, ast.FunctionDef) and _renders_oracle_over_table_views(node)
     )
     assert not twins, twins
+
+
+# @register queries allowed to plan exactly like their own oracle text
+_ORACLE_PLAN_TWINS_OK = {
+    "revalidation_changed_set": "oracle-checks the library function "
+    "streaming.revalidate.changed_validity, which the DAG #2 batch "
+    "(run_revalidation_batch) also calls",
+}
+
+
+def test_no_oracle_plan_twins(spark, registry_plans):
+    """Spark's DataFrame API and SQL are two front ends to one optimizer.
+    An ``@register`` query whose schema, optimized plan and pre-AQE
+    physical plan are all ``sameResult`` with its own oracle text run
+    through ``spark.sql`` is the same query written twice, and registers
+    through ``register_sql`` instead.  Oracles Spark cannot analyze
+    (DuckDB-only syntax or functions) are skipped."""
+    from pyspark.errors import AnalysisException, ParseException
+
+    oracle_session = spark.newSession()
+    for t in TABLE_NAMES:
+        load_table(oracle_session, SF_SMOKE, t).createOrReplaceTempView(t)
+    twins = []
+    for name, (schema, _, qe) in registry_plans.items():
+        query = q.REGISTRY[name]
+        if query.oracle is None or query.fn.__qualname__.startswith("register_sql."):
+            continue
+        try:
+            oracle = oracle_session.sql(query.oracle)
+        except (AnalysisException, ParseException):
+            continue
+        oqe = oracle._jdf.queryExecution()
+        if (oracle.schema == schema
+                and oqe.optimizedPlan().sameResult(qe.optimizedPlan())
+                and oqe.sparkPlan().sameResult(qe.sparkPlan())):
+            twins.append(name)
+    unexpected = sorted(set(twins) - set(_ORACLE_PLAN_TWINS_OK))
+    assert not unexpected, f"@register queries that plan as their oracle: {unexpected}"
+    stale = sorted(set(_ORACLE_PLAN_TWINS_OK) - set(twins))
+    assert not stale, f"allowlist entries that no longer plan as their oracle: {stale}"
 
 
 def test_materialize_once_tags_are_unique():
