@@ -36,13 +36,17 @@ from ..sources.tables import load_table, table_view
 # --------------------------------------------------------------------------
 MIN_PAIR_SUPPORT = 5  # absolute co-occurrence floor
 
-_ASSOC_BASKETS_SQL = """
+
+def _assoc_baskets_sql(d: Dialect, lineitem: str, part: str) -> str:
+    return f"""
 SELECT DISTINCT l_orderkey AS okey, p_brand AS brand
 FROM {lineitem} JOIN {part} ON p_partkey = l_partkey
 """
 
-_ASSOC_SQL = f"""
-WITH baskets AS ({{baskets}}),
+
+def _assoc_sql(d: Dialect, lineitem: str, part: str, baskets: str) -> str:
+    return f"""
+WITH baskets AS ({baskets}),
 tot AS (SELECT COUNT(DISTINCT okey) AS n_orders FROM baskets),
 items AS (SELECT brand, COUNT(*) AS n_item FROM baskets GROUP BY brand),
 pairs AS (
@@ -65,11 +69,11 @@ ORDER BY brand_a, brand_b
 """
 
 
-@register(
+register_sql(
     "association_rules_lift",
-    oracle=_ASSOC_SQL.format(
-        baskets=_ASSOC_BASKETS_SQL.format(lineitem="lineitem", part="part")
-    ),
+    _assoc_sql,
+    ("lineitem", "part"),
+    heads={"ar_baskets": _assoc_baskets_sql},
     doc="Market-basket association rules over per-order brand baskets: "
     "support, directional confidence, lift.  Scale shape: the basket "
     "relation is DISTINCT (order, brand) so the pair self-join fans out "
@@ -79,23 +83,6 @@ ORDER BY brand_a, brand_b
     "integer counts -> identical doubles on both engines.",
     tags=("analytics", "association", "self-join"),
 )
-def association_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    lineitem = table_view(spark, sf_dir, "lineitem")
-    part = table_view(spark, sf_dir, "part")
-    # Materialize the basket relation ONCE per call (guide §3.3): Spark
-    # inlines the CTE into every consumer (tot, items, both self-join
-    # sides), and the executed plan showed the lineitem-join-part subtree
-    # expanded into 20 parquet scans / 40 exchanges — four-plus corpus
-    # scans at 100 TB.  The distinct (order, brand) relation is bounded by
-    # orders x the 25-value brand domain, so one checkpoint is tiny; the
-    # oracle keeps the single-statement CTE form (DuckDB materializes
-    # CTEs) and its unchanged PASS is the equivalence proof.
-    baskets = materialize_once(
-        spark, _ASSOC_BASKETS_SQL.format(lineitem=lineitem, part=part), "ar_baskets", sf_dir
-    )
-    return spark.sql(_ASSOC_SQL.format(baskets=f"SELECT * FROM {baskets}"))
 
 
 # --------------------------------------------------------------------------
@@ -1457,14 +1444,22 @@ def markov_stationary_distribution(spark: SparkSession, sf_dir: str) -> DataFram
 # --------------------------------------------------------------------------
 ACF_MAX_LAG = 14
 
-_ACF_DAILY_SQL = """
-SELECT CAST({dayno} AS BIGINT) AS day,
+
+def _acf_daily_sql(d: Dialect, orders: str) -> str:
+    return f"""
+SELECT CAST({d.epoch_day("o_orderdate")} AS BIGINT) AS day,
        CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
                      AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS cents
 FROM {orders} GROUP BY 1
 """
 
-_ACF_SQL = """
+
+def _acf_sql(d: Dialect, orders: str, daily: str) -> str:
+    if d.name == "spark":
+        lags_rel = f"SELECT explode(sequence(1, {ACF_MAX_LAG})) AS lag"
+    else:
+        lags_rel = f"SELECT unnest(generate_series(1, {ACF_MAX_LAG})) AS lag"
+    return f"""
 WITH daily AS ({daily}),
 tot AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -1494,15 +1489,11 @@ ORDER BY n.lag
 """
 
 
-@register(
+register_sql(
     "acf_daily_revenue",
-    oracle=_ACF_SQL.format(
-        daily=_ACF_DAILY_SQL.format(
-            dayno=DUCKDB.epoch_day("o_orderdate"),
-            orders="orders",
-        ),
-        lags_rel=f"SELECT unnest(generate_series(1, {ACF_MAX_LAG})) AS lag",
-    ),
+    _acf_sql,
+    ("orders",),
+    heads={"acf_daily": _acf_daily_sql},
     doc=f"Autocorrelation of daily revenue at lags 1..{ACF_MAX_LAG} — the "
     "time-series seasonality diagnostic (weekly cadence shows as a lag-7 "
     "peak).  EXACT arithmetic: the day series aggregates to integer "
@@ -1513,27 +1504,6 @@ ORDER BY n.lag
     "the BOUNDED day-domain aggregate.",
     tags=("analytics", "timeseries", "self-join"),
 )
-def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    orders = table_view(spark, sf_dir, "orders")
-    # Materialize the bounded day-grid series once (guide §3.3): the
-    # dev/den/num chain expanded it into 12 static corpus scans.
-    daily = materialize_once(
-        spark,
-        _ACF_DAILY_SQL.format(
-            dayno=SPARK.epoch_day("o_orderdate"),
-            orders=orders,
-        ),
-        "acf_daily",
-        key=sf_dir,
-    )
-    return spark.sql(
-        _ACF_SQL.format(
-            daily=f"SELECT * FROM {daily}",
-            lags_rel=f"SELECT explode(sequence(1, {ACF_MAX_LAG})) AS lag",
-        )
-    )
 
 
 # --------------------------------------------------------------------------

@@ -1036,7 +1036,24 @@ CMS_W = 64  # buckets per row
 CMS_TOPN = 20  # tracked heavy hitters
 
 
-def _countmin_sql(d: Dialect, table: str, wc_rel: str | None = None) -> str:
+def _cms_wc_sql(d: Dialect, table: str) -> str:
+    """Exact per-word counts of the corpus word stream: the relation the
+    sketch, the tracked keys and the audit join all read."""
+    w = d.splitws("lower(text)")
+    if d.name == "spark":
+        words_rel = (
+            f"SELECT word FROM (SELECT {w} AS ws FROM {table}) s "
+            f"LATERAL VIEW explode(ws) t AS word WHERE length(word) > 0"
+        )
+    else:
+        words_rel = (
+            f"SELECT word FROM (SELECT unnest({w}) AS word FROM {table}) s "
+            f"WHERE length(word) > 0"
+        )
+    return f"SELECT word, COUNT(*) AS cnt FROM ({words_rel}) ws GROUP BY word"
+
+
+def _countmin_sql(d: Dialect, table: str, wc: str) -> str:
     """Count-min sketch (Cormode & Muthukrishnan 2005) over the corpus word
     stream, audited against exact counts for the top heavy hitters.
 
@@ -1051,35 +1068,18 @@ def _countmin_sql(d: Dialect, table: str, wc_rel: str | None = None) -> str:
     tracked keys' (row, bucket) coordinates against the sketch and take
     MIN over rows — CMS guarantees estimate >= true count (overcount
     only), which the emitted overcount column makes auditable.  Integer
-    arithmetic end-to-end, portable md5 bucket hashes.
-
-    ``wc_rel`` overrides the word-count CTE: wc is referenced by sketch,
-    tracked AND the audit join, and Spark inlines multi-referenced CTEs
-    (measured: 6 corpus scans inline) — the Spark fn passes a MATERIALIZED
-    (localCheckpoint) vocab table so the corpus collapses exactly once;
-    DuckDB's oracle keeps the inline form (same values)."""
-    w = d.splitws("lower(text)")
-    if d.name == "spark":
-        words_rel = (
-            f"SELECT word FROM (SELECT {w} AS ws FROM {table}) s "
-            f"LATERAL VIEW explode(ws) t AS word WHERE length(word) > 0"
-        )
-        rows_explode = f"LATERAL VIEW explode(sequence(0, {CMS_D - 1})) t AS i"
-    else:
-        words_rel = (
-            f"SELECT word FROM (SELECT unnest({w}) AS word FROM {table}) s "
-            f"WHERE length(word) > 0"
-        )
-        rows_explode = None
+    arithmetic end-to-end, portable md5 bucket hashes."""
     bucket = d.md5_prefix_int(f"('cms' || CAST(i AS STRING) || '|' || word)") if d.name == "spark" else d.md5_prefix_int("('cms' || CAST(i AS VARCHAR) || '|' || word)")
     if d.name == "spark":
-        coords = f"SELECT word, cnt, i, ({bucket}) % {CMS_W} AS bucket FROM wc {rows_explode}"
+        coords = (
+            f"SELECT word, cnt, i, ({bucket}) % {CMS_W} AS bucket FROM wc "
+            f"LATERAL VIEW explode(sequence(0, {CMS_D - 1})) t AS i"
+        )
     else:
         coords = (
             f"SELECT word, cnt, i, ({bucket}) % {CMS_W} AS bucket "
             f"FROM (SELECT word, cnt, unnest(generate_series(0, {CMS_D - 1})) AS i FROM wc) x"
         )
-    wc = wc_rel or f"SELECT word, COUNT(*) AS cnt FROM ({words_rel}) ws GROUP BY word"
     return f"""
 WITH wc AS ({wc}),
 coords AS ({coords}),
@@ -1104,9 +1104,11 @@ ORDER BY true_count DESC, word
 """
 
 
-@register(
+register_sql(
     "countmin_heavy_hitters",
-    oracle=_countmin_sql(DUCKDB, "documents"),
+    _countmin_sql,
+    ("documents",),
+    heads={"cms_wc": _cms_wc_sql},
     doc=f"Count-min sketch audit: {CMS_D}x{CMS_W} mergeable count grid over "
     f"the corpus word stream (one scan, map-side combinable), top-{CMS_TOPN} "
     "heavy hitters' point-query estimates vs exact counts with the "
@@ -1114,19 +1116,6 @@ ORDER BY true_count DESC, word
     "key spaces at 100 TB; integer-only, portable hashes.",
     tags=("curation", "sketch", "agg", "text"),
 )
-def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    view = table_view(spark, sf_dir, "documents")
-    w = SPARK.splitws("lower(text)")
-    words_rel = (
-        f"SELECT word FROM (SELECT {w} AS ws FROM {view}) s "
-        f"LATERAL VIEW explode(ws) t AS word WHERE length(word) > 0"
-    )
-    wc = materialize_once(
-        spark, f"SELECT word, COUNT(*) AS cnt FROM ({words_rel}) ws GROUP BY word", "cms_wc", sf_dir
-    )
-    return spark.sql(_countmin_sql(SPARK, view, wc_rel=f"SELECT * FROM {wc}"))
 
 
 # --------------------------------------------------------------------------
@@ -2327,7 +2316,7 @@ FROM bucketed GROUP BY bucket
 """
 
 
-def _psi_sql(d: Dialect, table: str, counts_rel: str | None = None) -> str:
+def _psi_sql(d: Dialect, table: str, counts: str) -> str:
     """Population Stability Index between the hash split's train and test
     doc-length distributions on a shared equal-width grid — the industry
     drift metric beside the KS statistic (split_distribution_drift): PSI =
@@ -2336,11 +2325,6 @@ def _psi_sql(d: Dialect, table: str, counts_rel: str | None = None) -> str:
     quantize to nano-unit BIGINTs before the cross-bucket total (libm LN,
     empirical cross-engine contract); grid bounds are one O(1) scalar
     broadcast.  Rule of thumb thresholds: < 0.1 stable, > 0.25 shifted."""
-    counts = (
-        f"SELECT * FROM {counts_rel}"
-        if counts_rel
-        else _psi_counts_sql(d, table)
-    )
     return f"""
 WITH counts AS ({counts}),
 tots AS (
@@ -2365,9 +2349,11 @@ ORDER BY c.bucket
 """
 
 
-@register(
+register_sql(
     "psi_split_drift",
-    oracle=_psi_sql(DUCKDB, "documents"),
+    _psi_sql,
+    ("documents",),
+    heads={"psi_counts": _psi_counts_sql},
     doc=f"Population Stability Index between the hash split's train/test "
     f"length distributions on a shared {PSI_BUCKETS}-bucket equal-width "
     "grid, Laplace-smoothed; per-bucket contributions quantized to "
@@ -2376,14 +2362,6 @@ ORDER BY c.bucket
     "(size-aware critical value); stable flag at the 0.1 rule-of-thumb.",
     tags=("curation", "split", "stats"),
 )
-def psi_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    view = table_view(spark, sf_dir, "documents")
-    counts = materialize_once(
-        spark, _psi_counts_sql(SPARK, view), "psi_counts", key=sf_dir
-    )
-    return spark.sql(_psi_sql(SPARK, view, counts_rel=counts))
 
 
 # --------------------------------------------------------------------------

@@ -141,16 +141,18 @@ register_sql(
 # --------------------------------------------------------------------------
 # DSIR-style hashed-n-gram importance weights
 # --------------------------------------------------------------------------
-def _dsir_sql(d: Dialect, table: str, feats_rel: str | None = None) -> str:
+def _dsir_feats_sql(d: Dialect, table: str) -> str:
+    """(doc_id, bucket) pairs of the hashed bigram features."""
+    h = d.md5_prefix_int("(w1 || ' ' || w2)")
+    return f"SELECT doc_id, ({h}) % {DSIR_BUCKETS} AS f FROM ({_bigram_rel(d, table)}) bg"
+
+
+def _dsir_sql(d: Dialect, table: str, feats: str) -> str:
     """Hashed bigram features (portable md5 hash % B); per-bucket target/raw
     counts in ONE FILTER-ed aggregation pass; per-doc importance weight =
     sum of add-1-smoothed log probability ratios over its features.  The
     bucket table is O(B) = 4096 rows however large the corpus — a broadcast
     join by construction."""
-    h = d.md5_prefix_int("(w1 || ' ' || w2)")
-    feats = feats_rel or (
-        f"SELECT doc_id, ({h}) % {DSIR_BUCKETS} AS f FROM ({_bigram_rel(d, table)}) bg"
-    )
     return f"""
 WITH buckets AS (
   SELECT f,
@@ -182,9 +184,11 @@ ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "dsir_importance",
-    oracle=_dsir_sql(DUCKDB, "documents"),
+    _dsir_sql,
+    ("documents",),
+    heads={"dsir_feats": _dsir_feats_sql},
     doc=f"DSIR-style importance weights: {DSIR_BUCKETS}-bucket hashed bigram "
     "features, one-pass FILTERed target/raw bucket counts, per-doc log "
     "importance weight log p_target/p_raw (add-1 smoothing).  Bucket table "
@@ -192,23 +196,6 @@ ORDER BY doc_id
     "summed log ratios for order-independence.",
     tags=("quality", "sampling", "text"),
 )
-def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    # The feats relation (bigram explode + md5 per occurrence) is referenced
-    # TWICE in the template (bucket counts + scoring); Spark inlines CTEs,
-    # so the naive plan runs the explode+hash pass twice over the corpus.
-    # Materialize it once — (doc_id, bucket) integer pairs, far smaller than
-    # the text they came from.  localCheckpoint locally; on a cluster this
-    # is persist(MEMORY_AND_DISK) / a reliable checkpoint, same shape.
-    view = table_view(spark, sf_dir, "documents")
-    h = SPARK.md5_prefix_int("(w1 || ' ' || w2)")
-    feats = (
-        f"SELECT doc_id, ({h}) % {DSIR_BUCKETS} AS f "
-        f"FROM ({_bigram_rel(SPARK, view)}) bg"
-    )
-    rel = materialize_once(spark, feats, "dsir_feats", sf_dir)
-    return spark.sql(_dsir_sql(SPARK, view, feats_rel=f"SELECT doc_id, f FROM {rel}"))
 
 
 # --------------------------------------------------------------------------
@@ -418,7 +405,16 @@ def score_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 KN_DISCOUNT = 0.75  # the standard fixed discount (Chen & Goodman 1999)
 
 
-def _kneser_ney_sql(d: Dialect, table: str, tgt_bi_rel: str | None = None) -> str:
+def _kn_tgt_bi_sql(d: Dialect, table: str) -> str:
+    """Bigram counts of the frozen target subset: the trained model every
+    KN relation and the scoring join read."""
+    tgt = f" WHERE doc_id % {BENCH_MOD} = 0"
+    return f"""
+  SELECT w1, w2, COUNT(*) AS c2 FROM ({_bigram_rel(d, table, tgt)}) tb GROUP BY w1, w2
+"""
+
+
+def _kneser_ney_sql(d: Dialect, table: str, tgt_bi: str) -> str:
     """Interpolated Kneser-Ney (Kneser & Ney 1995; Chen & Goodman 1999
     formulation) — the stronger sibling of the add-smoothing bigram LM:
 
@@ -436,16 +432,8 @@ def _kneser_ney_sql(d: Dialect, table: str, tgt_bi_rel: str | None = None) -> st
     scoring joins; corpus text never shuffles.  Per-term logp is
     floor-quantized to integer 1e-6 units and BIGINT-summed, same
     order-independence discipline as bigram_lm_score."""
-    tgt = f" WHERE doc_id % {BENCH_MOD} = 0"
     rest = f" WHERE doc_id % {BENCH_MOD} <> 0"
     D = KN_DISCOUNT
-    tgt_bi = (
-        f"SELECT w1, w2, c2 FROM {tgt_bi_rel}"
-        if tgt_bi_rel
-        else f"""
-  SELECT w1, w2, COUNT(*) AS c2 FROM ({_bigram_rel(d, table, tgt)}) tb GROUP BY w1, w2
-"""
-    )
     return f"""
 WITH tgt_bi AS ({tgt_bi}),
 ctx AS (
@@ -489,9 +477,11 @@ ORDER BY doc_id
 """
 
 
-@register(
+register_sql(
     "kneser_ney_bigram_score",
-    oracle=_kneser_ney_sql(DUCKDB, "documents"),
+    _kneser_ney_sql,
+    ("documents",),
+    heads={"kn_tgt_bi": _kn_tgt_bi_sql},
     doc=f"Interpolated Kneser-Ney bigram LM (D={KN_DISCOUNT}, Chen & "
     f"Goodman 1999) trained on the frozen target subset (doc_id % "
     f"{BENCH_MOD} = 0): absolute discounting + continuation-TYPE backoff, "
@@ -501,22 +491,6 @@ ORDER BY doc_id
     "over-penalizes rare-but-real collocations.",
     tags=("quality", "lm", "text"),
 )
-def kneser_ney_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    view = table_view(spark, sf_dir, "documents")
-    # Materialize the trained bigram model once (guide §3.3): ctx, cont,
-    # the two tot scalar subqueries and the scoring join each re-ran the
-    # target-subset bigram explode (12 static scans per statement); the
-    # scoring side's own explode stays the one remaining corpus pass.
-    tgt = f" WHERE doc_id % {BENCH_MOD} = 0"
-    tgt_bi = materialize_once(
-        spark,
-        f"SELECT w1, w2, COUNT(*) AS c2 FROM ({_bigram_rel(SPARK, view, tgt)}) tb GROUP BY w1, w2",
-        "kn_tgt_bi",
-        key=sf_dir,
-    )
-    return spark.sql(_kneser_ney_sql(SPARK, view, tgt_bi_rel=tgt_bi))
 
 
 # --------------------------------------------------------------------------

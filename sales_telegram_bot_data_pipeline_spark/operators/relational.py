@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.dialect import Dialect
 from ..registry import register, register_sql
-from ..sources.tables import load_table, table_view
+from ..sources.tables import load_table
 
 
 def _dec(col: str, prec: int = 18, scale: int = 2) -> F.Column:
@@ -1376,7 +1376,8 @@ register_sql(
 # --------------------------------------------------------------------------
 # share-of-parent hierarchical rollup (region -> nation -> revenue)
 # --------------------------------------------------------------------------
-_SHARE_ROLLUP_NAT_SQL = """
+def _share_rollup_nat_sql(d: Dialect, orders: str, customer: str, nation: str, region: str) -> str:
+    return f"""
 SELECT r.r_name AS region, n.n_name AS nation,
        CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
                      AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS cents
@@ -1387,7 +1388,11 @@ JOIN {region} r ON r.r_regionkey = n.n_regionkey
 GROUP BY r.r_name, n.n_name
 """
 
-_SHARE_ROLLUP_SQL = """
+
+def _share_rollup_sql(
+    d: Dialect, orders: str, customer: str, nation: str, region: str, nat: str
+) -> str:
+    return f"""
 WITH nat AS ({nat}),
 reg AS (SELECT region, CAST(SUM(cents) AS DECIMAL(38,0)) AS rcents FROM nat GROUP BY region),
 tot AS (SELECT CAST(SUM(cents) AS DECIMAL(38,0)) AS tcents FROM nat)
@@ -1403,13 +1408,11 @@ ORDER BY nat.region, nat.nation
 """
 
 
-@register(
+register_sql(
     "share_of_parent_rollup",
-    oracle=_SHARE_ROLLUP_SQL.format(
-        nat=_SHARE_ROLLUP_NAT_SQL.format(
-            orders="orders", customer="customer", nation="nation", region="region"
-        )
-    ),
+    _share_rollup_sql,
+    ("orders", "customer", "nation", "region"),
+    heads={"sr_nat": _share_rollup_nat_sql},
     doc="Ratio-to-parent hierarchical rollup: nation-grain revenue with "
     "share-of-region and share-of-total — the BI contribution view the "
     "plain ROLLUP (rollup_returnflag_status) does not give (subtotal "
@@ -1419,12 +1422,3 @@ ORDER BY nat.region, nat.nation
     "exact cents everywhere, two identical double divisions at the end.",
     tags=("relational", "rollup", "agg"),
 )
-def share_of_parent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    views = {t: table_view(spark, sf_dir, t) for t in ("orders", "customer", "nation", "region")}
-    # Materialize the 25-row nation-grain aggregate once (guide §3.3):
-    # reg/tot plus the final projection expanded it into 24 static corpus
-    # scans per statement.  The oracle keeps the single-statement form.
-    nat = materialize_once(spark, _SHARE_ROLLUP_NAT_SQL.format(**views), "sr_nat", key=sf_dir)
-    return spark.sql(_SHARE_ROLLUP_SQL.format(nat=f"SELECT * FROM {nat}"))

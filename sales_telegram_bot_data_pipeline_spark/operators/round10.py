@@ -77,9 +77,9 @@ def _levene_cells_sql(d: Dialect, table: str) -> str:
 """
 
 
-def _levene_sql(d: Dialect, table: str, cells_rel: str | None = None) -> str:
+def _levene_sql(d: Dialect, table: str, cells: str) -> str:
     return f"""
-WITH cells AS ({cells_rel or _levene_cells_sql(d, table)}),
+WITH cells AS ({cells}),
 gtot AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n_g FROM cells GROUP BY source),
 cum AS (
   SELECT source, v, c,
@@ -158,9 +158,11 @@ ORDER BY te.source
 """
 
 
-@register(
+register_sql(
     "levene_brown_forsythe",
-    oracle=_levene_sql(DUCKDB, "documents"),
+    _levene_sql,
+    ("documents",),
+    heads={"lev_cells": _levene_cells_sql},
     doc="Brown-Forsythe homogeneity-of-variance test of doc length "
     "across sources on the BOUNDED (source x n_chars) cell grid: exact "
     "grid medians (2x-scaled so deviations stay integral), per-group "
@@ -168,12 +170,6 @@ ORDER BY te.source
     "variance test beside anova_sources_doclen's mean test.",
     tags=("analytics", "stats", "agg"),
 )
-def levene_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    view = table_view(spark, sf_dir, "documents")
-    cells = materialize_once(spark, _levene_cells_sql(SPARK, view), "lev_cells", key=sf_dir)
-    return spark.sql(_levene_sql(SPARK, view, cells_rel=f"SELECT * FROM {cells}"))
 
 
 # --------------------------------------------------------------------------
@@ -477,16 +473,11 @@ FROM {orders} GROUP BY 1
 """
 
 
-def _ljung_box_sql(d: Dialect, orders: str, daily_rel: str | None = None) -> str:
+def _ljung_box_sql(d: Dialect, orders: str, daily: str) -> str:
     if d.name == "spark":
         lags_rel = f"SELECT explode(sequence(1, {_LB_LAGS})) AS lag"
     else:
         lags_rel = f"SELECT unnest(generate_series(1, {_LB_LAGS})) AS lag"
-    daily = (
-        f"SELECT * FROM {daily_rel}"
-        if daily_rel
-        else _ljung_box_daily_sql(d, orders)
-    )
     return f"""
 WITH daily AS ({daily}),
 tot AS (
@@ -528,9 +519,11 @@ FROM tot t CROSS JOIN agg a
 """
 
 
-@register(
+register_sql(
     "ljung_box_whiteness",
-    oracle=_ljung_box_sql(DUCKDB, "orders"),
+    _ljung_box_sql,
+    ("orders",),
+    heads={"lb_daily": _ljung_box_daily_sql},
     doc=f"Ljung-Box portmanteau whiteness test of daily revenue over "
     f"lags 1..{_LB_LAGS}: each autocorrelation from the exact "
     "scaled-deviation sums (acf pattern — day-domain self-join, never a "
@@ -539,12 +532,6 @@ FROM tot t CROSS JOIN agg a
     "serial-correlation test beside acf (per-lag) and adf (unit root).",
     tags=("analytics", "timeseries", "stats"),
 )
-def ljung_box_whiteness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    orders = table_view(spark, sf_dir, "orders")
-    daily = materialize_once(spark, _ljung_box_daily_sql(SPARK, orders), "lb_daily", key=sf_dir)
-    return spark.sql(_ljung_box_sql(SPARK, orders, daily_rel=daily))
 
 
 # --------------------------------------------------------------------------
@@ -770,14 +757,7 @@ FROM cohort GROUP BY g, t
 """
 
 
-def _logrank_sql(
-    d: Dialect, orders: str, customer: str, cells_rel: str | None = None
-) -> str:
-    cells = (
-        f"SELECT * FROM {cells_rel}"
-        if cells_rel
-        else _logrank_cells_sql(d, orders, customer)
-    )
+def _logrank_sql(d: Dialect, orders: str, customer: str, cells: str) -> str:
     return f"""
 WITH cells AS ({cells}),
 gtot AS (SELECT g, CAST(SUM(dd + cc) AS BIGINT) AS n_g FROM cells GROUP BY g),
@@ -841,9 +821,11 @@ FROM agg a
 """
 
 
-@register(
+register_sql(
     "logrank_test_segments",
-    oracle=_logrank_sql(DUCKDB, "orders", "customer"),
+    _logrank_sql,
+    ("orders", "customer"),
+    heads={"lr_cells": _logrank_cells_sql},
     doc="Two-group logrank test (BUILDING segment vs rest) of the "
     "repurchase survival curves — the SIGNIFICANCE test beside "
     "kaplan_meier_repurchase (estimator), nelson_aalen_hazard "
@@ -854,22 +836,6 @@ FROM agg a
     "3.841e0.",
     tags=("evaluation", "survival", "stats"),
 )
-def logrank_test_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    orders = table_view(spark, sf_dir, "orders")
-    customer = table_view(spark, sf_dir, "customer")
-    # Materialize the bounded (group x day) cell grid once (guide §3.3):
-    # gtot/taxis/dense plus the two gtot scalar subqueries expanded the
-    # cohort chain into 40 static corpus scans per statement.  One
-    # checkpoint -> one cohort build; the statement reads only the view.
-    cells = materialize_once(
-        spark,
-        _logrank_cells_sql(SPARK, orders, customer),
-        "lr_cells",
-        key=sf_dir,
-    )
-    return spark.sql(_logrank_sql(SPARK, orders, customer, cells_rel=cells))
 
 
 # --------------------------------------------------------------------------

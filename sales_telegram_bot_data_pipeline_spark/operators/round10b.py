@@ -135,12 +135,7 @@ FROM {events} GROUP BY 1, 2
 """
 
 
-def _friedman_sql(d: Dialect, events: str, cells_rel: str | None = None) -> str:
-    cells = (
-        f"SELECT * FROM {cells_rel}"
-        if cells_rel
-        else _friedman_cells_sql(d, events)
-    )
+def _friedman_sql(d: Dialect, events: str, cells: str) -> str:
     return f"""
 WITH cells AS ({cells}),
 types AS (SELECT DISTINCT event_type FROM cells),
@@ -192,9 +187,11 @@ ORDER BY c.event_type
 """
 
 
-@register(
+register_sql(
     "friedman_rank_test",
-    oracle=_friedman_sql(DUCKDB, "events"),
+    _friedman_sql,
+    ("events",),
+    heads={"fr_cells": _friedman_cells_sql},
     doc="Tie-corrected Friedman test of whether the five event types "
     "keep a consistent daily volume ordering (blocks = days, "
     "treatments = types): 2x-scaled tie-averaged ranks keep the whole "
@@ -205,12 +202,6 @@ ORDER BY c.event_type
     "kendall_tau_b (pairwise).",
     tags=("analytics", "stats", "agg"),
 )
-def friedman_rank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    events = table_view(spark, sf_dir, "events")
-    cells = materialize_once(spark, _friedman_cells_sql(SPARK, events), "fr_cells", key=sf_dir)
-    return spark.sql(_friedman_sql(SPARK, events, cells_rel=cells))
 
 
 # --------------------------------------------------------------------------
@@ -227,12 +218,7 @@ FROM {orders} GROUP BY 1, 2
 """
 
 
-def _cramers_sql(d: Dialect, orders: str, cells_rel: str | None = None) -> str:
-    cells = (
-        f"SELECT * FROM {cells_rel}"
-        if cells_rel
-        else _cramers_cells_sql(d, orders)
-    )
+def _cramers_sql(d: Dialect, orders: str, cells: str) -> str:
     return f"""
 WITH cells AS ({cells}),
 ra AS (SELECT a, CAST(SUM(c) AS BIGINT) AS ca FROM cells GROUP BY a),
@@ -276,9 +262,11 @@ FROM fin
 """
 
 
-@register(
+register_sql(
     "cramers_v_bias_corrected",
-    oracle=_cramers_sql(DUCKDB, "orders"),
+    _cramers_sql,
+    ("orders",),
+    heads={"cv_cells": _cramers_cells_sql},
     doc="Cramer's V effect size of the order-priority x order-status "
     "association, plain and Bergsma bias-corrected: the corpus "
     "collapses to the bounded 5x3 contingency grid in one map-side-"
@@ -288,12 +276,6 @@ FROM fin
     "counts — everything is 'significant'; V says whether it matters).",
     tags=("analytics", "stats", "agg"),
 )
-def cramers_v_bias_corrected(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    orders = table_view(spark, sf_dir, "orders")
-    cells = materialize_once(spark, _cramers_cells_sql(SPARK, orders), "cv_cells", key=sf_dir)
-    return spark.sql(_cramers_sql(SPARK, orders, cells_rel=cells))
 
 
 # --------------------------------------------------------------------------
@@ -435,12 +417,7 @@ SELECT day, {sym} AS s FROM z
 """
 
 
-def _sax_sql(d: Dialect, orders: str, sax_rel: str | None = None) -> str:
-    sax = (
-        f"SELECT * FROM {sax_rel}"
-        if sax_rel
-        else _sax_symbols_sql(d, orders)
-    )
+def _sax_sql(d: Dialect, orders: str, sax: str) -> str:
     return f"""
 WITH sax AS ({sax}),
 -- 3-day motif words via exact consecutive-day self-joins (adf pattern)
@@ -457,9 +434,11 @@ ORDER BY n_occurrences DESC, motif
 """
 
 
-@register(
+register_sql(
     "sax_daily_revenue_motifs",
-    oracle=_sax_sql(DUCKDB, "orders"),
+    _sax_sql,
+    ("orders",),
+    heads={"sax_syms": _sax_symbols_sql},
     doc="SAX symbolic discretization of daily revenue (4-symbol "
     "alphabet, standard N(0,1) quartile breakpoints as literals, "
     "z-scores from exact cancellation-free moment sums) with 3-day "
@@ -469,26 +448,19 @@ ORDER BY n_occurrences DESC, motif
     "primitive under motif/discord mining).",
     tags=("analytics", "timeseries", "agg"),
 )
-def sax_daily_revenue_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    orders = table_view(spark, sf_dir, "orders")
-    sax = materialize_once(spark, _sax_symbols_sql(SPARK, orders), "sax_syms", key=sf_dir)
-    return spark.sql(_sax_sql(SPARK, orders, sax_rel=sax))
 
 
 # --------------------------------------------------------------------------
 # mutual information of (source, lang)
 # --------------------------------------------------------------------------
-def _mi_sql(d: Dialect, table: str, cells_rel: str | None = None) -> str:
-    cells = (
-        f"SELECT * FROM {cells_rel}"
-        if cells_rel
-        else f"""
+def _mi_cells_sql(d: Dialect, table: str) -> str:
+    return f"""
   SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS c
   FROM {table} GROUP BY source, lang
 """
-    )
+
+
+def _mi_sql(d: Dialect, table: str, cells: str) -> str:
     return f"""
 WITH cells AS ({cells}),
 ms AS (SELECT source, CAST(SUM(c) AS BIGINT) AS cs FROM cells GROUP BY source),
@@ -533,9 +505,11 @@ FROM tot t CROSS JOIN agg a
 """
 
 
-@register(
+register_sql(
     "mutual_information_source_lang",
-    oracle=_mi_sql(DUCKDB, "documents"),
+    _mi_sql,
+    ("documents",),
+    heads={"mi_cells": _mi_cells_sql},
     doc="Mutual information and symmetric NMI of the (source, lang) "
     "pairing: the corpus collapses to the bounded contingency grid in "
     "one groupBy, per-cell p*ln terms nano-quantized before the grid "
@@ -544,20 +518,6 @@ FROM tot t CROSS JOIN agg a
     "chi_squared_independence's yes/no.",
     tags=("analytics", "stats", "text"),
 )
-def mutual_information_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    view = table_view(spark, sf_dir, "documents")
-    # Materialize the bounded contingency grid once (guide §3.3): the
-    # ms/ml/tot marginals and three term CTEs expanded it into 18 static
-    # corpus scans per statement.
-    cells = materialize_once(
-        spark,
-        f"SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS c FROM {view} GROUP BY source, lang",
-        "mi_cells",
-        key=sf_dir,
-    )
-    return spark.sql(_mi_sql(SPARK, view, cells_rel=cells))
 
 
 # --------------------------------------------------------------------------

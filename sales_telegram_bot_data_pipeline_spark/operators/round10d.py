@@ -31,11 +31,8 @@ Dual-dialect per repo conventions throughout."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register, register_sql
-from ..sources.tables import table_view
+from ..functions.dialect import Dialect
+from ..registry import register_sql
 
 
 # --------------------------------------------------------------------------
@@ -52,12 +49,7 @@ FROM {table} GROUP BY source, n_chars
 """
 
 
-def _kruskal_sql(d: Dialect, table: str, cells_rel: str | None = None) -> str:
-    cells = (
-        f"SELECT * FROM {cells_rel}"
-        if cells_rel
-        else _kruskal_cells_sql(d, table)
-    )
+def _kruskal_sql(d: Dialect, table: str, cells: str) -> str:
     return f"""
 WITH cells AS ({cells}),
 vals AS (SELECT v, CAST(SUM(c) AS BIGINT) AS cv FROM cells GROUP BY v),
@@ -124,9 +116,11 @@ ORDER BY gg.source
 """
 
 
-@register(
+register_sql(
     "kruskal_wallis_doclen",
-    oracle=_kruskal_sql(DUCKDB, "documents"),
+    _kruskal_sql,
+    ("documents",),
+    heads={"kw_cells": _kruskal_cells_sql},
     doc="Tie-corrected Kruskal-Wallis k-sample rank test of doc length "
     "across sources: global tie-averaged ranks in 2x-scaled exact "
     "integers from the bounded value grid's triangular cumulative "
@@ -136,17 +130,6 @@ ORDER BY gg.source
     "rank test beside friedman (blocked) and ranksum (two-sample).",
     tags=("analytics", "stats", "agg"),
 )
-def kruskal_wallis_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    view = table_view(spark, sf_dir, "documents")
-    # Materialize the bounded (source x value) grid once (guide §3.3):
-    # vals/ranks/g/ties expanded it into 18 static corpus scans per
-    # statement.  The oracle keeps the single-statement form.
-    cells = materialize_once(
-        spark, _kruskal_cells_sql(SPARK, view), "kw_cells", key=sf_dir
-    )
-    return spark.sql(_kruskal_sql(SPARK, view, cells_rel=cells))
 
 
 # --------------------------------------------------------------------------
@@ -185,27 +168,16 @@ SELECT 1 AS side, hi.s AS src, gb.v, gb.c FROM gb CROSS JOIN hi
 """
 
 
-def _src2_head_sql(d: Dialect, table: str, cells_rel: str | None = None) -> str:
+def _src2_head_sql(cells: str) -> str:
     """The lo/hi/ga/gb WITH-clause head shared by the two-source grid
-    tests: inline (oracle / default) or re-read from a materialized
-    ``_src2_cells_sql`` view (Spark side).  MAX(src) over a side equals
-    the lo/hi scalar because every row of a side carries its label."""
-    if cells_rel:
-        return f"""lo AS (SELECT MAX(src) AS s FROM {cells_rel} WHERE side = 0),
-hi AS (SELECT MAX(src) AS s FROM {cells_rel} WHERE side = 1),
-ga AS (SELECT v, c FROM {cells_rel} WHERE side = 0),
-gb AS (SELECT v, c FROM {cells_rel} WHERE side = 1)"""
-    return f"""two AS ({_hl_sources_rel(d, table)}),
-lo AS (SELECT MIN(source) AS s FROM two),
-hi AS (SELECT MAX(source) AS s FROM two),
-ga AS (
-  SELECT CAST(n_chars AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS c
-  FROM {table} t JOIN lo ON t.source = lo.s GROUP BY n_chars
-),
-gb AS (
-  SELECT CAST(n_chars AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS c
-  FROM {table} t JOIN hi ON t.source = hi.s GROUP BY n_chars
-)"""
+    tests, read from the side-tagged ``_src2_cells_sql`` relation.
+    MAX(src) over a side equals the lo/hi scalar because every row of a
+    side carries its label."""
+    return f"""cells AS ({cells}),
+lo AS (SELECT MAX(src) AS s FROM cells WHERE side = 0),
+hi AS (SELECT MAX(src) AS s FROM cells WHERE side = 1),
+ga AS (SELECT v, c FROM cells WHERE side = 0),
+gb AS (SELECT v, c FROM cells WHERE side = 1)"""
 
 
 def _hl_diffs_sql(d: Dialect, table: str) -> str:
@@ -233,12 +205,11 @@ def _hl_diffs_sql(d: Dialect, table: str) -> str:
 """
 
 
-def _hl_sql(d: Dialect, table: str, diffs_rel: str | None = None) -> str:
+def _hl_sql(d: Dialect, table: str, diffs: str) -> str:
     # pairwise-difference grid: |V_a| x |V_b| cells (value-domain squared,
     # NEVER corpus squared), weight = product of cell counts; the two
     # source labels ride the grid rows so the final projection never
     # re-derives the lo/hi scalar subtrees
-    diffs = diffs_rel or _hl_diffs_sql(d, table)
     return f"""
 WITH dgrid AS ({diffs}),
 diffs AS (SELECT dd, w FROM dgrid),
@@ -273,9 +244,11 @@ FROM tot t CROSS JOIN mlo ml CROSS JOIN mhi mh
 """
 
 
-@register(
+register_sql(
     "hodges_lehmann_shift",
-    oracle=_hl_sql(DUCKDB, "documents"),
+    _hl_sql,
+    ("documents",),
+    heads={"hl_diffs": _hl_diffs_sql},
     doc="Hodges-Lehmann location-shift estimator between the two "
     "lexicographically-first sources: the median of ALL pairwise "
     "doc-length differences, but the n_a x n_b pair population "
@@ -287,12 +260,6 @@ FROM tot t CROSS JOIN mlo ml CROSS JOIN mhi mh
     "ranks).",
     tags=("analytics", "stats", "agg"),
 )
-def hodges_lehmann_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    view = table_view(spark, sf_dir, "documents")
-    dgrid = materialize_once(spark, _hl_diffs_sql(SPARK, view), "hl_diffs", key=sf_dir)
-    return spark.sql(_hl_sql(SPARK, view, diffs_rel=f"SELECT * FROM {dgrid}"))
 
 
 # --------------------------------------------------------------------------

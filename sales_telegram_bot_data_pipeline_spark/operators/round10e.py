@@ -25,11 +25,9 @@ Dual-dialect per repo conventions throughout."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register
-from ..sources.tables import table_view
+from ..functions.dialect import Dialect
+from ..registry import register_sql
+from .round10d import _src2_cells_sql, _src2_head_sql
 
 _CENTS = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
 
@@ -39,7 +37,9 @@ _CENTS = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
 # --------------------------------------------------------------------------
 def _binseg_daily_sql(d: Dialect, orders: str) -> str:
     """The bounded day-grid revenue series the triangular prefix join
-    re-references (12 static scans per statement, guide §3.3)."""
+    re-references.  It stays inline: in 10 interleaved pairs the
+    statement with this series inline beat the one reading a per-call
+    checkpoint of it at both sf0.01 and sf0.1."""
     dayno = d.epoch_day("o_orderdate")
     return f"""
 SELECT CAST({dayno} AS BIGINT) AS day,
@@ -48,14 +48,9 @@ FROM {orders} GROUP BY 1
 """
 
 
-def _binseg_sql(d: Dialect, orders: str, daily_rel: str | None = None) -> str:
-    daily = (
-        f"SELECT * FROM {daily_rel}"
-        if daily_rel
-        else _binseg_daily_sql(d, orders)
-    )
+def _binseg_sql(d: Dialect, orders: str) -> str:
     return f"""
-WITH daily AS ({daily}),
+WITH daily AS ({_binseg_daily_sql(d, orders)}),
 tot AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(y) AS DECIMAL(38,0)) AS s
   FROM daily
@@ -104,9 +99,10 @@ CROSS JOIN tot t
 """
 
 
-@register(
+register_sql(
     "binary_segmentation_split",
-    oracle=_binseg_sql(DUCKDB, "orders"),
+    _binseg_sql,
+    ("orders",),
     doc="Single-changepoint location by binary segmentation on daily "
     "revenue: between-segment sum of squares per candidate split from "
     "exact prefix sums (triangular join on the bounded day grid), "
@@ -117,22 +113,14 @@ CROSS JOIN tot t
     "algorithm.",
     tags=("analytics", "timeseries", "changepoint"),
 )
-def binary_segmentation_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    orders = table_view(spark, sf_dir, "orders")
-    daily = materialize_once(spark, _binseg_daily_sql(SPARK, orders), "bs_daily", key=sf_dir)
-    return spark.sql(_binseg_sql(SPARK, orders, daily_rel=daily))
 
 
 # --------------------------------------------------------------------------
 # entropy rate of the event-type Markov chain
 # --------------------------------------------------------------------------
-def _entropy_rate_sql(d: Dialect, events: str, trans_rel: str | None = None) -> str:
-    trans = (
-        f"SELECT from_type AS i, to_type AS j, n AS c FROM {trans_rel}"
-        if trans_rel
-        else f"""
+def _entropy_trans_sql(d: Dialect, events: str) -> str:
+    """The bounded event-type transition grid every tail CTE references."""
+    return f"""
   WITH seq AS (
     SELECT user_id, event_type,
            LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -142,7 +130,9 @@ def _entropy_rate_sql(d: Dialect, events: str, trans_rel: str | None = None) -> 
   SELECT event_type AS i, next_type AS j, CAST(COUNT(*) AS BIGINT) AS c
   FROM seq WHERE next_type IS NOT NULL GROUP BY 1, 2
 """
-    )
+
+
+def _entropy_rate_sql(d: Dialect, events: str, trans: str) -> str:
     return f"""
 WITH trans AS ({trans}),
 ri AS (SELECT i, CAST(SUM(c) AS BIGINT) AS ci FROM trans GROUP BY i),
@@ -175,9 +165,11 @@ FROM tot t CROSS JOIN agg a
 """
 
 
-@register(
+register_sql(
     "markov_entropy_rate",
-    oracle=_entropy_rate_sql(DUCKDB, "events"),
+    _entropy_rate_sql,
+    ("events",),
+    heads={"er_trans": _entropy_trans_sql},
     doc="Entropy rate H(next|current) of the user event-type Markov "
     "chain over the bounded transition grid (LEAD window per user — "
     "user_id is the natural parallel unit), per-cell p*ln terms "
@@ -188,25 +180,14 @@ FROM tot t CROSS JOIN agg a
     "markov_stationary_distribution.",
     tags=("analytics", "markov", "stats"),
 )
-def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-    from .analytics import _markov_trans_sql
-
-    events = table_view(spark, sf_dir, "events")
-    # Materialize the bounded transition grid once (guide §3.3; shares
-    # the stationary-distribution builder — columns aliased i/j/c here).
-    trans = materialize_once(spark, _markov_trans_sql(events), "er_trans", key=sf_dir)
-    return spark.sql(_entropy_rate_sql(SPARK, events, trans_rel=trans))
 
 
 # --------------------------------------------------------------------------
 # two-sample Cramér-von Mises on the bounded value grid
 # --------------------------------------------------------------------------
-def _cvm_sql(d: Dialect, table: str, cells_rel: str | None = None) -> str:
-    from .round10d import _src2_head_sql
-
+def _cvm_sql(d: Dialect, table: str, cells: str) -> str:
     return f"""
-WITH {_src2_head_sql(d, table, cells_rel)},
+WITH {_src2_head_sql(cells)},
 na AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM ga),
 nb AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM gb),
 pooled AS (
@@ -258,9 +239,11 @@ FROM na n1 CROSS JOIN nb n2 CROSS JOIN agg a
 """
 
 
-@register(
+register_sql(
     "cramer_von_mises_two_sample",
-    oracle=_cvm_sql(DUCKDB, "documents"),
+    _cvm_sql,
+    ("documents",),
+    heads={"cvm_cells": _src2_cells_sql},
     doc="Two-sample Cramér-von Mises statistic between the two "
     "lexicographically-first sources over doc lengths: T = "
     "nm/(n+m)^2 * sum w(v) (Fa - Fb)^2 over the bounded pooled value "
@@ -270,15 +253,3 @@ FROM na n1 CROSS JOIN nb n2 CROSS JOIN agg a
     "sensitivity) beside KS's sup-type D.",
     tags=("analytics", "stats", "agg"),
 )
-def cramer_von_mises_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-    from .round10d import _src2_cells_sql
-
-    view = table_view(spark, sf_dir, "documents")
-    # Materialize the side-tagged two-source value grid once (guide §3.3):
-    # na/nb/pooled/cum/terms plus the lo/hi scalar subqueries expanded it
-    # into 36 static corpus scans per statement.
-    cells = materialize_once(
-        spark, _src2_cells_sql(SPARK, view), "cvm_cells", key=sf_dir
-    )
-    return spark.sql(_cvm_sql(SPARK, view, cells_rel=cells))

@@ -22,21 +22,17 @@ Dual-dialect per repo conventions throughout."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register, register_sql
-from ..sources.tables import table_view
+from ..functions.dialect import Dialect
+from ..registry import register_sql
+from .round10d import _src2_cells_sql, _src2_head_sql
 
 
 # --------------------------------------------------------------------------
 # common-language effect size (Vargha-Delaney A)
 # --------------------------------------------------------------------------
-def _cles_sql(d: Dialect, table: str, cells_rel: str | None = None) -> str:
-    from .round10d import _src2_head_sql
-
+def _cles_sql(d: Dialect, table: str, cells: str) -> str:
     return f"""
-WITH {_src2_head_sql(d, table, cells_rel)},
+WITH {_src2_head_sql(cells)},
 na AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM ga),
 nb AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM gb),
 -- win/tie pair mass on the bounded |V|x|V| grid: exact integers; the
@@ -62,9 +58,11 @@ FROM na n1 CROSS JOIN nb n2 CROSS JOIN u
 """
 
 
-@register(
+register_sql(
     "cles_effect_size",
-    oracle=_cles_sql(DUCKDB, "documents"),
+    _cles_sql,
+    ("documents",),
+    heads={"cl_cells": _src2_cells_sql},
     doc="Common-language effect size (Vargha-Delaney A = P(X>Y) + "
     "0.5 P(X=Y)) between the two lexicographically-first sources' doc "
     "lengths: win/tie pair mass on the bounded |V|x|V| count-product "
@@ -73,28 +71,14 @@ FROM na n1 CROSS JOIN nb n2 CROSS JOIN u
     "(reject), Hodges-Lehmann (shift), and ranksum (ordering).",
     tags=("analytics", "stats", "agg"),
 )
-def cles_effect_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-    from .round10d import _src2_cells_sql
-
-    view = table_view(spark, sf_dir, "documents")
-    # Materialize the side-tagged two-source value grid once (guide §3.3):
-    # na/nb/u plus the lo/hi scalar subqueries expanded it into 20 static
-    # corpus scans per statement.
-    cells = materialize_once(
-        spark, _src2_cells_sql(SPARK, view), "cl_cells", key=sf_dir
-    )
-    return spark.sql(_cles_sql(SPARK, view, cells_rel=cells))
 
 
 # --------------------------------------------------------------------------
 # Hellinger / Bhattacharyya between two length distributions
 # --------------------------------------------------------------------------
-def _hellinger_sql(d: Dialect, table: str, cells_rel: str | None = None) -> str:
-    from .round10d import _src2_head_sql
-
+def _hellinger_sql(d: Dialect, table: str, cells: str) -> str:
     return f"""
-WITH {_src2_head_sql(d, table, cells_rel)},
+WITH {_src2_head_sql(cells)},
 na AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM ga),
 nb AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM gb),
 -- Bhattacharyya coefficient sum sqrt(p_v q_v) over the pooled value
@@ -123,9 +107,11 @@ FROM na n1 CROSS JOIN nb n2 CROSS JOIN agg a
 """
 
 
-@register(
+register_sql(
     "hellinger_bhattacharyya",
-    oracle=_hellinger_sql(DUCKDB, "documents"),
+    _hellinger_sql,
+    ("documents",),
+    heads={"hb_cells": _src2_cells_sql},
     doc="Hellinger distance and Bhattacharyya coefficient between the "
     "two lexicographically-first sources' doc-length distributions on "
     "the bounded value grid: per-cell sqrt(p*q) terms nano-quantized "
@@ -135,18 +121,6 @@ FROM na n1 CROSS JOIN nb n2 CROSS JOIN agg a
     "triangulates across sources.",
     tags=("analytics", "stats", "agg"),
 )
-def hellinger_bhattacharyya(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-    from .round10d import _src2_cells_sql
-
-    view = table_view(spark, sf_dir, "documents")
-    # Materialize the side-tagged two-source value grid once (guide §3.3):
-    # na/nb/terms plus the lo/hi scalar subqueries expanded it into 28
-    # static corpus scans per statement.
-    cells = materialize_once(
-        spark, _src2_cells_sql(SPARK, view), "hb_cells", key=sf_dir
-    )
-    return spark.sql(_hellinger_sql(SPARK, view, cells_rel=cells))
 
 
 # --------------------------------------------------------------------------

@@ -282,7 +282,7 @@ FROM binned
 """
 
 
-def _isotonic_sql(d: Dialect, orders: str, pre_rel: str | None = None) -> str:
+def _isotonic_sql(d: Dialect, orders: str, pre: str) -> str:
     """Isotonic (non-decreasing) calibration of a binned empirical rate
     WITHOUT an iterative driver loop: over the K aggregated bins the
     isotonic-regression fit has the minimax closed form
@@ -302,11 +302,6 @@ def _isotonic_sql(d: Dialect, orders: str, pre_rel: str | None = None) -> str:
     joins (K=10 → at most 1000 combinations), exactly the bounded-model
     contract of the shapley coalition table.  Interval averages divide
     exact BIGINT prefix-sum differences; DOUBLE appears only there."""
-    pre = (
-        f"SELECT * FROM {pre_rel}"
-        if pre_rel
-        else _isotonic_pre_sql(d, orders)
-    )
     return f"""
 WITH pre AS ({pre}),
 iv AS (
@@ -331,9 +326,11 @@ ORDER BY recency_bin
 """
 
 
-@register(
+register_sql(
     "isotonic_calibration_bins",
-    oracle=_isotonic_sql(DUCKDB, "orders"),
+    _isotonic_sql,
+    ("orders",),
+    heads={"iso_pre": _isotonic_pre_sql},
     doc="Isotonic calibration of P(order finished | recency bin) via the "
     f"minimax closed form fit_k = max_(i<=k) min_(j>=k) avg(i..j) over "
     f"K={ISO_BINS} aggregated bins — PAVA without the sequential loop "
@@ -343,12 +340,6 @@ ORDER BY recency_bin
     "before thresholding.",
     tags=("evaluation", "calibration", "agg"),
 )
-def isotonic_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    orders = table_view(spark, sf_dir, "orders")
-    pre = materialize_once(spark, _isotonic_pre_sql(SPARK, orders), "iso_pre", key=sf_dir)
-    return spark.sql(_isotonic_sql(SPARK, orders, pre_rel=pre))
 
 
 # --------------------------------------------------------------------------
@@ -367,7 +358,7 @@ def _ipf_cells_sql(d: Dialect, orders: str, customer: str) -> str:
 """
 
 
-def _ipf_sql(d: Dialect, orders: str, customer: str, cells_rel: str | None = None) -> str:
+def _ipf_sql(d: Dialect, orders: str, customer: str, cells: str) -> str:
     """One full IPF round (row pass then column pass) raking the
     (o_orderpriority x c_mktsegment) contingency grid to UNIFORM target
     margins — the survey-calibration primitive (Deming–Stephan 1940,
@@ -385,7 +376,7 @@ def _ipf_sql(d: Dialect, orders: str, customer: str, cells_rel: str | None = Non
     entirely on the bounded grid — the shapley coalition-table
     contract."""
     return f"""
-WITH cells AS ({cells_rel or _ipf_cells_sql(d, orders, customer)}),
+WITH cells AS ({cells}),
 tot AS (SELECT CAST(SUM(n) AS BIGINT) AS t,
                CAST(COUNT(DISTINCT priority) AS BIGINT) AS np,
                CAST(COUNT(DISTINCT segment) AS BIGINT) AS ns
@@ -443,9 +434,11 @@ ORDER BY r.priority, r.segment
 """
 
 
-@register(
+register_sql(
     "ipf_raking_weights",
-    oracle=_ipf_sql(DUCKDB, "orders", "customer"),
+    _ipf_sql,
+    ("orders", "customer"),
+    heads={"ipf_cells": _ipf_cells_sql},
     doc="Survey raking (one full IPF round, Deming-Stephan) of the "
     "(o_orderpriority x c_mktsegment) grid to uniform margins: corpus "
     "touched once (broadcastable dim join + 25-cell groupBy), scaling "
@@ -455,24 +448,6 @@ ORDER BY r.priority, r.segment
     "demographic re-weighting primitive for training-corpus balance.",
     tags=("analytics", "calibration", "agg"),
 )
-def ipf_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    orders = table_view(spark, sf_dir, "orders")
-    customer = table_view(spark, sf_dir, "customer")
-    return spark.sql(
-        _ipf_sql(
-            SPARK,
-            orders,
-            customer,
-            cells_rel="SELECT * FROM " + materialize_once(
-                spark,
-                _ipf_cells_sql(SPARK, orders, customer),
-                "ipf_cells",
-                key=sf_dir,
-            ),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -652,7 +627,7 @@ def _bt_duels_sql(d: Dialect, orders: str) -> str:
 """
 
 
-def _bradley_terry_sql(d: Dialect, orders: str, duels_rel: str | None = None) -> str:
+def _bradley_terry_sql(d: Dialect, orders: str, duels: str) -> str:
     """Bradley-Terry strengths for the 5 order priorities from
     per-customer pairwise spend duels (priority i "beats" j for a
     customer when the customer spent strictly more on i).
@@ -671,7 +646,6 @@ def _bradley_terry_sql(d: Dialect, orders: str, duels_rel: str | None = None) ->
     priority catalog, never by data); everything after the second
     groupBy lives on the <= 5x5 win matrix — the bounded-model contract
     of the shapley coalition table."""
-    duels = duels_rel or _bt_duels_sql(d, orders)
     return f"""
 WITH duels AS ({duels}),
 pairs AS (
@@ -710,9 +684,11 @@ ORDER BY priority
 """
 
 
-@register(
+register_sql(
     "bradley_terry_priorities",
-    oracle=_bradley_terry_sql(DUCKDB, "orders"),
+    _bradley_terry_sql,
+    ("orders",),
+    heads={"bt_duels": _bt_duels_sql},
     doc="Bradley-Terry preference strengths for the 5 order priorities "
     "from per-customer pairwise spend duels: two MM iterations (Hunter "
     "2004), first step in closed form as exact nano-unit floor division, "
@@ -722,18 +698,19 @@ ORDER BY priority
     "primitive behind LLM-judge / pairwise-comparison leaderboards.",
     tags=("analytics", "ranking", "agg"),
 )
-def bradley_terry_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    orders = table_view(spark, sf_dir, "orders")
-    duels = materialize_once(spark, _bt_duels_sql(SPARK, orders), "bt_duels", key=sf_dir)
-    return spark.sql(_bradley_terry_sql(SPARK, orders, duels_rel=f"SELECT * FROM {duels}"))
 
 
 # --------------------------------------------------------------------------
 # two-sample Kolmogorov-Smirnov over source pairs
 # --------------------------------------------------------------------------
-def _ks_sql(d: Dialect, docs: str, vals_rel: str | None = None) -> str:
+def _ks_vals_sql(d: Dialect, docs: str) -> str:
+    return f"""
+  SELECT source, CAST(n_chars AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS c
+  FROM {docs} GROUP BY 1, 2
+"""
+
+
+def _ks_sql(d: Dialect, docs: str, vals: str) -> str:
     """Exact two-sample KS statistic D = max_x |F_a(x) - F_b(x)| for every
     source pair, over the document-length (n_chars) distributions — the
     distribution-shift detector between corpus slices (the nonparametric
@@ -749,14 +726,6 @@ def _ks_sql(d: Dialect, docs: str, vals_rel: str | None = None) -> str:
     pair OVER THE AGGREGATED VALUE AXIS (bounded per-pair row count by
     construction — the zipf_fit_audit contract, never a corpus window).
     Window SUM returns are cast back to BIGINT (DuckDB HUGEINT trap)."""
-    vals = (
-        f"SELECT * FROM {vals_rel}"
-        if vals_rel
-        else f"""
-  SELECT source, CAST(n_chars AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS c
-  FROM {docs} GROUP BY 1, 2
-"""
-    )
     return f"""
 WITH vals AS ({vals}),
 tot AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n FROM vals GROUP BY 1),
@@ -808,9 +777,11 @@ ORDER BY source_a, source_b
 """
 
 
-@register(
+register_sql(
     "ks_two_sample_sources",
-    oracle=_ks_sql(DUCKDB, "documents"),
+    _ks_sql,
+    ("documents",),
+    heads={"ks_vals": _ks_vals_sql},
     doc="Exact two-sample Kolmogorov-Smirnov D for every source pair over "
     "doc-length distributions: the max CDF gap decided in cross-multiplied "
     "BIGINT form (|cumA*n_b - cumB*n_a|), divisions only at the final "
@@ -821,20 +792,6 @@ ORDER BY source_a, source_b
     "welch_ttest_sources.",
     tags=("evaluation", "stats", "text"),
 )
-def ks_two_sample_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    docs = table_view(spark, sf_dir, "documents")
-    # Materialize the bounded (source x value) grid once (guide §3.3):
-    # tot/merged expanded it into 16 static corpus scans per statement.
-    vals = materialize_once(
-        spark,
-        "SELECT source, CAST(n_chars AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS c\n"
-        f"FROM {docs} GROUP BY 1, 2",
-        "ks_vals",
-        key=sf_dir,
-    )
-    return spark.sql(_ks_sql(SPARK, docs, vals_rel=vals))
 
 
 # --------------------------------------------------------------------------

@@ -37,11 +37,8 @@ data-dependent divisor.  No libm (LN/EXP/POW) anywhere in this module.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..functions.dialect import DUCKDB, SPARK, Dialect
-from ..registry import register, register_sql
-from ..sources.tables import table_view
+from ..functions.dialect import Dialect
+from ..registry import register_sql
 from .lm_quality import _bigram_rel
 
 # --------------------------------------------------------------------------
@@ -230,7 +227,7 @@ def _bigram_wc_sql(d: Dialect, table: str) -> str:
     )
 
 
-def _feat_hash_sql(d: Dialect, table: str, wc_rel: str | None = None) -> str:
+def _feat_hash_sql(d: Dialect, table: str) -> str:
     """Hashing-trick width audit: bucket the corpus FEATURE VOCABULARY
     (bigram features — the realistic hashing-trick input) into d buckets
     for each candidate width, then report per width the occupancy, the
@@ -242,10 +239,10 @@ def _feat_hash_sql(d: Dialect, table: str, wc_rel: str | None = None) -> str:
     combinable); the width axis rides a small VALUES cross join against
     the AGGREGATED vocab — O(|vocab| x |widths|) rows, never a second
     corpus scan; the bucket hash is the portable 60-bit md5 prefix, so
-    both engines route identically.  ``wc_rel`` lets the Spark side pass
-    a materialized feature-count relation (one corpus scan serves the
-    explode + both group-bys)."""
-    wc = wc_rel or _bigram_wc_sql(d, table)
+    both engines route identically.  The feature counts stay inline: in
+    10 interleaved pairs that beat a per-call checkpoint of them at both
+    sf0.01 and sf0.1."""
+    wc = _bigram_wc_sql(d, table)
     h = d.md5_prefix_int("word")
     dims = ", ".join(f"({x})" for x in _HASH_DIMS)
     return f"""
@@ -284,9 +281,10 @@ ORDER BY dim
 """
 
 
-@register(
+register_sql(
     "feature_hashing_collision_audit",
-    oracle=_feat_hash_sql(DUCKDB, "documents"),
+    _feat_hash_sql,
+    ("documents",),
     doc="Feature-hashing (hashing-trick) width audit: bigram feature "
     "vocabulary bucketed by the portable 60-bit md5 prefix into d in "
     "{256, 1024, 4096}; per width, bucket occupancy, colliding-type "
@@ -296,12 +294,6 @@ ORDER BY dim
     "before fixing a hash width.",
     tags=("curation", "audit", "text"),
 )
-def feature_hashing_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    view = table_view(spark, sf_dir, "documents")
-    wc = materialize_once(spark, _bigram_wc_sql(SPARK, view), "feathash_wc", sf_dir)
-    return spark.sql(_feat_hash_sql(SPARK, view, wc_rel=f"SELECT * FROM {wc}"))
 
 
 # --------------------------------------------------------------------------
@@ -375,7 +367,7 @@ register_sql(
 _GT_MAX_R = 10
 
 
-def _good_turing_sql(d: Dialect, table: str, wc_rel: str | None = None) -> str:
+def _good_turing_sql(d: Dialect, table: str, wc: str) -> str:
     """Good-Turing frequency-of-frequencies over BIGRAM counts (the KN
     scorer's event space; the synthetic unigram vocab is a degenerate
     ~31 types whose minimum count is ~30): N_r = |{{g : count(g) = r}}|
@@ -393,7 +385,6 @@ def _good_turing_sql(d: Dialect, table: str, wc_rel: str | None = None) -> str:
     corpus collapses to bigram counts once (map-side combinable), then
     to the counts-of-counts relation (<= max count rows); the rank
     window runs on that aggregated axis only."""
-    wc = wc_rel or _bigram_wc_sql(d, table)
     return f"""
 WITH wc AS ({wc}),
 tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n_tokens FROM wc),
@@ -425,9 +416,11 @@ ORDER BY a.r
 """
 
 
-@register(
+register_sql(
     "good_turing_smoothing_audit",
-    oracle=_good_turing_sql(DUCKDB, "documents"),
+    _good_turing_sql,
+    ("documents",),
+    heads={"gt_wc": _bigram_wc_sql},
     doc="Good-Turing frequency-of-frequencies audit over bigram counts: "
     "N_r for the 10 smallest frequency classes present, Turing adjusted "
     "count r* = (r+1)N_(r+1)/N_r via a LEFT self-join on r+1 (missing "
@@ -436,9 +429,3 @@ ORDER BY a.r
     "smoothing-health audit beside the Kneser-Ney scorer.",
     tags=("curation", "text", "agg"),
 )
-def good_turing_smoothing_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    view = table_view(spark, sf_dir, "documents")
-    wc = materialize_once(spark, _bigram_wc_sql(SPARK, view), "gt_wc", sf_dir)
-    return spark.sql(_good_turing_sql(SPARK, view, wc_rel=f"SELECT * FROM {wc}"))

@@ -239,7 +239,7 @@ def _cindex_cohort_sql(d: Dialect, orders: str, customer: str) -> str:
 """
 
 
-def _cindex_sql(d: Dialect, orders: str, customer: str, cohort_rel: str | None = None) -> str:
+def _cindex_sql(d: Dialect, orders: str, customer: str, cohort: str) -> str:
     """Concordance index of a 16-bin account-balance risk score against
     days-to-repurchase with right censoring.  Comparable pairs: i an
     EVENT with t_i < t_j (j event or censored); concordant when the
@@ -254,7 +254,6 @@ def _cindex_sql(d: Dialect, orders: str, customer: str, cohort_rel: str | None =
     t over the {_C_BINS}-bin axis — both on the aggregated grid
     (O(|distinct t| x {_C_BINS}) rows, bounded by the day domain).
     Pair masses are exact BIGINT products; ONE division at the end."""
-    cohort = cohort_rel or _cindex_cohort_sql(d, orders, customer)
     return f"""
 WITH cohort AS ({cohort}),
 bounds AS (SELECT MIN(bal) AS lo, MAX(bal) AS hi FROM cohort),
@@ -324,9 +323,11 @@ FROM mass
 """
 
 
-@register(
+register_sql(
     "harrell_c_index",
-    oracle=_cindex_sql(DUCKDB, "orders", "customer"),
+    _cindex_sql,
+    ("orders", "customer"),
+    heads={"ci_cohort": _cindex_cohort_sql},
     doc="Harrell's concordance index of a 16-bin account-balance risk "
     "score vs days-to-repurchase with right censoring, WITHOUT the "
     "O(n^2) pair join: cohort -> (duration x bin) dense grid (bounded "
@@ -336,22 +337,6 @@ FROM mass
     "division. The survival-eval twin of roc_auc_quality_score.",
     tags=("evaluation", "survival", "stats"),
 )
-def harrell_c_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    orders = table_view(spark, sf_dir, "orders")
-    customer = table_view(spark, sf_dir, "customer")
-    # Materialize the per-customer cohort once (guide §3.3): the dense-grid
-    # tail references it through bounds x binned x cells x taxis, and CTE
-    # inlining expanded that into 16 executed orders/customer scans per
-    # call.  The oracle keeps the single-statement form.
-    cohort = materialize_once(
-        spark,
-        _cindex_cohort_sql(SPARK, orders, customer),
-        "ci_cohort",
-        key=sf_dir,
-    )
-    return spark.sql(_cindex_sql(SPARK, orders, customer, cohort_rel=f"SELECT * FROM {cohort}"))
 
 
 # --------------------------------------------------------------------------

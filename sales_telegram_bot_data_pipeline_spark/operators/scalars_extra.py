@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.dialect import Dialect
 from ..registry import register, register_sql
-from ..sources.tables import load_table, table_view
+from ..sources.tables import load_table
 
 
 @register(
@@ -968,7 +968,15 @@ JC_SAMPLE_MOD = 64  # key-synopsis sampling: keep keys with h(k) % MOD == 0
 SKEW_FACTOR = 8  # skew flag: hottest key exceeds this multiple of the mean
 
 
-def _join_card_sql(d, a_rel: str | None = None, b_rel: str | None = None) -> str:
+def _jc_a_sql(d: Dialect, orders: str, lineitem: str) -> str:
+    return f"SELECT o_orderkey AS k, COUNT(*) AS n FROM {orders} GROUP BY o_orderkey"
+
+
+def _jc_b_sql(d: Dialect, orders: str, lineitem: str) -> str:
+    return f"SELECT l_orderkey AS k, COUNT(*) AS n FROM {lineitem} GROUP BY l_orderkey"
+
+
+def _join_card_sql(d: Dialect, orders: str, lineitem: str, a_kc: str, b_kc: str) -> str:
     """Estimate |orders JOIN lineitem on orderkey| WITHOUT running the join
     -- the cardinality question an optimizer (AQE, join reordering,
     broadcast decisions) answers before committing to a plan -- with TWO
@@ -989,23 +997,14 @@ def _join_card_sql(d, a_rel: str | None = None, b_rel: str | None = None) -> str
     the JC_D-way explode and the sample filter touch distinct keys, never
     raw rows; the sketch is O(D*W) fixed state; the synopsis is |keys|/MOD
     rows; the exact side is the aggregated key-count equi-join (the
-    identity sum_k cnt_a(k)*cnt_b(k)), not the materialized join.  Integer
-    arithmetic end-to-end.
-
-    ``a_rel``/``b_rel`` (Spark side): materialized per-key count views —
-    each kc was referenced 3x (sketch explode, exact join, sample join),
-    re-running the fact aggregation per reference (guide §3.3); with the
-    views the exact and sample sums also FUSE into one key join (the
-    sample is a CASE filter of the same matched pairs)."""
-    from ..functions.dialect import DUCKDB as _DD
-    from ..functions.dialect import SPARK as _SS
-
-    dd = _SS if d == "spark" else _DD
-    S = "STRING" if d == "spark" else "VARCHAR"
+    identity sum_k cnt_a(k)*cnt_b(k)), not the materialized join, and the
+    sample sum is a CASE filter of the same matched pairs, so both come
+    from one key join.  Integer arithmetic end-to-end."""
+    S = "STRING" if d.name == "spark" else "VARCHAR"
 
     def coords(key_rel: str, alias: str) -> str:
-        h = dd.md5_prefix_int(f"('jc' || CAST(i AS {S}) || '|' || CAST(k AS {S}))")
-        if d == "spark":
+        h = d.md5_prefix_int(f"('jc' || CAST(i AS {S}) || '|' || CAST(k AS {S}))")
+        if d.name == "spark":
             ex = f"SELECT k, n, i FROM {alias}_kc LATERAL VIEW explode(sequence(0, {JC_D - 1})) t AS i"
         else:
             ex = f"SELECT k, n, unnest(generate_series(0, {JC_D - 1})) AS i FROM {alias}_kc"
@@ -1016,66 +1015,37 @@ def _join_card_sql(d, a_rel: str | None = None, b_rel: str | None = None) -> str
             f"FROM {alias}_ex GROUP BY i, ({h}) % {JC_W})"
         )
 
-    a_kc = (
-        f"SELECT k, n FROM {a_rel}"
-        if a_rel
-        else "SELECT o_orderkey AS k, COUNT(*) AS n FROM {orders} GROUP BY o_orderkey"
-    )
-    b_kc = (
-        f"SELECT k, n FROM {b_rel}"
-        if b_rel
-        else "SELECT l_orderkey AS k, COUNT(*) AS n FROM {lineitem} GROUP BY l_orderkey"
-    )
-    a = coords(a_kc, "a")
-    b = coords(b_kc, "b")
-    hk = dd.md5_prefix_int(f"CAST(a_kc.k AS {S})")
-    if a_rel and b_rel:
-        exact_samp = f"""exact AS (
-  SELECT COALESCE(SUM(a_kc.n * b_kc.n), 0) AS exact_size,
-         COALESCE(SUM(CASE WHEN ({hk}) % {JC_SAMPLE_MOD} = 0
-                           THEN a_kc.n * b_kc.n END), 0)
-           * {JC_SAMPLE_MOD} AS sample_estimate
-  FROM a_kc JOIN b_kc ON b_kc.k = a_kc.k
-)"""
-        tail = """SELECT CAST(x.exact_size AS BIGINT) AS exact_join_size,
-       CAST(be.cms_estimate AS BIGINT) AS cms_estimate,
-       CAST(ROUND((be.cms_estimate - x.exact_size) * 1.0e0 / NULLIF(x.exact_size, 0), 6) AS DOUBLE) AS cms_rel_error,
-       CAST(x.sample_estimate AS BIGINT) AS sample_estimate,
-       CAST(ROUND((x.sample_estimate - x.exact_size) * 1.0e0 / NULLIF(x.exact_size, 0), 6) AS DOUBLE) AS sample_rel_error
-FROM exact x CROSS JOIN best be"""
-    else:
-        exact_samp = f"""exact AS (
-  SELECT COALESCE(SUM(a_kc.n * b_kc.n), 0) AS exact_size
-  FROM a_kc JOIN b_kc ON b_kc.k = a_kc.k
-),
-samp AS (
-  SELECT COALESCE(SUM(a_kc.n * b_kc.n), 0) * {JC_SAMPLE_MOD} AS sample_estimate
-  FROM a_kc JOIN b_kc ON b_kc.k = a_kc.k
-  WHERE ({hk}) % {JC_SAMPLE_MOD} = 0
-)"""
-        tail = """SELECT CAST(x.exact_size AS BIGINT) AS exact_join_size,
-       CAST(be.cms_estimate AS BIGINT) AS cms_estimate,
-       CAST(ROUND((be.cms_estimate - x.exact_size) * 1.0e0 / NULLIF(x.exact_size, 0), 6) AS DOUBLE) AS cms_rel_error,
-       CAST(sp.sample_estimate AS BIGINT) AS sample_estimate,
-       CAST(ROUND((sp.sample_estimate - x.exact_size) * 1.0e0 / NULLIF(x.exact_size, 0), 6) AS DOUBLE) AS sample_rel_error
-FROM exact x CROSS JOIN best be CROSS JOIN samp sp"""
+    hk = d.md5_prefix_int(f"CAST(a_kc.k AS {S})")
     return f"""
-WITH {a},
-{b},
+WITH {coords(a_kc, "a")},
+{coords(b_kc, "b")},
 est AS (
   SELECT ask.i, SUM(ask.c * bsk.c) AS e
   FROM a_sk ask JOIN b_sk bsk ON bsk.i = ask.i AND bsk.bucket = ask.bucket
   GROUP BY ask.i
 ),
 best AS (SELECT MIN(e) AS cms_estimate FROM est),
-{exact_samp}
-{tail}
+exact AS (
+  SELECT COALESCE(SUM(a_kc.n * b_kc.n), 0) AS exact_size,
+         COALESCE(SUM(CASE WHEN ({hk}) % {JC_SAMPLE_MOD} = 0
+                           THEN a_kc.n * b_kc.n END), 0)
+           * {JC_SAMPLE_MOD} AS sample_estimate
+  FROM a_kc JOIN b_kc ON b_kc.k = a_kc.k
+)
+SELECT CAST(x.exact_size AS BIGINT) AS exact_join_size,
+       CAST(be.cms_estimate AS BIGINT) AS cms_estimate,
+       CAST(ROUND((be.cms_estimate - x.exact_size) * 1.0e0 / NULLIF(x.exact_size, 0), 6) AS DOUBLE) AS cms_rel_error,
+       CAST(x.sample_estimate AS BIGINT) AS sample_estimate,
+       CAST(ROUND((x.sample_estimate - x.exact_size) * 1.0e0 / NULLIF(x.exact_size, 0), 6) AS DOUBLE) AS sample_rel_error
+FROM exact x CROSS JOIN best be
 """
 
 
-@register(
+register_sql(
     "join_cardinality_sketch_audit",
-    oracle=_join_card_sql("duckdb").format(orders="orders", lineitem="lineitem"),
+    _join_card_sql,
+    ("orders", "lineitem"),
+    heads={"jc_a": _jc_a_sql, "jc_b": _jc_b_sql},
     doc=f"Join-size estimation audit: CMS inner product ({JC_D}x{JC_W} "
     "grids, MIN over rows, guaranteed overcount) BESIDE an unbiased "
     f"hash-sampled key synopsis (keys with h%{JC_SAMPLE_MOD}==0, scaled "
@@ -1086,32 +1056,6 @@ best AS (SELECT MIN(e) AS cms_estimate FROM est),
     "before any explode; integer-only.",
     tags=("stats", "sketch", "join"),
 )
-def join_cardinality_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    orders = table_view(spark, sf_dir, "orders")
-    lineitem = table_view(spark, sf_dir, "lineitem")
-    # Materialize each per-key count relation once (guide §3.3): the
-    # sketch explode, exact join and sample join each re-ran the fact
-    # aggregation (12 static scans per statement); the views also let the
-    # exact and sample sums fuse into one key join.  (k, n) pairs are
-    # narrow but corpus-proportional — see OPTIMIZATION_r14.md on the
-    # localCheckpoint vs reliable-checkpoint trade at 100 TB.
-    a_kc = materialize_once(
-        spark,
-        "SELECT o_orderkey AS k, COUNT(*) AS n "
-        f"FROM {orders} GROUP BY o_orderkey",
-        "jc_a",
-        key=sf_dir,
-    )
-    b_kc = materialize_once(
-        spark,
-        "SELECT l_orderkey AS k, COUNT(*) AS n "
-        f"FROM {lineitem} GROUP BY l_orderkey",
-        "jc_b",
-        key=sf_dir,
-    )
-    return spark.sql(_join_card_sql("spark", a_rel=a_kc, b_rel=b_kc))
 
 
 # ---------------------------------------------------------------------------

@@ -530,7 +530,7 @@ def _ppmi_pairs_sql(d: Dialect, table: str) -> str:
     return f"SELECT w1, w2, COUNT(*) AS n_ab FROM ({pairs}) p GROUP BY w1, w2"
 
 
-def _ppmi_window_sql(d: Dialect, table: str, pr_rel: str | None = None) -> str:
+def _ppmi_window_sql(d: Dialect, table: str, pr: str) -> str:
     """Positive PMI over UNORDERED word pairs co-occurring within a
     +-{PPMI_WINDOW}-token window — the co-occurrence-matrix builder behind
     count-based word embeddings (GloVe / SVD-of-PPMI counts), one step
@@ -543,11 +543,6 @@ def _ppmi_window_sql(d: Dialect, table: str, pr_rel: str | None = None) -> str:
     itself (broadcast join-back).  Ranking is TakeOrdered on the
     FLOOR-quantized PMI (libm LN crosses engines — same empirical
     contract as collocation_pmi)."""
-    pr = (
-        f"SELECT w1, w2, n_ab FROM {pr_rel}"
-        if pr_rel
-        else _ppmi_pairs_sql(d, table)
-    )
     return f"""
 WITH pr AS ({pr}),
 tot AS (SELECT SUM(n_ab) AS n FROM pr),
@@ -576,9 +571,11 @@ LIMIT {PPMI_TOP_K}
 """
 
 
-@register(
+register_sql(
     "ppmi_window_cooccurrence",
-    oracle=_ppmi_window_sql(DUCKDB, "documents"),
+    _ppmi_window_sql,
+    ("documents",),
+    heads={"ppmi_pr": _ppmi_pairs_sql},
     doc=f"PPMI word co-occurrence within a +-{PPMI_WINDOW}-token window "
     "(unordered canonical pairs, symmetric margins from the pair relation "
     "itself): the count-based embedding matrix builder next to "
@@ -588,17 +585,6 @@ LIMIT {PPMI_TOP_K}
     "never quadratic).",
     tags=("text", "agg", "embedding"),
 )
-def ppmi_window_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import materialize_once
-
-    view = table_view(spark, sf_dir, "documents")
-    # Materialize the co-occurrence pair counts once (guide §3.3): tot,
-    # both margin arms and the scoring join each re-ran the corpus
-    # explode + groupBy (12 static scans per statement).
-    pr = materialize_once(
-        spark, _ppmi_pairs_sql(SPARK, view), "ppmi_pr", key=sf_dir
-    )
-    return spark.sql(_ppmi_window_sql(SPARK, view, pr_rel=pr))
 
 
 # --------------------------------------------------------------------------

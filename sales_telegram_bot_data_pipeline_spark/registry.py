@@ -18,20 +18,24 @@ Hash-stability rules used throughout the suite:
   ``('0x'||substr(md5(x),1,15))::bigint`` (DuckDB) — verified identical.
 
 Two ways to register:
-- ``register_sql(name, build, tables, ...)`` when the Spark side IS the
-  oracle's template: ``build(dialect, *relations)`` renders one statement,
-  the oracle is ``build(DUCKDB, *tables)`` and Spark runs
+- ``register_sql(name, build, tables, ..., heads=...)`` when the Spark side
+  IS the oracle's template: ``build(dialect, *relations)`` renders one
+  statement, the oracle is ``build(DUCKDB, *tables)`` and Spark runs
   ``build(SPARK, ...)`` over this session's ``table_view``s of the same
-  tables.  Such a query has no hand-written Spark function.  This also
-  covers a query whose DataFrame-API form would plan identically to its
-  oracle text: the DataFrame API and SQL are two front ends to one
-  optimizer, so that form is the same query written twice.
-- ``@register`` when the Spark side really differs from the oracle text
-  (build-time checkpoints, ``materialize_once``, stored session views,
-  DataFrame-API forms that plan differently, Python stages, streaming),
-  or when the query oracle-checks a library function that production
-  code also calls.  ``tests/test_views.py`` fails on an ``@register``
-  query whose plans are ``sameResult`` with its oracle's.
+  tables.  ``heads`` names the relations the template references several
+  times: the oracle inlines them, Spark checkpoints each once per call
+  with ``materialize_once``.  Such a query has no hand-written Spark
+  function.  This also covers a query whose DataFrame-API form would plan
+  identically to its oracle text: the DataFrame API and SQL are two front
+  ends to one optimizer, so that form is the same query written twice.
+- ``@register`` when the Spark side really differs from the oracle text:
+  chained heads (a head that reads another head), stored session views,
+  Spark-only statement changes, DataFrame-API forms that plan
+  differently, Python stages and streaming; or when the query
+  oracle-checks a library function that production code also calls.
+  ``tests/test_views.py`` fails on an ``@register`` query whose plans are
+  ``sameResult`` with its oracle's, or whose body only renders the
+  oracle's template over table views and materialized heads.
 """
 
 from __future__ import annotations
@@ -42,6 +46,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from .functions.dialect import DUCKDB, SPARK
+from .session import materialize_once
 from .sources.tables import table_view
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -150,12 +155,30 @@ def register_sql(
     tables: tuple[str, ...],
     doc: str = "",
     tags: tuple[str, ...] = (),
+    heads: dict[str, Callable[..., str]] | None = None,
 ) -> None:
     """Register a query whose Spark side is its oracle's own template:
     ``build(DUCKDB, *tables)`` is the oracle, and Spark runs
-    ``build(SPARK, ...)`` over this session's views of the same tables."""
+    ``build(SPARK, ...)`` over this session's views of the same tables.
+
+    ``heads`` maps a ``materialize_once`` tag to a head builder
+    ``h(dialect, *tables)``: a relation the template references several
+    times, which Spark would re-run per reference because it inlines
+    every CTE.  ``build`` takes one relation text per head after the
+    tables.  The oracle inlines each head, ``build(DUCKDB, *tables,
+    *(h(DUCKDB, *tables) ...))``, still one statement; Spark checkpoints
+    each head once per call and passes ``SELECT * FROM <view>``.  The
+    scans each head saves are measured in ``OPTIMIZATION_r13.md`` and in
+    ``OPTIMIZATION_r14.md``'s table."""
+    heads = heads or {}
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return spark.sql(build(SPARK, *(table_view(spark, sf_dir, t) for t in tables)))
+        views = [table_view(spark, sf_dir, t) for t in tables]
+        rels = [
+            f"SELECT * FROM {materialize_once(spark, h(SPARK, *views), tag, key=sf_dir)}"
+            for tag, h in heads.items()
+        ]
+        return spark.sql(build(SPARK, *views, *rels))
 
-    register(name, oracle=build(DUCKDB, *tables), doc=doc, tags=tags)(fn)
+    oracle = build(DUCKDB, *tables, *(h(DUCKDB, *tables) for h in heads.values()))
+    register(name, oracle=oracle, doc=doc, tags=tags)(fn)

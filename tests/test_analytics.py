@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from sales_telegram_bot_data_pipeline_spark.operators.analytics import (
     K_ANON_THRESHOLD,
-    association_rules_lift,
     rfm_segmentation,
     spearman_rank_correlation,
 )
@@ -23,7 +22,7 @@ from conftest import SF_SMOKE
 
 
 def test_association_rules_identities(spark):
-    rows = association_rules_lift(spark, SF_SMOKE).collect()
+    rows = REGISTRY["association_rules_lift"].fn(spark, SF_SMOKE).collect()
     assert rows, "sf0.001 must produce at least one rule"
     for r in rows:
         assert r.brand_a < r.brand_b

@@ -73,6 +73,7 @@ def test_kneser_ney_matches_hand_computation(spark):
     from sales_telegram_bot_data_pipeline_spark.functions.dialect import SPARK as SP
     from sales_telegram_bot_data_pipeline_spark.operators.lm_quality import (
         KN_DISCOUNT,
+        _kn_tgt_bi_sql,
         _kneser_ney_sql,
     )
 
@@ -81,7 +82,7 @@ def test_kneser_ney_matches_hand_computation(spark):
     spark.createDataFrame(
         [(0, train), (1, score)], "doc_id long, text string"
     ).createOrReplaceTempView("kn_micro")
-    rows = spark.sql(_kneser_ney_sql(SP, "kn_micro")).collect()
+    rows = spark.sql(_kneser_ney_sql(SP, "kn_micro", _kn_tgt_bi_sql(SP, "kn_micro"))).collect()
     assert [r["doc_id"] for r in rows] == [1]
     got = rows[0]
     assert got["n_bigrams"] == 3

@@ -16,6 +16,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from sales_telegram_bot_data_pipeline_spark.functions.dialect import DUCKDB
+from sales_telegram_bot_data_pipeline_spark.queries import REGISTRY
 
 
 def _con_with(name: str, df: pd.DataFrame) -> duckdb.DuckDBPyConnection:
@@ -79,7 +80,6 @@ def test_theil_decomposition_identity(rows):
 )
 @settings(max_examples=20, deadline=None)
 def test_kruskal_wallis_matches_bruteforce(rows):
-    from sales_telegram_bot_data_pipeline_spark.operators.round10d import _kruskal_sql
 
     docs = pd.DataFrame(
         {
@@ -89,7 +89,7 @@ def test_kruskal_wallis_matches_bruteforce(rows):
         }
     )
     con = _con_with("documents", docs)
-    out = con.sql(_kruskal_sql(DUCKDB, "documents")).df()
+    out = con.sql(REGISTRY["kruskal_wallis_doclen"].oracle).df()
     # brute-force with float average ranks
     allv = sorted(v for _, v in rows)
     n = len(allv)
@@ -126,7 +126,6 @@ def test_kruskal_wallis_matches_bruteforce(rows):
 )
 @settings(max_examples=25, deadline=None)
 def test_hodges_lehmann_matches_bruteforce(xa, xb):
-    from sales_telegram_bot_data_pipeline_spark.operators.round10d import _hl_sql
 
     docs = pd.DataFrame(
         {
@@ -136,7 +135,7 @@ def test_hodges_lehmann_matches_bruteforce(xa, xb):
         }
     )
     con = _con_with("documents", docs)
-    row = con.sql(_hl_sql(DUCKDB, "documents")).df().iloc[0]
+    row = con.sql(REGISTRY["hodges_lehmann_shift"].oracle).df().iloc[0]
     diffs = sorted(x - y for x in xa for y in xb)
     n = len(diffs)
     med = (diffs[(n + 1) // 2 - 1] + diffs[(n + 2) // 2 - 1]) / 2
@@ -154,7 +153,6 @@ def test_hodges_lehmann_matches_bruteforce(xa, xb):
 )
 @settings(max_examples=25, deadline=None)
 def test_cvm_matches_bruteforce(xa, xb):
-    from sales_telegram_bot_data_pipeline_spark.operators.round10e import _cvm_sql
 
     docs = pd.DataFrame(
         {
@@ -164,7 +162,7 @@ def test_cvm_matches_bruteforce(xa, xb):
         }
     )
     con = _con_with("documents", docs)
-    row = con.sql(_cvm_sql(DUCKDB, "documents")).df().iloc[0]
+    row = con.sql(REGISTRY["cramer_von_mises_two_sample"].oracle).df().iloc[0]
     na, nb = len(xa), len(xb)
     ca, cb = Counter(xa), Counter(xb)
     fa = fb = sgap = 0
@@ -188,7 +186,6 @@ def test_cvm_matches_bruteforce(xa, xb):
 )
 @settings(max_examples=20, deadline=None)
 def test_binseg_matches_bruteforce(cents):
-    from sales_telegram_bot_data_pipeline_spark.operators.round10e import _binseg_sql
 
     orders = pd.DataFrame(
         {
@@ -199,7 +196,7 @@ def test_binseg_matches_bruteforce(cents):
         }
     )
     con = _con_with("orders", orders)
-    row = con.sql(_binseg_sql(DUCKDB, "orders")).df().iloc[0]
+    row = con.sql(REGISTRY["binary_segmentation_split"].oracle).df().iloc[0]
     n = len(cents)
     s = sum(cents)
     best = None

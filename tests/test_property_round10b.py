@@ -14,6 +14,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from sales_telegram_bot_data_pipeline_spark.functions.dialect import DUCKDB
+from sales_telegram_bot_data_pipeline_spark.queries import REGISTRY
 
 
 def _docs_con(xa, xb):
@@ -39,10 +40,8 @@ def _docs_con(xa, xb):
 )
 @settings(max_examples=25, deadline=None)
 def test_cles_complement_and_bruteforce(xa, xb):
-    from sales_telegram_bot_data_pipeline_spark.operators.round10f import _cles_sql
-
     con = _docs_con(xa, xb)
-    row = con.sql(_cles_sql(DUCKDB, "documents")).df().iloc[0]
+    row = con.sql(REGISTRY["cles_effect_size"].oracle).df().iloc[0]
     wins = sum(1 for x in xa for y in xb if x > y)
     ties = sum(1 for x in xa for y in xb if x == y)
     a_stat = (wins + 0.5 * ties) / (len(xa) * len(xb))
@@ -62,12 +61,8 @@ def test_cles_complement_and_bruteforce(xa, xb):
 )
 @settings(max_examples=25, deadline=None)
 def test_hellinger_range_and_identity(xa, xb):
-    from sales_telegram_bot_data_pipeline_spark.operators.round10f import (
-        _hellinger_sql,
-    )
-
     con = _docs_con(xa, xb)
-    row = con.sql(_hellinger_sql(DUCKDB, "documents")).df().iloc[0]
+    row = con.sql(REGISTRY["hellinger_bhattacharyya"].oracle).df().iloc[0]
     assert -1e-9 <= row["bhattacharyya_coef"] <= 1.0 + 1e-9
     assert -1e-9 <= row["hellinger_distance"] <= 1.0 + 1e-9
     ca = Counter(xa)
@@ -176,10 +171,6 @@ def test_betabin_shrinks_toward_prior(spec):
 )
 @settings(max_examples=20, deadline=None)
 def test_entropy_rate_conditioning_bound(seqs):
-    from sales_telegram_bot_data_pipeline_spark.operators.round10e import (
-        _entropy_rate_sql,
-    )
-
     rows = []
     eid = 0
     for uid, evs in enumerate(seqs):
@@ -197,7 +188,7 @@ def test_entropy_rate_conditioning_bound(seqs):
     con = duckdb.connect()
     con.register("_e", ev)
     con.execute("CREATE TABLE events AS SELECT * FROM _e")
-    row = con.sql(_entropy_rate_sql(DUCKDB, "events")).df().iloc[0]
+    row = con.sql(REGISTRY["markov_entropy_rate"].oracle).df().iloc[0]
     # H(next|current) <= H(next), up to nano quantization
     assert row["entropy_rate_nats"] <= row["marginal_entropy_nats"] + 1e-6
     assert row["entropy_rate_nats"] >= -1e-6

@@ -271,11 +271,9 @@ def test_cluster_balanced_sample_caps_every_cluster(spark):
 
 
 def test_join_cardinality_estimators_vs_real_join(spark):
-    from sales_telegram_bot_data_pipeline_spark.operators.scalars_extra import (
-        join_cardinality_sketch_audit,
-    )
+    from sales_telegram_bot_data_pipeline_spark.queries import REGISTRY
 
-    row = join_cardinality_sketch_audit(spark, SF_SMOKE).collect()[0]
+    row = REGISTRY["join_cardinality_sketch_audit"].fn(spark, SF_SMOKE).collect()[0]
     orders = load_table(spark, SF_SMOKE, "orders").select("o_orderkey")
     li = load_table(spark, SF_SMOKE, "lineitem").select("l_orderkey")
     real = orders.join(li, orders.o_orderkey == li.l_orderkey).count()

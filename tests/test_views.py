@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import ast
 import inspect
+import logging
 import pathlib
 import re
 import subprocess
@@ -131,17 +132,89 @@ def _renders_oracle_over_table_views(fn: ast.FunctionDef) -> bool:
     )
 
 
+def _root_builder(node) -> str | None:
+    """The template a rendering expression starts from: ``b`` in
+    ``b(...)``, ``B`` in ``B.format(...)`` and ``b`` in
+    ``b(...).format(...)``."""
+    while isinstance(node, ast.Call):
+        node = node.func
+        if isinstance(node, ast.Attribute) and node.attr == "format":
+            node = node.value
+    return getattr(node, "id", None)
+
+
+def _renders_oracle_over_materialized_heads(fn: ast.FunctionDef) -> bool:
+    """True when ``fn`` is an ``@register`` query whose body only renders
+    text: ``table_view``s of base tables, ``materialize_once`` of heads
+    rendered over those views, and one returned ``spark.sql`` of its
+    oracle's own builder over the views and heads, with no DataFrame
+    keyword — what ``register_sql(..., heads=...)`` does.  A head that
+    reads another head, appends text to a rendered builder (a Spark-only
+    clause the oracle does not have) or reaches ``spark`` through any
+    other call is a different query shape and does not count."""
+    dec = next((d for d in fn.decorator_list if isinstance(d, ast.Call)
+                and getattr(d.func, "id", None) == "register"), None)
+    oracle = next((k.value for k in dec.keywords if k.arg == "oracle"), None) if dec else None
+    if oracle is None or _root_builder(oracle) is None:
+        return False
+    body = [s for s in fn.body if not isinstance(s, ast.ImportFrom)]
+    if not body or not isinstance(body[-1], ast.Return) or not all(
+        isinstance(st, ast.Assign) and len(st.targets) == 1 and isinstance(st.targets[0], ast.Name)
+        for st in body[:-1]
+    ):
+        return False
+    ret = body[-1].value
+    if not (isinstance(ret, ast.Call) and isinstance(ret.func, ast.Attribute)
+            and ret.func.attr == "sql" and getattr(ret.func.value, "id", None) == "spark"
+            and len(ret.args) == 1 and not ret.keywords
+            and _root_builder(ret.args[0]) == _root_builder(oracle)):
+        return False
+    nodes = [n for st in body for n in ast.walk(st)]
+    calls = [n for n in nodes if isinstance(n, ast.Call)
+             and getattr(n.func, "id", None) in ("table_view", "materialize_once")]
+    heads = [c for c in calls if c.func.id == "materialize_once"]
+    head_names = {st.targets[0].id for st in body[:-1] if "materialize_once(" in ast.unparse(st.value)}
+    spark_args = sum(isinstance(a, ast.Name) and a.id == "spark" for c in calls for a in c.args)
+    spark_names = sum(isinstance(n, ast.Name) and n.id == "spark" for n in nodes)
+    return bool(heads) and spark_names == spark_args + 1 and not any(
+        isinstance(h.args[1], ast.BinOp)
+        or {n.id for n in ast.walk(h.args[1]) if isinstance(n, ast.Name)} & head_names
+        for h in heads
+    )
+
+
+# hand-written materialized-head queries still under @register: same
+# shape as the register_sql heads, left for the move of the dedup and
+# similarity families (ROADMAP item 6), where several of their builders'
+# relation overrides also serve stored-view and checkpoint feeds
+_HAND_WRITTEN_HEADS_OK = {
+    "operators/dedup.py:apss_cosine_join",
+    "operators/dedup.py:dedup_duplicate_spans",
+    "operators/dedup.py:dedup_incremental_lsh",
+    "operators/dedup.py:dedup_ngram_jaccard",
+    "operators/dedup.py:winnowing_doc_matches",
+    "operators/similarity.py:bitext_margin_mining",
+    "operators/similarity.py:knn_cosine_pq",
+}
+
+
 def test_oracle_templates_register_through_register_sql():
     """A query whose Spark side is its oracle's own template over this
-    session's table views registers through ``registry.register_sql``; a
-    hand-written ``@register`` twin of that call must not come back."""
-    twins = sorted(
+    session's table views, with or without checkpointed heads, registers
+    through ``registry.register_sql``; a hand-written ``@register`` twin
+    of that call must not come back."""
+    found = {
         f"{p.relative_to(PKG)}:{node.name}"
         for p in PKG.rglob("*.py")
         for node in ast.walk(ast.parse(p.read_text()))
-        if isinstance(node, ast.FunctionDef) and _renders_oracle_over_table_views(node)
-    )
-    assert not twins, twins
+        if isinstance(node, ast.FunctionDef) and (
+            _renders_oracle_over_table_views(node) or _renders_oracle_over_materialized_heads(node)
+        )
+    }
+    extra = sorted(found - _HAND_WRITTEN_HEADS_OK)
+    assert not extra, "hand-written @register twins:\n" + "\n".join(extra)
+    stale = sorted(_HAND_WRITTEN_HEADS_OK - found)
+    assert not stale, f"allowlist entries that no longer match: {stale}"
 
 
 # @register queries allowed to plan exactly like their own oracle text
@@ -160,24 +233,34 @@ def test_no_oracle_plan_twins(spark, registry_plans):
     through ``register_sql`` instead.  Oracles Spark cannot analyze
     (DuckDB-only syntax or functions) are skipped."""
     from pyspark.errors import AnalysisException, ParseException
+    from pyspark.logger import PySparkLogger
 
     oracle_session = spark.newSession()
     for t in TABLE_NAMES:
         load_table(oracle_session, SF_SMOKE, t).createOrReplaceTempView(t)
+    # PySpark logs every caught parse or analysis error, with its Java
+    # stack trace, through this Python logger; here those errors are
+    # expected, so the records are only noise
+    context_log = PySparkLogger.getLogger("SQLQueryContextLogger")
+    level = context_log.level
+    context_log.setLevel(logging.CRITICAL + 1)
     twins = []
-    for name, (schema, _, qe) in registry_plans.items():
-        query = q.REGISTRY[name]
-        if query.oracle is None or query.fn.__qualname__.startswith("register_sql."):
-            continue
-        try:
-            oracle = oracle_session.sql(query.oracle)
-        except (AnalysisException, ParseException):
-            continue
-        oqe = oracle._jdf.queryExecution()
-        if (oracle.schema == schema
-                and oqe.optimizedPlan().sameResult(qe.optimizedPlan())
-                and oqe.sparkPlan().sameResult(qe.sparkPlan())):
-            twins.append(name)
+    try:
+        for name, (schema, _, qe) in registry_plans.items():
+            query = q.REGISTRY[name]
+            if query.oracle is None or query.fn.__qualname__.startswith("register_sql."):
+                continue
+            try:
+                oracle = oracle_session.sql(query.oracle)
+            except (AnalysisException, ParseException):
+                continue
+            oqe = oracle._jdf.queryExecution()
+            if (oracle.schema == schema
+                    and oqe.optimizedPlan().sameResult(qe.optimizedPlan())
+                    and oqe.sparkPlan().sameResult(qe.sparkPlan())):
+                twins.append(name)
+    finally:
+        context_log.setLevel(level)
     unexpected = sorted(set(twins) - set(_ORACLE_PLAN_TWINS_OK))
     assert not unexpected, f"@register queries that plan as their oracle: {unexpected}"
     stale = sorted(set(_ORACLE_PLAN_TWINS_OK) - set(twins))
@@ -190,11 +273,21 @@ def test_materialize_once_tags_are_unique():
     each other's relation when run at the same time on one dataset."""
     sites = {}
     for path, _, call in _calls("materialize_once"):
+        if path == "registry.py":
+            continue  # register_sql's call takes each tag from a heads= key
         tag = call.args[2] if len(call.args) > 2 else next(
             k.value for k in call.keywords if k.arg == "tag"
         )
         assert isinstance(tag, ast.Constant), f"{path}:{call.lineno} tag is not a literal"
         sites.setdefault(tag.value, []).append(f"{path}:{call.lineno}")
+    for path, _, call in _calls("register_sql"):
+        heads = next((k.value for k in call.keywords if k.arg == "heads"), None)
+        if heads is None:
+            continue
+        assert isinstance(heads, ast.Dict), f"{path}:{call.lineno} heads is not a dict literal"
+        for tag in heads.keys:
+            assert isinstance(tag, ast.Constant), f"{path}:{call.lineno} head tag is not a literal"
+            sites.setdefault(tag.value, []).append(f"{path}:{call.lineno}")
     assert sites
     shared = {tag: where for tag, where in sites.items() if len(where) > 1}
     assert not shared, shared
