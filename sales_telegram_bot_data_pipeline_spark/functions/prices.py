@@ -424,8 +424,18 @@ def dispatcher_value_sql(d: Dialect, shop: str, x: str, cls: str) -> str:
 def price_value_col(
     shop: str = "shop_name", text: str = "ocr_text", cls: str = "class_id"
 ) -> Column:
-    """DataFrame-API entry: the scalar per-row dispatched price value."""
-    return F.expr(dispatcher_value_sql(SPARK, shop, text, cls))
+    """DataFrame-API entry: the scalar per-row dispatched price value.
+
+    The hoisted dispatcher in ONE Column: the gated context
+    (``price_context_sql``'s columns) is bound once per row as the struct
+    of a one-element array, and ``dispatcher_value_sql`` rewritten by
+    ``hoist_price_context_extended`` reads its fields — ~22k chars where
+    the inline form is ~65k, which Catalyst re-analysed on every call."""
+    ctx = ", ".join(f"'{n}', {e}" for n, e in _gated_context(SPARK, shop, text, cls).items())
+    pv = hoist_price_context_extended(
+        dispatcher_value_sql(SPARK, shop, text, cls), SPARK, text, prefix="__ctx."
+    )
+    return F.expr(f"transform(array(named_struct({ctx})), __ctx -> {pv})[0]")
 
 
 # Shared-subexpression hoisting: every parser body re-derives the token
@@ -447,7 +457,7 @@ def extended_price_context_exprs(d: Dialect, x: str) -> dict[str, str]:
     run their OWN token pipeline over a transformed input (Albert, Tesco,
     Globus, Tamda, Makro).  Those five each re-instantiated that pipeline
     once per class branch of ``dispatcher_value_sql`` — three textual
-    copies apiece, which pushed the dispatched-value SQL to ~53k chars and
+    copies apiece, which pushed the dispatched-value SQL to ~65k chars and
     made per-call Catalyst analysis+optimization (~1.4 s, data-independent)
     the dominant cost of the detected_data queries.  Hoisting each shop's
     class-independent parsed VALUE to one context column shrinks the tree
@@ -464,13 +474,14 @@ def extended_price_context_exprs(d: Dialect, x: str) -> dict[str, str]:
     return ctx
 
 
-def hoist_price_context_extended(sql: str, d: Dialect, x: str) -> str:
+def hoist_price_context_extended(sql: str, d: Dialect, x: str, prefix: str = "") -> str:
     """Rewrite a dispatcher SQL string to reference ALL hoisted context
-    columns (longest expression first, so a shop value containing a
-    shorter hoisted fragment is replaced wholesale before the fragment)."""
+    columns, each as ``prefix + name`` (longest expression first, so a
+    shop value containing a shorter hoisted fragment is replaced wholesale
+    before the fragment)."""
     ctx = extended_price_context_exprs(d, x)
     for name, expr in sorted(ctx.items(), key=lambda kv: -len(kv[1])):
-        sql = sql.replace(expr, name)
+        sql = sql.replace(expr, prefix + name)
     return sql
 
 
@@ -505,17 +516,22 @@ def price_context_gates(shop: str = "shop_name") -> dict[str, str]:
     }
 
 
-def price_context_sql(d: Dialect, shop: str, x: str, cls: str) -> str:
-    """The hoisted context columns as one SELECT-list fragment, each gated
-    to price-class rows and to its own shops (``price_context_gates``), for
-    a relation with columns ``shop``, ``x`` and ``cls``.  Dispatcher text
-    rewritten by ``hoist_price_context_extended`` reads these columns."""
+def _gated_context(d: Dialect, shop: str, x: str, cls: str) -> dict[str, str]:
+    """Each hoisted context expression gated to price-class rows and to
+    its own shops (``price_context_gates``)."""
     price_cls = f"{cls} IN ('item_price', 'item_member_price', 'item_initial_price')"
     gates = price_context_gates(shop)
-    return ", ".join(
-        f"CASE WHEN {price_cls} AND {gates[name]} THEN {expr} END AS {name}"
+    return {
+        name: f"CASE WHEN {price_cls} AND {gates[name]} THEN {expr} END"
         for name, expr in extended_price_context_exprs(d, x).items()
-    )
+    }
+
+
+def price_context_sql(d: Dialect, shop: str, x: str, cls: str) -> str:
+    """The gated context columns as one SELECT-list fragment, for a
+    relation with columns ``shop``, ``x`` and ``cls``.  Dispatcher text
+    rewritten by ``hoist_price_context_extended`` reads these columns."""
+    return ", ".join(f"{e} AS {n}" for n, e in _gated_context(d, shop, x, cls).items())
 
 
 # --------------------------------------------------------------------------

@@ -131,7 +131,7 @@ def _wide_sql(d: Dialect, part_table: str, detections_rel: str | None = None) ->
     # the token/whole-string parses AND the five per-shop token pipelines
     # (extended_price_context_exprs; the three class branches otherwise
     # carried a textual copy each, and per-call Catalyst analysis of the
-    # ~53k-char tree cost ~1.4 s regardless of data size).  parse() is
+    # ~65k-char tree cost ~1.4 s regardless of data size).  parse() is
     # deterministic per text, so arg_max(parse(text), idx) ==
     # parse(arg_max(text, idx)).  A struct-valued dispatcher is unusable:
     # extracting 3 fields replicates the whole 7-field parser chain 3x

@@ -2,9 +2,9 @@
 s3_dynamodb_utils.py:27-32).
 
 The reference writes item-at-a-time; the engine writes per partition in
-batches through ``foreachPartition`` / ``foreachBatch``, preserving put_item's
-last-write-wins upsert semantics so retries and re-runs converge (the same
-idempotency property the reference relies on).
+batches through one Arrow-batched ``mapInArrow`` job (``sinks/batches.py``),
+preserving put_item's last-write-wins upsert semantics so retries and
+re-runs converge (the same idempotency property the reference relies on).
 
 ``InMemoryKVStore`` is the test double standing in for a DynamoDB
 ``batch_writer()``; swap ``_flush`` for a boto3 batch write on a cluster.
@@ -19,6 +19,8 @@ import tempfile
 import threading
 
 from pyspark.sql import DataFrame
+
+from .batches import write_chunks
 
 BATCH_SIZE = 25
 
@@ -74,22 +76,14 @@ class InMemoryKVStore:
             os.remove(self.path)
 
 
-def write_kv_upsert(df: DataFrame, key_cols: list[str], store_path: str) -> None:
-    """foreachPartition batch writer: rows → (composite key, row dict),
-    flushed every BATCH_SIZE.  Idempotent: re-running converges to the same
-    store state."""
+def write_kv_upsert(df: DataFrame, key_cols: list[str], store_path: str) -> int:
+    """Batch writer: rows → (composite key, row dict), flushed every
+    BATCH_SIZE; returns the number of rows written.  Idempotent: re-running
+    converges to the same store state."""
 
-    def _write_partition(rows):
-        store = InMemoryKVStore(store_path)
-        buf: list[tuple[str, dict]] = []
-        for row in rows:
-            d = row.asDict(recursive=True)
-            key = "|".join(str(d[k]) for k in key_cols)
-            buf.append((key, d))
-            if len(buf) >= BATCH_SIZE:
-                store.put_batch(buf)
-                buf = []
-        if buf:
-            store.put_batch(buf)
+    def _put(rows: list[dict]) -> None:
+        InMemoryKVStore(store_path).put_batch(
+            [("|".join(str(d[k]) for k in key_cols), d) for d in rows]
+        )
 
-    df.foreachPartition(_write_partition)
+    return write_chunks(df, BATCH_SIZE, _put)

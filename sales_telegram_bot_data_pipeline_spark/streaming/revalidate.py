@@ -15,7 +15,8 @@ completion (the reference's dual trigger, README.md:68); each run
 
 At 100 TB: the changed-set is tiny relative to the table (validity flips are
 rare) → broadcast it into the cascade join; the sinks are per-partition
-batched; nothing round-trips the driver.
+batched and return their row counts, so no extra count job runs and
+nothing round-trips the driver but those counts.
 """
 
 from __future__ import annotations
@@ -57,29 +58,25 @@ def run_revalidation_batch(
     kv_path: str,
     webhook_log: str | None = None,
 ) -> dict[str, int]:
-    """One incremental run; returns row counts for observability."""
-    changed = changed_validity(meta, today).cache()
+    """One incremental run; returns row counts for observability, as the
+    sinks report them: one job per sink plus the changed-set broadcast,
+    and nothing cached."""
+    changed = changed_validity(meta, today)
     flipped_details = cascade_to_details(changed, details, on=("meta_key", "detail_fk"))
-    write_kv_upsert(changed.select("meta_key", "now_valid"), ["meta_key"], kv_path)
-    write_kv_upsert(
-        flipped_details.select("detail_key", "detail_fk", "now_valid"), ["detail_key"], kv_path
-    )
-    n_notified = 0
+    out = {
+        "changed": write_kv_upsert(changed.select("meta_key", "now_valid"), ["meta_key"], kv_path),
+        "details_flipped": write_kv_upsert(
+            flipped_details.select("detail_key", "detail_fk", "now_valid"), ["detail_key"], kv_path
+        ),
+        "notified": 0,
+    }
     if webhook_log is not None:
-        newly_valid = changed.where(F.col("now_valid"))
-        n_notified = newly_valid.count()
-        send_notifications(
-            newly_valid.select(F.col("meta_key").alias("user_ref"), "now_valid"),
+        out["notified"] = send_notifications(
+            changed.where(F.col("now_valid")).select(F.col("meta_key").alias("user_ref"), "now_valid"),
             user_col="user_ref",
             payload_cols=["user_ref", "now_valid"],
             log_path=webhook_log,
         )
-    out = {
-        "changed": changed.count(),
-        "details_flipped": flipped_details.count(),
-        "notified": n_notified,
-    }
-    changed.unpersist()
     return out
 
 

@@ -302,18 +302,40 @@ def test_duckdb_matches_model():
     _assert_matches_model(rows, con.execute(_hoisted_dispatch_sql(DUCKDB, "corpus")).fetchall())
 
 
-def test_dispatcher_hoisted_tree_stays_small():
+def test_price_value_col_matches_model(spark):
+    """The DataFrame-API dispatcher (the flyer pipeline's) returns, for
+    every corpus row, the model's field for that row's class."""
+    from sales_telegram_bot_data_pipeline_spark.functions.prices import price_value_col
+
+    rows = _corpus()
+    df = spark.createDataFrame(rows, "id long, shop_name string, class_id string, ocr_text string")
+    got = dict(df.select("id", price_value_col()).collect())
+    bad = []
+    for rid, shop, cls, text in rows:
+        want = model_dispatch(shop, text, cls)[_cls_field(cls)] if cls in CLASS_IDS else None
+        if got[rid] != pytest.approx(want):
+            bad.append((shop, cls, text, want, got[rid]))
+    assert not bad, f"{len(bad)} mismatches; first: {bad[0]}"
+
+
+def test_dispatcher_hoisted_tree_stays_small(spark):
     """Planning-cost regression guard: the hoisted dispatched-value SQL
-    must stay an order of magnitude below the inline form's ~53k chars
+    must stay an order of magnitude below the inline form's ~65k chars
     (per-call Catalyst analysis of that tree cost ~1.4 s, data-independent
-    — it dominated the detected_data bench rows for two rounds), and every
-    per-shop pipeline must be hoisted out (no leftover heavy fragments)."""
+    — it dominated the detected_data bench rows for two rounds), every
+    per-shop pipeline must be hoisted out (no leftover heavy fragments),
+    and ``price_value_col`` (hoisted pv plus its gated context) must stay
+    near a third of the inline form."""
     from sales_telegram_bot_data_pipeline_spark.functions.dialect import DUCKDB, SPARK
     from sales_telegram_bot_data_pipeline_spark.functions.prices import (
         dispatcher_value_sql,
         extended_price_context_exprs,
         hoist_price_context_extended,
+        price_value_col,
     )
+
+    col_text = str(price_value_col("shop_name", "ocr_text", "class_name"))
+    assert len(col_text) < 25_000, f"price_value_col regrew to {len(col_text)} chars"
 
     for d in (SPARK, DUCKDB):
         pv = hoist_price_context_extended(

@@ -163,12 +163,21 @@ def test_attribution_stream_matches_batch(spark, scratch):
 def test_kv_sink_idempotent(spark, scratch):
     kv_path = os.path.join(scratch, "kv.jsonl")
     df = spark.createDataFrame([(1, "a"), (2, "b"), (1, "a")], "k int, v string")
-    write_kv_upsert(df, ["k"], kv_path)
+    assert write_kv_upsert(df, ["k"], kv_path) == 3
     first = InMemoryKVStore(kv_path).snapshot()
-    write_kv_upsert(df, ["k"], kv_path)  # re-run: must converge, not duplicate
+    assert write_kv_upsert(df, ["k"], kv_path) == 3  # re-run: must converge, not duplicate
     second = InMemoryKVStore(kv_path).snapshot()
     assert first == second
     assert set(first) == {"1", "2"}
+    assert first["1"] == {"k": 1, "v": "a"}
+
+
+def test_sinks_refuse_columns_without_a_json_payload(spark, scratch):
+    """A map column's Arrow value is a pair list, not the dict
+    ``Row.asDict`` gives: the sinks refuse it before any job runs."""
+    df = spark.createDataFrame([(1, {"a": 1})], "k int, m map<string, int>")
+    with pytest.raises(TypeError, match="JSON-shaped"):
+        write_kv_upsert(df, ["k"], os.path.join(scratch, "kv.jsonl"))
 
 
 def test_blob_sink_idempotent(spark, scratch):
@@ -233,6 +242,42 @@ def test_revalidation_job_end_to_end(spark, scratch):
     stats2 = run_revalidation_batch(spark, meta, details, "1997-06-01", kv_path, hook)
     assert InMemoryKVStore(kv_path).snapshot() == snap
     assert stats2["changed"] == 2
+
+
+def test_revalidation_batch_job_count(spark, scratch):
+    """On test_revalidation_job_end_to_end's input a run launches one job
+    per sink (two KV upserts, one webhook send) and one for the broadcast
+    changed-set: the counts come from the sinks, and nothing is cached or
+    counted on the side (that form ran 11 jobs)."""
+    meta = spark.createDataFrame(
+        [
+            (1, "1997-05-01", "1997-07-01", False),
+            (2, "1997-01-01", "1997-02-01", True),
+            (3, "1997-05-01", "1997-07-01", True),
+        ],
+        "meta_key int, valid_from string, valid_to string, stored_valid boolean",
+    ).select(
+        "meta_key",
+        F.col("valid_from").cast("timestamp").alias("valid_from"),
+        F.col("valid_to").cast("timestamp").alias("valid_to"),
+        "stored_valid",
+    )
+    details = spark.createDataFrame(
+        [(10, 1), (11, 1), (20, 2), (30, 3)], "detail_key int, detail_fk int"
+    )
+    sc = spark.sparkContext
+    group = f"revalidation-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "revalidation job count")
+    try:
+        stats = run_revalidation_batch(
+            spark, meta, details, "1997-06-01",
+            os.path.join(scratch, "kv.jsonl"), os.path.join(scratch, "webhook.jsonl"),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats == {"changed": 2, "details_flipped": 3, "notified": 1}
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 4, f"{len(jobs)} jobs"
 
 
 def test_multimodal_features_shape(spark):
