@@ -7,7 +7,7 @@ preserving put_item's last-write-wins upsert semantics so retries and
 re-runs converge (the same idempotency property the reference relies on).
 
 ``InMemoryKVStore`` is the test double standing in for a DynamoDB
-``batch_writer()``; swap ``_flush`` for a boto3 batch write on a cluster.
+``batch_writer()``; swap ``put_batch`` for a boto3 batch write on a cluster.
 Batches default to 25 items — DynamoDB's BatchWriteItem limit.
 """
 
