@@ -2,7 +2,7 @@
 s3_dynamodb_utils.py:27-32).
 
 The reference writes item-at-a-time; the engine writes per partition in
-batches through one Arrow-batched ``mapInArrow`` job (``sinks/batches.py``),
+batches in one Spark job whose result is the number of rows written,
 preserving put_item's last-write-wins upsert semantics so retries and
 re-runs converge (the same idempotency property the reference relies on).
 
@@ -19,8 +19,6 @@ import tempfile
 import threading
 
 from pyspark.sql import DataFrame
-
-from .batches import write_chunks
 
 BATCH_SIZE = 25
 
@@ -77,13 +75,25 @@ class InMemoryKVStore:
 
 
 def write_kv_upsert(df: DataFrame, key_cols: list[str], store_path: str) -> int:
-    """Batch writer: rows → (composite key, row dict), flushed every
-    BATCH_SIZE; returns the number of rows written.  Idempotent: re-running
+    """Per-partition batch writer: rows → (composite key, row dict),
+    flushed every BATCH_SIZE; returns the number of rows written, summed
+    from the partitions by the write job itself.  Idempotent: re-running
     converges to the same store state."""
 
-    def _put(rows: list[dict]) -> None:
-        InMemoryKVStore(store_path).put_batch(
-            [("|".join(str(d[k]) for k in key_cols), d) for d in rows]
-        )
+    def _write_partition(rows):
+        store = InMemoryKVStore(store_path)
+        buf: list[tuple[str, dict]] = []
+        n = 0
+        for row in rows:
+            d = row.asDict(recursive=True)
+            key = "|".join(str(d[k]) for k in key_cols)
+            buf.append((key, d))
+            n += 1
+            if len(buf) >= BATCH_SIZE:
+                store.put_batch(buf)
+                buf = []
+        if buf:
+            store.put_batch(buf)
+        yield n
 
-    return write_chunks(df, BATCH_SIZE, _put)
+    return df.rdd.mapPartitions(_write_partition).sum()

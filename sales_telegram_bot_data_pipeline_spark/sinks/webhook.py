@@ -1,11 +1,11 @@
 """Webhook fan-out sink (reference op 50: Telegram notifications "in
 batches/groups to optimize", README.md:84-90).
 
-Per-partition chunked sends (``sinks/batches.py``) + an idempotency key
-per message → at-least-once delivery that downstream can dedupe.  The
-transport is injectable; the default test transport appends to a local
-JSONL file (no network in this container).  Swap ``transport`` for an HTTP
-POST on a cluster.
+Per-partition chunked sends + an idempotency key per message →
+at-least-once delivery that downstream can dedupe.  The transport is
+injectable; the default test transport appends to a local JSONL file (no
+network in this container).  Swap ``transport`` for an HTTP POST on a
+cluster.
 """
 
 from __future__ import annotations
@@ -14,8 +14,6 @@ import hashlib
 import json
 
 from pyspark.sql import DataFrame
-
-from .batches import write_chunks
 
 CHUNK_SIZE = 10
 
@@ -40,15 +38,25 @@ class WebhookBatcher:
 
 def send_notifications(df: DataFrame, user_col: str, payload_cols: list[str], log_path: str) -> int:
     """Chunked per-partition fan-out with deterministic idempotency keys;
-    returns the number of messages sent."""
+    returns the number of messages sent, summed from the partitions by the
+    send job itself."""
 
-    def _message(d: dict) -> dict:
-        msg = {k: d[k] for k in payload_cols}
-        digest = hashlib.md5(json.dumps(msg, sort_keys=True, default=str).encode()).hexdigest()[:12]
-        msg["idempotency_key"] = f"{d[user_col]}:{digest}"
-        return msg
+    def _send_partition(rows):
+        batcher = WebhookBatcher(log_path)
+        chunk: list[dict] = []
+        n = 0
+        for row in rows:
+            d = row.asDict(recursive=True)
+            msg = {k: d[k] for k in payload_cols}
+            digest = hashlib.md5(json.dumps(msg, sort_keys=True, default=str).encode()).hexdigest()[:12]
+            msg["idempotency_key"] = f"{d[user_col]}:{digest}"
+            chunk.append(msg)
+            n += 1
+            if len(chunk) >= CHUNK_SIZE:
+                batcher.send_chunk(chunk)
+                chunk = []
+        if chunk:
+            batcher.send_chunk(chunk)
+        yield n
 
-    def _send(rows: list[dict]) -> None:
-        WebhookBatcher(log_path).send_chunk([_message(d) for d in rows])
-
-    return write_chunks(df.select(*dict.fromkeys([user_col, *payload_cols])), CHUNK_SIZE, _send)
+    return df.rdd.mapPartitions(_send_partition).sum()

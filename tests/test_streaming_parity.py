@@ -172,12 +172,18 @@ def test_kv_sink_idempotent(spark, scratch):
     assert first["1"] == {"k": 1, "v": "a"}
 
 
-def test_sinks_refuse_columns_without_a_json_payload(spark, scratch):
-    """A map column's Arrow value is a pair list, not the dict
-    ``Row.asDict`` gives: the sinks refuse it before any job runs."""
-    df = spark.createDataFrame([(1, {"a": 1})], "k int, m map<string, int>")
-    with pytest.raises(TypeError, match="JSON-shaped"):
-        write_kv_upsert(df, ["k"], os.path.join(scratch, "kv.jsonl"))
+def test_kv_sink_writes_map_columns_as_dicts(spark, scratch):
+    """The stored payload is ``Row.asDict(recursive=True)``: a map column,
+    and a map inside a struct, are written as JSON objects."""
+    kv_path = os.path.join(scratch, "kv.jsonl")
+    df = spark.createDataFrame(
+        [(1, {"a": 1}, (2, {"b": 3}))],
+        "k int, m map<string, int>, s struct<x: int, n: map<string, int>>",
+    )
+    assert write_kv_upsert(df, ["k"], kv_path) == 1
+    assert InMemoryKVStore(kv_path).snapshot() == {
+        "1": {"k": 1, "m": {"a": 1}, "s": {"x": 2, "n": {"b": 3}}}
+    }
 
 
 def test_blob_sink_idempotent(spark, scratch):
