@@ -18,6 +18,8 @@ from pyspark.sql import SparkSession
 
 from .sources.tables import _view_name
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "sales_telegram_bot_data_pipeline_spark",
@@ -45,9 +47,10 @@ def get_spark(
     ``local[2]``): that call took 109.5 ms of worker CPU per task, 0.1 ms
     with the daemon, and a 1-task job's launch-to-Python median went from
     201-223 ms to 44-48 ms.  Workers import the daemon module by name, so
-    the package must be importable from the JVM's working directory or
-    ``PYTHONPATH``; otherwise every Python worker of the session, for an
-    engine closure or a lambda alike, fails to start.
+    the session puts the directory holding the package on the workers'
+    ``PYTHONPATH``: without it, a session started outside that directory
+    could start no Python worker at all, for an engine closure or a
+    lambda alike.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -66,6 +69,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
         .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return builder.getOrCreate()
 
